@@ -392,53 +392,6 @@ def s03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding-cosine near-duplicate detection (dedup by vector similarity)
-
-NEARDUP_THRESHOLD = 0.3  # synthetic corpus: random-ish vectors cap near 0.4
-
-
-# NOTE (round 10): d06's registry slot moved to
-# d05_deterministic_splits (operators/sampling.py) — its
-# LSH-bucket-join + exact-cosine signal duplicates s02's hyperplane-LSH
-# row over the same embeddings table, while the split/stratified-sample
-# family (whose whole value is cross-engine determinism) had no oracle
-# row at all (r9 verdict ask #7). The operator itself is unchanged and
-# still part of the library surface.
-def d06_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: LSH-bucketed candidate
-    generation (equi-join, never O(n^2)) + exact cosine verification
-    above threshold — the vector-space member of the dedup family."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = lsh_bucket(
-        emb.select(
-            F.col("vec_id"),
-            F.col("embedding").alias("v"),
-            F.sqrt(_spark_dot("embedding", "embedding")).alias("nrm"),
-        ),
-        "v",
-    ).repartition(F.col("bucket"))
-    a = base.alias("a")
-    b = base.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn(
-            "cos_sim",
-            F.round(_spark_dot("a.v", "b.v") / (F.col("a.nrm") * F.col("b.nrm")), 4),
-        )
-        .filter(F.col("cos_sim") >= NEARDUP_THRESHOLD)
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            "cos_sim",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # k-means centroid training (Lloyd's algorithm, distributed)
 
 

@@ -47,19 +47,6 @@ def _count_in(tok: Column, words: list[str]) -> Column:
     return F.size(F.filter(tok, lambda t: F.array_contains(arr, t)))
 
 
-def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    tok = tokens(F.col(text_col))
-    tok_lens = F.transform(tok, F.length)
-    sum_len = F.aggregate(tok_lens, F.lit(0), lambda acc, x: acc + x)
-    return df.select(
-        F.col(id_col),
-        F.size(tok).alias("n_tokens"),
-        F.size(F.array_distinct(tok)).alias("n_unique_tokens"),
-        F.round(sum_len.cast("double") / F.size(tok), 4).alias("avg_token_len"),
-        F.length(F.col(text_col)).alias("n_chars_actual"),
-    )
-
-
 def doc_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The full per-document feature row (merged t01+t02+t03+t04+t06):
     token statistics, quality score, language-ID scores + prediction,
@@ -262,16 +249,6 @@ def _duck_lang_oracle() -> str:
            {pred} AS pred_lang
     FROM scored
     """
-
-
-# NOTE: the former t03 language-ID query merged into t01_doc_features
-# (score_* + pred_lang now ride the same single projection) — freed the
-# driver-window slot for d07_dedup_groups. language_id() and its oracle
-# builder are unchanged for standalone use.
-def t03_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone language-ID query (no longer driver-registered; the
-    same columns are graded inside t01_doc_features)."""
-    return language_id(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

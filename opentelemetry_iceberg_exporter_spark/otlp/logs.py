@@ -103,11 +103,3 @@ def _log_columns(depth: int, ns_timestamps: bool) -> tuple:
             "scope_dropped_attributes_count"
         ),
     )
-
-
-def ns_log_types() -> dict[str, str]:
-    """create_table `iceberg_types` for the ns-native logs variant."""
-    return {
-        "time_unix_nano": "timestamptz_ns",
-        "observed_time_unix_nano": "timestamptz_ns",
-    }

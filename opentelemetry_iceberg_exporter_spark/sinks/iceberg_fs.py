@@ -23,6 +23,10 @@ metadata (a few KB per snapshot). Commit cost is O(new files), never
 O(table), so the protocol is identical at 100 TB — that is the entire
 point of Iceberg's metadata tree.
 
+`Table` holds every table operation once for both catalog transports:
+`FsTable` (this module's version-hint CAS) and `RestTable`
+(iceberg_rest.py, CommitTable) only load metadata and commit updates.
+
 When `iceberg-spark-runtime` IS on the classpath, prefer the SQL/
 DataFrameWriterV2 path in `iceberg_sink.py`; this module is the
 jar-less fallback and the executable verification of the commit
@@ -186,7 +190,23 @@ def _unorderable_type(t: Any) -> bool:
 
 
 class CommitConflictError(RuntimeError):
-    """Another writer committed the same version first (CAS failure)."""
+    """Another writer committed first: the base a commit was built on is
+    stale. The commit loop reloads, rebuilds and retries."""
+
+
+class RequirementFailedError(CommitConflictError):
+    """The catalog checked a commit's requirements against its current
+    state and one no longer held (the REST spec's 409)."""
+
+
+class UnpublishedCommitError(CommitConflictError):
+    """A metadata version exists that its writer never published (the
+    version hint never advanced to it): a writer crashed mid-commit, and
+    no retry can get past it."""
+
+
+class NoSuchTableError(FileNotFoundError):
+    """No table exists at the identifier or location."""
 
 
 class ReplaceConflictError(RuntimeError):
@@ -391,11 +411,14 @@ def with_field_ids(df: DataFrame, md: dict) -> DataFrame:
     # materialized v3 lineage columns carry the spec's reserved ids
     ids.setdefault(ROW_ID_COL, 2147483540)
     ids.setdefault(LAST_UPDATED_COL, 2147483539)
+    # backtick-quoted: a dotted top-level name (the summary table's
+    # `quantile_values.quantile`) must not resolve as a struct path
+    cols = {c: F.col("`" + c.replace("`", "``") + "`") for c in df.columns}
     return df.select(
         *[
-            F.col(c).alias(c, metadata={"parquet.field.id": ids[c]})
+            cols[c].alias(c, metadata={"parquet.field.id": ids[c]})
             if c in ids
-            else F.col(c)
+            else cols[c]
             for c in df.columns
         ]
     )
@@ -4203,24 +4226,32 @@ def plan_position_delete(
     return new_deletes, n_deleted, [], targets
 
 
-def hive_data_files(source_dir: str, spec: list[dict]) -> list[DataFile]:
+def hive_data_files(
+    source_dir: str, spec: list[dict], timezone_name: str = "UTC"
+) -> list[DataFile]:
     """DataFiles for every Parquet under a raw-sink `year=/month=[/day=
     [/hour=]]` tree, Hive values mapped to transform values (K4,
-    catalog_rest.go:306-367). No data is read beyond footer row counts."""
+    catalog_rest.go:306-367). No data is read beyond footer row counts.
+
+    The raw sink renders those directories in `timezone_name` wall time
+    (parquet_sink.partition_value_columns), so each directory's span
+    converts to UTC before the transform. A directory whose span covers
+    more than one partition value — a day or month directory under a
+    zone that is not UTC, an hour under an offset that is not a whole
+    hour, a DST fold hour — raises ValueError naming it: registering it
+    under one value would prune its rows from reads."""
+    from zoneinfo import ZoneInfo
+
+    zone = ZoneInfo(timezone_name)
     files: list[DataFile] = []
     for path in sorted(glob.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True)):
         partition: dict[str, int | None] = {}
         if spec:
             pf = spec[0]
             parts = _hive_values(os.path.relpath(path, source_dir))
-            ts = datetime(
-                int(parts.get("year", 1970)),
-                int(parts.get("month", 1)),
-                int(parts.get("day", 1)),
-                int(parts.get("hour", 0)),
-                tzinfo=timezone.utc,
+            partition[pf["name"]] = _hive_dir_value(
+                parts, pf["transform"], zone, os.path.dirname(path)
             )
-            partition[pf["name"]] = transform_value(ts, pf["transform"])
         files.append(
             DataFile(
                 file_path=os.path.abspath(path),
@@ -4230,6 +4261,40 @@ def hive_data_files(source_dir: str, spec: list[dict]) -> list[DataFile]:
             )
         )
     return files
+
+
+def _hive_dir_value(parts: dict[str, str], transform: str, zone, directory: str) -> int:
+    """The transform value of one raw-sink directory whose
+    year=/month=/day=/hour= values are wall time in `zone`."""
+    from datetime import timedelta
+
+    year = int(parts.get("year", 1970))
+    month = int(parts.get("month", 1))
+    day = int(parts.get("day", 1))
+    hour = int(parts.get("hour", 0))
+    start = datetime(year, month, day, hour)
+    # the wall-clock span the deepest present level covers
+    if "hour" in parts:
+        end = start + timedelta(hours=1)
+    elif "day" in parts:
+        end = start + timedelta(days=1)
+    elif "month" in parts:
+        end = datetime(year + month // 12, month % 12 + 1, 1)
+    else:
+        end = datetime(year + 1, 1, 1)
+    # fold=1 reads an ambiguous end as its LATER occurrence, so a DST
+    # fold hour spans both
+    first = transform_value(start.replace(tzinfo=zone), transform)
+    last = transform_value(
+        (end - timedelta(microseconds=1)).replace(tzinfo=zone, fold=1), transform
+    )
+    if first != last:
+        raise ValueError(
+            f"{directory}: its {zone.key} wall-time span maps to more than one "
+            f"{transform!r} partition value ({first}..{last}), so no one "
+            "value can register it"
+        )
+    return first
 
 
 def data_files_for_paths(paths: list[str], spec: list[dict], location: str) -> list[DataFile]:
@@ -6007,10 +6072,6 @@ def plan_equality_rewrite(
     return survivors + rewritten + pos, len(rewritten)
 
 
-def _strip_file_scheme(uri: str) -> str:
-    return uri[7:] if uri.startswith("file://") else uri
-
-
 def snapshot_file_tree(
     snapshot: dict, _manifest_memo: dict | None = None
 ) -> tuple[set[str], set[str]]:
@@ -6056,12 +6117,181 @@ def _prop_int(md: dict, name: str, default: int | None) -> int | None:
         return default
 
 
-def _advance_ref(md: dict, name: str, snapshot_id: int) -> dict:
-    """Move a branch ref's head, PRESERVING its retention settings
-    (min-snapshots-to-keep etc.) — commits that advance a branch must
-    not silently reset its expiry policy."""
+_REF_RETENTION_FIELDS = (
+    "min-snapshots-to-keep",
+    "max-snapshot-age-ms",
+    "max-ref-age-ms",
+)
+
+
+def _set_ref_update(md: dict, name: str, snapshot_id: int) -> dict:
+    """A set-snapshot-ref update that moves a branch head while CARRYING
+    the ref's existing retention settings — set-snapshot-ref replaces
+    the whole SnapshotRef, so an update built without them would
+    silently reset the branch's expiry policy."""
     prior = md.get("refs", {}).get(name, {})
-    return {**prior, "snapshot-id": snapshot_id, "type": "branch"}
+    update = {
+        "action": "set-snapshot-ref",
+        "ref-name": name,
+        "type": "branch",
+        "snapshot-id": snapshot_id,
+    }
+    for k in _REF_RETENTION_FIELDS:
+        if prior.get(k) is not None:
+            update[k] = prior[k]
+    return update
+
+
+def _uuid_requirement(md: dict) -> dict:
+    return {"type": "assert-table-uuid", "uuid": md["table-uuid"]}
+
+
+def _ref_requirement(md: dict, ref: str) -> dict:
+    """assert-ref-snapshot-id pinning `ref` at its head in `md`; null
+    asserts the ref does not exist yet (an empty table's main, a new
+    branch)."""
+    if ref == "main":
+        sid = md.get("current-snapshot-id", -1)
+        sid = None if sid in (-1, None) else sid
+    else:
+        sid = md.get("refs", {}).get(ref, {}).get("snapshot-id")
+    return {"type": "assert-ref-snapshot-id", "ref": ref, "snapshot-id": sid}
+
+
+def _branch_head(md: dict, branch: str) -> int:
+    """The snapshot a commit to `branch` builds on: main's current
+    snapshot (-1 on an empty table), else the branch's head — main's
+    head for a branch that does not exist yet (it forks there)."""
+    ref = None if branch == "main" else md.get("refs", {}).get(branch)
+    return md["current-snapshot-id"] if ref is None else ref["snapshot-id"]
+
+
+def _replace_conflict(pin: tuple[str, int]) -> ReplaceConflictError:
+    branch, snapshot_id = pin
+    return ReplaceConflictError(
+        f"{branch!r} advanced past snapshot {snapshot_id} since the commit "
+        "was planned; re-plan"
+    )
+
+
+def _landed_snapshot(md: dict, attempted: list[int]) -> int | None:
+    return next(
+        (s["snapshot-id"] for s in md["snapshots"] if s["snapshot-id"] in attempted),
+        None,
+    )
+
+
+def _set_schema(schema: dict, last_column_id: int | None = None) -> list[dict]:
+    add = {"action": "add-schema", "schema": schema}
+    if last_column_id is not None:
+        add["last-column-id"] = last_column_id
+    return [add, {"action": "set-current-schema", "schema-id": schema["schema-id"]}]
+
+
+def _set_statistics(entry: dict) -> list[dict]:
+    return [
+        {"action": "set-statistics", "snapshot-id": entry["snapshot-id"], "statistics": entry}
+    ]
+
+
+def _require_where_alone(where: str | None, *tuple_params) -> None:
+    if where is not None and any(p is not None for p in tuple_params):
+        raise ValueError(
+            "pass either `where` or the tuple pruning params, not both "
+            "(`where` subsumes them)"
+        )
+
+
+def apply_updates(md: dict, updates: list[dict]) -> dict:
+    """Apply Iceberg REST CommitTable update actions to loaded table
+    metadata and return the new metadata (`md` is left untouched) — the
+    filesystem catalog's half of the commit a REST server performs on
+    its side. The new metadata is stamped with the timestamp of the
+    snapshot the commit adds when that snapshot adds files, else with
+    the current time (a manifest rewrite adds none); moving main logs
+    the moved-to snapshot's own timestamp when this commit added it."""
+    added = {
+        u["snapshot"]["snapshot-id"]: u["snapshot"]
+        for u in updates
+        if u["action"] == "add-snapshot"
+    }
+    file_commits = [s for s in added.values() if "added-data-files" in s["summary"]]
+    now_ms = (
+        file_commits[-1]["timestamp-ms"] if file_commits else int(time.time() * 1000)
+    )
+    new_md = dict(md)
+    new_md["last-updated-ms"] = now_ms
+    for upd in updates:
+        action = upd["action"]
+        if action == "add-snapshot":
+            snap = upd["snapshot"]
+            new_md["last-sequence-number"] = max(
+                new_md["last-sequence-number"], snap["sequence-number"]
+            )
+            new_md["snapshots"] = new_md["snapshots"] + [snap]
+            if snap.get("first-row-id") is not None:
+                # v3 row lineage: the snapshot consumed this much id space
+                new_md["next-row-id"] = snap["first-row-id"] + snap.get("added-rows", 0)
+        elif action == "set-snapshot-ref":
+            sid = upd["snapshot-id"]
+            ref = {"snapshot-id": sid, "type": upd.get("type", "branch")}
+            ref.update(
+                {k: upd[k] for k in _REF_RETENTION_FIELDS if upd.get(k) is not None}
+            )
+            new_md["refs"] = {**new_md.get("refs", {}), upd["ref-name"]: ref}
+            # only main drives the current snapshot and its history log
+            if upd["ref-name"] == "main":
+                new_md["current-snapshot-id"] = sid
+                logged = added[sid]["timestamp-ms"] if sid in added else now_ms
+                new_md["snapshot-log"] = new_md["snapshot-log"] + [
+                    {"timestamp-ms": logged, "snapshot-id": sid}
+                ]
+        elif action == "remove-snapshot-ref":
+            new_md["refs"] = {
+                k: v for k, v in new_md.get("refs", {}).items() if k != upd["ref-name"]
+            }
+        elif action == "remove-snapshots":
+            drop = set(upd["snapshot-ids"])
+            new_md["snapshots"] = [
+                s for s in new_md["snapshots"] if s["snapshot-id"] not in drop
+            ]
+            new_md["snapshot-log"] = [
+                e for e in new_md["snapshot-log"] if e["snapshot-id"] not in drop
+            ]
+            # stats files of removed snapshots leave with them
+            for key in ("partition-statistics", "statistics"):
+                if new_md.get(key):
+                    new_md[key] = [e for e in new_md[key] if e["snapshot-id"] not in drop]
+        elif action == "set-properties":
+            new_md["properties"] = {**new_md.get("properties", {}), **upd["updates"]}
+        elif action in ("set-statistics", "set-partition-statistics"):
+            key = "statistics" if action == "set-statistics" else "partition-statistics"
+            entry = upd[key]
+            new_md[key] = [
+                e for e in new_md.get(key, []) if e["snapshot-id"] != entry["snapshot-id"]
+            ] + [entry]
+        elif action == "add-schema":
+            new_md["schemas"] = new_md["schemas"] + [upd["schema"]]
+            if "last-column-id" in upd:
+                new_md["last-column-id"] = upd["last-column-id"]
+        elif action == "set-current-schema":
+            new_md["current-schema-id"] = upd["schema-id"]
+        elif action == "add-spec":
+            spec = upd["spec"]
+            new_md["partition-specs"] = new_md["partition-specs"] + [spec]
+            new_md["last-partition-id"] = max(
+                new_md.get("last-partition-id", 999),
+                max((f_["field-id"] for f_ in spec["fields"]), default=0),
+            )
+        elif action == "set-default-spec":
+            new_md["default-spec-id"] = upd["spec-id"]
+        elif action == "upgrade-format-version":
+            new_md["format-version"] = upd["format-version"]
+            if upd["format-version"] >= 3 and "next-row-id" not in new_md:
+                new_md["next-row-id"] = 0  # v3 row-lineage id space
+        else:
+            raise ValueError(f"unsupported update action {action!r}")
+    return new_md
 
 
 def _build_ref(
@@ -6918,60 +7148,220 @@ def _swap_version_hint(
     os.replace(tmp, hint)  # atomic on POSIX: readers see old or new, never torn
 
 
-class FsTable:
-    def __init__(self, location: str):
-        self.location = location
+class Table:
+    """One Iceberg table over a catalog transport. Every operation —
+    appends, WAP and refs, row-level DML, maintenance, expiry, schema
+    and spec evolution, format upgrade, stats, scans and inspection
+    tables — is written once here against the Iceberg REST catalog's
+    contract (https://iceberg.apache.org/spec/#catalog): `_load()`
+    returns the table's current metadata and `_commit(md, requirements,
+    updates)` commits the spec's update actions built against `md`.
+    FsTable (version-file CAS) and RestTable (CommitTable) supply those
+    two methods; every commit runs through the one `_commit_loop`.
+
+    On both transports Spark executors write the Parquet data files and
+    the committing process writes the Avro manifests under the table
+    location; the transport only arbitrates the metadata swap."""
+
+    # -- transport seam ----------------------------------------------------
+    def _load(self) -> dict:
+        raise NotImplementedError
+
+    def _commit(self, md: dict, requirements: list[dict], updates: list[dict]) -> None:
+        """Commit `updates` built against `md`, or raise
+        CommitConflictError (RequirementFailedError when the catalog
+        checked `requirements` against its current state and one
+        failed)."""
+        raise NotImplementedError
 
     # -- metadata access ---------------------------------------------------
-    def current_version(self) -> int:
-        with open(os.path.join(self.location, "metadata", "version-hint.text")) as f:
-            return int(f.read().strip())
-
     def metadata(self) -> dict:
-        with open(_metadata_path(self.location, self.current_version())) as f:
-            return json.load(f)
+        """The current table metadata, loaded fresh on every call so
+        commits always build on the latest state."""
+        return self._load()
 
     def snapshots(self) -> list[dict]:
         return self.metadata()["snapshots"]
 
     def current_snapshot(self) -> dict | None:
         md = self.metadata()
-        sid = md["current-snapshot-id"]
-        if sid == -1:
+        sid = md.get("current-snapshot-id", -1)
+        if sid in (-1, None):
             return None
         return next(s for s in md["snapshots"] if s["snapshot-id"] == sid)
 
     def partition_spec(self) -> list[dict]:
-        md = self.metadata()
-        return next(
-            s for s in md["partition-specs"] if s["spec-id"] == md["default-spec-id"]
-        )["fields"]
+        return default_spec_fields(self.metadata())
 
     def properties(self) -> dict[str, str]:
         return self.metadata()["properties"]
 
-    def _load_state(self) -> tuple[int, dict]:
-        """Pin (version, metadata) to a SINGLE hint read. Reading the
-        hint and the metadata in two separate calls races with
-        concurrent commits (a commit landing in between would be
-        silently overwritten by a metadata built from the old state)."""
-        version = self.current_version()
-        with open(_metadata_path(self.location, version)) as f:
-            return version, json.load(f)
+    def apply_storage_credentials(
+        self, spark: SparkSession, path: str | None = None, now_ms: int | None = None
+    ) -> dict[str, str]:
+        """Thread catalog-vended storage credentials into the session
+        before Spark touches table files. Returns the applied conf; a
+        catalog that vends none (the filesystem catalog) applies {}."""
+        return {}
 
-    # -- commit protocol (K3 core) ----------------------------------------
+    # -- the commit loop ---------------------------------------------------
+    def _commit_loop(
+        self, build, md: dict | None = None, pin: tuple[str, int] | None = None
+    ) -> Any:
+        """The one optimistic commit loop every commit kind runs, on both
+        transports. `build(md)` returns (requirements, updates, result)
+        against the base `md`; empty updates are a no-op that returns
+        `result` without committing. `md` is the first attempt's base
+        (default: a fresh load); each retry reloads and rebuilds. The
+        table's commit.retry.num-retries bounds the attempts.
+
+        `pin=(branch, snapshot_id)` is replace mode: the commit was
+        planned against that head of `branch` and cannot merge with a
+        concurrent commit to it, so the branch moving raises
+        ReplaceConflictError instead of retrying. Commits to other refs
+        do not conflict with it.
+
+        A snapshot an earlier attempt added that is found on reload is
+        this commit landing late after a lost response: its id is
+        returned instead of committing the same files twice."""
+        attempts = None
+        attempt = 0
+        attempted: list[int] = []  # snapshot ids of earlier tries
+        while True:
+            if md is None:
+                md = self.metadata()
+                landed = _landed_snapshot(md, attempted)
+                if landed is not None:
+                    return landed
+            if attempts is None:
+                attempts = commit_attempts_for(md)
+            if pin is not None and _branch_head(md, pin[0]) != pin[1]:
+                raise _replace_conflict(pin)
+            requirements, updates, result = build(md)
+            if not updates:
+                return result
+            attempted += [
+                u["snapshot"]["snapshot-id"]
+                for u in updates
+                if u["action"] == "add-snapshot"
+            ]
+            try:
+                self._commit(md, requirements, updates)
+                return result
+            except UnpublishedCommitError:
+                raise  # retrying cannot publish a stranded version
+            except CommitConflictError as exc:
+                if pin is not None and isinstance(exc, RequirementFailedError):
+                    raise _replace_conflict(pin) from exc
+                attempt += 1
+                if attempt >= attempts:
+                    # the conflict can be an earlier attempt of THIS
+                    # commit landing late: check once before surfacing
+                    if attempted:
+                        try:
+                            landed = _landed_snapshot(self.metadata(), attempted)
+                        except (RuntimeError, OSError):  # a failed reload: surface the conflict
+                            landed = None
+                        if landed is not None:
+                            return landed
+                    raise
+                time.sleep(0.05 * attempt)
+                md = None
+
+    def _snapshot_commit(
+        self,
+        md: dict,
+        files: list[DataFile],
+        *,
+        operation: str,
+        carry_forward: bool,
+        extra_summary: dict[str, str],
+        branch: str = "main",
+        removed_files: list[DataFile] | None = None,
+        required_live_paths: set[str] | None = None,
+    ) -> tuple[list[dict], list[dict], int]:
+        """Build (not send) one snapshot commit of `files` on `branch`
+        against `md`: the manifest tree lands under the table location
+        and the returned (requirements, updates, snapshot id) advance
+        `branch` to it, pinned to the head the tree was built on.
+
+        carry_forward=True appends a new manifest on top of the head's
+        manifests (append semantics); False makes the new manifest the
+        COMPLETE live file set (replace semantics). A branch other than
+        main forks from main's head when new, and committing to it never
+        moves main or the snapshot log — the WAP staging path."""
+        snapshot = write_snapshot_tree(
+            md["location"],
+            md,
+            files,
+            operation=operation,
+            carry_forward=carry_forward,
+            extra_summary=extra_summary,
+            parent_override=None if branch == "main" else _branch_head(md, branch),
+            removed_files=removed_files,
+            required_live_paths=required_live_paths,
+        )
+        sid = snapshot["snapshot-id"]
+        requirements = [_uuid_requirement(md), _ref_requirement(md, branch)]
+        updates = [
+            {"action": "add-snapshot", "snapshot": snapshot},
+            _set_ref_update(md, branch, sid),
+        ]
+        return requirements, updates, sid
+
+    def _commit_with_retry(
+        self,
+        files: list[DataFile],
+        *,
+        operation: str,
+        carry_forward: bool,
+        extra_summary: dict[str, str],
+        expected_base_snapshot: int | None = None,
+        branch: str = "main",
+        removed_files: list[DataFile] | None = None,
+        required_live_paths: set[str] | None = None,
+        md: dict | None = None,
+    ) -> int:
+        """Commit `files` as one snapshot on `branch` through the commit
+        loop; returns the snapshot id. `expected_base_snapshot` pins a
+        replace to the branch head it was planned on (ReplaceConflictError
+        if that branch moved); `md` is the planning metadata the first
+        attempt builds on."""
+        pin = None if expected_base_snapshot is None else (branch, expected_base_snapshot)
+
+        def build(base: dict):
+            return self._snapshot_commit(
+                base,
+                files,
+                operation=operation,
+                carry_forward=carry_forward,
+                extra_summary=extra_summary,
+                branch=branch,
+                removed_files=removed_files,
+                required_live_paths=required_live_paths,
+            )
+
+        return self._commit_loop(build, md, pin)
+
+    def _commit_updates(self, updates: list[dict], md: dict | None = None, result=None):
+        """A metadata-only commit of fixed `updates` (no snapshot)."""
+        return self._commit_loop(
+            lambda base: ([_uuid_requirement(base)], updates, result), md
+        )
+
+    # -- appends -----------------------------------------------------------
     def append_files(
         self, files: list[DataFile], snapshot_properties: dict[str, str] | None = None
     ) -> int:
         """Atomic append: one new manifest + carried-forward prior
-        manifests -> new manifest list -> new metadata version -> hint
-        swap. Returns the new snapshot id. Driver-side cost is O(len(
-        files)) regardless of table size.
+        manifests -> new manifest list -> commit. Returns the new
+        snapshot id. Driver-side cost is O(len(files)) regardless of
+        table size.
 
-        Optimistic concurrency: if another writer won the version CAS,
-        the commit rebuilds against the new base and retries (appends
-        never conflict logically) — the same retry loop jar-backed
-        Iceberg writers run."""
+        Optimistic concurrency: if another writer committed first, the
+        commit rebuilds against the new base and retries (appends never
+        conflict logically) — the same retry loop jar-backed Iceberg
+        writers run (catalog_rest.go:243-303)."""
         return self._commit_with_retry(
             files,
             operation="append",
@@ -7002,6 +7392,31 @@ class FsTable:
             branch=branch,
         )
 
+    def append_dataframe(
+        self,
+        df: DataFrame,
+        snapshot_properties: dict[str, str] | None = None,
+        fanout: int | None = None,
+    ) -> int | None:
+        """K3 end to end: a Spark job writes Parquet under data/<uuid>/
+        (partitioned by the hidden-transform value so each hour/day lands
+        in its own directory with few large files), then the driver
+        commits the file list. The partition column is dropped from file
+        contents by partitionBy — hidden partitioning, like Iceberg.
+        `fanout` spreads hot partition values over ~fanout writer tasks
+        (backfills).
+
+        Empty inputs commit NOTHING and return None (the reference's F1
+        empty-batch short-circuit: the 5-way metric demux routinely
+        produces empty per-type frames; an empty snapshot per type per
+        micro-batch would bloat metadata for no data)."""
+        md = self.metadata()
+        self.apply_storage_credentials(df.sparkSession, md["location"])
+        files = write_partitioned_batch(df, md["location"], md, fanout)
+        if not files:  # F1: no data files -> no snapshot
+            return None
+        return self.append_files(files, snapshot_properties)
+
     def append_dataframe_to_branch(
         self,
         branch: str,
@@ -7010,7 +7425,9 @@ class FsTable:
     ) -> int | None:
         """append_dataframe staged on a branch (WAP); empty inputs
         commit nothing."""
-        files = write_partitioned_batch(df, self.location, self.metadata())
+        md = self.metadata()
+        self.apply_storage_credentials(df.sparkSession, md["location"])
+        files = write_partitioned_batch(df, md["location"], md)
         if not files:
             return None
         return self.append_files_to_branch(branch, files, snapshot_properties)
@@ -7022,14 +7439,14 @@ class FsTable:
         commits); otherwise re-stage on a fresh branch. Returns the new
         main head."""
 
-        def mutate(md: dict):
+        def build(md: dict):
             ref = md.get("refs", {}).get(branch)
             if ref is None:
                 raise ValueError(f"unknown branch {branch!r}")
             head = ref["snapshot-id"]
             cur = md["current-snapshot-id"]
             if cur == head:
-                return None, head
+                return [], [], head
             by_id = {s["snapshot-id"]: s for s in md["snapshots"]}
             node, ok = head, cur == -1
             while node is not None and not ok:
@@ -7043,18 +7460,10 @@ class FsTable:
                     f"branch {branch!r} head ({head}); main advanced since the "
                     "branch forked — re-stage against the new main"
                 )
-            new_md = dict(md)
-            new_md["current-snapshot-id"] = head
-            new_md["refs"] = {
-                **md.get("refs", {}),
-                "main": _advance_ref(md, "main", head),
-            }
-            new_md["snapshot-log"] = md["snapshot-log"] + [
-                {"timestamp-ms": int(time.time() * 1000), "snapshot-id": head}
-            ]
-            return new_md, head
+            requirements = [_uuid_requirement(md), _ref_requirement(md, "main")]
+            return requirements, [_set_ref_update(md, "main", head)], head
 
-        return self._commit_metadata(mutate)
+        return self._commit_loop(build)
 
     def cherry_pick(self, snapshot_id: int) -> int:
         """Publish ONE staged snapshot onto CURRENT main when
@@ -7075,158 +7484,6 @@ class FsTable:
             carry_forward=True,
             extra_summary={"cherry-picked-from-snapshot": str(snapshot_id)},
         )
-
-    def _commit_with_retry(
-        self,
-        files: list[DataFile],
-        *,
-        operation: str,
-        carry_forward: bool,
-        extra_summary: dict[str, str],
-        expected_base_snapshot: int | None = None,
-        branch: str = "main",
-        removed_files: list[DataFile] | None = None,
-        required_live_paths: set[str] | None = None,
-    ) -> int:
-        attempts = None  # resolved from table properties on first load
-        attempt = 0
-        while True:
-            base_version, md = self._load_state()
-            if attempts is None:
-                attempts = commit_attempts_for(md)
-            try:
-                return self._commit_snapshot(
-                    base_version,
-                    md,
-                    files,
-                    operation=operation,
-                    carry_forward=carry_forward,
-                    extra_summary=extra_summary,
-                    expected_base_snapshot=expected_base_snapshot,
-                    branch=branch,
-                    removed_files=removed_files,
-                    required_live_paths=required_live_paths,
-                )
-            except CommitConflictError:
-                attempt += 1
-                if attempt == attempts:
-                    raise
-                # the winner may not have swapped the hint yet — give the
-                # in-flight commit a moment before declaring it torn
-                for _ in range(10):
-                    if self.current_version() != base_version:
-                        break
-                    time.sleep(0.05)
-                else:
-                    raise  # version file exists, hint never advanced
-
-    def _commit_snapshot(
-        self,
-        base_version: int,
-        md: dict,
-        files: list[DataFile],
-        *,
-        operation: str,
-        carry_forward: bool,
-        extra_summary: dict[str, str],
-        expected_base_snapshot: int | None = None,
-        branch: str = "main",
-        removed_files: list[DataFile] | None = None,
-        required_live_paths: set[str] | None = None,
-    ) -> int:
-        """One commit attempt against the pinned (base_version, md).
-
-        carry_forward=True appends a new manifest on top of the base
-        snapshot's manifests (append semantics); False makes the new
-        manifest the COMPLETE live file set (replace semantics, which
-        also requires the base snapshot to be unchanged since planning —
-        a replace cannot merge with concurrent appends).
-
-        branch != "main" commits on that branch's head (forking from
-        main's head if the branch is new) WITHOUT advancing main or the
-        snapshot log — the WAP staging path."""
-        branch_ref = md.get("refs", {}).get(branch)
-        branch_head = (
-            md["current-snapshot-id"]
-            if branch == "main"
-            else (branch_ref or {"snapshot-id": md["current-snapshot-id"]})[
-                "snapshot-id"
-            ]
-        )
-        # a replace is pinned to the head of the ref it REWRITES: only
-        # that ref advancing concurrently invalidates the plan (main
-        # moving under a branch-scoped rewrite is irrelevant to it)
-        if (
-            expected_base_snapshot is not None
-            and branch_head != expected_base_snapshot
-        ):
-            raise ReplaceConflictError(
-                f"{branch!r} advanced from snapshot {expected_base_snapshot} "
-                f"to {branch_head} since the rewrite was planned; re-plan"
-            )
-        parent_override = None if branch == "main" else branch_head
-        snapshot = write_snapshot_tree(
-            self.location,
-            md,
-            files,
-            operation=operation,
-            carry_forward=carry_forward,
-            extra_summary=extra_summary,
-            parent_override=parent_override,
-            removed_files=removed_files,
-            required_live_paths=required_live_paths,
-        )
-        snapshot_id = snapshot["snapshot-id"]
-        seq = snapshot["sequence-number"]
-        now_ms = snapshot["timestamp-ms"]
-        new_md = dict(md)
-        new_md["last-sequence-number"] = seq
-        new_md["last-updated-ms"] = now_ms
-        new_md["snapshots"] = md["snapshots"] + [snapshot]
-        if snapshot.get("first-row-id") is not None:
-            # v3 row lineage: the snapshot consumed this much id space
-            new_md["next-row-id"] = snapshot["first-row-id"] + snapshot.get(
-                "added-rows", 0
-            )
-        # advance the TARGET ref, PRESERVE the rest (tags/branches pin
-        # snapshots); only main moves the current snapshot + history log
-        new_md["refs"] = {
-            **md.get("refs", {}),
-            branch: _advance_ref(md, branch, snapshot_id),
-        }
-        if branch == "main":
-            new_md["current-snapshot-id"] = snapshot_id
-            new_md["snapshot-log"] = md["snapshot-log"] + [
-                {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-            ]
-        new_md["metadata-log"] = md["metadata-log"] + [
-            {"timestamp-ms": md["last-updated-ms"], "metadata-file": _metadata_path(self.location, base_version)}
-        ]
-        _write_metadata_version(self.location, base_version + 1, new_md)
-        _swap_version_hint(self.location, base_version + 1)
-        return snapshot_id
-
-    # -- data-plane append (executors write, driver commits) --------------
-    def append_dataframe(
-        self,
-        df: DataFrame,
-        snapshot_properties: dict[str, str] | None = None,
-        fanout: int | None = None,
-    ) -> int | None:
-        """K3 end to end: a Spark job writes Parquet under data/<uuid>/
-        (partitioned by the hidden-transform value so each hour/day lands
-        in its own directory with few large files), then the driver
-        commits the file list. The partition column is dropped from file
-        contents by partitionBy — hidden partitioning, like Iceberg.
-
-        Empty inputs commit NOTHING and return None (the reference's F1
-        empty-batch short-circuit: the 5-way metric demux routinely
-        produces empty per-type frames; an empty snapshot per type per
-        micro-batch would bloat metadata for no data)."""
-        files = write_partitioned_batch(df, self.location, self.metadata(), fanout)
-        if not files:  # F1: no data files -> no snapshot
-            return None
-        return self.append_files(files, snapshot_properties)
 
     def overwrite_partitions(
         self,
@@ -7252,13 +7509,14 @@ class FsTable:
         Empty inputs commit NOTHING and return None; raises
         ReplaceConflictError if the table advanced mid-write (a replace
         cannot merge — re-run against the new base)."""
-        _, planned_md = self._load_state()
-        planned_snapshot = planned_md["current-snapshot-id"]
-        new_files = write_partitioned_batch(df, self.location, planned_md, fanout)
+        md = self.metadata()
+        self.apply_storage_credentials(df.sparkSession, md["location"])
+        planned_snapshot = md["current-snapshot-id"]
+        new_files = write_partitioned_batch(df, md["location"], md, fanout)
         if not new_files:  # F1: no data files -> no snapshot
             return None
         replaced, survivors, deletes = plan_partition_overwrite(
-            planned_md, planned_snapshot, new_files
+            md, planned_snapshot, new_files
         )
         summary = {
             "replaced-partitions": str(
@@ -7274,20 +7532,26 @@ class FsTable:
             carry_forward=False,
             extra_summary=summary,
             expected_base_snapshot=planned_snapshot,
+            md=md,
         )
 
-    # -- K4: register existing Hive-layout files without copying ----------
+    # -- K4: register existing Parquet files without copying ---------------
     def add_files_hive(
         self,
         source_dir: str,
-        timezone_name: str = "UTC",
         snapshot_properties: dict[str, str] | None = None,
+        *,
+        timezone_name: str = "UTC",
     ) -> int:
         """Register the raw-Parquet sink's `year=/month=[/day=[/hour=]]`
         output (sinks/parquet_sink.py layout) as table data files,
-        mapping Hive values to the table's transform values. No data is
-        moved or rewritten (catalog_rest.go:306-367)."""
-        files = hive_data_files(source_dir, self.partition_spec())
+        mapping Hive values to the table's transform values. The raw
+        sink writes those directories in `timezone_name` wall time
+        (partition.timezone); each converts to UTC before the transform,
+        and a directory that spans more than one partition value raises
+        ValueError (hive_data_files). No data is moved or rewritten
+        (catalog_rest.go:306-367)."""
+        files = hive_data_files(source_dir, self.partition_spec(), timezone_name)
         self._ensure_name_mapping(files)
         props = {"operation-detail": "add_files", **(snapshot_properties or {})}
         return self.append_files(files, props)
@@ -7300,20 +7564,15 @@ class FsTable:
         values come from `key=value` path segments — either the
         partition field's own name (`ts_hour=473040`, the append
         layout) or raw-sink `year=/month=/day=/hour=` values."""
-        files = data_files_for_paths(paths, self.partition_spec(), self.location)
+        md = self.metadata()
+        files = data_files_for_paths(paths, default_spec_fields(md), md["location"])
         self._ensure_name_mapping(files)
         props = {"operation-detail": "add_files", **(snapshot_properties or {})}
         return self.append_files(files, props)
 
     def set_properties(self, props: dict[str, str]) -> None:
-        """Merge table properties (metadata-only CAS commit)."""
-
-        def mutate(md: dict):
-            new_md = dict(md)
-            new_md["properties"] = {**md.get("properties", {}), **props}
-            return new_md, None
-
-        self._commit_metadata(mutate)
+        """Merge table properties (metadata-only commit)."""
+        self._commit_updates([{"action": "set-properties", "updates": props}])
 
     def _ensure_name_mapping(self, files: list[DataFile]) -> None:
         """Registering files without parquet field ids: fold the current
@@ -7332,8 +7591,13 @@ class FsTable:
         """Every data-file path referenced by ANY snapshot — the
         registered-file set the reconciler diffs against (the Iceberg
         `all_files` metadata table; time-travel-aware dedup like
-        catalog_rest.go:370-467)."""
-        return all_data_file_paths(self.metadata())
+        catalog_rest.go:370-467). A table that does not exist lists
+        empty, like the reference (go:383-390)."""
+        try:
+            md = self.metadata()
+        except NoSuchTableError:
+            return []
+        return all_data_file_paths(md)
 
     # -- scan planning + read (with manifest-level pruning) ---------------
     def plan_files(
@@ -7345,7 +7609,7 @@ class FsTable:
         source_range: tuple[str, Any, Any] | None = None,
     ) -> tuple[list[DataFile], int]:
         """Resolve live DATA files for a snapshot (see plan_scan, which
-        also returns position-delete files). Returns (files, n_pruned)."""
+        also returns delete files). Returns (files, n_pruned)."""
         data, _, pruned = self.plan_scan(
             snapshot_id, partition_range, column_range, source_predicate, source_range
         )
@@ -7358,9 +7622,10 @@ class FsTable:
         column_range: tuple[str, Any, Any] | None = None,
         source_predicate: tuple[str, Any] | None = None,
         source_range: tuple[str, Any, Any] | None = None,
+        md: dict | None = None,
     ) -> tuple[list[DataFile], list[DataFile], int]:
-        """Resolve a snapshot's live files into (data files, position-
-        delete files, n_pruned); data files are optionally pruned by
+        """Resolve a snapshot's live files into (data files, delete
+        files, n_pruned); data files are optionally pruned by
         transform-value range AND/OR a column value range
         (`column_range=(name, lo, hi)`) against the manifest-recorded
         per-file min/max bounds — the scan never opens pruned files;
@@ -7374,15 +7639,24 @@ class FsTable:
         the transform of `value` is computed DRIVER-SIDE and files whose
         partition value differs are skipped — a point lookup on a
         bucket[N] table opens ~1/N of the files without the query ever
-        naming the partition column."""
+        naming the partition column. `md` plans over metadata the caller
+        already loaded instead of loading it again (like
+        plan_files_server's)."""
         return plan_scan_metadata(
-            self.metadata(),
+            self.metadata() if md is None else md,
             snapshot_id,
             partition_range,
             column_range,
             source_predicate,
             source_range,
         )
+
+    def _live_files(
+        self, md: dict, snapshot_id: int
+    ) -> tuple[list[DataFile], list[DataFile]]:
+        """(data files, delete files) live in a snapshot of `md`."""
+        data, deletes, _ = self.plan_scan(snapshot_id, md=md)
+        return data, deletes
 
     def read(
         self,
@@ -7399,7 +7673,7 @@ class FsTable:
         (partition + column-bound + hidden-partition-predicate pruning
         applied there), the Spark scan reads exactly those Parquet files
         under the CURRENT schema (pre-evolution files surface added
-        columns as nulls), and any position-delete files are subtracted
+        columns as nulls), and any delete files are subtracted
         (merge-on-read). NOTE: column_range / source_predicate prune
         FILES; apply the row filter on the result. `where` instead takes
         ONE SQL predicate and does both: every extractable conjunct
@@ -7408,23 +7682,47 @@ class FsTable:
         uses), then the full predicate filters rows. `with_lineage`
         (v3 tables) appends the _row_id / _last_updated_sequence_number
         metadata columns (scan_with_lineage)."""
+        _require_where_alone(where, partition_range, column_range, source_predicate, source_range)
         md = self.metadata()
+        self.apply_storage_credentials(spark, md["location"])
+        return self._read_local(
+            spark,
+            md,
+            snapshot_id,
+            partition_range,
+            column_range,
+            source_predicate,
+            source_range,
+            where,
+            with_lineage,
+        )
+
+    def _read_local(
+        self,
+        spark: SparkSession,
+        md: dict,
+        snapshot_id,
+        partition_range,
+        column_range,
+        source_predicate,
+        source_range,
+        where: str | None,
+        with_lineage: bool,
+    ) -> DataFrame:
+        """read() planned locally from `md`."""
         if where is not None:
-            if any(
-                p is not None
-                for p in (partition_range, column_range, source_predicate, source_range)
-            ):
-                raise ValueError(
-                    "pass either `where` or the tuple pruning params, not both "
-                    "(`where` subsumes them)"
-                )
             sid = md["current-snapshot-id"] if snapshot_id is None else snapshot_id
             data, _, deletes = plan_dml_files(
                 md, sid, where, spark_session_timezone(spark), spark=spark
             )
         else:
             data, deletes, _ = self.plan_scan(
-                snapshot_id, partition_range, column_range, source_predicate, source_range
+                snapshot_id,
+                partition_range,
+                column_range,
+                source_predicate,
+                source_range,
+                md=md,
             )
         df = (
             scan_with_lineage(spark, md, data, deletes)
@@ -7491,108 +7789,23 @@ class FsTable:
         skipped by the next poll."""
         return incremental_data_files(self.metadata(), from_snapshot_id, to_snapshot_id)
 
-    def metadata_table(self, spark: SparkSession, name: str) -> DataFrame:
-        """Inspection tables (snapshots/history/files/all_files/
-        manifests) — see module-level metadata_table."""
-        return metadata_table(spark, self.metadata(), name)
-
-    def compute_partition_stats(self, snapshot_id: int | None = None) -> dict | None:
-        """Write the spec's partition statistics Parquet for a snapshot
-        (current when None) and register it in table metadata
-        (`partition-statistics`), replacing any prior entry for that
-        snapshot. Returns the entry, or None on an empty table."""
-        entry = write_partition_stats_file(self.location, self.metadata(), snapshot_id)
-        if entry is None:
-            return None
-
-        def mutate(md: dict):
-            stats = [
-                e
-                for e in md.get("partition-statistics", [])
-                if e["snapshot-id"] != entry["snapshot-id"]
-            ]
-            new_md = dict(md)
-            new_md["partition-statistics"] = stats + [entry]
-            return new_md, entry
-
-        return self._commit_metadata(mutate)
-
-    def compute_column_stats(
+    def read_changes(
         self,
         spark: SparkSession,
-        snapshot_id: int | None = None,
-        columns: list[str] | None = None,
-    ) -> dict | None:
-        """Write the Puffin column-NDV statistics file for a snapshot
-        (current when None; deletes-applied scan) and register it in
-        table metadata (`statistics`), replacing any prior entry for
-        that snapshot. Returns the StatisticsFile entry, or None on an
-        empty table / no primitive columns."""
-        from .puffin import write_column_stats_file
-
-        md = self.metadata()
-        sid = md["current-snapshot-id"] if snapshot_id is None else snapshot_id
-        if sid == -1:
-            return None
-        entry = write_column_stats_file(
-            spark, self.location, md, self.read(spark, snapshot_id=sid), sid, columns
-        )
-        if entry is None:
-            return None
-
-        def mutate(cur: dict):
-            new_md = dict(cur)
-            stats = [
-                e
-                for e in cur.get("statistics", [])
-                if e["snapshot-id"] != entry["snapshot-id"]
-            ]
-            new_md["statistics"] = stats + [entry]
-            return new_md, None
-
-        self._commit_metadata(mutate)
-        return entry
-
-    def column_stats(self, snapshot_id: int | None = None) -> dict[str, dict]:
-        """Registered per-column NDV stats (see puffin.read_column_stats)."""
-        from .puffin import read_column_stats
-
-        return read_column_stats(self.metadata(), snapshot_id)
-
-    def update_column_stats_incremental(self, spark: SparkSession) -> dict | None:
-        """Refresh column stats to the CURRENT snapshot by sketching only
-        the rows appended since the nearest ancestor snapshot that has
-        stats, then KMV-merging — O(increment), never O(table). Falls
-        back semantics: no prior stats anywhere -> raises (run
-        compute_column_stats once first); a delete/overwrite inside the
-        window -> incremental_data_files raises (sketches cannot
-        subtract; recompute instead). Exactness degrades to the KMV
-        estimate only once a sketch saturates its k."""
-        from .puffin import plan_incremental_stats
-
-        status, entry = plan_incremental_stats(spark, self.metadata(), self.location)
-        if status != "new" or entry is None:
-            return entry
-
-        def mutate(cur: dict):
-            new_md = dict(cur)
-            stats = [
-                e
-                for e in cur.get("statistics", [])
-                if e["snapshot-id"] != entry["snapshot-id"]
-            ]
-            new_md["statistics"] = stats + [entry]
-            return new_md, None
-
-        self._commit_metadata(mutate)
-        return entry
-
-    def partition_stats(
-        self, spark: SparkSession, snapshot_id: int | None = None
+        from_snapshot_id: int | None = None,
+        to_snapshot_id: int | None = None,
     ) -> DataFrame:
-        """Read the registered partition statistics file (see
-        read_partition_stats)."""
-        return read_partition_stats(spark, self.metadata(), snapshot_id)
+        """Scan only the rows appended in the snapshot window — the
+        consumption side of exactly-once micro-batch commits: a consumer
+        checkpoints the last snapshot id it processed and passes it as
+        from_snapshot_id on the next run."""
+        md = self.metadata()
+        self.apply_storage_credentials(spark, md["location"])
+        schema = read_schema_for(spark, md)
+        files = incremental_data_files(md, from_snapshot_id, to_snapshot_id)[0]
+        if not files:
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+        return table_file_scan(spark, md, schema, [f.file_path for f in files])
 
     def changelog_scan(
         self,
@@ -7612,15 +7825,94 @@ class FsTable:
         `source_range=(col, lo, hi)` scopes the changelog (manifest-
         summary skip + partition-value file skip + exact row filter);
         `with_lineage` (v3) adds the row-identity columns."""
+        md = self.metadata()
+        self.apply_storage_credentials(spark, md["location"])
         return read_changelog(
             spark,
-            self.metadata(),
+            md,
             from_snapshot_id,
             to_snapshot_id,
             source_range,
             with_lineage,
             full_pre_images,
         )
+
+    def metadata_table(self, spark: SparkSession, name: str) -> DataFrame:
+        """Inspection tables (snapshots/history/files/all_files/
+        manifests) — see module-level metadata_table."""
+        return metadata_table(spark, self.metadata(), name)
+
+    # -- statistics --------------------------------------------------------
+    def compute_partition_stats(self, snapshot_id: int | None = None) -> dict | None:
+        """Write the spec's partition statistics Parquet for a snapshot
+        (current when None) and register it in table metadata
+        (`partition-statistics`, the set-partition-statistics update),
+        replacing any prior entry for that snapshot. Returns the entry,
+        or None on an empty table."""
+        md = self.metadata()
+        entry = write_partition_stats_file(md["location"], md, snapshot_id)
+        if entry is None:
+            return None
+        return self._commit_updates(
+            [{"action": "set-partition-statistics", "partition-statistics": entry}],
+            md,
+            entry,
+        )
+
+    def partition_stats(
+        self, spark: SparkSession, snapshot_id: int | None = None
+    ) -> DataFrame:
+        """Read the registered partition statistics file (see
+        read_partition_stats)."""
+        return read_partition_stats(spark, self.metadata(), snapshot_id)
+
+    def compute_column_stats(
+        self,
+        spark: SparkSession,
+        snapshot_id: int | None = None,
+        columns: list[str] | None = None,
+    ) -> dict | None:
+        """Write the Puffin column-NDV statistics file for a snapshot
+        (current when None; deletes-applied scan) and register it in
+        table metadata (`statistics`, the set-statistics update),
+        replacing any prior entry for that snapshot. Returns the
+        StatisticsFile entry, or None on an empty table / no primitive
+        columns."""
+        from .puffin import write_column_stats_file
+
+        md = self.metadata()
+        sid = md["current-snapshot-id"] if snapshot_id is None else snapshot_id
+        if sid == -1:
+            return None
+        entry = write_column_stats_file(
+            spark, md["location"], md, self.read(spark, snapshot_id=sid), sid, columns
+        )
+        if entry is None:
+            return None
+        return self._commit_updates(_set_statistics(entry), md, entry)
+
+    def column_stats(self, snapshot_id: int | None = None) -> dict[str, dict]:
+        """Registered per-column NDV stats (see puffin.read_column_stats)."""
+        from .puffin import read_column_stats
+
+        return read_column_stats(self.metadata(), snapshot_id)
+
+    def update_column_stats_incremental(self, spark: SparkSession) -> dict | None:
+        """Refresh column stats to the CURRENT snapshot by sketching only
+        the rows appended since the nearest ancestor snapshot that has
+        stats, then KMV-merging — O(increment), never O(table). Falls
+        back semantics: no prior stats anywhere -> raises (run
+        compute_column_stats once first); a delete/overwrite inside the
+        window -> incremental_data_files raises (sketches cannot
+        subtract; recompute instead). Exactness degrades to the KMV
+        estimate only once a sketch saturates its k."""
+        from .puffin import plan_incremental_stats
+
+        md = self.metadata()
+        status, entry = plan_incremental_stats(spark, md, md["location"])
+        if status != "new" or entry is None:
+            return entry
+        return self._commit_updates(_set_statistics(entry), md, entry)
 
     # -- refs: tags + branches ---------------------------------------------
     def set_ref(
@@ -7634,7 +7926,8 @@ class FsTable:
         max_ref_age_ms: int | None = None,
     ) -> None:
         """Create/move a named ref (tag = immutable bookmark, branch =
-        movable pointer) to a committed snapshot — metadata-only commit.
+        movable pointer) to a committed snapshot — metadata-only commit
+        (set-snapshot-ref, the same update appends use for main).
         Ref'd snapshots are protected from expire_snapshots, so a tag
         pins a dataset version (e.g. a training-corpus release) for as
         long as the ref exists.
@@ -7656,65 +7949,27 @@ class FsTable:
             max_snapshot_age_ms,
             max_ref_age_ms,
         )
-        attempt = 0
-        while True:
-            base_version, md = self._load_state()
-            # commit.retry.num-retries governs metadata-only commits too
-            attempts = commit_attempts_for(md)
+
+        def build(md: dict):
             if snapshot_id not in {s["snapshot-id"] for s in md["snapshots"]}:
                 raise ValueError(f"unknown snapshot {snapshot_id}")
-            new_md = dict(md)
-            new_md["refs"] = {**md.get("refs", {}), name: ref}
-            new_md["last-updated-ms"] = int(time.time() * 1000)
-            try:
-                _write_metadata_version(self.location, base_version + 1, new_md)
-            except CommitConflictError:
-                attempt += 1
-                if attempt >= attempts:
-                    raise
-                for _ in range(10):
-                    if self.current_version() != base_version:
-                        break
-                    time.sleep(0.05)
-                else:
-                    raise
-                continue
-            _swap_version_hint(self.location, base_version + 1)
-            return
-        raise AssertionError("unreachable")
+            update = {"action": "set-snapshot-ref", "ref-name": name, **ref}
+            return [_uuid_requirement(md)], [update], None
+
+        self._commit_loop(build)
 
     def drop_ref(self, name: str) -> None:
         """Remove a named ref (its snapshot becomes expirable again)."""
         if name == "main":
             raise ValueError("cannot drop the main branch")
-        attempt = 0
-        while True:
-            base_version, md = self._load_state()
-            # commit.retry.num-retries governs metadata-only commits too
-            attempts = commit_attempts_for(md)
-            refs = dict(md.get("refs", {}))
-            if name not in refs:
-                return
-            del refs[name]
-            new_md = dict(md)
-            new_md["refs"] = refs
-            new_md["last-updated-ms"] = int(time.time() * 1000)
-            try:
-                _write_metadata_version(self.location, base_version + 1, new_md)
-            except CommitConflictError:
-                attempt += 1
-                if attempt >= attempts:
-                    raise
-                for _ in range(10):
-                    if self.current_version() != base_version:
-                        break
-                    time.sleep(0.05)
-                else:
-                    raise
-                continue
-            _swap_version_hint(self.location, base_version + 1)
-            return
-        raise AssertionError("unreachable")
+
+        def build(md: dict):
+            if name not in md.get("refs", {}):
+                return [], [], None
+            update = {"action": "remove-snapshot-ref", "ref-name": name}
+            return [_uuid_requirement(md)], [update], None
+
+        self._commit_loop(build)
 
     def resolve_ref(self, name: str) -> int:
         ref = self.metadata().get("refs", {}).get(name)
@@ -7727,7 +7982,28 @@ class FsTable:
         'tag' semantics)."""
         return self.read(spark, snapshot_id=self.resolve_ref(name))
 
-    # -- schema evolution --------------------------------------------------
+    def snapshot_as_of(self, timestamp_ms: int) -> int | None:
+        """Snapshot id for timestamp time travel; pass to read()."""
+        return snapshot_id_as_of(self.metadata(), timestamp_ms)
+
+    def rollback_to(self, snapshot_id: int) -> int:
+        """Move main's head BACK to an ancestor snapshot (mistake
+        recovery: un-publish a bad append/delete without rewriting
+        anything). Metadata-only commit; the rolled-past snapshots stay
+        readable by id (and re-expirable) until expire_snapshots. The
+        snapshot log records the transition, so timestamp time travel
+        keeps reflecting what readers actually saw."""
+
+        def build(md: dict):
+            require_main_ancestor(md, snapshot_id)
+            if md["current-snapshot-id"] == snapshot_id:
+                return [], [], snapshot_id
+            requirements = [_uuid_requirement(md), _ref_requirement(md, "main")]
+            return requirements, [_set_ref_update(md, "main", snapshot_id)], snapshot_id
+
+        return self._commit_loop(build)
+
+    # -- schema, spec and format evolution ---------------------------------
     def add_columns(
         self,
         new_fields: list[StructField] | StructType,
@@ -7743,22 +8019,18 @@ class FsTable:
         column; requires format-version 3). `iceberg_types` overrides a
         new field's derived type with a v3-only type (ns timestamps over
         LongType epoch-nanos, or `unknown` — always-null placeholder).
-        Metadata-only commit — no snapshot, no data rewrite. Returns the
-        new schema id."""
+        Metadata-only commit (add-schema + set-current-schema) — no
+        snapshot, no data rewrite. Returns the new schema id."""
         fields = list(new_fields.fields if isinstance(new_fields, StructType) else new_fields)
-        attempt = 0
-        while True:
-            base_version, md = self._load_state()
-            # commit.retry.num-retries governs metadata-only commits too
-            attempts = commit_attempts_for(md)
+
+        def build(md: dict):
             # re-adding a previously-dropped name binds it to a NEW id;
             # name-based resolution would resurrect the old column's
             # bytes, so the table must be id-resolvable first
             historic = {f_["name"] for s in md["schemas"] for f_ in s["fields"]}
             current_names = {f_["name"] for f_ in current_schema(md)["fields"]}
             if any(f_.name in historic - current_names for f_ in fields):
-                live, _, _ = self.plan_scan()
-                require_id_resolvable([f.file_path for f in live], md)
+                self._require_id_resolvable(md)
             if defaults and table_format_version(md) < 3:
                 raise ValueError(
                     "default values are an Iceberg v3 feature — call "
@@ -7769,152 +8041,19 @@ class FsTable:
                     "timestamp_ns/unknown columns are an Iceberg v3 feature "
                     "— call upgrade_format_version(3) first"
                 )
-            new_schema, last_col = evolved_schema(
-                md, fields, defaults, iceberg_types
-            )
-            new_md = dict(md)
-            new_md["schemas"] = md["schemas"] + [new_schema]
-            new_md["current-schema-id"] = new_schema["schema-id"]
-            new_md["last-column-id"] = last_col
-            new_md["last-updated-ms"] = int(time.time() * 1000)
-            new_md["metadata-log"] = md["metadata-log"] + [
-                {
-                    "timestamp-ms": md["last-updated-ms"],
-                    "metadata-file": _metadata_path(self.location, base_version),
-                }
-            ]
-            try:
-                _write_metadata_version(self.location, base_version + 1, new_md)
-            except CommitConflictError:
-                attempt += 1
-                if attempt >= attempts:
-                    raise
-                for _ in range(10):
-                    if self.current_version() != base_version:
-                        break
-                    time.sleep(0.05)
-                else:
-                    raise
-                continue
-            _swap_version_hint(self.location, base_version + 1)
-            return new_schema["schema-id"]
-        raise AssertionError("unreachable")
+            schema, last_col = evolved_schema(md, fields, defaults, iceberg_types)
+            return [_uuid_requirement(md)], _set_schema(schema, last_col), schema["schema-id"]
 
-    def snapshot_as_of(self, timestamp_ms: int) -> int | None:
-        """Snapshot id for timestamp time travel; pass to read()."""
-        return snapshot_id_as_of(self.metadata(), timestamp_ms)
+        return self._commit_loop(build)
 
-    def rollback_to(self, snapshot_id: int) -> int:
-        """Move main's head BACK to an ancestor snapshot (mistake
-        recovery: un-publish a bad append/delete without rewriting
-        anything). Metadata-only commit; the rolled-past snapshots stay
-        readable by id (and re-expirable) until expire_snapshots. The
-        snapshot log records the transition, so timestamp time travel
-        keeps reflecting what readers actually saw."""
-
-        def mutate(md: dict):
-            require_main_ancestor(md, snapshot_id)
-            if md["current-snapshot-id"] == snapshot_id:
-                return None, snapshot_id  # no-op
-            new_md = dict(md)
-            new_md["current-snapshot-id"] = snapshot_id
-            refs = dict(md.get("refs", {}))
-            if "main" in refs:
-                refs["main"] = {**refs["main"], "snapshot-id": snapshot_id}
-            new_md["refs"] = refs
-            new_md["snapshot-log"] = md["snapshot-log"] + [
-                {"timestamp-ms": int(time.time() * 1000), "snapshot-id": snapshot_id}
-            ]
-            return new_md, snapshot_id
-
-        return self._commit_metadata(mutate)
-
-    def upgrade_format_version(self, target: int = 3) -> int:
-        """v2 -> v3 upgrade ceremony (metadata-only commit): validate
-        the v3 delete invariants (plan_format_upgrade — no live parquet
-        position deletes, no stacked DVs), bump `format-version`, and
-        initialize `next-row-id` (row-lineage id space, v3 required
-        field). After the upgrade, merge-on-read writes refuse parquet
-        position-delete files. No-op when already at `target`."""
-
-        def mutate(md: dict):
-            if not plan_format_upgrade(md, target):
-                return None, table_format_version(md)
-            new_md = dict(md)
-            new_md["format-version"] = target
-            if "next-row-id" not in new_md:
-                new_md["next-row-id"] = 0
-            return new_md, target
-
-        return self._commit_metadata(mutate)
-
-    def _commit_metadata(self, mutate) -> Any:
-        """Metadata-only commit with CAS retry: `mutate(md)` returns
-        (new_md, result) — or (None, result) for a no-op — and the new
-        metadata version is swapped in atomically. No snapshot, no data
-        files touched."""
-        attempt = 0
-        while True:
-            base_version, md = self._load_state()
-            # commit.retry.num-retries governs metadata-only commits too
-            attempts = commit_attempts_for(md)
-            new_md, result = mutate(md)
-            if new_md is None:
-                return result
-            new_md["last-updated-ms"] = int(time.time() * 1000)
-            new_md["metadata-log"] = md["metadata-log"] + [
-                {
-                    "timestamp-ms": md["last-updated-ms"],
-                    "metadata-file": _metadata_path(self.location, base_version),
-                }
-            ]
-            try:
-                _write_metadata_version(self.location, base_version + 1, new_md)
-            except CommitConflictError:
-                attempt += 1
-                if attempt >= attempts:
-                    raise
-                for _ in range(10):
-                    if self.current_version() != base_version:
-                        break
-                    time.sleep(0.05)
-                else:
-                    raise
-                continue
-            _swap_version_hint(self.location, base_version + 1)
-            return result
-        raise AssertionError("unreachable")
-
-    def update_partition_spec(
-        self, partition_source: str | None, granularity: str = "hourly"
-    ) -> int | None:
-        """Partition-spec evolution (Iceberg `ALTER TABLE ... WRITE
-        ORDERED/PARTITIONED BY` analog): switch the hidden time partition
-        to a different granularity, a different source column, or to
-        unpartitioned. Metadata-only commit; existing files keep their
-        original spec and are never rewritten — only NEW writes use the
-        new layout. Scans prune on the default spec's field and keep
-        old-spec files conservatively (their partition tuple doesn't
-        carry the new field); a later rewrite_data_files MIGRATES
-        old-spec files onto the current layout (restoring pruning and
-        partition-identity ops like overwrite_partitions for them).
-        Returns the new spec id, or None if the requested spec is
-        already the default."""
-
-        def mutate(md: dict):
-            spec = evolved_spec(md, partition_source, granularity)
-            if spec is None:
-                return None, None
-            new_md = dict(md)
-            new_md["partition-specs"] = md["partition-specs"] + [spec]
-            new_md["default-spec-id"] = spec["spec-id"]
-            new_md["last-partition-id"] = max(
-                md.get("last-partition-id", 999),
-                max((f_["field-id"] for f_ in spec["fields"]), default=0),
-            )
-            return new_md, spec["spec-id"]
-
-        return self._commit_metadata(mutate)
+    def _require_id_resolvable(self, md: dict) -> None:
+        """Refuse a schema change that flips reads to id-based resolution
+        while a live data file could resolve neither by parquet field id
+        nor by the table's name mapping (it would read as nulls)."""
+        sid = md.get("current-snapshot-id", -1)
+        if sid != -1:
+            data, _ = self._live_files(md, sid)
+            require_id_resolvable([f.file_path for f in data], md)
 
     def rename_column(self, old: str, new: str) -> int:
         """Column rename (Iceberg RENAME COLUMN): metadata-only — the
@@ -7924,159 +8063,70 @@ class FsTable:
         or be covered by the table's name mapping (add_files maintains
         schema.name-mapping.default) — otherwise the file would read as
         null under id resolution, so the rename refuses instead."""
-        live, _, _ = self.plan_scan()
-        require_id_resolvable([f.file_path for f in live], self.metadata())
 
-        def mutate(md: dict):
+        def build(md: dict):
+            self._require_id_resolvable(md)
             schema = evolved_schema_rename(md, old, new)
-            new_md = dict(md)
-            new_md["schemas"] = md["schemas"] + [schema]
-            new_md["current-schema-id"] = schema["schema-id"]
-            return new_md, schema["schema-id"]
+            return [_uuid_requirement(md)], _set_schema(schema), schema["schema-id"]
 
-        return self._commit_metadata(mutate)
+        return self._commit_loop(build)
 
     def drop_column(self, name: str) -> int:
         """Column drop (Iceberg DROP COLUMN): metadata-only — reads stop
         projecting the column; old files keep the bytes until rewritten;
         the id is never reused. Partition sources cannot be dropped."""
 
-        def mutate(md: dict):
+        def build(md: dict):
             schema = evolved_schema_drop(md, name)
-            new_md = dict(md)
-            new_md["schemas"] = md["schemas"] + [schema]
-            new_md["current-schema-id"] = schema["schema-id"]
-            return new_md, schema["schema-id"]
+            return [_uuid_requirement(md)], _set_schema(schema), schema["schema-id"]
 
-        return self._commit_metadata(mutate)
+        return self._commit_loop(build)
 
-    def read_changes(
-        self,
-        spark: SparkSession,
-        from_snapshot_id: int | None = None,
-        to_snapshot_id: int | None = None,
-    ) -> DataFrame:
-        """Scan only the rows appended in the snapshot window — the
-        consumption side of exactly-once micro-batch commits: a consumer
-        checkpoints the last snapshot id it processed and passes it as
-        from_snapshot_id on the next run."""
-        md = self.metadata()
-        schema = read_schema_for(spark, md)
-        files = self.incremental_files(from_snapshot_id, to_snapshot_id)
-        if not files:
-            return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
-        return table_file_scan(spark, md, schema, [f.file_path for f in files])
-
-    # -- table maintenance -------------------------------------------------
-    def rewrite_data_files(
-        self,
-        spark: SparkSession,
-        target_bytes: int = 128 * 1024 * 1024,
-        min_files: int = 2,
-        zorder_by: list[str] | None = None,
+    def update_partition_spec(
+        self, partition_source: str | None, granularity: str = "hourly"
     ) -> int | None:
-        """Iceberg-style compaction (`rewrite_data_files`): partitions
-        whose live files are many-and-small get rewritten into one file
-        each; the commit REPLACES the file set in a new snapshot. Old
-        snapshots keep referencing the old files, so time travel still
-        works until expire_snapshots reclaims them.
+        """Partition-spec evolution (Iceberg `ALTER TABLE ... WRITE
+        ORDERED/PARTITIONED BY` analog): switch the hidden time partition
+        to a different granularity, a different source column, or to
+        unpartitioned. Metadata-only commit (add-spec + set-default-spec);
+        existing files keep their original spec and are never rewritten —
+        only NEW writes use the new layout. Scans prune on the default
+        spec's field and keep old-spec files conservatively (their
+        partition tuple doesn't carry the new field); a later
+        rewrite_data_files MIGRATES old-spec files onto the current
+        layout (restoring pruning and partition-identity ops like
+        overwrite_partitions for them). Returns the new spec id, or None
+        if the requested spec is already the default."""
 
-        One Spark job per compacted partition reads only that
-        partition's files — never a full-table rewrite. The snapshot's
-        single consolidated manifest also collapses manifest sprawl
-        (streaming appends add one manifest per commit; scans read every
-        manifest, so periodic consolidation keeps planning O(files),
-        not O(commits)).
-
-        `zorder_by` additionally sorts each rewritten partition along
-        the Z-curve of the given columns (operators/layout.py) before
-        writing, so Parquet row-group min/max stats are tight on every
-        listed column — compaction and layout optimization in one
-        pass, like Iceberg's sort-order rewrite."""
-        _, planned_md = self._load_state()
-        planned_snapshot = planned_md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes, _ = self.plan_scan(snapshot_id=planned_snapshot)
-        planned = plan_rewrite(
-            spark,
-            planned_md,
-            live,
-            target_bytes=target_bytes,
-            min_files=min_files,
-            zorder_by=zorder_by,
-            delete_files=deletes,
-        )
-        if planned is None:
-            return None
-        replacement, n_compacted, n_rewritten = planned
-        # pending position deletes stay live for the SURVIVING files
-        # (compacted files had theirs materialized by the rewrite; their
-        # now-stale delete rows match nothing)
-        replacement = replacement + deletes
-        # replace commits validate the planning base: if a concurrent
-        # append advanced the table mid-rewrite, merging would silently
-        # drop the appended files — raise ReplaceConflictError instead
-        extra = {
-            "compacted-files": str(n_compacted),
-            "added-data-files": str(n_rewritten),
-        }
-        if zorder_by:
-            # informational: Z-ordering is an action-side strategy, not a
-            # spec sort order — record what the layout was clustered by
-            extra["zorder-by"] = ",".join(zorder_by)
-        return self._commit_with_retry(
-            replacement,
-            operation="replace",
-            carry_forward=False,
-            extra_summary=extra,
-            expected_base_snapshot=planned_snapshot,
-        )
-
-    def rewrite_manifests(
-        self,
-        target_size_bytes: int = DEFAULT_MANIFEST_TARGET_SIZE,
-        min_count: int = 2,
-    ) -> int | None:
-        """Metadata-level compaction (Iceberg's `rewrite_manifests`
-        action): merge the current snapshot's small manifests into
-        ~target-size bins and commit the new manifest list as a
-        `replace` snapshot. No data file is read or written — the
-        commit is O(manifest entries) of Avro rewriting — and change
-        streams never see it (replace snapshots are skipped by
-        incremental scans and changelogs). Runs inside the metadata CAS
-        retry loop: a concurrent append landing mid-rewrite re-plans
-        against the new base, so its manifests are never dropped.
-        Returns the new snapshot id, or None when there was nothing to
-        merge."""
-
-        def mutate(md: dict):
-            snapshot = build_rewrite_manifests_snapshot(
-                self.location,
-                md,
-                target_size=target_size_bytes,
-                min_count=min_count,
-            )
-            if snapshot is None:
-                return None, None
-            new_md = dict(md)
-            new_md["last-sequence-number"] = snapshot["sequence-number"]
-            new_md["snapshots"] = md["snapshots"] + [snapshot]
-            new_md["refs"] = {
-                **md.get("refs", {}),
-                "main": _advance_ref(md, "main", snapshot["snapshot-id"]),
-            }
-            new_md["current-snapshot-id"] = snapshot["snapshot-id"]
-            new_md["snapshot-log"] = md["snapshot-log"] + [
-                {
-                    "timestamp-ms": snapshot["timestamp-ms"],
-                    "snapshot-id": snapshot["snapshot-id"],
-                }
+        def build(md: dict):
+            spec = evolved_spec(md, partition_source, granularity)
+            if spec is None:
+                return [], [], None
+            updates = [
+                {"action": "add-spec", "spec": spec},
+                {"action": "set-default-spec", "spec-id": spec["spec-id"]},
             ]
-            return new_md, snapshot["snapshot-id"]
+            return [_uuid_requirement(md)], updates, spec["spec-id"]
 
-        return self._commit_metadata(mutate)
+        return self._commit_loop(build)
 
+    def upgrade_format_version(self, target: int = 3) -> int:
+        """v2 -> v3 upgrade ceremony (metadata-only commit): validate
+        the v3 delete invariants (plan_format_upgrade — no live parquet
+        position deletes, no stacked DVs), bump `format-version`, and
+        initialize `next-row-id` (row-lineage id space, v3 required
+        field). After the upgrade, merge-on-read writes refuse parquet
+        position-delete files. No-op when already at `target`."""
+
+        def build(md: dict):
+            if not plan_format_upgrade(md, target):
+                return [], [], table_format_version(md)
+            update = {"action": "upgrade-format-version", "format-version": target}
+            return [_uuid_requirement(md)], [update], target
+
+        return self._commit_loop(build)
+
+    # -- row-level DML -----------------------------------------------------
     def delete_where(
         self,
         spark: SparkSession,
@@ -8084,7 +8134,7 @@ class FsTable:
         mode: str = "copy-on-write",
         branch: str = "main",
     ) -> tuple[int | None, int]:
-        """Row-level DELETE, two strategies sharing one predicate scan:
+        """Row-level DELETE, three strategies sharing one predicate scan:
 
         * ``copy-on-write`` (default): files containing matching rows are
           rewritten without them; the commit REPLACES the live file set
@@ -8109,9 +8159,9 @@ class FsTable:
         if nothing matched, rows deleted).
 
         Concurrency: copy-on-write pins the planning base and raises
-        ReplaceConflictError if the table advanced mid-delete (a replace
-        cannot merge). Merge-on-read commits like an APPEND — it only
-        ADDS a delete file, so it retries cleanly over concurrent
+        ReplaceConflictError if the target branch advanced mid-delete (a
+        replace cannot merge). Merge-on-read commits like an APPEND — it
+        only ADDS a delete file, so it retries cleanly over concurrent
         appends; rows landing after planning are not covered (snapshot
         isolation, same as Iceberg's default)."""
         if mode not in ("copy-on-write", "merge-on-read", "deletion-vectors"):
@@ -8119,8 +8169,8 @@ class FsTable:
                 "mode must be copy-on-write|merge-on-read|deletion-vectors, "
                 f"got {mode!r}"
             )
-        _, planned_md = self._load_state()
-        planned_snapshot = resolve_dml_branch(planned_md, branch, mode)
+        md = self.metadata()
+        planned_snapshot = resolve_dml_branch(md, branch, mode)
         if planned_snapshot == -1:
             return None, 0
         # predicate-derived pruning: files whose manifest bounds /
@@ -8129,21 +8179,17 @@ class FsTable:
         # the matching partitions (mirrors the reference's time-pruned
         # recovery scan, internal/recovery/scanner.go:197-226)
         live, excluded, deletes = plan_dml_files(
-            planned_md,
-            planned_snapshot,
-            predicate,
-            spark_session_timezone(spark),
-            spark=spark,
+            md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
         )
         if mode == "merge-on-read":
-            require_position_delete_files_allowed(planned_md)
+            require_position_delete_files_allowed(md)
         if mode in ("merge-on-read", "deletion-vectors"):
             plan_fn = (
                 plan_deletion_vectors
                 if mode == "deletion-vectors"
                 else plan_position_delete
             )
-            planned = plan_fn(spark, planned_md, live, deletes, predicate)
+            planned = plan_fn(spark, md, live, deletes, predicate)
             if planned is None:
                 return None, 0
             new_deletes, n_deleted, superseded, targets = planned
@@ -8160,16 +8206,15 @@ class FsTable:
                 required_live_paths=targets or None,
             )
             return sid, n_deleted
-        planned = plan_delete(spark, planned_md, live, predicate, delete_files=deletes)
+        planned = plan_delete(spark, md, live, predicate, delete_files=deletes)
         if planned is None:
             return None, 0
         replacement, n_deleted, n_rewritten = planned
-        # delete rows for SURVIVING files must stay live; entries for
-        # rewritten files are stale and match nothing; pruned-away files
-        # contain no matches so they survive untouched by reference
-        replacement = replacement + excluded + deletes
         sid = self._commit_with_retry(
-            replacement,
+            # delete rows for SURVIVING files must stay live; entries for
+            # rewritten files are stale and match nothing; pruned-away
+            # files contain no matches so they survive by reference
+            replacement + excluded + deletes,
             operation="overwrite",
             carry_forward=False,
             extra_summary={
@@ -8178,6 +8223,7 @@ class FsTable:
             },
             expected_base_snapshot=planned_snapshot,
             branch=branch,
+            md=md,
         )
         return sid, n_deleted
 
@@ -8195,10 +8241,10 @@ class FsTable:
         delete survive). Returns (snapshot id or None on empty
         table/keys, n key tuples). Commits like an append: retries
         cleanly over concurrent appends."""
-        _, planned_md = self._load_state()
-        if planned_md["current-snapshot-id"] == -1:
+        md = self.metadata()
+        if md["current-snapshot-id"] == -1:
             return None, 0
-        planned = plan_equality_delete(spark, planned_md, keys_df, equality_cols)
+        planned = plan_equality_delete(spark, md, keys_df, equality_cols)
         if planned is None:
             return None, 0
         new_deletes, n_keys = planned
@@ -8227,12 +8273,12 @@ class FsTable:
         updated 100 TB feature table writable from a stream. Fold
         accumulated deletes later with compaction maintenance. Empty
         inputs commit NOTHING and return None (F1 short-circuit)."""
-        _, planned_md = self._load_state()
-        data_files = write_partitioned_batch(df, self.location, planned_md)
+        md = self.metadata()
+        data_files = write_partitioned_batch(df, md["location"], md)
         if not data_files:  # F1: empty batch -> no snapshot
             return None
         planned = plan_equality_delete(
-            spark, planned_md, df.select(*equality_cols), equality_cols
+            spark, md, df.select(*equality_cols), equality_cols
         )
         files = data_files + (planned[0] if planned else [])
         summary = {"upserted-records": str(sum(f.record_count for f in data_files))}
@@ -8242,75 +8288,6 @@ class FsTable:
             operation="overwrite",
             carry_forward=True,
             extra_summary=summary,
-        )
-
-    def rewrite_position_deletes(self, spark: SparkSession) -> int | None:
-        """Maintenance: fold all pending position deletes into the data
-        files — exactly the files the delete rows reference are rewritten
-        without the deleted rows, every delete file is dropped, and the
-        result commits as a `replace` snapshot (logically a no-op, so
-        incremental consumers skip it, like compaction). Run this when
-        accumulated deletes start taxing the read-side anti-join.
-
-        Cost tracks the files containing deletes, never the table: the
-        referenced paths come from the delete files themselves (one
-        distinct over delete tuples — O(affected files) to the driver).
-        Returns the new snapshot id, or None when there are no deletes."""
-        _, planned_md = self._load_state()
-        planned_snapshot = planned_md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes, _ = self.plan_scan(snapshot_id=planned_snapshot)
-        pos = [f for f in deletes if f.content == 1]
-        eq = [f for f in deletes if f.content == 2]
-        if not pos:
-            return None
-        replacement, n_rewritten = plan_delete_rewrite(spark, planned_md, live, deletes)
-        # equality-delete files stay live for the SURVIVING files (which
-        # keep their original sequence numbers); the rewrite materialized
-        # them for the files it touched
-        return self._commit_with_retry(
-            replacement + eq,
-            operation="replace",
-            carry_forward=False,
-            extra_summary={
-                "removed-delete-files": str(len(pos)),
-                "rewritten-data-files": str(n_rewritten),
-            },
-            expected_base_snapshot=planned_snapshot,
-        )
-
-    def rewrite_equality_deletes(self, spark: SparkSession) -> int | None:
-        """Maintenance: fold all pending EQUALITY deletes into the data
-        files — exactly the files containing matched rows are rewritten
-        without them (all delete kinds applied), every equality-delete
-        file drops, position deletes stay live for survivors, and the
-        result commits as a `replace` snapshot (logical no-op — change
-        streams skip it). Run when accumulated CDC deletes start taxing
-        the read-side anti-joins. Returns the new snapshot id, or None
-        when no equality delete matches anything (unmatched delete
-        files still drop in that case only if rows matched — a fully
-        stale delete file costs nothing at read time beyond one
-        metadata row, so it is left for expire_snapshots)."""
-        _, planned_md = self._load_state()
-        planned_snapshot = planned_md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes, _ = self.plan_scan(snapshot_id=planned_snapshot)
-        planned = plan_equality_rewrite(spark, planned_md, live, deletes)
-        if planned is None:
-            return None
-        replacement, n_rewritten = planned
-        n_eq = sum(1 for f in deletes if f.content == 2)
-        return self._commit_with_retry(
-            replacement,
-            operation="replace",
-            carry_forward=False,
-            extra_summary={
-                "removed-delete-files": str(n_eq),
-                "rewritten-data-files": str(n_rewritten),
-            },
-            expected_base_snapshot=planned_snapshot,
         )
 
     def update_where(
@@ -8340,25 +8317,21 @@ class FsTable:
                 "mode must be copy-on-write|merge-on-read|deletion-vectors, "
                 f"got {mode!r}"
             )
-        _, planned_md = self._load_state()
-        planned_snapshot = resolve_dml_branch(planned_md, branch, mode)
+        md = self.metadata()
+        planned_snapshot = resolve_dml_branch(md, branch, mode)
         if planned_snapshot == -1:
             return None, 0
         # predicate-derived pruning, same as delete_where: provably
         # match-free files never reach the Spark scan
         live, excluded, deletes = plan_dml_files(
-            planned_md,
-            planned_snapshot,
-            predicate,
-            spark_session_timezone(spark),
-            spark=spark,
+            md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
         )
         if mode == "merge-on-read":
-            require_position_delete_files_allowed(planned_md)
+            require_position_delete_files_allowed(md)
         if mode in ("merge-on-read", "deletion-vectors"):
             planned = plan_update_mor(
                 spark,
-                planned_md,
+                md,
                 live,
                 deletes,
                 predicate,
@@ -8381,7 +8354,7 @@ class FsTable:
             )
             return sid, n_updated
         planned = plan_update(
-            spark, planned_md, live, predicate, set_exprs, delete_files=deletes
+            spark, md, live, predicate, set_exprs, delete_files=deletes
         )
         if planned is None:
             return None, 0
@@ -8398,31 +8371,9 @@ class FsTable:
             },
             expected_base_snapshot=planned_snapshot,
             branch=branch,
+            md=md,
         )
         return sid, n_updated
-
-    def remove_orphan_files(
-        self,
-        older_than_seconds: float = 3 * 86400,
-        include_metadata: bool = True,
-    ) -> list[str]:
-        """Reclaim data files under the table location that NO snapshot
-        references — the inverse of recovery (which re-registers them):
-        leftovers from failed/raced writes whose commit never landed.
-        With include_metadata (default), unreferenced manifest/list
-        .avro trees and deregistered stats files are swept too — the
-        litter every CAS-losing commit attempt leaves behind. Only
-        files older than `older_than_seconds` are deleted (default
-        3 days, Iceberg's default) so in-flight writes racing this call
-        are never swept. Purely driver-side metadata + listing work.
-        Returns deleted paths."""
-        return sweep_table_orphans(
-            self.location,
-            self.metadata(),
-            set(self.all_files()),
-            older_than_seconds,
-            include_metadata,
-        )
 
     def merge_rows(
         self,
@@ -8444,16 +8395,16 @@ class FsTable:
         raises ReplaceConflictError if the table advances mid-merge."""
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"mode must be copy-on-write|merge-on-read, got {mode!r}")
-        _, planned_md = self._load_state()
-        planned_snapshot = planned_md["current-snapshot-id"]
-        live, deletes, _ = (
-            self.plan_scan(snapshot_id=planned_snapshot)
+        md = self.metadata()
+        planned_snapshot = md["current-snapshot-id"]
+        live, deletes = (
+            self._live_files(md, planned_snapshot)
             if planned_snapshot != -1
-            else ([], [], 0)
+            else ([], [])
         )
         if mode == "merge-on-read":
             new_files, n_updated, n_inserted, superseded, targets = plan_merge_mor(
-                spark, planned_md, live, deletes, source, key_cols
+                spark, md, live, deletes, source, key_cols
             )
             sid = self._commit_with_retry(
                 new_files,
@@ -8468,7 +8419,7 @@ class FsTable:
             )
             return sid, n_updated, n_inserted
         replacement, n_updated, n_inserted = plan_merge(
-            spark, planned_md, live, source, key_cols, delete_files=deletes
+            spark, md, live, source, key_cols, delete_files=deletes
         )
         sid = self._commit_with_retry(
             replacement + deletes,
@@ -8479,8 +8430,204 @@ class FsTable:
                 "inserted-records": str(n_inserted),
             },
             expected_base_snapshot=planned_snapshot,
+            md=md,
         )
         return sid, n_updated, n_inserted
+
+    # -- table maintenance -------------------------------------------------
+    def rewrite_data_files(
+        self,
+        spark: SparkSession,
+        target_bytes: int = 128 * 1024 * 1024,
+        min_files: int = 2,
+        zorder_by: list[str] | None = None,
+    ) -> int | None:
+        """Iceberg-style compaction (`rewrite_data_files`): partitions
+        whose live files are many-and-small get rewritten into one file
+        each; the commit REPLACES the file set in a new snapshot. Old
+        snapshots keep referencing the old files, so time travel still
+        works until expire_snapshots reclaims them.
+
+        One Spark job per compacted partition reads only that
+        partition's files — never a full-table rewrite. The snapshot's
+        single consolidated manifest also collapses manifest sprawl
+        (streaming appends add one manifest per commit; scans read every
+        manifest, so periodic consolidation keeps planning O(files),
+        not O(commits)).
+
+        `zorder_by` additionally sorts each rewritten partition along
+        the Z-curve of the given columns (operators/layout.py) before
+        writing, so Parquet row-group min/max stats are tight on every
+        listed column — compaction and layout optimization in one
+        pass, like Iceberg's sort-order rewrite.
+
+        The replace is pinned to the planning base: a concurrent append
+        advancing `main` mid-rewrite raises ReplaceConflictError
+        instead of silently dropping the appended files."""
+        md = self.metadata()
+        planned_snapshot = md["current-snapshot-id"]
+        if planned_snapshot == -1:
+            return None
+        live, deletes = self._live_files(md, planned_snapshot)
+        planned = plan_rewrite(
+            spark,
+            md,
+            live,
+            target_bytes=target_bytes,
+            min_files=min_files,
+            zorder_by=zorder_by,
+            delete_files=deletes,
+        )
+        if planned is None:
+            return None
+        replacement, n_compacted, n_rewritten = planned
+        extra = {
+            "compacted-files": str(n_compacted),
+            "added-data-files": str(n_rewritten),
+        }
+        if zorder_by:
+            # informational: Z-ordering is an action-side strategy, not a
+            # spec sort order — record what the layout was clustered by
+            extra["zorder-by"] = ",".join(zorder_by)
+        return self._commit_with_retry(
+            # pending deletes stay live for the SURVIVING files (compacted
+            # files had theirs materialized by the rewrite; their
+            # now-stale delete rows match nothing)
+            replacement + deletes,
+            operation="replace",
+            carry_forward=False,
+            extra_summary=extra,
+            expected_base_snapshot=planned_snapshot,
+            md=md,
+        )
+
+    def rewrite_manifests(
+        self,
+        target_size_bytes: int | None = None,
+        min_count: int = 2,
+    ) -> int | None:
+        """Metadata-level compaction (Iceberg's `rewrite_manifests`
+        action): merge the current snapshot's small manifests into
+        ~target-size bins (default DEFAULT_MANIFEST_TARGET_SIZE) and
+        commit the new manifest list as a `replace` snapshot. No data
+        file is read or written — the commit is O(manifest entries) of
+        Avro rewriting — and change streams never see it (replace
+        snapshots are skipped by incremental scans and changelogs). A
+        concurrent append landing mid-rewrite re-plans against the new
+        base, so its manifests are never dropped. Returns the new
+        snapshot id, or None when there was nothing to merge."""
+        if target_size_bytes is None:
+            target_size_bytes = DEFAULT_MANIFEST_TARGET_SIZE
+
+        def build(md: dict):
+            snapshot = build_rewrite_manifests_snapshot(
+                md["location"], md, target_size=target_size_bytes, min_count=min_count
+            )
+            if snapshot is None:
+                return [], [], None
+            sid = snapshot["snapshot-id"]
+            requirements = [_uuid_requirement(md), _ref_requirement(md, "main")]
+            updates = [
+                {"action": "add-snapshot", "snapshot": snapshot},
+                _set_ref_update(md, "main", sid),
+            ]
+            return requirements, updates, sid
+
+        return self._commit_loop(build)
+
+    def rewrite_position_deletes(self, spark: SparkSession) -> int | None:
+        """Maintenance: fold all pending position deletes into the data
+        files — exactly the files the delete rows reference are rewritten
+        without the deleted rows, every delete file is dropped, and the
+        result commits as a `replace` snapshot (logically a no-op, so
+        incremental consumers skip it, like compaction). Run this when
+        accumulated deletes start taxing the read-side anti-join.
+
+        Cost tracks the files containing deletes, never the table: the
+        referenced paths come from the delete files themselves (one
+        distinct over delete tuples — O(affected files) to the driver).
+        Returns the new snapshot id, or None when there are no deletes."""
+        md = self.metadata()
+        planned_snapshot = md["current-snapshot-id"]
+        if planned_snapshot == -1:
+            return None
+        live, deletes = self._live_files(md, planned_snapshot)
+        pos = [f for f in deletes if f.content == 1]
+        eq = [f for f in deletes if f.content == 2]
+        if not pos:
+            return None
+        replacement, n_rewritten = plan_delete_rewrite(spark, md, live, deletes)
+        # equality-delete files stay live for the SURVIVING files (which
+        # keep their original sequence numbers); the rewrite materialized
+        # them for the files it touched
+        return self._commit_with_retry(
+            replacement + eq,
+            operation="replace",
+            carry_forward=False,
+            extra_summary={
+                "removed-delete-files": str(len(pos)),
+                "rewritten-data-files": str(n_rewritten),
+            },
+            expected_base_snapshot=planned_snapshot,
+            md=md,
+        )
+
+    def rewrite_equality_deletes(self, spark: SparkSession) -> int | None:
+        """Maintenance: fold all pending EQUALITY deletes into the data
+        files — exactly the files containing matched rows are rewritten
+        without them (all delete kinds applied), every equality-delete
+        file drops, position deletes stay live for survivors, and the
+        result commits as a `replace` snapshot (logical no-op — change
+        streams skip it). Run when accumulated CDC deletes start taxing
+        the read-side anti-joins. Returns the new snapshot id, or None
+        when no equality delete matches anything (a fully stale delete
+        file costs nothing at read time beyond one metadata row, so it
+        is left for expire_snapshots)."""
+        md = self.metadata()
+        planned_snapshot = md["current-snapshot-id"]
+        if planned_snapshot == -1:
+            return None
+        live, deletes = self._live_files(md, planned_snapshot)
+        planned = plan_equality_rewrite(spark, md, live, deletes)
+        if planned is None:
+            return None
+        replacement, n_rewritten = planned
+        n_eq = sum(1 for f in deletes if f.content == 2)
+        return self._commit_with_retry(
+            replacement,
+            operation="replace",
+            carry_forward=False,
+            extra_summary={
+                "removed-delete-files": str(n_eq),
+                "rewritten-data-files": str(n_rewritten),
+            },
+            expected_base_snapshot=planned_snapshot,
+            md=md,
+        )
+
+    def remove_orphan_files(
+        self,
+        older_than_seconds: float = 3 * 86400,
+        include_metadata: bool = True,
+    ) -> list[str]:
+        """Reclaim data files under the table location that NO snapshot
+        references — the inverse of recovery (which re-registers them):
+        leftovers from failed/raced writes whose commit never landed.
+        With include_metadata (default), unreferenced manifest/list
+        .avro trees and deregistered stats files are swept too — the
+        litter every conflict-losing commit attempt leaves behind. Only
+        files older than `older_than_seconds` are deleted (default
+        3 days, Iceberg's default) so in-flight writes racing this call
+        are never swept. Purely driver-side metadata + listing work.
+        Returns deleted paths."""
+        md = self.metadata()
+        return sweep_table_orphans(
+            md["location"],
+            md,
+            set(all_data_file_paths(md)),
+            older_than_seconds,
+            include_metadata,
+        )
 
     def expire_snapshots(
         self,
@@ -8491,71 +8638,122 @@ class FsTable:
         """Expire snapshots with Iceberg's PER-REF retention (see
         expire_plan: tags pin their snapshot, branches protect their
         ancestry per min-snapshots-to-keep/max-snapshot-age-ms, stale
-        refs age out via max-ref-age-ms), COMMIT the pruned metadata,
-        and only then physically delete data files and manifests no
-        retained snapshot references (commit-then-delete, like
-        jar-backed Iceberg: a crash or lost CAS before the commit
-        leaves the table fully intact; a crash after it leaves only
-        harmless unreferenced files). Returns the deleted data-file
-        paths. `now_ms` pins the age-evaluation clock (deterministic
-        planning/tests); default wall clock."""
-        attempt = 0
-        while True:
-            base_version, md = self._load_state()
-            # commit.retry.num-retries governs metadata-only commits too
-            attempts = commit_attempts_for(md)
+        refs age out via max-ref-age-ms), COMMIT the pruned metadata
+        (remove-snapshot-ref + remove-snapshots, every ref the plan saw
+        pinned so a concurrent commit re-plans), and only then
+        physically delete data files and manifests no retained snapshot
+        references (commit-then-delete, like jar-backed Iceberg: a crash
+        or lost commit before the swap leaves the table fully intact; a
+        crash after it leaves only harmless unreferenced files). Returns
+        the deleted data-file paths. `now_ms` pins the age-evaluation
+        clock (deterministic planning/tests); default wall clock."""
+
+        def build(md: dict):
             plan = expire_plan(md, keep_last, older_than_ms, now_ms)
             if plan is None:
-                return []
-            retained_ids = {s["snapshot-id"] for s in plan["retained"]}
-            new_md = dict(md)
-            new_md["snapshots"] = plan["retained"]
-            if plan["removed_refs"]:
-                # stale refs (max-ref-age-ms) leave with the snapshots
-                new_md["refs"] = {
-                    k: v
-                    for k, v in md.get("refs", {}).items()
-                    if k not in set(plan["removed_refs"])
-                }
-            new_md["snapshot-log"] = [
-                e for e in md["snapshot-log"] if e["snapshot-id"] in retained_ids
+                return [], [], (md, None)
+            updates = [
+                {"action": "remove-snapshot-ref", "ref-name": name}
+                for name in plan["removed_refs"]
             ]
-            if md.get("partition-statistics"):
-                # stats files of expired snapshots leave with them
-                new_md["partition-statistics"] = [
-                    e
-                    for e in md["partition-statistics"]
-                    if e["snapshot-id"] in retained_ids
-                ]
-            if md.get("statistics"):
-                new_md["statistics"] = [
-                    e for e in md["statistics"] if e["snapshot-id"] in retained_ids
-                ]
-            new_md["last-updated-ms"] = int(time.time() * 1000)
-            try:
-                _write_metadata_version(self.location, base_version + 1, new_md)
-            except CommitConflictError:
-                attempt += 1
-                if attempt >= attempts:
+            if plan["expired"]:
+                updates.append(
+                    {
+                        "action": "remove-snapshots",
+                        "snapshot-ids": sorted(
+                            s["snapshot-id"] for s in plan["expired"]
+                        ),
+                    }
+                )
+            requirements = [_uuid_requirement(md)] + [
+                {"type": "assert-ref-snapshot-id", "ref": name, "snapshot-id": ref["snapshot-id"]}
+                for name, ref in sorted(md.get("refs", {}).items())
+            ]
+            return requirements, updates, (md, plan)
+
+        md, plan = self._commit_loop(build)
+        if plan is None:
+            return []
+        # delete phase (post-commit): no metadata references these
+        expired_ids = {s["snapshot-id"] for s in plan["expired"]}
+        for key in ("partition-statistics", "statistics"):
+            for e in md.get(key, []):
+                if e["snapshot-id"] in expired_ids:
+                    try:
+                        os.remove(e["statistics-path"])
+                    except OSError:
+                        pass
+        return delete_expired_paths(plan)
+
+
+class _LoadedMetadata(dict):
+    """Table metadata as the filesystem catalog read it, remembering the
+    `version` it was read at — the base version a commit built on it
+    must claim next (FsTable._commit)."""
+
+    version: int
+
+
+class FsTable(Table):
+    """Table in the filesystem catalog: `metadata/version-hint.text`
+    names the current `v<N>.metadata.json`, and a commit is the
+    exclusive create of version N+1 (the CAS) followed by an atomic hint
+    swap."""
+
+    def __init__(self, location: str):
+        self.location = location
+
+    def current_version(self) -> int:
+        with open(os.path.join(self.location, "metadata", "version-hint.text")) as f:
+            return int(f.read().strip())
+
+    def _load(self) -> dict:
+        """The current metadata, pinned to a SINGLE hint read: reading
+        the hint and the metadata in two separate calls would race a
+        concurrent commit landing in between."""
+        try:
+            version = self.current_version()
+        except FileNotFoundError as exc:
+            raise NoSuchTableError(f"no table at {self.location}") from exc
+        with open(_metadata_path(self.location, version)) as f:
+            md = _LoadedMetadata(json.load(f))
+        md.version = version
+        return md
+
+    def _commit(self, md: dict, requirements: list[dict], updates: list[dict]) -> None:
+        """Apply the updates engine-side (apply_updates) and claim the
+        next metadata version. The version CAS admits exactly one writer
+        per base version, which implies every requirement: the commit
+        lands only on the exact metadata it was built from."""
+        new_md = apply_updates(md, updates)
+        new_md["metadata-log"] = md["metadata-log"] + [
+            {
+                "timestamp-ms": md["last-updated-ms"],
+                "metadata-file": _metadata_path(self.location, md.version),
+            }
+        ]
+        self._commit_snapshot(md.version, new_md)
+
+    def _commit_snapshot(self, base_version: int, new_md: dict) -> None:
+        """One commit attempt: write `new_md` as version base_version + 1
+        and swap the hint to it. Losing the version to another writer
+        raises CommitConflictError once that writer's hint swap is
+        visible; a version whose hint never advances is stranded by a
+        crashed writer (UnpublishedCommitError)."""
+        try:
+            _write_metadata_version(self.location, base_version + 1, new_md)
+        except CommitConflictError:
+            # the winner may not have swapped the hint yet — give the
+            # in-flight commit a moment before declaring it stranded
+            for _ in range(10):
+                if self.current_version() != base_version:
                     raise
-                for _ in range(10):
-                    if self.current_version() != base_version:
-                        break
-                    time.sleep(0.05)
-                else:
-                    raise
-                continue  # re-plan against the new base
-            _swap_version_hint(self.location, base_version + 1)
-            # delete phase (post-commit): no metadata references these
-            for key in ("partition-statistics", "statistics"):
-                for e in md.get(key, []):
-                    if e["snapshot-id"] not in retained_ids:
-                        try:
-                            os.remove(e["statistics-path"])
-                        except OSError:
-                            pass
-            return delete_expired_paths(plan)
-        raise AssertionError("unreachable")
+                time.sleep(0.05)
+            raise UnpublishedCommitError(
+                f"metadata version {base_version + 1} exists but the version "
+                "hint never advanced to it"
+            ) from None
+        _swap_version_hint(self.location, base_version + 1)
 
 
 # --------------------------------------------------------------------------

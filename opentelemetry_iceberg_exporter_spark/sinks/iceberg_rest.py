@@ -42,26 +42,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from .iceberg_fs import (
+    CommitConflictError,
     DataFile,
-    all_data_file_paths,
-    data_files_for_paths,
-    default_spec_fields,
-    hive_data_files,
+    NoSuchTableError,
+    RequirementFailedError,
+    Table,
+    _require_where_alone,
     iceberg_schema,
-    incremental_data_files,
-    live_files,
     partition_fields_for,
-    plan_dml_files,
-    spark_session_timezone,
-    plan_scan_metadata,
-    plan_delete_rewrite,
-    plan_position_delete,
-    require_position_delete_files_allowed,
-    resolve_dml_branch,
-    scan_with_deletes,
-    write_partitioned_batch,
-    write_snapshot_tree,
     spark_read_schema,
+    spark_session_timezone,
+    write_partitioned_batch,  # noqa: F401 — the data-plane writer, addressable through either transport module
 )
 
 
@@ -76,9 +67,14 @@ class RestError(RuntimeError):
         super().__init__(f"{error_type or 'HTTP ' + str(status)}: {message} (status {status})")
 
 
-class RestCommitConflictError(RestError):
-    """409 CommitFailedException — another writer won the CAS; reload
-    the table state and retry the commit."""
+class RestCommitConflictError(RestError, RequirementFailedError):
+    """409 CommitFailedException — a commit requirement failed against
+    the server's current state (another writer won); reload the table
+    state and retry the commit."""
+
+
+class RestNoSuchTableError(RestError, NoSuchTableError):
+    """404 on a table route: the table does not exist."""
 
 
 class RestPlanUnsupportedError(RestError):
@@ -761,7 +757,7 @@ def commit_append_transaction(
     manifest tree is rebuilt against the new bases (losers' abandoned
     trees are unreferenced and reclaimed by remove_orphan_files).
     Every attempt's snapshot ids are remembered across the retry loop
-    and landed-checked at loop top — the single-table `_commit_add`
+    and landed-checked at loop top — the single-table commit loop's
     guard, lifted to transactions: a timed-out attempt whose
     landed-check ran BEFORE the server finished applying it would
     otherwise be invisible to the rebuilt retry, which would then
@@ -919,34 +915,13 @@ def commit_append_transaction(
             time.sleep(0.05 * (attempt + 1))
 
 
-_REF_RETENTION_FIELDS = (
-    "min-snapshots-to-keep",
-    "max-snapshot-age-ms",
-    "max-ref-age-ms",
-)
-
-
-def _set_ref_update(md: dict, name: str, snapshot_id: int) -> dict:
-    """A set-snapshot-ref update that moves a branch head while CARRYING
-    the ref's existing retention settings — set-snapshot-ref replaces
-    the whole SnapshotRef on the server, so an update built without
-    them would silently reset the branch's expiry policy."""
-    prior = md.get("refs", {}).get(name, {})
-    update = {
-        "action": "set-snapshot-ref",
-        "ref-name": name,
-        "type": "branch",
-        "snapshot-id": snapshot_id,
-    }
-    for k in _REF_RETENTION_FIELDS:
-        if prior.get(k) is not None:
-            update[k] = prior[k]
-    return update
-
-
-class RestTable:
-    """Table handle bound to a RestCatalogClient — same operation surface
-    as FsTable, with commits arbitrated by the REST server."""
+class RestTable(Table):
+    """Table bound to a REST catalog: metadata loads via LoadTable and
+    commits POST CommitTable, so the server arbitrates every commit.
+    REST-only extras live here: vended storage credentials,
+    server-side scan planning, commit-ambiguity resolution, and
+    `_build_append` for multi-table transactions
+    (commit_append_transaction)."""
 
     def __init__(self, client: RestCatalogClient, namespace: str, name: str):
         self.client = client
@@ -956,15 +931,86 @@ class RestTable:
         # the server never vended — local fs / engine-managed creds)
         self._vended = None
 
-    # -- metadata access (always fresh: catalog_rest.go:259-263 loads
-    # the table before every append so commits see the latest state) ----
-    def metadata(self) -> dict:
-        result = self.client.load_table(self.namespace, self.name)
+    # -- transport seam (always fresh: catalog_rest.go:259-263 loads the
+    # table before every append so commits see the latest state) --------
+    def _load(self) -> dict:
+        try:
+            result = self.client.load_table(self.namespace, self.name)
+        except RestError as exc:
+            if _is_missing(exc):
+                raise RestNoSuchTableError(exc.status, exc.error_type, exc.message) from exc
+            raise
         if result.get("storage-credentials"):
             from .vended_credentials import VendedCredentialSet
 
             self._vended = VendedCredentialSet.from_load_result(result)
         return result["metadata"]
+
+    def _commit(self, md: dict, requirements: list[dict], updates: list[dict]) -> None:
+        """POST CommitTable; the server validates `requirements` against
+        its current state atomically (a failure is the 409
+        RestCommitConflictError). A failure after which the server MAY
+        have applied the commit (lost response, 5xx) is resolved by a
+        reload when the commit adds a snapshot: found = success, absent
+        = a conflict the commit loop retries. A definite rejection (4xx,
+        the 409 included) re-raises as is."""
+        try:
+            self.client.commit_table(self.namespace, self.name, requirements, updates)
+        except RestError as exc:
+            sid = next(
+                (u["snapshot"]["snapshot-id"] for u in updates if u["action"] == "add-snapshot"),
+                None,
+            )
+            if sid is None:
+                raise
+            if not self._resolve_ambiguous_commit(exc, sid):
+                raise CommitConflictError(
+                    f"{exc}; snapshot {sid} verified absent after the lost response"
+                ) from exc
+
+    def _resolve_ambiguous_commit(self, exc: RestError, snapshot_id: int) -> bool:
+        """The commit-ambiguity case errors.go punts on: the server may
+        have applied a commit whose response was lost (5xx / connection
+        drop). The snapshot id was generated CLIENT-side
+        (write_snapshot_tree), so a reload answers definitively — True
+        means the snapshot IS in the table (idempotent success; callers
+        must not re-commit), False means it was absent at reload time
+        (safe to rebuild and retry). Definite 4xx rejections re-raise
+        `exc`; a failed reload raises RestCommitStateUnknownError (the
+        only genuinely unresolved outcome)."""
+        if not _is_ambiguous(exc):
+            raise exc
+        try:
+            md = self.metadata()
+        except RestError as reload_exc:
+            raise RestCommitStateUnknownError(
+                exc.status,
+                "CommitStateUnknownException",
+                f"commit response lost ({exc.error_type or exc.status}) and "
+                f"the landed-check reload failed ({reload_exc.error_type}); "
+                f"snapshot {snapshot_id} may or may not be committed",
+            ) from exc
+        return any(s["snapshot-id"] == snapshot_id for s in md["snapshots"])
+
+    def _build_append(
+        self,
+        md: dict,
+        files: list[DataFile],
+        operation: str,
+        extra_summary: dict[str, str],
+    ) -> tuple[list[dict], list[dict], int]:
+        """One append commit against `md`, built but not sent — the part
+        of a multi-table CommitTransaction this table contributes."""
+        return self._snapshot_commit(
+            md,
+            files,
+            operation=operation,
+            carry_forward=True,
+            extra_summary=extra_summary,
+        )
+
+    def location(self) -> str:
+        return self.metadata()["location"]
 
     def apply_storage_credentials(
         self, spark: SparkSession, path: str | None = None, now_ms: int | None = None
@@ -1021,1350 +1067,7 @@ class RestTable:
                 hconf.set(k, v)
         return conf
 
-    def location(self) -> str:
-        return self.metadata()["location"]
-
-    def partition_spec(self) -> list[dict]:
-        return default_spec_fields(self.metadata())
-
-    def snapshots(self) -> list[dict]:
-        return self.metadata()["snapshots"]
-
-    def current_snapshot(self) -> dict | None:
-        md = self.metadata()
-        sid = md.get("current-snapshot-id", -1)
-        if sid in (-1, None):
-            return None
-        return next(s for s in md["snapshots"] if s["snapshot-id"] == sid)
-
-    # -- commit protocol ---------------------------------------------------
-    def append_files(
-        self, files: list[DataFile], snapshot_properties: dict[str, str] | None = None
-    ) -> int:
-        """Atomic append via CommitTable. Builds the manifest tree in
-        shared storage, then asks the server to advance `main` — with
-        `assert-ref-snapshot-id` pinning the parent we built against.
-        On 409 (another writer won) the manifest tree is rebuilt on the
-        new base and the commit retried (catalog_rest.go:243-303; the
-        retry loop lives in iceberg-go's transaction there)."""
-        return self._commit_add(files, "append", snapshot_properties or {})
-
-    def _build_append(
-        self,
-        md: dict,
-        files: list[DataFile],
-        operation: str,
-        extra_summary: dict[str, str],
-    ) -> tuple[list[dict], list[dict], int]:
-        """Build (but do not send) one append commit against `md`: the
-        manifest tree lands in shared storage and the returned
-        (requirements, updates, snapshot_id) plug into CommitTable or a
-        multi-table CommitTransaction. The assert-ref-snapshot-id pins
-        main at the parent the tree was built on."""
-        parent = md["current-snapshot-id"]
-        snapshot = write_snapshot_tree(
-            md["location"],
-            md,
-            files,
-            operation=operation,
-            carry_forward=True,
-            extra_summary=extra_summary,
-        )
-        requirements = [
-            {"type": "assert-table-uuid", "uuid": md["table-uuid"]},
-            {
-                "type": "assert-ref-snapshot-id",
-                "ref": "main",
-                "snapshot-id": None if parent == -1 else parent,
-            },
-        ]
-        updates = [
-            {"action": "add-snapshot", "snapshot": snapshot},
-            _set_ref_update(md, "main", snapshot["snapshot-id"]),
-        ]
-        return requirements, updates, snapshot["snapshot-id"]
-
-    def _commit_add(
-        self,
-        files: list[DataFile],
-        operation: str,
-        extra_summary: dict[str, str],
-        branch: str = "main",
-        removed_files: list[DataFile] | None = None,
-        required_live_paths: set[str] | None = None,
-    ) -> int:
-        """Append-style commit (carry-forward manifests + one new
-        manifest tree) with conflict retry — used by appends AND
-        merge-on-read deltas, which only ADD files and so merge cleanly
-        over concurrent appends. branch != "main" stages the snapshot on
-        that branch (WAP): the server advances only the branch ref.
-        Retry budget comes from the table's commit.retry.num-retries
-        property (Iceberg's knob, default 4 retries)."""
-        from .iceberg_fs import commit_attempts_for
-
-        attempts = None  # resolved from table properties on first load
-        attempt = -1
-        attempted: list[int] = []  # snapshot ids of earlier tries
-        while True:
-            attempt += 1
-            md = self.metadata()
-            if attempts is None:
-                attempts = commit_attempts_for(md)
-            # a PRIOR attempt may have landed after its landed-check ran
-            # (the server finished processing a timed-out request): any
-            # attempted snapshot id found on reload is THIS commit —
-            # return it instead of appending the same files twice
-            landed_prior = next(
-                (
-                    s["snapshot-id"]
-                    for s in md["snapshots"]
-                    if s["snapshot-id"] in attempted
-                ),
-                None,
-            )
-            if landed_prior is not None:
-                return landed_prior
-            branch_ref = md.get("refs", {}).get(branch)
-            parent = (
-                md["current-snapshot-id"]
-                if branch == "main"
-                else (branch_ref or {"snapshot-id": md["current-snapshot-id"]})[
-                    "snapshot-id"
-                ]
-            )
-            snapshot = write_snapshot_tree(
-                md["location"],
-                md,
-                files,
-                operation=operation,
-                carry_forward=True,
-                extra_summary=extra_summary,
-                parent_override=None if branch == "main" else parent,
-                removed_files=removed_files,
-                required_live_paths=required_live_paths,
-            )
-            attempted.append(snapshot["snapshot-id"])
-            requirements = [
-                {"type": "assert-table-uuid", "uuid": md["table-uuid"]},
-                {
-                    "type": "assert-ref-snapshot-id",
-                    "ref": branch,
-                    "snapshot-id": (
-                        None
-                        if (branch == "main" and parent == -1) or (branch != "main" and branch_ref is None)
-                        else parent
-                    ),
-                },
-            ]
-            updates = [
-                {"action": "add-snapshot", "snapshot": snapshot},
-                _set_ref_update(md, branch, snapshot["snapshot-id"]),
-            ]
-            try:
-                self.client.commit_table(self.namespace, self.name, requirements, updates)
-                return snapshot["snapshot-id"]
-            except RestCommitConflictError:
-                # a 409 can be an earlier timed-out attempt of THIS
-                # commit landing late (its landed-check raced the
-                # server); the loop-top reload detects that — on the
-                # final attempt, check here before surfacing
-                if attempt + 1 == attempts:
-                    landed_prior = self._any_landed(attempted)
-                    if landed_prior is not None:
-                        return landed_prior
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-            except RestError as exc:
-                landed = self._resolve_ambiguous_commit(
-                    exc, snapshot["snapshot-id"]
-                )
-                if landed:
-                    return snapshot["snapshot-id"]
-                # verified absent at reload time: safe to rebuild + retry
-                if attempt + 1 == attempts:
-                    raise
-                time.sleep(0.05 * (attempt + 1))
-
-    def _any_landed(self, attempted: list[int]) -> int | None:
-        try:
-            md = self.metadata()
-        except RestError:
-            return None
-        return next(
-            (
-                s["snapshot-id"]
-                for s in md["snapshots"]
-                if s["snapshot-id"] in attempted
-            ),
-            None,
-        )
-
-    def _resolve_ambiguous_commit(self, exc: RestError, snapshot_id: int) -> bool:
-        """The commit-ambiguity case errors.go punts on: the server may
-        have applied a commit whose response was lost (5xx / connection
-        drop). The snapshot id was generated CLIENT-side
-        (write_snapshot_tree), so a reload answers definitively — True
-        means the snapshot IS in the table (idempotent success; callers
-        must not re-commit), False means it was absent at reload time
-        (safe to rebuild and retry). Definite 4xx rejections re-raise
-        `exc`; a failed reload raises RestCommitStateUnknownError (the
-        only genuinely unresolved outcome)."""
-        if not _is_ambiguous(exc):
-            raise exc
-        try:
-            md = self.metadata()
-        except RestError as reload_exc:
-            raise RestCommitStateUnknownError(
-                exc.status,
-                "CommitStateUnknownException",
-                f"commit response lost ({exc.error_type or exc.status}) and "
-                f"the landed-check reload failed ({reload_exc.error_type}); "
-                f"snapshot {snapshot_id} may or may not be committed",
-            ) from exc
-        return any(s["snapshot-id"] == snapshot_id for s in md["snapshots"])
-
-    def append_files_to_branch(
-        self,
-        branch: str,
-        files: list[DataFile],
-        snapshot_properties: dict[str, str] | None = None,
-    ) -> int:
-        """WAP staging over REST: append on a branch without advancing
-        main (see FsTable.append_files_to_branch)."""
-        if branch == "main":
-            return self.append_files(files, snapshot_properties)
-        return self._commit_add(files, "append", snapshot_properties or {}, branch)
-
-    def append_dataframe_to_branch(
-        self,
-        branch: str,
-        df: DataFrame,
-        snapshot_properties: dict[str, str] | None = None,
-    ) -> int | None:
-        md = self.metadata()
-        files = write_partitioned_batch(df, md["location"], md)
-        if not files:
-            return None
-        return self.append_files_to_branch(branch, files, snapshot_properties)
-
-    def fast_forward(self, branch: str) -> int:
-        """WAP publish over REST: advance main to the branch head,
-        fast-forward only, with main pinned by assert-ref-snapshot-id so
-        a concurrent main commit conflicts instead of being dropped."""
-        md = self.metadata()
-        ref = md.get("refs", {}).get(branch)
-        if ref is None:
-            raise ValueError(f"unknown branch {branch!r}")
-        head = ref["snapshot-id"]
-        cur = md["current-snapshot-id"]
-        if cur == head:
-            return head
-        by_id = {s["snapshot-id"]: s for s in md["snapshots"]}
-        node, ok = head, cur == -1
-        while node is not None and not ok:
-            if node == cur:
-                ok = True
-                break
-            node = by_id.get(node, {}).get("parent-snapshot-id")
-        if not ok:
-            raise ValueError(
-                f"cannot fast-forward: main ({cur}) is not an ancestor of "
-                f"branch {branch!r} head ({head})"
-            )
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[
-                {"type": "assert-table-uuid", "uuid": md["table-uuid"]},
-                {
-                    "type": "assert-ref-snapshot-id",
-                    "ref": "main",
-                    "snapshot-id": None if cur == -1 else cur,
-                },
-            ],
-            updates=[
-                _set_ref_update(md, "main", head)
-            ],
-        )
-        return head
-
-    def cherry_pick(self, snapshot_id: int) -> int:
-        """Publish one staged append onto CURRENT main when fast-forward
-        is impossible (see FsTable.cherry_pick): the staged snapshot's
-        ADDED data files re-commit as a new append through the catalog
-        server, with the usual optimistic retry. Validation (append-only
-        source, not already published directly or via an earlier
-        cherry-pick) is the shared plan_cherry_pick."""
-        from .iceberg_fs import plan_cherry_pick
-
-        files = plan_cherry_pick(self.metadata(), snapshot_id)
-        return self._commit_add(
-            files,
-            "append",
-            {"cherry-picked-from-snapshot": str(snapshot_id)},
-        )
-
-    def append_dataframe(
-        self,
-        df: DataFrame,
-        snapshot_properties: dict[str, str] | None = None,
-        fanout: int | None = None,
-    ) -> int | None:
-        """K3 over REST: executors write Parquet (hidden-partitioned),
-        driver commits the file list through the catalog server. Empty
-        inputs commit nothing (F1). `fanout` spreads hot partition
-        values over ~fanout writer tasks (backfills)."""
-        md = self.metadata()
-        self.apply_storage_credentials(df.sparkSession, md["location"])
-        files = write_partitioned_batch(df, md["location"], md, fanout)
-        if not files:
-            return None
-        return self.append_files(files, snapshot_properties)
-
-    def add_files_hive(
-        self,
-        source_dir: str,
-        snapshot_properties: dict[str, str] | None = None,
-    ) -> int:
-        """K4 over REST: register raw-sink Hive-layout Parquet without
-        copying (catalog_rest.go:306-367 AppendDataFiles)."""
-        files = hive_data_files(source_dir, self.partition_spec())
-        self._ensure_name_mapping(files)
-        props = {"operation-detail": "add_files", **(snapshot_properties or {})}
-        return self.append_files(files, props)
-
-    def add_data_files(
-        self, paths: list[str], snapshot_properties: dict[str, str] | None = None
-    ) -> int:
-        """Register specific Parquet files (recovery re-registration)."""
-        md = self.metadata()
-        files = data_files_for_paths(paths, default_spec_fields(md), md["location"])
-        self._ensure_name_mapping(files)
-        props = {"operation-detail": "add_files", **(snapshot_properties or {})}
-        return self.append_files(files, props)
-
-    def set_properties(self, props: dict[str, str]) -> None:
-        """Merge table properties via a set-properties CommitTable."""
-        md = self.metadata()
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[{"action": "set-properties", "updates": props}],
-        )
-
-    def _ensure_name_mapping(self, files) -> None:
-        """See FsTable._ensure_name_mapping — same rule, REST commit."""
-        from .iceberg_fs import (
-            NAME_MAPPING_PROP,
-            field_idless_files,
-            merged_name_mapping,
-        )
-
-        if not field_idless_files([f.file_path for f in files]):
-            return
-        md = self.metadata()
-        merged = merged_name_mapping(md)
-        if md.get("properties", {}).get(NAME_MAPPING_PROP) != merged:
-            self.set_properties({NAME_MAPPING_PROP: merged})
-
-    # -- listing / reads ---------------------------------------------------
-    def all_files(self) -> list[str]:
-        """ListDataFiles: every data file referenced by ANY snapshot,
-        deduped (catalog_rest.go:370-467). Missing tables list empty,
-        like the reference (go:383-390)."""
-        try:
-            md = self.metadata()
-        except RestError as exc:
-            if _is_missing(exc):
-                return []
-            raise
-        return all_data_file_paths(md)
-
-    def incremental_scan(
-        self,
-        from_snapshot_id: int | None = None,
-        to_snapshot_id: int | None = None,
-    ) -> tuple[list[DataFile], int | None]:
-        return incremental_data_files(self.metadata(), from_snapshot_id, to_snapshot_id)
-
-    def changelog_scan(
-        self,
-        spark: SparkSession,
-        from_snapshot_id: int | None = None,
-        to_snapshot_id: int | None = None,
-        source_range=None,
-        with_lineage: bool = False,
-        full_pre_images: bool | None = None,
-    ) -> DataFrame:
-        """Row-level CDC read over REST (see iceberg_fs.read_changelog)."""
-        from .iceberg_fs import read_changelog
-
-        md = self.metadata()
-        self.apply_storage_credentials(spark, md["location"])
-        return read_changelog(
-            spark,
-            md,
-            from_snapshot_id,
-            to_snapshot_id,
-            source_range,
-            with_lineage,
-            full_pre_images,
-        )
-
-    def metadata_table(self, spark: SparkSession, name: str) -> DataFrame:
-        """Inspection tables (snapshots/history/files/all_files/
-        manifests) over the REST-loaded metadata."""
-        from .iceberg_fs import metadata_table
-
-        return metadata_table(spark, self.metadata(), name)
-
-    # -- table maintenance over REST ---------------------------------------
-    def _commit_replace(
-        self,
-        md: dict,
-        planned_snapshot: int,
-        files: list[DataFile],
-        operation: str,
-        extra_summary: dict[str, str],
-        conflict_what: str,
-        branch: str = "main",
-    ) -> int:
-        """Replace-style commit (the new manifest tree IS the complete
-        live file set) pinned to the planning base: a concurrent writer
-        advancing the TARGET ref mid-plan turns into
-        ReplaceConflictError (the server 409s the
-        assert-ref-snapshot-id requirement) instead of silently
-        dropping its files — replaces cannot merge. branch != "main"
-        parents the replace on the branch head and advances only that
-        ref (branch-scoped copy-on-write DML); main moving concurrently
-        is irrelevant to a branch rewrite and does not conflict."""
-        from .iceberg_fs import ReplaceConflictError
-
-        snapshot = write_snapshot_tree(
-            md["location"],
-            md,
-            files,
-            operation=operation,
-            carry_forward=False,
-            extra_summary=extra_summary,
-            parent_override=None if branch == "main" else planned_snapshot,
-        )
-        requirements = [
-            {"type": "assert-table-uuid", "uuid": md["table-uuid"]},
-            {
-                "type": "assert-ref-snapshot-id",
-                "ref": branch,
-                "snapshot-id": None if planned_snapshot == -1 else planned_snapshot,
-            },
-        ]
-        updates = [
-            {"action": "add-snapshot", "snapshot": snapshot},
-            _set_ref_update(md, branch, snapshot["snapshot-id"]),
-        ]
-        try:
-            self.client.commit_table(self.namespace, self.name, requirements, updates)
-        except RestCommitConflictError as exc:
-            raise ReplaceConflictError(
-                f"table advanced past snapshot {planned_snapshot} during the "
-                f"{conflict_what}; re-plan"
-            ) from exc
-        except RestError as exc:
-            if not self._resolve_ambiguous_commit(exc, snapshot["snapshot-id"]):
-                # verified absent: replaces cannot blindly retry (the
-                # planning base may have moved) — surface for a re-plan
-                raise
-        return snapshot["snapshot-id"]
-
-    def overwrite_partitions(
-        self,
-        df: DataFrame,
-        snapshot_properties: dict[str, str] | None = None,
-        fanout: int | None = None,
-    ) -> int | None:
-        """Dynamic partition overwrite over REST (see
-        FsTable.overwrite_partitions): atomically replace exactly the
-        hidden partitions the batch lands in, pinned to the planning
-        base via assert-ref-snapshot-id (a concurrent commit turns into
-        ReplaceConflictError — replaces cannot merge)."""
-        from .iceberg_fs import (
-            _partition_tuple,
-            plan_partition_overwrite,
-            write_partitioned_batch,
-        )
-
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        new_files = write_partitioned_batch(df, md["location"], md, fanout)
-        if not new_files:  # F1: no data files -> no snapshot
-            return None
-        replaced, survivors, deletes = plan_partition_overwrite(
-            md, planned_snapshot, new_files
-        )
-        summary = {
-            "replaced-partitions": str(
-                len({_partition_tuple(f) for f in replaced})
-            ),
-            "replaced-data-files": str(len(replaced)),
-            "replaced-records": str(sum(f.record_count for f in replaced)),
-            **(snapshot_properties or {}),
-        }
-        return self._commit_replace(
-            md,
-            planned_snapshot,
-            new_files + survivors + deletes,
-            "overwrite",
-            summary,
-            "partition overwrite",
-        )
-
-    def rewrite_data_files(
-        self,
-        spark: SparkSession,
-        target_bytes: int = 128 * 1024 * 1024,
-        min_files: int = 2,
-        zorder_by: list | None = None,
-    ) -> int | None:
-        """Iceberg-style compaction with the replace COMMIT arbitrated by
-        the catalog server: the planning base is pinned with
-        assert-ref-snapshot-id, so a concurrent append advancing `main`
-        mid-rewrite fails the commit (409) instead of silently dropping
-        the appended files — the client surfaces ReplaceConflictError
-        for the caller to re-plan (replaces cannot auto-retry)."""
-        from .iceberg_fs import plan_rewrite
-
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes = self._live_files(md, planned_snapshot)
-        planned = plan_rewrite(
-            spark,
-            md,
-            live,
-            target_bytes=target_bytes,
-            min_files=min_files,
-            zorder_by=zorder_by,
-            delete_files=deletes,
-        )
-        if planned is None:
-            return None
-        replacement, n_compacted, n_rewritten = planned
-        extra = {
-            "compacted-files": str(n_compacted),
-            "added-data-files": str(n_rewritten),
-        }
-        if zorder_by:
-            extra["zorder-by"] = ",".join(zorder_by)  # informational (see FsTable)
-        return self._commit_replace(
-            md,
-            planned_snapshot,
-            replacement + deletes,  # pending deletes stay live for survivors
-            "replace",
-            extra,
-            "rewrite",
-        )
-
-    def count_rows(
-        self, spark: SparkSession | None = None, snapshot_id: int | None = None
-    ) -> int:
-        """Metadata-only count(*) (see FsTable.count_rows): O(1) from
-        the summary totals when no delete files are live, Spark-scan
-        fallback otherwise."""
-        from .iceberg_fs import count_rows_from_metadata
-
-        n = count_rows_from_metadata(self.metadata(), snapshot_id)
-        if n is not None:
-            return n
-        if spark is None:
-            raise ValueError(
-                "snapshot has pending delete files: the exact count needs a "
-                "Spark scan — pass spark (or fold deletes with maintenance)"
-            )
-        return self.read(spark, snapshot_id=snapshot_id).count()
-
-    def rewrite_manifests(
-        self,
-        target_size_bytes: int | None = None,
-        min_count: int = 2,
-    ) -> int | None:
-        """Metadata-level compaction (`rewrite_manifests`) with the
-        commit arbitrated by the REST server: merge the current
-        snapshot's small manifests into ~target-size bins and commit
-        the new manifest list as a `replace` snapshot (invisible to
-        incremental scans and changelogs). A concurrent append
-        advancing `main` mid-rewrite 409s the assert-ref-snapshot-id
-        requirement and the plan is rebuilt against the new base — its
-        manifests are never dropped. Returns the new snapshot id or
-        None when there was nothing to merge."""
-        from .iceberg_fs import (
-            DEFAULT_MANIFEST_TARGET_SIZE,
-            build_rewrite_manifests_snapshot,
-            commit_attempts_for,
-        )
-
-        if target_size_bytes is None:
-            target_size_bytes = DEFAULT_MANIFEST_TARGET_SIZE
-        attempt = 0
-        while True:
-            md = self.metadata()
-            # commit.retry.num-retries governs metadata-only commits too
-            attempts = commit_attempts_for(md)
-            planned = md["current-snapshot-id"]
-            snapshot = build_rewrite_manifests_snapshot(
-                md["location"],
-                md,
-                target_size=target_size_bytes,
-                min_count=min_count,
-            )
-            if snapshot is None:
-                return None
-            requirements = [
-                {"type": "assert-table-uuid", "uuid": md["table-uuid"]},
-                {
-                    "type": "assert-ref-snapshot-id",
-                    "ref": "main",
-                    "snapshot-id": planned,
-                },
-            ]
-            updates = [
-                {"action": "add-snapshot", "snapshot": snapshot},
-                _set_ref_update(md, "main", snapshot["snapshot-id"]),
-            ]
-            try:
-                self.client.commit_table(
-                    self.namespace, self.name, requirements, updates
-                )
-                return snapshot["snapshot-id"]
-            except RestCommitConflictError:
-                attempt += 1
-                if attempt >= attempts:
-                    raise
-                time.sleep(0.05 * attempt)
-            except RestError as exc:
-                if self._resolve_ambiguous_commit(exc, snapshot["snapshot-id"]):
-                    return snapshot["snapshot-id"]
-                attempt += 1
-                if attempt >= attempts:
-                    raise
-                time.sleep(0.05 * attempt)
-
-    def delete_where(
-        self,
-        spark: SparkSession,
-        predicate: str,
-        mode: str = "copy-on-write",
-        branch: str = "main",
-    ) -> tuple[int | None, int]:
-        """Row-level DELETE over REST — same strategies as
-        FsTable.delete_where: copy-on-write (overwrite commit pinned to
-        the planning base), merge-on-read (position-delete file), or
-        deletion-vectors (per-file roaring bitmaps in one Puffin file);
-        the merge-on-read flavors commit like appends and retry cleanly
-        over concurrent commits."""
-        from .iceberg_fs import plan_delete, plan_deletion_vectors
-
-        if mode not in ("copy-on-write", "merge-on-read", "deletion-vectors"):
-            raise ValueError(
-                "mode must be copy-on-write|merge-on-read|deletion-vectors, "
-                f"got {mode!r}"
-            )
-        md = self.metadata()
-        planned_snapshot = resolve_dml_branch(md, branch, mode)
-        if planned_snapshot == -1:
-            return None, 0
-        # predicate-derived pruning (shared plan_dml_files): provably
-        # match-free files never reach the Spark scan
-        live, excluded, deletes = plan_dml_files(
-            md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
-        )
-        if mode == "merge-on-read":
-            require_position_delete_files_allowed(md)
-        if mode in ("merge-on-read", "deletion-vectors"):
-            plan_fn = (
-                plan_deletion_vectors
-                if mode == "deletion-vectors"
-                else plan_position_delete
-            )
-            planned = plan_fn(spark, md, live, deletes, predicate)
-            if planned is None:
-                return None, 0
-            new_deletes, n_deleted, superseded, targets = planned
-            extra = {"deleted-records": str(n_deleted)}
-            if mode == "deletion-vectors":
-                extra["added-dvs"] = str(len(new_deletes))
-            sid = self._commit_add(
-                new_deletes,
-                "delete",
-                extra,
-                branch=branch,
-                removed_files=superseded or None,
-                required_live_paths=targets or None,
-            )
-            return sid, n_deleted
-        planned = plan_delete(spark, md, live, predicate, delete_files=deletes)
-        if planned is None:
-            return None, 0
-        replacement, n_deleted, n_rewritten = planned
-        sid = self._commit_replace(
-            md,
-            planned_snapshot,
-            # delete rows for surviving files stay live; pruned-away
-            # files contain no matches and survive by reference
-            replacement + excluded + deletes,
-            "overwrite",
-            {
-                "deleted-records": str(n_deleted),
-                "rewritten-data-files": str(n_rewritten),
-            },
-            "delete",
-            branch=branch,
-        )
-        return sid, n_deleted
-
-    def delete_where_equality(
-        self, spark: SparkSession, keys_df: DataFrame, equality_cols: list[str]
-    ) -> tuple[int | None, int]:
-        """Equality DELETE over REST (see FsTable.delete_where_equality):
-        the key set commits as a content=2 delete file in a `delete`
-        snapshot — no table read; commits like an append."""
-        from .iceberg_fs import plan_equality_delete
-
-        md = self.metadata()
-        if md["current-snapshot-id"] == -1:
-            return None, 0
-        planned = plan_equality_delete(spark, md, keys_df, equality_cols)
-        if planned is None:
-            return None, 0
-        new_deletes, n_keys = planned
-        sid = self._commit_add(
-            new_deletes, "delete", {"deleted-key-tuples": str(n_keys)}
-        )
-        return sid, n_keys
-
-    def upsert_equality(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        equality_cols: list[str],
-        snapshot_properties: dict[str, str] | None = None,
-    ) -> int | None:
-        """Single-snapshot CDC upsert over REST (see
-        FsTable.upsert_equality): new data files + an equality delete on
-        their keys, same sequence number, zero table reads. Empty inputs
-        commit nothing (F1 short-circuit)."""
-        from .iceberg_fs import plan_equality_delete, write_partitioned_batch
-
-        md = self.metadata()
-        data_files = write_partitioned_batch(df, md["location"], md)
-        if not data_files:
-            return None
-        planned = plan_equality_delete(
-            spark, md, df.select(*equality_cols), equality_cols
-        )
-        files = data_files + (planned[0] if planned else [])
-        summary = {"upserted-records": str(sum(f.record_count for f in data_files))}
-        summary.update(snapshot_properties or {})
-        return self._commit_add(files, "overwrite", summary)
-
-    def update_where(
-        self,
-        spark: SparkSession,
-        predicate: str,
-        set_exprs: dict[str, str],
-        mode: str = "copy-on-write",
-        branch: str = "main",
-    ) -> tuple[int | None, int]:
-        """Row-level UPDATE over REST (see FsTable.update_where):
-        copy-on-write rewrite pinned to the planning base, or a
-        merge-on-read row-delta committed like an append
-        (mode="deletion-vectors" writes the delete half as v3 DVs)."""
-        from .iceberg_fs import (
-            plan_deletion_vectors,
-            plan_update,
-            plan_update_mor,
-        )
-
-        if mode not in ("copy-on-write", "merge-on-read", "deletion-vectors"):
-            raise ValueError(
-                "mode must be copy-on-write|merge-on-read|deletion-vectors, "
-                f"got {mode!r}"
-            )
-        md = self.metadata()
-        planned_snapshot = resolve_dml_branch(md, branch, mode)
-        if planned_snapshot == -1:
-            return None, 0
-        # predicate-derived pruning, same as delete_where
-        live, excluded, deletes = plan_dml_files(
-            md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
-        )
-        if mode == "merge-on-read":
-            require_position_delete_files_allowed(md)
-        if mode in ("merge-on-read", "deletion-vectors"):
-            planned = plan_update_mor(
-                spark,
-                md,
-                live,
-                deletes,
-                predicate,
-                set_exprs,
-                delete_plan_fn=(
-                    plan_deletion_vectors if mode == "deletion-vectors" else None
-                ),
-            )
-            if planned is None:
-                return None, 0
-            new_files, n_updated, superseded, targets = planned
-            sid = self._commit_add(
-                new_files,
-                "overwrite",
-                {"updated-records": str(n_updated)},
-                branch=branch,
-                removed_files=superseded or None,
-                required_live_paths=targets or None,
-            )
-            return sid, n_updated
-        planned = plan_update(
-            spark, md, live, predicate, set_exprs, delete_files=deletes
-        )
-        if planned is None:
-            return None, 0
-        replacement, n_updated, n_rewritten = planned
-        sid = self._commit_replace(
-            md,
-            planned_snapshot,
-            replacement + excluded + deletes,
-            "overwrite",
-            {
-                "updated-records": str(n_updated),
-                "rewritten-data-files": str(n_rewritten),
-            },
-            "update",
-            branch=branch,
-        )
-        return sid, n_updated
-
-    def rewrite_position_deletes(self, spark: SparkSession) -> int | None:
-        """Maintenance over REST: fold pending position deletes into the
-        data files and drop every delete file (replace snapshot — a
-        logical no-op, like compaction). See
-        FsTable.rewrite_position_deletes."""
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes = self._live_files(md, planned_snapshot)
-        pos = [f for f in deletes if f.content == 1]
-        eq = [f for f in deletes if f.content == 2]
-        if not pos:
-            return None
-        replacement, n_rewritten = plan_delete_rewrite(spark, md, live, deletes)
-        # equality-delete files stay live for surviving files (original
-        # sequence numbers preserved); rewritten files materialized them
-        return self._commit_replace(
-            md,
-            planned_snapshot,
-            replacement + eq,
-            "replace",
-            {
-                "removed-delete-files": str(len(pos)),
-                "rewritten-data-files": str(n_rewritten),
-            },
-            "position-delete rewrite",
-        )
-
-    def rewrite_equality_deletes(self, spark: SparkSession) -> int | None:
-        """Maintenance over REST: fold pending equality deletes into the
-        data files (see FsTable.rewrite_equality_deletes)."""
-        from .iceberg_fs import plan_equality_rewrite
-
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes = self._live_files(md, planned_snapshot)
-        planned = plan_equality_rewrite(spark, md, live, deletes)
-        if planned is None:
-            return None
-        replacement, n_rewritten = planned
-        n_eq = sum(1 for f in deletes if f.content == 2)
-        return self._commit_replace(
-            md,
-            planned_snapshot,
-            replacement,
-            "replace",
-            {
-                "removed-delete-files": str(n_eq),
-                "rewritten-data-files": str(n_rewritten),
-            },
-            "equality-delete rewrite",
-        )
-
-    def merge_rows(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        key_cols: list[str],
-        mode: str = "copy-on-write",
-    ) -> tuple[int, int, int]:
-        """MERGE (keyed upsert) over REST — copy-on-write (shared
-        plan_merge, overwrite commit pinned to the planning base) or a
-        merge-on-read row-delta (plan_merge_mor, committed like an
-        append)."""
-        from .iceberg_fs import plan_merge, plan_merge_mor
-
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"mode must be copy-on-write|merge-on-read, got {mode!r}")
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        live, deletes = (
-            self._live_files(md, planned_snapshot)
-            if planned_snapshot != -1
-            else ([], [])
-        )
-        if mode == "merge-on-read":
-            new_files, n_updated, n_inserted, superseded, targets = plan_merge_mor(
-                spark, md, live, deletes, source, key_cols
-            )
-            sid = self._commit_add(
-                new_files,
-                "overwrite",
-                {
-                    "merged-records": str(n_updated),
-                    "inserted-records": str(n_inserted),
-                },
-                removed_files=superseded or None,
-                required_live_paths=targets or None,
-            )
-            return sid, n_updated, n_inserted
-        replacement, n_updated, n_inserted = plan_merge(
-            spark, md, live, source, key_cols, delete_files=deletes
-        )
-        sid = self._commit_replace(
-            md,
-            planned_snapshot,
-            replacement + deletes,
-            "overwrite",
-            {
-                "merged-records": str(n_updated),
-                "inserted-records": str(n_inserted),
-            },
-            "merge",
-        )
-        return sid, n_updated, n_inserted
-
-    def expire_snapshots(
-        self,
-        keep_last: int = 1,
-        older_than_ms: int | None = None,
-        now_ms: int | None = None,
-    ) -> list[str]:
-        """Expire via the REST remove-snapshot-ref + remove-snapshots
-        updates (per-ref retention planned exactly like the fs catalog:
-        branch ancestry windows, max-ref-age-ms ref aging), then
-        physically delete files no retained snapshot references
-        (commit-then-delete like the fs catalog). Returns deleted
-        data-file paths."""
-        from .iceberg_fs import (
-            commit_attempts_for,
-            delete_expired_paths,
-            expire_plan,
-        )
-
-        attempt = 0
-        while True:
-            md = self.metadata()
-            attempts = commit_attempts_for(md)
-            plan = expire_plan(md, keep_last, older_than_ms, now_ms)
-            if plan is None:
-                return []
-            expired_ids = {s["snapshot-id"] for s in plan["expired"]}
-            updates: list[dict] = [
-                {"action": "remove-snapshot-ref", "ref-name": name}
-                for name in plan["removed_refs"]
-            ]
-            if expired_ids:
-                updates.append(
-                    {
-                        "action": "remove-snapshots",
-                        "snapshot-ids": sorted(expired_ids),
-                    }
-                )
-            # pin EVERY ref the plan saw: a concurrent commit moving any
-            # branch can extend an ancestry into the planned expired set
-            # — a stale plan must 409 and re-plan, like the fs CAS loop
-            requirements: list[dict] = [
-                {"type": "assert-table-uuid", "uuid": md["table-uuid"]}
-            ]
-            for name, ref in sorted(md.get("refs", {}).items()):
-                requirements.append(
-                    {
-                        "type": "assert-ref-snapshot-id",
-                        "ref": name,
-                        "snapshot-id": ref["snapshot-id"],
-                    }
-                )
-            try:
-                self.client.commit_table(
-                    self.namespace, self.name, requirements, updates
-                )
-            except RestCommitConflictError:
-                attempt += 1
-                if attempt >= attempts:
-                    raise
-                time.sleep(0.05 * attempt)
-                continue  # re-plan against the new state
-            for key in ("partition-statistics", "statistics"):
-                for e in md.get(key, []):
-                    if e["snapshot-id"] in expired_ids:
-                        try:
-                            os.remove(e["statistics-path"])
-                        except OSError:
-                            pass
-            return delete_expired_paths(plan)
-
-    def compute_partition_stats(self, snapshot_id: int | None = None) -> dict | None:
-        """Partition statistics over REST: write the spec's stats
-        Parquet, then register it via the set-partition-statistics
-        update (the REST spec's action). Returns the entry or None on
-        an empty table."""
-        from .iceberg_fs import write_partition_stats_file
-
-        md = self.metadata()
-        entry = write_partition_stats_file(md["location"], md, snapshot_id)
-        if entry is None:
-            return None
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[
-                {"action": "set-partition-statistics", "partition-statistics": entry}
-            ],
-        )
-        return entry
-
-    def partition_stats(
-        self, spark: SparkSession, snapshot_id: int | None = None
-    ) -> DataFrame:
-        from .iceberg_fs import read_partition_stats
-
-        return read_partition_stats(spark, self.metadata(), snapshot_id)
-
-    def compute_column_stats(
-        self,
-        spark: SparkSession,
-        snapshot_id: int | None = None,
-        columns: list[str] | None = None,
-    ) -> dict | None:
-        """Column NDV statistics over REST: write the Puffin file, then
-        register it via the spec's set-statistics update action."""
-        from .puffin import write_column_stats_file
-
-        md = self.metadata()
-        sid = md["current-snapshot-id"] if snapshot_id is None else snapshot_id
-        if sid == -1:
-            return None
-        entry = write_column_stats_file(
-            spark,
-            md["location"],
-            md,
-            self.read(spark, snapshot_id=sid),
-            sid,
-            columns,
-        )
-        if entry is None:
-            return None
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[
-                {
-                    "action": "set-statistics",
-                    "snapshot-id": entry["snapshot-id"],
-                    "statistics": entry,
-                }
-            ],
-        )
-        return entry
-
-    def column_stats(self, snapshot_id: int | None = None) -> dict[str, dict]:
-        from .puffin import read_column_stats
-
-        return read_column_stats(self.metadata(), snapshot_id)
-
-    def update_column_stats_incremental(self, spark: SparkSession) -> dict | None:
-        """Incremental stats refresh over REST: sketch only the appended
-        window, KMV-merge, register via set-statistics (see
-        FsTable.update_column_stats_incremental for semantics)."""
-        from .puffin import plan_incremental_stats
-
-        md = self.metadata()
-        status, entry = plan_incremental_stats(spark, md, md["location"])
-        if status != "new" or entry is None:
-            return entry
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[
-                {
-                    "action": "set-statistics",
-                    "snapshot-id": entry["snapshot-id"],
-                    "statistics": entry,
-                }
-            ],
-        )
-        return entry
-
-    def remove_orphan_files(
-        self,
-        older_than_seconds: float = 3 * 86400,
-        include_metadata: bool = True,
-    ) -> list[str]:
-        """Reclaim data files under the table location that NO snapshot
-        references (same sweep as FsTable — the REST catalog arbitrates
-        commits but the warehouse is the same filesystem): leftovers
-        from failed/raced writes whose commit never landed, plus (with
-        include_metadata) the unreferenced manifest trees 409-losing
-        commit attempts abandon. Only files older than the cutoff are
-        deleted so in-flight writes racing this call are never swept.
-        Returns deleted paths."""
-        from .iceberg_fs import sweep_table_orphans
-
-        md = self.metadata()
-        return sweep_table_orphans(
-            md["location"],
-            md,
-            set(self.all_files()),
-            older_than_seconds,
-            include_metadata,
-        )
-
-    def _live_files(
-        self, md: dict, snapshot_id: int
-    ) -> tuple[list[DataFile], list[DataFile]]:
-        """(data files, position-delete files) live in a snapshot."""
-        return live_files(md, snapshot_id)
-
-    # -- refs: tags + branches ---------------------------------------------
-    def set_ref(
-        self,
-        name: str,
-        snapshot_id: int,
-        ref_type: str = "tag",
-        *,
-        min_snapshots_to_keep: int | None = None,
-        max_snapshot_age_ms: int | None = None,
-        max_ref_age_ms: int | None = None,
-    ) -> None:
-        """Create/move a tag or branch via set-snapshot-ref (the same
-        update action appends use for main), with the spec's optional
-        retention fields — see FsTable.set_ref for semantics."""
-        from .iceberg_fs import _build_ref
-
-        if ref_type not in ("tag", "branch"):
-            raise ValueError(f"ref type must be tag|branch, got {ref_type!r}")
-        if name == "main" and ref_type != "branch":
-            raise ValueError("main must stay a branch (Iceberg spec)")
-        ref = _build_ref(
-            snapshot_id,
-            ref_type,
-            min_snapshots_to_keep,
-            max_snapshot_age_ms,
-            max_ref_age_ms,
-        )
-        md = self.metadata()
-        # SnapshotRef fields are the update's fields, per the REST spec
-        update = {"action": "set-snapshot-ref", "ref-name": name, **ref}
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[update],
-        )
-
-    def upgrade_format_version(self, target: int = 3) -> int:
-        """v2 -> v3 upgrade over REST: validate locally against the
-        current metadata (plan_format_upgrade's invariants), then send
-        the spec's upgrade-format-version update with the table pinned
-        by assert-table-uuid — the server re-checks monotonicity."""
-        from .iceberg_fs import plan_format_upgrade, table_format_version
-
-        md = self.metadata()
-        if not plan_format_upgrade(md, target):
-            return table_format_version(md)
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[
-                {"action": "upgrade-format-version", "format-version": target}
-            ],
-        )
-        return target
-
-    def snapshot_as_of(self, timestamp_ms: int) -> int | None:
-        """Snapshot id for timestamp time travel; pass to read()."""
-        from .iceberg_fs import snapshot_id_as_of
-
-        return snapshot_id_as_of(self.metadata(), timestamp_ms)
-
-    def rollback_to(self, snapshot_id: int) -> int:
-        """Move main's head back to an ancestor snapshot over REST —
-        the same set-snapshot-ref update an append uses; the server
-        arbitrates the commit."""
-        from .iceberg_fs import require_main_ancestor
-
-        md = self.metadata()
-        require_main_ancestor(md, snapshot_id)
-        if md["current-snapshot-id"] != snapshot_id:
-            self.set_ref("main", snapshot_id, "branch")
-        return snapshot_id
-
-    def resolve_ref(self, name: str) -> int:
-        ref = self.metadata().get("refs", {}).get(name)
-        if ref is None:
-            raise ValueError(f"unknown ref {name!r}")
-        return ref["snapshot-id"]
-
-    def read_ref(self, spark: SparkSession, name: str) -> DataFrame:
-        return self.read(spark, snapshot_id=self.resolve_ref(name))
-
-    def add_columns(
-        self,
-        new_fields,
-        defaults: dict | None = None,
-        iceberg_types: dict[str, str] | None = None,
-    ) -> int:
-        """Schema evolution over REST: add nullable columns via a
-        CommitTable with add-schema + set-current-schema updates (the
-        REST spec's schema-evolution actions). Existing field ids are
-        untouched; returns the new schema id. `defaults` = v3 default
-        values; `iceberg_types` = v3-only type overrides (ns timestamps,
-        unknown) — see FsTable.add_columns; both require v3."""
-        from .iceberg_fs import (
-            current_schema,
-            evolved_schema,
-            live_files,
-            require_id_resolvable,
-            table_format_version,
-        )
-
-        fields = list(new_fields.fields if isinstance(new_fields, StructType) else new_fields)
-        md = self.metadata()
-        # re-added names bind to NEW ids -> id-resolution required
-        historic = {f_["name"] for s in md["schemas"] for f_ in s["fields"]}
-        current_names = {f_["name"] for f_ in current_schema(md)["fields"]}
-        if any(f_.name in historic - current_names for f_ in fields):
-            sid = md.get("current-snapshot-id", -1)
-            if sid != -1:
-                data, _ = live_files(md, sid)
-                require_id_resolvable([f.file_path for f in data], md)
-        if defaults and table_format_version(md) < 3:
-            raise ValueError(
-                "default values are an Iceberg v3 feature — call "
-                "upgrade_format_version(3) first"
-            )
-        if iceberg_types and table_format_version(md) < 3:
-            raise ValueError(
-                "timestamp_ns/unknown columns are an Iceberg v3 feature — "
-                "call upgrade_format_version(3) first"
-            )
-        new_schema, last_col = evolved_schema(md, fields, defaults, iceberg_types)
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[
-                {"action": "add-schema", "schema": new_schema, "last-column-id": last_col},
-                {"action": "set-current-schema", "schema-id": new_schema["schema-id"]},
-            ],
-        )
-        return new_schema["schema-id"]
-
-    def _commit_schema(self, md: dict, schema: dict) -> int:
-        """add-schema + set-current-schema CommitTable shared by every
-        schema evolution (add / rename / drop)."""
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[
-                {"action": "add-schema", "schema": schema},
-                {"action": "set-current-schema", "schema-id": schema["schema-id"]},
-            ],
-        )
-        return schema["schema-id"]
-
-    def rename_column(self, old: str, new: str) -> int:
-        """Column rename over REST (see FsTable.rename_column): the
-        field keeps its id; reads resolve by parquet field id. Guarded
-        on live files carrying field ids or name-mapping coverage."""
-        from .iceberg_fs import (
-            evolved_schema_rename,
-            live_files,
-            require_id_resolvable,
-        )
-
-        md = self.metadata()
-        sid = md.get("current-snapshot-id", -1)
-        if sid != -1:
-            data, _ = live_files(md, sid)
-            require_id_resolvable([f.file_path for f in data], md)
-        return self._commit_schema(md, evolved_schema_rename(md, old, new))
-
-    def drop_column(self, name: str) -> int:
-        """Column drop over REST (see FsTable.drop_column)."""
-        from .iceberg_fs import evolved_schema_drop
-
-        md = self.metadata()
-        return self._commit_schema(md, evolved_schema_drop(md, name))
-
-    def update_partition_spec(
-        self, partition_source: str | None, granularity: str = "hourly"
-    ) -> int | None:
-        """Partition-spec evolution over REST via add-spec +
-        set-default-spec updates (the REST spec's actions). Metadata
-        only; see FsTable.update_partition_spec for the semantics."""
-        from .iceberg_fs import evolved_spec
-
-        md = self.metadata()
-        spec = evolved_spec(md, partition_source, granularity)
-        if spec is None:
-            return None
-        self.client.commit_table(
-            self.namespace,
-            self.name,
-            requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-            updates=[
-                {"action": "add-spec", "spec": spec},
-                {"action": "set-default-spec", "spec-id": spec["spec-id"]},
-            ],
-        )
-        return spec["spec-id"]
-
-    def plan_files(
-        self,
-        snapshot_id: int | None = None,
-        partition_range: tuple[int, int] | None = None,
-        column_range: tuple[str, Any, Any] | None = None,
-        source_predicate: tuple[str, Any] | None = None,
-        source_range: tuple[str, Any, Any] | None = None,
-    ) -> tuple[list[DataFile], int]:
-        """Same pruning scan planner as FsTable (shared transport-
-        neutral plan_scan_metadata): (live data files, n_pruned)."""
-        data, _, pruned = plan_scan_metadata(
-            self.metadata(),
-            snapshot_id,
-            partition_range,
-            column_range,
-            source_predicate,
-            source_range,
-        )
-        return data, pruned
-
+    # -- server-side scan planning ----------------------------------------
     # statuses that mean "this server does not implement the plan
     # route" (despite advertising it) — auto mode falls back to local
     # planning and remembers; anything else is a real failure
@@ -2478,16 +1181,7 @@ class RestTable:
         with_lineage: bool = False,
         server_planning: bool | None = None,
     ) -> DataFrame:
-        """Scan a committed snapshot's files (time travel via
-        snapshot_id), with position deletes subtracted (merge-on-read)
-        and the same manifest-level pruning surface as FsTable.read
-        (partition_range / column_range / hidden-partition
-        source_predicate prune FILES; row filters are the caller's).
-        `where` instead takes ONE SQL predicate that both prunes files
-        (column bounds, hidden-partition rewrite, ns literals,
-        variant-path footer stats) and filters rows — same semantics as
-        FsTable.read. `with_lineage` (v3 tables) appends _row_id /
-        _last_updated_sequence_number (scan_with_lineage).
+        """Table.read, optionally planned on the catalog server.
 
         `server_planning`: None (default) = plan on the SERVER when the
         /v1/config handshake advertised the spec's PlanTableScan
@@ -2502,21 +1196,12 @@ class RestTable:
         still runs its footer pruning pass (shredded-variant stats,
         bloom probes) over the returned candidates, so server planning
         never widens the scan."""
-        from .iceberg_fs import plan_dml_files, scan_with_lineage, spark_session_timezone
-
         md = self.metadata()
         self.apply_storage_credentials(spark, md["location"])
         sid = md["current-snapshot-id"] if snapshot_id is None else snapshot_id
         if sid in (-1, None):
             return spark.createDataFrame(spark.sparkContext.emptyRDD(), spark_read_schema(md))
-        if where is not None and any(
-            p is not None
-            for p in (partition_range, column_range, source_predicate, source_range)
-        ):
-            raise ValueError(
-                "pass either `where` or the tuple pruning params, not both "
-                "(`where` subsumes them)"
-            )
+        _require_where_alone(where, partition_range, column_range, source_predicate, source_range)
         if server_planning and with_lineage:
             raise ValueError(
                 "with_lineage reads cannot use server-side planning: the "
@@ -2543,20 +1228,17 @@ class RestTable:
             )
             if df is not None:
                 return df
-        if where is not None:
-            data, _, deletes = plan_dml_files(
-                md, sid, where, spark_session_timezone(spark), spark=spark
-            )
-        else:
-            data, deletes, _ = plan_scan_metadata(
-                md, sid, partition_range, column_range, source_predicate, source_range
-            )
-        df = (
-            scan_with_lineage(spark, md, data, deletes)
-            if with_lineage
-            else scan_with_deletes(spark, md, data, deletes)
+        return self._read_local(
+            spark,
+            md,
+            snapshot_id,
+            partition_range,
+            column_range,
+            source_predicate,
+            source_range,
+            where,
+            with_lineage,
         )
-        return df.filter(where) if where is not None else df
 
     def _read_server_planned(
         self,
@@ -2577,11 +1259,7 @@ class RestTable:
         None when a non-required attempt hits a not-implemented answer —
         read() then falls back to local planning (and the client
         remembers, so the probe is paid once per process)."""
-        from .iceberg_fs import (
-            extract_prune_ranges,
-            predicate_footer_prune,
-            spark_session_timezone,
-        )
+        from .iceberg_fs import extract_prune_ranges, predicate_footer_prune
         from .rest_scan import scan_filter_json, scan_planned_tasks
 
         if where is not None:

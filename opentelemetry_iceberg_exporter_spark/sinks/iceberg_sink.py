@@ -611,7 +611,9 @@ class RestIcebergSink:
     def add_files(self, signal: str, source_path: str) -> int:
         """K4 over REST (catalog_rest.go:306-367 AppendDataFiles)."""
         self.client.ensure_namespace(self.config.catalog.namespace)
-        return self._load(signal).add_files_hive(source_path)
+        return self._load(signal).add_files_hive(
+            source_path, timezone_name=self.config.partition.timezone
+        )
 
     def read(self, signal: str, snapshot_id: int | None = None) -> DataFrame:
         return self._load(signal).read(self.spark, snapshot_id)

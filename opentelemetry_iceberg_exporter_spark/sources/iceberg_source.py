@@ -87,17 +87,6 @@ def _arrow_field(name: str, iceberg_type, required: bool):
     )
 
 
-def _arrow_schema(md: dict):
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            _arrow_field(f["name"], f["type"], f["required"])
-            for f in current_schema(md)["fields"]
-        ]
-    )
-
-
 @dataclass
 class _FilePartition(InputPartition):
     """One Parquet data file; `deleted_positions` are the merge-on-read

@@ -226,16 +226,6 @@ def epoch_micros_sql(df: DataFrame, colname: str) -> str:
     return f"unix_micros({colname})"
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views for spark.sql queries."""
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def read_parquet_robust(
     spark: SparkSession, path: str, ignore_corrupt: bool = True
 ) -> DataFrame:

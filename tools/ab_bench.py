@@ -1,5 +1,6 @@
 """Interleaved same-host A/B: run the full bench alternately from two
-trees (fresh process each) and report per-key best-of-N medians.
+trees (fresh process each) and report each key's best of N runs (the
+minimum where lower is better, else the maximum).
 
 Usage: python tools/ab_bench.py <treeA> <treeB> [rounds]
 Writes raw outputs to /tmp/ab_<label>_<i>.json lines.
@@ -14,6 +15,11 @@ import subprocess
 import sys
 
 
+# keys only the full result record carries (the compact summary line
+# printed after it drops them); main() reads all of them
+FULL_RECORD_KEYS = ("queries_steady", "write_path", "corpus_build")
+
+
 def run_bench(tree: str, label: str, i: int) -> dict:
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -26,11 +32,25 @@ def run_bench(tree: str, label: str, i: int) -> dict:
         text=True,
         timeout=900,
     )
-    lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
-    full = json.loads(lines[-2])
+    if out.returncode != 0:
+        tail = "\n".join(out.stderr.strip().splitlines()[-20:])
+        raise RuntimeError(
+            f"bench.py in {tree} exited {out.returncode}; stderr tail:\n{tail}"
+        )
+    for line in reversed(out.stdout.splitlines()):
+        if not line.startswith("{"):
+            continue
+        record = json.loads(line)
+        if all(k in record for k in FULL_RECORD_KEYS):
+            break
+    else:
+        raise RuntimeError(
+            f"bench.py in {tree} printed no full result record "
+            f"(a JSON line with {', '.join(FULL_RECORD_KEYS)})"
+        )
     with open(f"/tmp/ab_{label}_{i}.json", "w") as f:
-        f.write(lines[-2])
-    return full
+        f.write(line)
+    return record
 
 
 def main() -> None:
