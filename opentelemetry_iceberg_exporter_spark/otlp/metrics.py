@@ -180,24 +180,56 @@ def _uint_list(col: Column) -> Column:
 
 def flatten_metrics(
     df: DataFrame,
-    cache: bool = False,
     depth: int = ATTR_DEPTH,
     ns_timestamps: bool = False,
 ) -> dict[str, DataFrame]:
     """resourceMetrics DF -> {signal: DataFrame} for the 5 metric tables.
 
-    The metric-level exploded DF is shared by all 5 branch filters.
-    cache=True caches it but gives the caller NO handle to unpersist —
-    a long-running caller would accumulate one InMemoryRelation per
-    invocation (unbounded CacheManager growth). Long-lived paths (the
-    streaming pipeline) should instead persist the exploded DF
+    The 5 branch filters share one un-cached metric-level explode.
+    Long-lived paths (the streaming pipeline) persist the exploded DF
     themselves via `_explode_to_metric` + `flatten_metrics_from_metric`
     and unpersist it when the batch is done.
     """
-    metric = _explode_to_metric(df)
-    if cache:
-        metric = metric.cache()
-    return flatten_metrics_from_metric(metric, depth, ns_timestamps)
+    return flatten_metrics_from_metric(_explode_to_metric(df), depth, ns_timestamps)
+
+
+# metric-level field holding each demuxed signal's data points
+_POINT_FIELDS = {
+    S.SIGNAL_METRICS_GAUGE: "gauge",
+    S.SIGNAL_METRICS_SUM: "sum",
+    S.SIGNAL_METRICS_HISTOGRAM: "histogram",
+    S.SIGNAL_METRICS_EXP_HISTOGRAM: "exponentialHistogram",
+    S.SIGNAL_METRICS_SUMMARY: "summary",
+}
+
+
+def metric_point_counts(metric: DataFrame) -> dict[str, int]:
+    """Rows each of flatten_metrics_from_metric's 5 frames holds, from
+    ONE job over the metric-level DF: a frame's rows are the data points
+    of the metrics carrying its type (explode drops null and empty point
+    lists, so they count 0). Run over the persisted explode, the job
+    also fills the cache the frame writes then read.
+
+    The sums ride an Observation on a no-op write: one single-stage job,
+    where a global aggregate would add an exchange and two more jobs."""
+    from pyspark.sql import Observation
+
+    m = F.col("metric")
+    seen = Observation()
+    metric.observe(
+        seen,
+        *[
+            F.sum(
+                F.when(
+                    m[field]["dataPoints"].isNotNull(),
+                    F.size(m[field]["dataPoints"]),
+                ).otherwise(F.lit(0))
+            ).alias(sig)
+            for sig, field in _POINT_FIELDS.items()
+        ],
+    ).write.format("noop").mode("overwrite").save()
+    got = seen.get
+    return {sig: int(got[sig] or 0) for sig in _POINT_FIELDS}
 
 
 def flatten_metrics_from_metric(
@@ -290,7 +322,8 @@ def flatten_metrics_from_metric(
         )
 
     def _summary():
-        # summary (metrics.go:575-594) — dot column names kept for parity
+        # summary (metrics.go:575-594) — dot column names kept for parity;
+        # the quantile lists cast to the declared element-nullable type
         su = metric.filter(m["summary"].isNotNull()).select(
             "resource", "scope", "metric", F.explode(m["summary"]["dataPoints"]).alias("dp")
         )
@@ -301,11 +334,11 @@ def flatten_metrics_from_metric(
         F.transform(
             F.coalesce(dp["quantileValues"], F.array()),
             lambda q: F.coalesce(q["quantile"], F.lit(0.0)),
-        ).alias("quantile_values.quantile"),
+        ).cast("array<double>").alias("quantile_values.quantile"),
         F.transform(
             F.coalesce(dp["quantileValues"], F.array()),
             lambda q: F.coalesce(q["value"], F.lit(0.0)),
-        ).alias("quantile_values.value"),
+        ).cast("array<double>").alias("quantile_values.value"),
         )
 
     from concurrent.futures import ThreadPoolExecutor

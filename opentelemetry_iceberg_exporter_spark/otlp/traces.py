@@ -130,7 +130,11 @@ def _trace_columns(depth: int, ns_timestamps: bool) -> tuple:
     attributes_to_json_sql encoders cost ~2s of driver/py4j time per
     construction (measured in the v3-sink profile — ~20% of the sink's
     wall). Column objects are immutable expression wrappers reusable
-    across DataFrames, so this caches plan-construction work only."""
+    across DataFrames, so this caches plan-construction work only.
+
+    The list columns are cast to their declared element-nullable type
+    here, so the projection already IS schemas.TRACES_SCHEMA and
+    conform stacks no second Project on it."""
     span = F.col("span")
     res = F.col("resource")
     scope = F.col("scope")
@@ -164,38 +168,38 @@ def _trace_columns(depth: int, ns_timestamps: bool) -> tuple:
         ).alias("events_time_unix_nano"),
         F.transform(
             F.coalesce(span["events"], F.array()), lambda e: F.coalesce(e["name"], F.lit(""))
-        ).alias("events_name"),
+        ).cast("array<string>").alias("events_name"),
         F.expr(
             "transform(coalesce(span.events, array()), ev0 -> "
             + attributes_to_json_sql("ev0.attributes", depth)
             + ")"
-        ).alias("events_attributes"),
+        ).cast("array<string>").alias("events_attributes"),
         F.transform(
             F.coalesce(span["events"], F.array()),
             lambda e: F.coalesce(e["droppedAttributesCount"], F.lit(0)),
-        ).alias("events_dropped_attributes_count"),
+        ).cast("array<bigint>").alias("events_dropped_attributes_count"),
         F.coalesce(span["droppedEventsCount"], F.lit(0)).alias("dropped_events_count"),
         F.transform(
             F.coalesce(span["links"], F.array()), lambda l: F.lower(F.coalesce(l["traceId"], F.lit("")))
-        ).alias("links_trace_id"),
+        ).cast("array<string>").alias("links_trace_id"),
         F.transform(
             F.coalesce(span["links"], F.array()), lambda l: F.lower(F.coalesce(l["spanId"], F.lit("")))
-        ).alias("links_span_id"),
+        ).cast("array<string>").alias("links_span_id"),
         F.transform(
             F.coalesce(span["links"], F.array()), lambda l: F.coalesce(l["traceState"], F.lit(""))
-        ).alias("links_trace_state"),
+        ).cast("array<string>").alias("links_trace_state"),
         F.expr(
             "transform(coalesce(span.links, array()), lk0 -> "
             + attributes_to_json_sql("lk0.attributes", depth)
             + ")"
-        ).alias("links_attributes"),
+        ).cast("array<string>").alias("links_attributes"),
         F.transform(
             F.coalesce(span["links"], F.array()),
             lambda l: F.coalesce(l["droppedAttributesCount"], F.lit(0)),
-        ).alias("links_dropped_attributes_count"),
+        ).cast("array<bigint>").alias("links_dropped_attributes_count"),
         F.transform(
             F.coalesce(span["links"], F.array()), lambda l: F.coalesce(l["flags"], F.lit(0))
-        ).alias("links_flags"),
+        ).cast("array<bigint>").alias("links_flags"),
         F.coalesce(span["droppedLinksCount"], F.lit(0)).alias("dropped_links_count"),
         status_code_str(span["status"]["code"]).alias("status_code"),
         empty_to_null(span["status"]["message"]).alias("status_message"),

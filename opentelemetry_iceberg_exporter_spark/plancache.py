@@ -4,23 +4,36 @@ Column objects are py4j handles into the ACTIVE JVM gateway: caching
 them across a gateway restart (embedded use stopping and relaunching
 Spark, some test harnesses) would hand back references to dead JVM
 objects that fail opaquely on next use. `column_cache` is lru_cache
-with the live gateway's identity folded into the key, so a relaunched
-gateway transparently rebuilds the Column trees while the steady-state
-hit path stays a plain dict lookup.
+with the live gateway's launch stamp folded into the key, so a
+relaunched gateway transparently rebuilds the Column trees while the
+steady-state hit path stays a plain dict lookup.
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
+
+_launches = itertools.count(1)
 
 
 def gateway_epoch() -> int | None:
-    """Identity of the active py4j gateway (None before any context):
-    changes whenever Spark is stopped and relaunched in-process."""
+    """Launch stamp of the active py4j gateway (None before any
+    context): changes whenever Spark is stopped and relaunched
+    in-process. The stamp is a counter value stored ON the gateway
+    object the first time it is seen — unlike `id(gateway)`, which a
+    relaunched gateway can reuse once the old one is freed."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
-    return id(sc._gateway) if sc is not None else None
+    if sc is None:
+        return None
+    gateway = sc._gateway
+    stamp = getattr(gateway, "_column_cache_epoch", None)
+    if stamp is None:
+        stamp = next(_launches)
+        gateway._column_cache_epoch = stamp
+    return stamp
 
 
 def column_cache(maxsize: int = 16):

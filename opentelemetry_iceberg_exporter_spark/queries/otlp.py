@@ -118,7 +118,7 @@ SELECT * FROM (VALUES
 )
 def o03_metrics_demux_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfs = flatten_metrics(
-        parse_metrics_json(_fixture_df(spark, "otlp_metrics.jsonl")), cache=False
+        parse_metrics_json(_fixture_df(spark, "otlp_metrics.jsonl"))
     )
     parts = [
         df.agg(F.count(F.lit(1)).alias("n_rows")).select(
@@ -257,7 +257,7 @@ SELECT * FROM (VALUES
 )
 def o07_flatten_histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfs = flatten_metrics(
-        parse_metrics_json(_fixture_df(spark, "otlp_metrics.jsonl")), cache=False
+        parse_metrics_json(_fixture_df(spark, "otlp_metrics.jsonl"))
     )
     null = lambda t: F.lit(None).cast(t)  # noqa: E731
     hist = dfs["metrics_histogram"].select(

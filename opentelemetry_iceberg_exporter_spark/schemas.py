@@ -379,9 +379,13 @@ def to_variant_attrs(df, signal: str):
     (metric_metadata's empty rule) stays NULL."""
     from pyspark.sql import functions as F
 
-    for name in VARIANT_ATTR_COLUMNS[signal]:
-        df = df.withColumn(name, F.parse_json(F.col(f"`{name}`")))
-    return df
+    names = set(VARIANT_ATTR_COLUMNS[signal])
+    return df.select(
+        *[
+            F.parse_json(F.col(f"`{c}`")).alias(c) if c in names else F.col(f"`{c}`")
+            for c in df.columns
+        ]
+    )
 
 
 def schema_for(
@@ -406,9 +410,18 @@ def conform(df, schema: StructType):
     nullability is enforced at the table boundary (Iceberg DDL / parquet
     write), matching the reference where the Arrow schema — not the
     appender — owns nullability (schema.go:298-309).
+
+    An input whose names, order and data types (array `containsNull`
+    included) already equal the schema's is returned unchanged: every
+    Project stacked on the flatten makes Spark re-analyse the whole
+    plan, and the flatten already emits the declared types.
     """
     from pyspark.sql import functions as F
 
+    if [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in schema.fields
+    ]:
+        return df
     have = set(df.columns)
     missing = [f.name for f in schema.fields if f.name not in have]
     if missing:

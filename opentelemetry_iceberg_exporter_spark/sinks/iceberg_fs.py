@@ -407,21 +407,29 @@ def with_field_ids(df: DataFrame, md: dict) -> DataFrame:
     self-describing for id-based resolution (Spark writes the ids;
     fieldId.write is on by default). Columns not in the table schema
     (e.g. the hidden partition value) pass through untouched."""
+    ids = _write_field_ids(md)
+    return df.select(*[_id_aliased(_quoted_col(c), c, ids) for c in df.columns])
+
+
+def _write_field_ids(md: dict) -> dict[str, int]:
+    """Column name -> the Parquet field id a data file stores it under."""
     ids = {f_["name"]: f_["id"] for f_ in current_schema(md)["fields"]}
     # materialized v3 lineage columns carry the spec's reserved ids
     ids.setdefault(ROW_ID_COL, 2147483540)
     ids.setdefault(LAST_UPDATED_COL, 2147483539)
+    return ids
+
+
+def _quoted_col(name: str):
     # backtick-quoted: a dotted top-level name (the summary table's
     # `quantile_values.quantile`) must not resolve as a struct path
-    cols = {c: F.col("`" + c.replace("`", "``") + "`") for c in df.columns}
-    return df.select(
-        *[
-            cols[c].alias(c, metadata={"parquet.field.id": ids[c]})
-            if c in ids
-            else cols[c]
-            for c in df.columns
-        ]
-    )
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _id_aliased(col, name: str, ids: dict[str, int]):
+    if name in ids:
+        return col.alias(name, metadata={"parquet.field.id": ids[name]})
+    return col.alias(name)
 
 
 def field_idless_files(paths: list[str]) -> list[str]:
@@ -2492,17 +2500,9 @@ def write_partitioned_batch(
     spec = default_spec_fields(md)
     batch_dir = os.path.join(location, "data", uuid.uuid4().hex)
     write_opts = _parquet_write_options(md)
-    df = apply_write_defaults(df, md)  # v3 write-defaults for omitted cols
-    df = with_field_ids(df, md)  # self-describing files (rename-safe)
+    df = _write_projection(df, md, spec)
     if spec:
-        pcols = []
-        for pf in spec:
-            source = _field_name_by_id(md, pf["source-id"])
-            df = df.withColumn(
-                pf["name"],
-                transform_column(source, pf["transform"], _field_type_by_id(md, pf["source-id"])),
-            )
-            pcols.append(pf["name"])
+        pcols = [pf["name"] for pf in spec]
         sort_cols = [
             _field_name_by_id(md, sf["source-id"]) for sf in default_sort_fields(md)
         ]
@@ -2551,6 +2551,33 @@ def write_partitioned_batch(
             writer = writer.options(**write_opts)
         writer.parquet(batch_dir)
     return _scan_written_files(batch_dir, _partition_parse_types(md))
+
+
+def _write_projection(df: DataFrame, md: dict, spec: list[dict]) -> DataFrame:
+    """The write plan's ONE Project over `df` (each Project stacked on
+    the input makes Spark re-analyse the whole plan): apply_write_defaults
+    (v3 write-defaults for omitted columns), with_field_ids
+    (self-describing, rename-safe files) and one column per partition
+    field holding its transform value, replacing a same-named column in
+    place as withColumn would."""
+    sources = [_field_name_by_id(md, pf["source-id"]) for pf in spec]
+    if not set(sources) <= set(df.columns):
+        # a partition transform reads its source from the input, so an
+        # omitted (write-defaulted) source must exist before it
+        df = apply_write_defaults(df, md)
+    ids = _write_field_ids(md)
+    cols = {c: _quoted_col(c) for c in df.columns}
+    for f_ in current_schema(md)["fields"]:
+        if f_["name"] not in cols and "write-default" in f_:
+            cols[f_["name"]] = F.lit(
+                default_literal(f_["type"], f_["write-default"])
+            ).cast(_spark_type(f_["type"]))
+    exprs = {c: _id_aliased(col, c, ids) for c, col in cols.items()}
+    for pf, source in zip(spec, sources):
+        exprs[pf["name"]] = transform_column(
+            source, pf["transform"], _field_type_by_id(md, pf["source-id"])
+        ).alias(pf["name"])
+    return df.select(*exprs.values())
 
 
 def _parquet_write_options(md: dict) -> dict[str, str]:

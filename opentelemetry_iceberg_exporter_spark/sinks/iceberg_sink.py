@@ -411,6 +411,11 @@ class FsIcebergSink:
             self._ensured.add(table)
         return self.catalog.load_table(ns, table)
 
+    def ensure_table(self, signal: str) -> None:
+        """Create the signal's table if absent, writing nothing — what an
+        empty demuxed frame leaves behind."""
+        self._load(signal)
+
     def append(self, df: DataFrame, signal: str, record_count: int | None = None) -> int | None:
         """K3: executors write Parquet, driver commits one snapshot with
         the reference's snapshot properties. Returns the snapshot id, or
@@ -482,6 +487,13 @@ class RestIcebergSink:
             oauth2_server_uri=config.catalog.oauth2_server_uri,
             scope=config.catalog.scope,
         )
+        self._namespace_ready = False
+
+    def _ensure_namespace(self) -> None:
+        """C1 once per sink: every later append skips the namespace GET."""
+        if not self._namespace_ready:
+            self.client.ensure_namespace(self.config.catalog.namespace)
+            self._namespace_ready = True
 
     def _table_props(self, signal: str) -> dict[str, str]:
         return _exporter_table_props(
@@ -509,7 +521,7 @@ class RestIcebergSink:
         """C1 + C2 x7 over REST (ensure ladder with client-side cache —
         catalog_rest.go:129-240), then catalog.views convergence."""
         ns = self.config.catalog.namespace
-        self.client.ensure_namespace(ns)
+        self._ensure_namespace()
         ensured = []
         for signal in S.ALL_SIGNALS:
             table = self._table_name(signal)
@@ -538,6 +550,12 @@ class RestIcebergSink:
             iceberg_types=self._signal_iceberg_types(signal),
         )
 
+    def ensure_table(self, signal: str) -> None:
+        """Create the signal's table (and the namespace) if absent,
+        writing nothing — what an empty demuxed frame leaves behind."""
+        self._ensure_namespace()
+        self._load(signal)
+
     def append(self, df: DataFrame, signal: str, record_count: int | None = None) -> int | None:
         """K3 over REST (catalog_rest.go:243-303 AppendRecords); with
         catalog.wap_branch set the commit stages on that branch (WAP);
@@ -546,7 +564,7 @@ class RestIcebergSink:
         props = {"otel.exporter": "opentelemetry-iceberg-exporter-spark"}
         if record_count is not None:
             props["otel.record_count"] = str(record_count)
-        self.client.ensure_namespace(self.config.catalog.namespace)
+        self._ensure_namespace()
         conformed = S.conform(df, self._signal_schema(signal))
         keys = self.config.catalog.upsert_keys.get(signal)
         table = self._load(signal)
@@ -572,7 +590,10 @@ class RestIcebergSink:
         its logs/metrics halves, which per-table appends cannot
         guarantee. Empty frames are skipped; returns per-signal
         snapshot ids. Mutually exclusive with wap_branch/upsert_keys
-        (those are per-table commit shapes)."""
+        (those are per-table commit shapes). The signals' data files are
+        written concurrently (threads.map_concurrently); the commit
+        waits for every write."""
+        from ..threads import map_concurrently
         from .iceberg_fs import write_partitioned_batch
         from .iceberg_rest import commit_append_transaction
 
@@ -581,19 +602,25 @@ class RestIcebergSink:
                 "append_all commits straight to main; it cannot combine "
                 "with wap_branch or upsert_keys"
             )
-        self.client.ensure_namespace(self.config.catalog.namespace)
+        self._ensure_namespace()
         props = {"otel.exporter": "opentelemetry-iceberg-exporter-spark"}
-        parts = []
-        signal_of = {}
-        for signal, df in dfs.items():
+
+        def write(item):
+            signal, df = item
             table = self._load(signal)
             md = table.metadata()
             conformed = S.conform(df, self._signal_schema(signal))
             files = write_partitioned_batch(
                 conformed, md["location"], md, self.config.catalog.write_fanout
             )
-            parts.append((table, files, props))
-            signal_of[(table.namespace, table.name)] = signal
+            return table, files
+
+        written = map_concurrently(self.spark, write, dfs.items())
+        parts = [(table, files, props) for table, files in written]
+        signal_of = {
+            (table.namespace, table.name): signal
+            for signal, (table, _files) in zip(dfs, written)
+        }
         sids = commit_append_transaction(self.client, parts)
         return {signal_of[k]: sid for k, sid in sids.items()}
 
@@ -610,7 +637,7 @@ class RestIcebergSink:
 
     def add_files(self, signal: str, source_path: str) -> int:
         """K4 over REST (catalog_rest.go:306-367 AppendDataFiles)."""
-        self.client.ensure_namespace(self.config.catalog.namespace)
+        self._ensure_namespace()
         return self._load(signal).add_files_hive(
             source_path, timezone_name=self.config.partition.timezone
         )

@@ -36,9 +36,10 @@ from pyspark.sql import functions as F
 from .. import schemas as S
 from ..config import ExporterConfig, SourceConfig
 from ..otlp.logs import flatten_logs, parse_logs_json
-from ..otlp.metrics import flatten_metrics, parse_metrics_json
+from ..otlp.metrics import flatten_metrics, metric_point_counts, parse_metrics_json
 from ..otlp.traces import flatten_traces, parse_traces_json
 from ..sinks import PERMANENT, classify_error, write_raw_parquet
+from ..threads import map_concurrently
 
 log = logging.getLogger(__name__)
 
@@ -118,34 +119,41 @@ def default_sink(config: ExporterConfig) -> SinkFn:
     """K1 dispatch: catalog_type routes each conformed batch to the
     raw-Parquet Hive sink (none), the jar-backed Iceberg catalog (rest),
     or the pure-Python filesystem Iceberg catalog (fs)."""
-    if config.catalog.catalog_type == "fs":
-        from ..sinks.iceberg_sink import FsIcebergSink
-
-        holder: dict[str, FsIcebergSink] = {}
-
-        def fs_sink(df: DataFrame, signal: str) -> None:
-            if "sink" not in holder:
-                holder["sink"] = FsIcebergSink(df.sparkSession, config)
-            holder["sink"].append(df, signal)
-
-        return fs_sink
-
-    if config.catalog.catalog_type == "rest":
-        from ..sinks.iceberg_sink import RestIcebergSink
-
-        rest_holder: dict[str, RestIcebergSink] = {}
-
-        def rest_sink(df: DataFrame, signal: str) -> None:
-            if "sink" not in rest_holder:
-                rest_holder["sink"] = RestIcebergSink(df.sparkSession, config)
-            rest_holder["sink"].append(df, signal)
-
-        return rest_sink
+    if config.catalog.catalog_type in ("fs", "rest"):
+        return CatalogSink(config)
 
     def sink(df: DataFrame, signal: str) -> None:
         write_raw_parquet(df, signal, config)
 
     return sink
+
+
+class CatalogSink:
+    """The SinkFn of the pure-Python catalogs: one FsIcebergSink or
+    RestIcebergSink, built on first use and kept for the stream's life
+    (its table and namespace caches with it). `ensure` creates a
+    signal's table without writing: the empty-frame path of the metric
+    demux."""
+
+    def __init__(self, config: ExporterConfig):
+        self.config = config
+        self._sink = None
+
+    def bind(self, spark: SparkSession):
+        """The catalog sink, built now if not yet. Called before a
+        concurrent fan-out, so the threads share one sink."""
+        if self._sink is None:
+            from ..sinks.iceberg_sink import FsIcebergSink, RestIcebergSink
+
+            fs = self.config.catalog.catalog_type == "fs"
+            self._sink = (FsIcebergSink if fs else RestIcebergSink)(spark, self.config)
+        return self._sink
+
+    def __call__(self, df: DataFrame, signal: str) -> None:
+        self.bind(df.sparkSession).append(df, signal)
+
+    def ensure(self, spark: SparkSession, signal: str) -> None:
+        self.bind(spark).ensure_table(signal)
 
 
 def make_batch_processor(
@@ -157,7 +165,20 @@ def make_batch_processor(
     """The foreachBatch body: flatten, demux, empty-skip (F1), append,
     classify errors (X2). With catalog.atomic_batch (REST), the demuxed
     signals commit in ONE multi-table CommitTransaction instead of
-    per-signal appends."""
+    per-signal appends.
+
+    The metric demux counts each type's rows in one aggregate over the
+    persisted explode. A type with no rows runs no Spark job: a sink
+    with `ensure` (the catalog sinks) only creates its table, any other
+    sink still receives the empty frame. The frames are written and
+    committed (or their tables ensured) concurrently, on at most
+    defaultParallelism threads (threads.map_concurrently), so a custom
+    sink or dead letter must accept calls from several threads. Each frame
+    keeps its own error handling: a permanent error is logged and the
+    frame dead-lettered; a transient one re-raises once every frame has
+    finished, so frames that committed stay committed and the replayed
+    batch appends them again (at-least-once per table; atomic_batch is
+    the all-or-nothing form)."""
     atomic = (
         sink is None
         and config.catalog.catalog_type == "rest"
@@ -200,21 +221,36 @@ def make_batch_processor(
             if atomic:
                 atomic_commit(flattened, batch_id)
                 return
-            for signal, df in flattened.items():
+            spark = batch_df.sparkSession
+            ensure = getattr(sink, "ensure", None)
+            empty: set[str] = set()
+            if cached is not None and ensure is not None:
+                rows = metric_point_counts(cached)
+                empty = {sig for sig in flattened if not rows[sig]}
+            if hasattr(sink, "bind"):
+                sink.bind(spark)  # one sink shared by the fan-out threads
+
+            def sink_frame(item: tuple[str, DataFrame]) -> None:
+                signal, df = item
                 try:
-                    sink(df, signal)
+                    if signal in empty:
+                        ensure(spark, signal)  # F1: its table, no write job
+                    else:
+                        sink(df, signal)
                 except Exception as exc:  # noqa: BLE001 — classified below
-                    if classify_error(exc) == PERMANENT:
-                        log.error(
-                            "permanent error on batch %s signal %s: %s",
-                            batch_id,
-                            signal,
-                            exc,
-                        )
-                        if dead_letter is not None:
-                            dead_letter(df, signal)
-                        continue  # swallowed: collector semantics (X2)
-                    raise  # transient: streaming engine retries the batch
+                    if classify_error(exc) != PERMANENT:
+                        raise  # transient: streaming engine retries the batch
+                    log.error(
+                        "permanent error on batch %s signal %s: %s",
+                        batch_id,
+                        signal,
+                        exc,
+                    )
+                    if dead_letter is not None:
+                        dead_letter(df, signal)
+                    # swallowed: collector semantics (X2)
+
+            map_concurrently(spark, sink_frame, flattened.items())
         finally:
             if cached is not None:
                 cached.unpersist()
@@ -341,7 +377,10 @@ def export_batch(
     wire_format: str = "json",
 ) -> dict[str, int]:
     """Batch-mode replay of the same pipeline (reference replay path);
-    returns per-signal appended row counts."""
+    returns per-signal appended row counts. Each signal's frame is
+    persisted, counted and, when non-empty, sunk on its own thread
+    (threads.map_concurrently); a failure re-raises once every frame
+    has finished."""
     if wire_format == "protobuf":
         from ..otlp.protobuf import protobuf_to_json_lines
 
@@ -364,32 +403,43 @@ def export_batch(
         and config.catalog.atomic_batch
     )
     sink = None if atomic else (sink or default_sink(config))
-    counts: dict[str, int] = {}
+    if hasattr(sink, "bind"):
+        sink.bind(spark)  # one sink shared by the fan-out threads
     try:
         if atomic:
             from ..sinks.iceberg_sink import RestIcebergSink
 
-            frames: dict[str, DataFrame] = {}
-            for signal, df in flattened.items():
-                df = df.persist()
-                counts[signal] = df.count()
-                if counts[signal]:  # F1
-                    frames[signal] = df
-                else:
+            persisted = {sig: df.persist() for sig, df in flattened.items()}
+            try:
+                counts = dict(
+                    zip(
+                        persisted,
+                        map_concurrently(spark, DataFrame.count, persisted.values()),
+                    )
+                )
+                frames = {sig: df for sig, df in persisted.items() if counts[sig]}  # F1
+                if frames:
+                    # every signal of the batch advances in ONE transaction
+                    RestIcebergSink(spark, config).append_all(frames)
+            finally:
+                for df in persisted.values():
                     df.unpersist()
-            if frames:
-                # every signal of the batch advances in ONE transaction
-                RestIcebergSink(spark, config).append_all(frames)
-            for df in frames.values():
-                df.unpersist()
         else:
-            for signal, df in flattened.items():
+
+            def count_and_sink(item: tuple[str, DataFrame]) -> int:
+                signal, df = item
                 df = df.persist()
-                n = df.count()
-                counts[signal] = n
-                if n:  # F1
-                    sink(df, signal)
-                df.unpersist()
+                try:
+                    n = df.count()
+                    if n:  # F1
+                        sink(df, signal)
+                    return n
+                finally:
+                    df.unpersist()
+
+            counts = dict(
+                zip(flattened, map_concurrently(spark, count_and_sink, flattened.items()))
+            )
     finally:
         if cached is not None:
             cached.unpersist()

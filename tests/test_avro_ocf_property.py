@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import io
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -25,6 +26,9 @@ from opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs import (
     MANIFEST_LIST_SCHEMA,
     manifest_avro_schema,
 )
+
+# depth/property tier: full-coverage fuzz — slow tier (SPARK_GRAFT_FULL_TESTS=1)
+pytestmark = pytest.mark.slow
 
 
 def roundtrip(schema, value):
@@ -226,8 +230,3 @@ def test_deflate_codec_reads_back(tmp_path_factory):
     got_schema, got_meta, got_rows = read_ocf(path)
     assert got_meta["avro.codec"] == "deflate"
     assert got_rows == rows
-
-import pytest
-
-# depth/property tier: full-coverage fuzz — slow tier (SPARK_GRAFT_FULL_TESTS=1)
-pytestmark = pytest.mark.slow

@@ -24,6 +24,9 @@ from opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs import (
     snapshot_file_tree,
 )
 
+# depth/property tier: full-coverage fuzz — slow tier (SPARK_GRAFT_FULL_TESTS=1)
+pytestmark = pytest.mark.slow
+
 
 def _df(spark, ids):
     return (
@@ -112,6 +115,3 @@ def test_randomized_fold_expire_interleavings(spark, tmp_path, seed):
     t.expire_snapshots(keep_last=1)
     _assert_invariants(t, spark, live)
     assert len(t.snapshots()) >= 1
-
-# depth/property tier: full-coverage fuzz — slow tier (SPARK_GRAFT_FULL_TESTS=1)
-pytestmark = pytest.mark.slow

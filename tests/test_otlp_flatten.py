@@ -528,7 +528,7 @@ def _metrics_payload(metrics, service="svc-a"):
 
 
 def _flatten_metric_rows(spark, payload, signal, schema):
-    dfs = flatten_metrics(_req_df(spark, payload, parse_metrics_json), cache=False)
+    dfs = flatten_metrics(_req_df(spark, payload, parse_metrics_json))
     df = S.conform(dfs[signal], schema)
     _assert_conformed(df, schema)
     return [r.asDict() for r in df.collect()]
@@ -744,7 +744,7 @@ class TestMetricsFlatten:
             ]
         )
         dfs = flatten_metrics(
-            _req_df(spark, payload, parse_metrics_json), cache=False
+            _req_df(spark, payload, parse_metrics_json)
         )
         counts = {sig: df.count() for sig, df in dfs.items()}
         assert counts == {

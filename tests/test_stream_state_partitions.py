@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from opentelemetry_iceberg_exporter_spark.queries.streaming import (
     _STATE_PARTITION_BYTES,
     state_partitions_for,
@@ -21,7 +23,21 @@ def test_small_input_gets_floor(spark, sf_dir, monkeypatch):
     assert n == 2  # sf0.001 events is far under 32 MB -> floor
 
 
-def test_scales_with_bytes_capped_at_configured(spark, tmp_path, monkeypatch):
+@pytest.fixture()
+def eight_shuffle_partitions(spark):
+    """The shared session's shuffle width is whatever earlier tests left
+    (some size it to the host's cores); pin a known value >= 5 so the
+    5-partition case is not capped, and restore it afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    yield
+    spark.conf.set(key, before)
+
+
+def test_scales_with_bytes_capped_at_configured(
+    spark, tmp_path, monkeypatch, eight_shuffle_partitions
+):
     monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
     big = tmp_path / "big.bin"
     big.write_bytes(b"\0")

@@ -420,7 +420,7 @@ class TestNsExporterPipeline:
             "otlp_metrics.jsonl",
         )
         dfs = flatten_metrics(
-            parse_metrics_json(spark.read.text(fix)), cache=False,
+            parse_metrics_json(spark.read.text(fix)),
             ns_timestamps=True,
         )
         gauge = dfs["metrics_gauge"].select(
