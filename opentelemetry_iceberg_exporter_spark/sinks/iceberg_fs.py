@@ -45,8 +45,10 @@ import os
 import re
 import shutil
 import struct
+import threading
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any
@@ -653,16 +655,20 @@ def apply_write_defaults(df: DataFrame, md: dict) -> DataFrame:
     """Fill columns the writer OMITTED with their write-default (v3
     default values) — appended rows then physically store the default,
     so later reads (and default changes) never reinterpret them."""
-    present = set(df.columns)
-    for f_ in current_schema(md)["fields"]:
-        if f_["name"] not in present and "write-default" in f_:
-            df = df.withColumn(
-                f_["name"],
-                F.lit(default_literal(f_["type"], f_["write-default"])).cast(
-                    _spark_type(f_["type"])
-                ),
-            )
-    return df
+    defaults = _write_default_cols(md, set(df.columns))
+    return df.withColumns(defaults) if defaults else df
+
+
+def _write_default_cols(md: dict, present) -> dict:
+    """Column name -> its write-default Column, for every field of the
+    current schema that `present` lacks and that declares one."""
+    return {
+        f_["name"]: F.lit(default_literal(f_["type"], f_["write-default"])).cast(
+            _spark_type(f_["type"])
+        )
+        for f_ in current_schema(md)["fields"]
+        if f_["name"] not in present and "write-default" in f_
+    }
 
 
 def table_file_scan(
@@ -2488,6 +2494,12 @@ def default_spec_fields(md: dict) -> list[dict]:
     )["fields"]
 
 
+# Guards the SparkContext's Hadoop conf while vended storage keys are
+# set in it and while a write job that applied them runs (reentrant: the
+# write's own apply_storage_credentials takes it again).
+HADOOP_CONF_LOCK = threading.RLock()
+
+
 def write_partitioned_batch(
     df: DataFrame, location: str, md: dict, fanout: int | None = None
 ) -> list[DataFile]:
@@ -2567,11 +2579,7 @@ def _write_projection(df: DataFrame, md: dict, spec: list[dict]) -> DataFrame:
         df = apply_write_defaults(df, md)
     ids = _write_field_ids(md)
     cols = {c: _quoted_col(c) for c in df.columns}
-    for f_ in current_schema(md)["fields"]:
-        if f_["name"] not in cols and "write-default" in f_:
-            cols[f_["name"]] = F.lit(
-                default_literal(f_["type"], f_["write-default"])
-            ).cast(_spark_type(f_["type"]))
+    cols.update(_write_default_cols(md, cols))
     exprs = {c: _id_aliased(col, c, ids) for c, col in cols.items()}
     for pf, source in zip(spec, sources):
         exprs[pf["name"]] = transform_column(
@@ -7231,6 +7239,21 @@ class Table:
         catalog that vends none (the filesystem catalog) applies {}."""
         return {}
 
+    @contextmanager
+    def _credentialed_write(self, spark: SparkSession, path: str):
+        """apply_storage_credentials for the write job run inside the
+        block. Vended keys live in the SparkContext's one Hadoop conf,
+        which every thread shares: when this table applied any, the block
+        holds HADOOP_CONF_LOCK until its job is done, so a concurrent
+        write to a table with another vend (the same bucket's per-bucket
+        keys, or GCS's global token) cannot swap keys under it. A table
+        that vends nothing writes without the lock."""
+        with HADOOP_CONF_LOCK:
+            if self.apply_storage_credentials(spark, path):
+                yield
+                return
+        yield
+
     # -- the commit loop ---------------------------------------------------
     def _commit_loop(
         self, build, md: dict | None = None, pin: tuple[str, int] | None = None
@@ -7438,8 +7461,8 @@ class Table:
         produces empty per-type frames; an empty snapshot per type per
         micro-batch would bloat metadata for no data)."""
         md = self.metadata()
-        self.apply_storage_credentials(df.sparkSession, md["location"])
-        files = write_partitioned_batch(df, md["location"], md, fanout)
+        with self._credentialed_write(df.sparkSession, md["location"]):
+            files = write_partitioned_batch(df, md["location"], md, fanout)
         if not files:  # F1: no data files -> no snapshot
             return None
         return self.append_files(files, snapshot_properties)
@@ -7453,8 +7476,8 @@ class Table:
         """append_dataframe staged on a branch (WAP); empty inputs
         commit nothing."""
         md = self.metadata()
-        self.apply_storage_credentials(df.sparkSession, md["location"])
-        files = write_partitioned_batch(df, md["location"], md)
+        with self._credentialed_write(df.sparkSession, md["location"]):
+            files = write_partitioned_batch(df, md["location"], md)
         if not files:
             return None
         return self.append_files_to_branch(branch, files, snapshot_properties)
@@ -7537,9 +7560,9 @@ class Table:
         ReplaceConflictError if the table advanced mid-write (a replace
         cannot merge — re-run against the new base)."""
         md = self.metadata()
-        self.apply_storage_credentials(df.sparkSession, md["location"])
         planned_snapshot = md["current-snapshot-id"]
-        new_files = write_partitioned_batch(df, md["location"], md, fanout)
+        with self._credentialed_write(df.sparkSession, md["location"]):
+            new_files = write_partitioned_batch(df, md["location"], md, fanout)
         if not new_files:  # F1: no data files -> no snapshot
             return None
         replaced, survivors, deletes = plan_partition_overwrite(

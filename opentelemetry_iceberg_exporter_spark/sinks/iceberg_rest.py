@@ -43,6 +43,7 @@ from pyspark.sql.types import StructType
 
 from .iceberg_fs import (
     CommitConflictError,
+    HADOOP_CONF_LOCK,
     DataFile,
     NoSuchTableError,
     RequirementFailedError,
@@ -1063,8 +1064,9 @@ class RestTable(Table):
         conf.update(self._vended.conf_for_path(target))
         if conf:
             hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            for k, v in conf.items():
-                hconf.set(k, v)
+            with HADOOP_CONF_LOCK:  # never mid-way through another's write
+                for k, v in conf.items():
+                    hconf.set(k, v)
         return conf
 
     # -- server-side scan planning ----------------------------------------

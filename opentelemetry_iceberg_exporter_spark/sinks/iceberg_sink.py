@@ -590,10 +590,7 @@ class RestIcebergSink:
         its logs/metrics halves, which per-table appends cannot
         guarantee. Empty frames are skipped; returns per-signal
         snapshot ids. Mutually exclusive with wap_branch/upsert_keys
-        (those are per-table commit shapes). The signals' data files are
-        written concurrently (threads.map_concurrently); the commit
-        waits for every write."""
-        from ..threads import map_concurrently
+        (those are per-table commit shapes)."""
         from .iceberg_fs import write_partitioned_batch
         from .iceberg_rest import commit_append_transaction
 
@@ -604,23 +601,17 @@ class RestIcebergSink:
             )
         self._ensure_namespace()
         props = {"otel.exporter": "opentelemetry-iceberg-exporter-spark"}
-
-        def write(item):
-            signal, df = item
+        parts = []
+        signal_of = {}
+        for signal, df in dfs.items():
             table = self._load(signal)
             md = table.metadata()
             conformed = S.conform(df, self._signal_schema(signal))
             files = write_partitioned_batch(
                 conformed, md["location"], md, self.config.catalog.write_fanout
             )
-            return table, files
-
-        written = map_concurrently(self.spark, write, dfs.items())
-        parts = [(table, files, props) for table, files in written]
-        signal_of = {
-            (table.namespace, table.name): signal
-            for signal, (table, _files) in zip(dfs, written)
-        }
+            parts.append((table, files, props))
+            signal_of[(table.namespace, table.name)] = signal
         sids = commit_append_transaction(self.client, parts)
         return {signal_of[k]: sid for k, sid in sids.items()}
 

@@ -28,6 +28,7 @@ partitions (partition.go:84-98 semantics, SURVEY §2.10 streaming row).
 from __future__ import annotations
 
 import logging
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -131,29 +132,32 @@ def default_sink(config: ExporterConfig) -> SinkFn:
 class CatalogSink:
     """The SinkFn of the pure-Python catalogs: one FsIcebergSink or
     RestIcebergSink, built on first use and kept for the stream's life
-    (its table and namespace caches with it). `ensure` creates a
-    signal's table without writing: the empty-frame path of the metric
-    demux."""
+    (its table and namespace caches with it). Safe to call from several
+    threads at once, which is what lets the metric demux sink its frames
+    concurrently. `ensure` creates a signal's table without writing: the
+    empty-frame path of that demux."""
 
     def __init__(self, config: ExporterConfig):
         self.config = config
         self._sink = None
+        self._lock = threading.Lock()
 
-    def bind(self, spark: SparkSession):
-        """The catalog sink, built now if not yet. Called before a
-        concurrent fan-out, so the threads share one sink."""
-        if self._sink is None:
-            from ..sinks.iceberg_sink import FsIcebergSink, RestIcebergSink
+    def _catalog_sink(self, spark: SparkSession):
+        with self._lock:  # concurrent first calls share one sink
+            if self._sink is None:
+                from ..sinks.iceberg_sink import FsIcebergSink, RestIcebergSink
 
-            fs = self.config.catalog.catalog_type == "fs"
-            self._sink = (FsIcebergSink if fs else RestIcebergSink)(spark, self.config)
-        return self._sink
+                fs = self.config.catalog.catalog_type == "fs"
+                self._sink = (FsIcebergSink if fs else RestIcebergSink)(
+                    spark, self.config
+                )
+            return self._sink
 
     def __call__(self, df: DataFrame, signal: str) -> None:
-        self.bind(df.sparkSession).append(df, signal)
+        self._catalog_sink(df.sparkSession).append(df, signal)
 
     def ensure(self, spark: SparkSession, signal: str) -> None:
-        self.bind(spark).ensure_table(signal)
+        self._catalog_sink(spark).ensure_table(signal)
 
 
 def make_batch_processor(
@@ -167,18 +171,19 @@ def make_batch_processor(
     signals commit in ONE multi-table CommitTransaction instead of
     per-signal appends.
 
-    The metric demux counts each type's rows in one aggregate over the
-    persisted explode. A type with no rows runs no Spark job: a sink
-    with `ensure` (the catalog sinks) only creates its table, any other
-    sink still receives the empty frame. The frames are written and
-    committed (or their tables ensured) concurrently, on at most
-    defaultParallelism threads (threads.map_concurrently), so a custom
-    sink or dead letter must accept calls from several threads. Each frame
-    keeps its own error handling: a permanent error is logged and the
-    frame dead-lettered; a transient one re-raises once every frame has
-    finished, so frames that committed stay committed and the replayed
-    batch appends them again (at-least-once per table; atomic_batch is
-    the all-or-nothing form)."""
+    A custom `sink` gets every demuxed frame, the empty ones too, one
+    after another; a transient error stops the batch at that frame. The
+    catalog sinks (default_sink for fs/rest, a CatalogSink) go further.
+    One aggregate over the persisted metric explode counts each type's
+    rows; a type with no rows runs no Spark job and only has its table
+    ensured. The other frames are written and committed concurrently,
+    on at most defaultParallelism threads (threads.map_concurrently).
+    Either way each frame keeps its own error handling, and `dead_letter`
+    runs on the calling thread, in frame order: a permanent error is
+    logged and the frame dead-lettered; a transient one re-raises (for
+    catalog sinks, once every frame has finished), so frames that
+    committed stay committed and the replayed batch appends them again
+    (at-least-once per table; atomic_batch is the all-or-nothing form)."""
     atomic = (
         sink is None
         and config.catalog.catalog_type == "rest"
@@ -204,6 +209,13 @@ def make_batch_processor(
                 return  # swallowed: collector semantics (X2)
             raise  # transient: streaming engine retries the WHOLE batch
 
+    def dead(batch_id: int, signal: str, df: DataFrame, exc: Exception) -> None:
+        """A frame's permanent error: logged, the frame dead-lettered and
+        the error swallowed (collector semantics, X2)."""
+        log.error("permanent error on batch %s signal %s: %s", batch_id, signal, exc)
+        if dead_letter is not None:
+            dead_letter(df, signal)
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():  # F1 empty-batch short-circuit
             return
@@ -221,36 +233,44 @@ def make_batch_processor(
             if atomic:
                 atomic_commit(flattened, batch_id)
                 return
+            if not isinstance(sink, CatalogSink):
+                for signal, df in flattened.items():
+                    try:
+                        sink(df, signal)
+                    except Exception as exc:  # noqa: BLE001 — classified below
+                        if classify_error(exc) != PERMANENT:
+                            raise  # transient: streaming engine retries the batch
+                        dead(batch_id, signal, df, exc)
+                return
             spark = batch_df.sparkSession
-            ensure = getattr(sink, "ensure", None)
             empty: set[str] = set()
-            if cached is not None and ensure is not None:
+            if cached is not None:
                 rows = metric_point_counts(cached)
                 empty = {sig for sig in flattened if not rows[sig]}
-            if hasattr(sink, "bind"):
-                sink.bind(spark)  # one sink shared by the fan-out threads
 
-            def sink_frame(item: tuple[str, DataFrame]) -> None:
+            def sink_frame(item: tuple[str, DataFrame]) -> Exception | None:
                 signal, df = item
                 try:
                     if signal in empty:
-                        ensure(spark, signal)  # F1: its table, no write job
+                        sink.ensure(spark, signal)  # F1: its table, no write job
                     else:
                         sink(df, signal)
                 except Exception as exc:  # noqa: BLE001 — classified below
-                    if classify_error(exc) != PERMANENT:
-                        raise  # transient: streaming engine retries the batch
-                    log.error(
-                        "permanent error on batch %s signal %s: %s",
-                        batch_id,
-                        signal,
-                        exc,
-                    )
-                    if dead_letter is not None:
-                        dead_letter(df, signal)
-                    # swallowed: collector semantics (X2)
+                    return exc
+                return None
 
-            map_concurrently(spark, sink_frame, flattened.items())
+            frames = list(flattened.items())
+            failures = map_concurrently(spark, sink_frame, frames)
+            transient = None
+            for (signal, df), exc in zip(frames, failures):
+                if exc is None:
+                    continue
+                if classify_error(exc) == PERMANENT:
+                    dead(batch_id, signal, df, exc)
+                elif transient is None:
+                    transient = exc
+            if transient is not None:
+                raise transient  # the streaming engine retries the batch
         finally:
             if cached is not None:
                 cached.unpersist()
@@ -377,10 +397,7 @@ def export_batch(
     wire_format: str = "json",
 ) -> dict[str, int]:
     """Batch-mode replay of the same pipeline (reference replay path);
-    returns per-signal appended row counts. Each signal's frame is
-    persisted, counted and, when non-empty, sunk on its own thread
-    (threads.map_concurrently); a failure re-raises once every frame
-    has finished."""
+    returns per-signal appended row counts."""
     if wire_format == "protobuf":
         from ..otlp.protobuf import protobuf_to_json_lines
 
@@ -403,43 +420,32 @@ def export_batch(
         and config.catalog.atomic_batch
     )
     sink = None if atomic else (sink or default_sink(config))
-    if hasattr(sink, "bind"):
-        sink.bind(spark)  # one sink shared by the fan-out threads
+    counts: dict[str, int] = {}
     try:
         if atomic:
             from ..sinks.iceberg_sink import RestIcebergSink
 
-            persisted = {sig: df.persist() for sig, df in flattened.items()}
-            try:
-                counts = dict(
-                    zip(
-                        persisted,
-                        map_concurrently(spark, DataFrame.count, persisted.values()),
-                    )
-                )
-                frames = {sig: df for sig, df in persisted.items() if counts[sig]}  # F1
-                if frames:
-                    # every signal of the batch advances in ONE transaction
-                    RestIcebergSink(spark, config).append_all(frames)
-            finally:
-                for df in persisted.values():
-                    df.unpersist()
-        else:
-
-            def count_and_sink(item: tuple[str, DataFrame]) -> int:
-                signal, df = item
+            frames: dict[str, DataFrame] = {}
+            for signal, df in flattened.items():
                 df = df.persist()
-                try:
-                    n = df.count()
-                    if n:  # F1
-                        sink(df, signal)
-                    return n
-                finally:
+                counts[signal] = df.count()
+                if counts[signal]:  # F1
+                    frames[signal] = df
+                else:
                     df.unpersist()
-
-            counts = dict(
-                zip(flattened, map_concurrently(spark, count_and_sink, flattened.items()))
-            )
+            if frames:
+                # every signal of the batch advances in ONE transaction
+                RestIcebergSink(spark, config).append_all(frames)
+            for df in frames.values():
+                df.unpersist()
+        else:
+            for signal, df in flattened.items():
+                df = df.persist()
+                n = df.count()
+                counts[signal] = n
+                if n:  # F1
+                    sink(df, signal)
+                df.unpersist()
     finally:
         if cached is not None:
             cached.unpersist()

@@ -1,12 +1,12 @@
 """Concurrent Spark jobs from one driver call.
 
-The independent writes of one batch (the demuxed metric frames, the
-per-signal files of an atomic multi-table commit) are each a chain of
-short Spark jobs separated by driver work: plan analysis, footer reads,
-the catalog commit. Run one after another, the executors idle through
-every driver gap and each small job uses a few cores. Started from a
-few driver threads, the gaps of one write overlap the jobs of another;
-Spark's scheduler is built for jobs submitted from several threads.
+The independent writes of one batch (the demuxed metric frames a
+catalog sink commits) are each a chain of short Spark jobs separated by
+driver work: plan analysis, footer reads, the catalog commit. Run one
+after another, the executors idle through every driver gap and each
+small job uses a few cores. Started from a few driver threads, the gaps
+of one write overlap the jobs of another; Spark's scheduler is built for
+jobs submitted from several threads.
 """
 
 from __future__ import annotations

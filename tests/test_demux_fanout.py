@@ -1,13 +1,18 @@
 """The exporter's append path: the flatten emits each table's declared
 schema, so conform stacks no Project on it; a metrics micro-batch skips
 the write job of every empty point type but still ensures its table;
-the other frames are sunk concurrently, each with its own error
-handling; and the sink threads' jobs stay in the caller's job group.
+a catalog sink's other frames are sunk concurrently, each with its own
+error handling and its own vended storage keys, while a custom sink and
+every dead letter stay on the calling thread; and the sink threads'
+jobs stay in the caller's job group.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import threading
+import time
 
 import pytest
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -36,6 +41,7 @@ from opentelemetry_iceberg_exporter_spark.sinks.iceberg_sink import FsIcebergSin
 from opentelemetry_iceberg_exporter_spark.streaming import make_batch_processor
 from opentelemetry_iceberg_exporter_spark.threads import map_concurrently
 
+from rest_stub import make_server
 from test_catalog_sink_commits import METRIC_TABLES
 from test_otlp_flatten import GAUGE_DP, T0_NS, _metrics_payload
 
@@ -197,15 +203,95 @@ def test_transient_failure_reraises_after_other_frames_commit(
 def test_permanent_failure_dead_letters_only_its_frame(spark, fs_config, monkeypatch):
     _failing_append(monkeypatch, S.SIGNAL_METRICS_SUM, "403 Forbidden: access denied")
     dead = []
-    process = make_batch_processor(
-        "metrics", fs_config, dead_letter=lambda df, sig: dead.append((sig, df.count()))
-    )
+
+    def dead_letter(df, sig):
+        dead.append((sig, df.count(), threading.get_ident()))
+
+    process = make_batch_processor("metrics", fs_config, dead_letter=dead_letter)
     process(_batch(spark, _gauge_sum_histogram()), 0)  # swallowed (X2)
-    assert dead == [(S.SIGNAL_METRICS_SUM, 1)]
+    assert dead == [(S.SIGNAL_METRICS_SUM, 1, threading.get_ident())]
     tables = _tables(fs_config)
     assert S.SIGNAL_METRICS_SUM not in tables
     for sig in (S.SIGNAL_METRICS_GAUGE, S.SIGNAL_METRICS_HISTOGRAM):
         assert len(tables[sig].snapshots()) == 1, sig
+
+
+def test_custom_sink_and_dead_letter_run_one_frame_after_another(spark, fs_config):
+    """A custom sink was written for sequential calls: it gets every
+    frame, the empty ones too, on the calling thread, never two at once."""
+    caller = threading.get_ident()
+    calls, dead = [], []
+    busy = threading.Lock()
+
+    def sink(df, signal):
+        assert busy.acquire(blocking=False), "two frames sunk at once"
+        try:
+            calls.append((signal, df.count(), threading.get_ident()))
+            if signal == S.SIGNAL_METRICS_SUM:
+                raise RuntimeError("403 Forbidden: access denied")
+        finally:
+            busy.release()
+
+    process = make_batch_processor(
+        "metrics",
+        fs_config,
+        sink=sink,
+        dead_letter=lambda df, sig: dead.append((sig, threading.get_ident())),
+    )
+    process(_batch(spark, _gauge_sum_histogram()), 0)
+    assert sorted(sig for sig, _, _ in calls) == sorted(METRIC_TABLES)
+    assert {sig for sig, n, _ in calls if not n} == EMPTY
+    assert {ident for _, _, ident in calls} == {caller}
+    assert dead == [(S.SIGNAL_METRICS_SUM, caller)]
+    assert _tables(fs_config) == {}  # nothing reached the catalog
+
+
+S3A_KEY = "fs.s3a.bucket.shared-bkt.access.key"
+
+
+def test_concurrent_writes_keep_their_own_vended_keys(spark, tmp_path, monkeypatch):
+    """Every metric table vends its own key for one shared bucket. Vended
+    keys live in the SparkContext's one Hadoop conf, so each frame's
+    write job must see its own table's key from start to end while the
+    other frames write on other threads."""
+    warehouse = str(tmp_path / "rwh")
+    os.makedirs(warehouse)
+    server, state, uri = make_server(warehouse)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    try:
+        config = ExporterConfig(
+            storage=StorageConfig(bucket=warehouse),
+            catalog=CatalogConfig(catalog_type="rest", uri=uri, warehouse=warehouse),
+        )
+        for sig in METRIC_TABLES:
+            name = S.table_name(sig)
+            state.storage_credentials[(config.catalog.namespace, name)] = [
+                {
+                    "prefix": "s3://shared-bkt/wh",
+                    "config": {
+                        "s3.access-key-id": "AK-" + name,
+                        "s3.secret-access-key": "SK-" + name,
+                    },
+                }
+            ]
+        seen = {}
+        original = iceberg_fs.write_partitioned_batch
+
+        def spy(df, location, md, fanout=None):
+            start = hconf.get(S3A_KEY)
+            time.sleep(0.3)  # the other frames' threads run meanwhile
+            files = original(df, location, md, fanout)
+            seen[location.rstrip("/").rsplit("/", 1)[-1]] = (start, hconf.get(S3A_KEY))
+            return files
+
+        monkeypatch.setattr(iceberg_fs, "write_partitioned_batch", spy)
+        make_batch_processor("metrics", config)(_batch(spark, _gauge_sum_histogram()), 0)
+    finally:
+        server.shutdown()
+        for suffix in ("access.key", "secret.key"):
+            hconf.unset("fs.s3a.bucket.shared-bkt." + suffix)
+    written = [S.table_name(sig) for sig in METRIC_TABLES if sig not in EMPTY]
+    assert seen == {name: ("AK-" + name, "AK-" + name) for name in written}
 
 
 def test_pool_threads_inherit_the_job_group(spark):
