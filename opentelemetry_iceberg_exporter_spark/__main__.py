@@ -1593,11 +1593,8 @@ def main(argv: list[str] | None = None) -> int:
         if args.dest_table:
             ns, name = args.dest_table.split(".")
             cat = corpus_catalog()
-            if args.rest_uri:
-                cat.ensure_namespace(ns)
-                dest = cat.ensure_table(ns, name, out.schema)
-            else:
-                dest = cat.create_table(ns, name, out.schema)
+            cat.ensure_namespace(ns)
+            dest = cat.ensure_table(ns, name, out.schema)
             dest_snapshot = dest.append_dataframe(out)
         print(
             json.dumps(

@@ -65,14 +65,8 @@ VECTORS_SCHEMA = StructType(
 
 
 def _ensure(catalog, namespace: str, name: str, schema, partition_by=None):
-    if hasattr(catalog, "ensure_table"):  # REST client
-        catalog.ensure_namespace(namespace)
-        return catalog.ensure_table(
-            namespace, name, schema, partition_by=partition_by
-        )
-    return catalog.create_table(
-        namespace, name, schema, partition_by=partition_by
-    )
+    catalog.ensure_namespace(namespace)
+    return catalog.ensure_table(namespace, name, schema, partition_by=partition_by)
 
 
 class AnnIndex:
@@ -129,9 +123,9 @@ class AnnIndex:
 
     @classmethod
     def open(cls, catalog, namespace: str, name: str, vec_col: str = "embedding"):
-        if hasattr(catalog, "ensure_table"):
-            from ..sinks.iceberg_rest import RestTable
+        from ..sinks.iceberg_rest import RestCatalogClient, RestTable
 
+        if isinstance(catalog, RestCatalogClient):
             return cls(
                 RestTable(catalog, namespace, f"{name}_centroids"),
                 RestTable(catalog, namespace, f"{name}_vectors"),

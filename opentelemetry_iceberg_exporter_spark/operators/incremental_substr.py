@@ -100,16 +100,8 @@ def create_substr_index_table(catalog, namespace: str, name: str):
     without it still works — the probe conservatively reads every
     file."""
     props = index_table_properties("h")
-    if hasattr(catalog, "ensure_table"):  # REST client
-        catalog.ensure_namespace(namespace)
-        return catalog.ensure_table(
-            namespace,
-            name,
-            INDEX_SCHEMA,
-            partition_by=INDEX_PARTITION_BY,
-            properties=props,
-        )
-    return catalog.create_table(
+    catalog.ensure_namespace(namespace)
+    return catalog.ensure_table(
         namespace,
         name,
         INDEX_SCHEMA,

@@ -24,9 +24,9 @@ Non-atomicity note (documented, deliberate): raw-Hive tables have no
 metadata transaction, so the swap window (delete olds, move news) can
 expose a partial partition to a concurrent reader — identical to every
 Hive-table compactor. Readers that must not see it go through the
-Iceberg sink instead, where compaction is `rewrite_data_files` and the
-swap is a snapshot commit (sinks/iceberg_sink.py); this module is the
-raw-Parquet-mode counterpart.
+Iceberg catalog sinks instead (catalog_type fs/rest), where compaction
+is `Table.rewrite_data_files` and the swap is a snapshot commit
+(sinks/iceberg_fs.py); this module is the raw-Parquet-mode counterpart.
 
 At cluster scale, partitions compact independently — submit
 `compact_partition` jobs from a thread pool (Spark schedules them

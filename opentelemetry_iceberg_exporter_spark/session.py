@@ -13,15 +13,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 def build_session(
     app_name: str = "otel-iceberg-spark",
     master: str | None = None,

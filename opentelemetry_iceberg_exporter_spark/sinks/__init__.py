@@ -1,12 +1,5 @@
 from .errors import TRANSIENT, PERMANENT, classify_error, is_cross_partition_error
 from .parquet_sink import partition_value_columns, read_raw_table, write_raw_parquet
-from .iceberg_sink import (
-    IcebergSink,
-    IcebergUnavailableError,
-    add_files_sql,
-    create_namespace_sql,
-    create_table_sql,
-)
 
 __all__ = [
     "TRANSIENT",
@@ -16,9 +9,4 @@ __all__ = [
     "partition_value_columns",
     "read_raw_table",
     "write_raw_parquet",
-    "IcebergSink",
-    "IcebergUnavailableError",
-    "add_files_sql",
-    "create_namespace_sql",
-    "create_table_sql",
 ]

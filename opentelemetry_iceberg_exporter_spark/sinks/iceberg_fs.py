@@ -1,12 +1,10 @@
 """Pure-Python Iceberg v2 filesystem catalog — executes C1/C2/K3/K4/R4.
 
-The container has no Iceberg Spark runtime, so `sinks/iceberg_sink.py`
-can only be exercised at the SQL-generation level here. This module
-closes that gap: it implements the Iceberg **table format v2 metadata
-layer** itself (table-metadata JSON, Avro manifests, Avro manifest
-lists, hadoop-catalog `version-hint.text` commit protocol) so the
-catalog semantics the reference is built around run END TO END in this
-container:
+The engine needs no Iceberg Spark runtime: this module implements the
+Iceberg **table format v2 metadata layer** itself (table-metadata JSON,
+Avro manifests, Avro manifest lists, hadoop-catalog `version-hint.text`
+commit protocol), so the catalog semantics the reference is built
+around run end to end on plain Spark:
 
 * EnsureNamespace / EnsureTable  (catalog_rest.go:129-165, :168-240)
 * atomic snapshot append with snapshot properties (writer.go:256-297,
@@ -27,10 +25,10 @@ point of Iceberg's metadata tree.
 `FsTable` (this module's version-hint CAS) and `RestTable`
 (iceberg_rest.py, CommitTable) only load metadata and commit updates.
 
-When `iceberg-spark-runtime` IS on the classpath, prefer the SQL/
-DataFrameWriterV2 path in `iceberg_sink.py`; this module is the
-jar-less fallback and the executable verification of the commit
-semantics. The byte format follows the public Iceberg spec
+`FsCatalog` and `RestCatalogClient` share one ensure surface
+(`ensure_namespace` / `ensure_table`), which the exporter sink
+(`iceberg_sink.py`) and the catalog-backed operators call on either
+transport. The byte format follows the public Iceberg spec
 (format-version 2); conformance is pinned byte-for-byte against
 independently spec-encoded golden fixtures (tests/golden/make_golden.py
 imports nothing from this package) in tests/test_golden_format.py, plus
@@ -3388,6 +3386,7 @@ def plan_scan_metadata(
     files: list[DataFile] = []
     deletes: list[DataFile] = []
     pruned = 0
+    opened = []
     _, _, manifests = read_ocf(snapshot["manifest-list"])
     for m in manifests:
         if _manifest_excluded(m):
@@ -3395,89 +3394,49 @@ def plan_scan_metadata(
             pruned += m.get("added_files_count", 0) + m.get(
                 "existing_files_count", 0
             )
+        else:
+            opened.append(m)
+    for f in _live_manifest_files(opened):
+        if f.content in (1, 2):
+            deletes.append(f)
             continue
-        _, _, entries = read_ocf(m["manifest_path"])
-        resolve_first_row_ids(m, entries)  # v3 lazy-id interop (no-op on own manifests)
-        for e in entries:
-            if e["status"] == STATUS_DELETED:
-                continue
-            df_ = e["data_file"]
-            part = {k: v for k, v in df_["partition"].items() if v is not None}
-            entry_seq = (
-                e["sequence_number"]
-                if e.get("sequence_number") is not None
-                else m["sequence_number"]
+        part = f.partition
+        skip = False
+        if partition_range and spec_names:
+            value = part.get(spec_names[0])
+            lo, hi = partition_range
+            if value is not None and not lo <= value <= hi:
+                skip = True
+        if not skip and pred_parts:
+            skip = any(
+                part.get(name) is not None and part.get(name) != expected
+                for name, expected in pred_parts.items()
             )
-            if df_.get("content", 0) in (1, 2):
-                eq = df_.get("equality_ids")
-                deletes.append(
-                    DataFile(
-                        file_path=df_["file_path"],
-                        file_size_in_bytes=df_["file_size_in_bytes"],
-                        record_count=df_["record_count"],
-                        partition=part,
-                        content=df_["content"],
-                        equality_ids=tuple(eq) if eq else None,
-                        sequence_number=entry_seq,
-                        referenced_data_file=df_.get("referenced_data_file"),
-                        content_offset=df_.get("content_offset"),
-                        content_size_in_bytes=df_.get("content_size_in_bytes"),
-                    )
-                )
-                continue
-            skip = False
-            if partition_range and spec_names:
-                value = part.get(spec_names[0])
-                lo, hi = partition_range
-                if value is not None and not lo <= value <= hi:
-                    skip = True
-            if not skip and pred_parts:
-                skip = any(
-                    part.get(name) is not None and part.get(name) != expected
-                    for name, expected in pred_parts.items()
-                )
-            if not skip and range_parts:
-                skip = any(
-                    part.get(name) is not None
-                    and (
-                        (lo_t is not None and part[name] < lo_t)
-                        or (hi_t is not None and part[name] > hi_t)
-                    )
-                    for name, (lo_t, hi_t) in range_parts.items()
-                )
-            if not skip and col_bounds:
-                # decode the bounds maps ONCE per entry (not once per
-                # bounded column): this loop is the cheap metadata path
-                lowers = _bounds_from_avro(df_.get("lower_bounds"))
-                uppers = _bounds_from_avro(df_.get("upper_bounds"))
-                for col_field, lo_v, hi_v in col_bounds:
-                    fid, ftype = col_field["id"], col_field["type"]
-                    lower = lowers.get(fid)
-                    upper = uppers.get(fid)
-                    if lower is not None and hi_v is not None:
-                        if decode_bound(lower, ftype) > hi_v:
-                            skip = True
-                            break
-                    if upper is not None and lo_v is not None:
-                        if decode_bound(upper, ftype) < lo_v:
-                            skip = True
-                            break
-            f = DataFile(
-                file_path=df_["file_path"],
-                file_size_in_bytes=df_["file_size_in_bytes"],
-                record_count=df_["record_count"],
-                partition=part,
-                sequence_number=entry_seq,
-                raw_bounds=(df_.get("lower_bounds"), df_.get("upper_bounds")),
-                spec_id=m.get("partition_spec_id"),
-                first_row_id=df_.get("first_row_id"),
-            )
-            if skip:
-                pruned += 1
-                if pruned_out is not None:
-                    pruned_out.append(f)
-                continue
-            files.append(f)
+        if not skip and range_parts:
+            skip = partition_out_of_range(part, range_parts)
+        if not skip and col_bounds:
+            # decode the bounds maps ONCE per entry (not once per
+            # bounded column): this loop is the cheap metadata path
+            lowers = _bounds_from_avro(f.raw_bounds[0])
+            uppers = _bounds_from_avro(f.raw_bounds[1])
+            for col_field, lo_v, hi_v in col_bounds:
+                fid, ftype = col_field["id"], col_field["type"]
+                lower = lowers.get(fid)
+                upper = uppers.get(fid)
+                if lower is not None and hi_v is not None:
+                    if decode_bound(lower, ftype) > hi_v:
+                        skip = True
+                        break
+                if upper is not None and lo_v is not None:
+                    if decode_bound(upper, ftype) < lo_v:
+                        skip = True
+                        break
+        if skip:
+            pruned += 1
+            if pruned_out is not None:
+                pruned_out.append(f)
+            continue
+        files.append(f)
     return files, deletes, pruned
 
 
@@ -3910,54 +3869,69 @@ def partition_out_of_range(
     )
 
 
+def _manifest_entry_file(m: dict, e: dict) -> DataFile:
+    """One manifest entry of manifest-list record `m` as a DataFile: its
+    data sequence number (a null entry seq inherits the manifest's, the
+    spec's inheritance rule), the manifest's partition spec id, and for
+    data files the recorded column bounds."""
+    d = e["data_file"]
+    content = d.get("content", 0)
+    eq = d.get("equality_ids")
+    return DataFile(
+        file_path=d["file_path"],
+        file_size_in_bytes=d["file_size_in_bytes"],
+        record_count=d["record_count"],
+        partition={k: v for k, v in d["partition"].items() if v is not None},
+        content=content,
+        equality_ids=tuple(eq) if eq else None,
+        sequence_number=(
+            e["sequence_number"]
+            if e.get("sequence_number") is not None
+            else m["sequence_number"]
+        ),
+        referenced_data_file=d.get("referenced_data_file"),
+        content_offset=d.get("content_offset"),
+        content_size_in_bytes=d.get("content_size_in_bytes"),
+        raw_bounds=(
+            (d.get("lower_bounds"), d.get("upper_bounds")) if content == 0 else None
+        ),
+        spec_id=m.get("partition_spec_id"),
+        first_row_id=d.get("first_row_id"),
+    )
+
+
+def _live_manifest_files(manifests: list[dict], added_only: bool = False):
+    """The manifest walk every planner shares: open each manifest-list
+    record's manifest and yield its live entries (added + existing, or
+    only the added ones) as DataFiles."""
+    for m in manifests:
+        _, _, entries = read_ocf(m["manifest_path"])
+        resolve_first_row_ids(m, entries)  # v3 lazy-id interop (no-op on own manifests)
+        for e in entries:
+            if e["status"] == STATUS_DELETED or (
+                added_only and e["status"] != STATUS_ADDED
+            ):
+                continue
+            yield _manifest_entry_file(m, e)
+
+
 def live_files(
     md: dict, snapshot_id: int, only_deletes: bool = False
 ) -> tuple[list[DataFile], list[DataFile]]:
     """(data files, delete files — position AND equality) live in a
-    snapshot — the transport-neutral manifest walk both catalogs plan
-    scans from. Each DataFile carries its data sequence number (null
-    entry seq inherits the manifest's, the spec's inheritance rule).
-    `only_deletes` opens ONLY delete manifests (manifest-list content
-    == 1) — the cheap walk deletion-vector fold compensation needs —
-    and returns an empty data list."""
+    snapshot: plan_scan_metadata's manifest walk without its pruning,
+    which both catalogs plan DML and maintenance from. `only_deletes`
+    opens ONLY delete manifests (manifest-list content == 1) — the
+    cheap walk deletion-vector fold compensation needs — and returns
+    an empty data list."""
     snapshot = next(s for s in md["snapshots"] if s["snapshot-id"] == snapshot_id)
+    _, _, manifests = read_ocf(snapshot["manifest-list"])
+    if only_deletes:
+        manifests = [m for m in manifests if m.get("content", 0) != 0]
     data: list[DataFile] = []
     deletes: list[DataFile] = []
-    _, _, manifests = read_ocf(snapshot["manifest-list"])
-    for m in manifests:
-        if only_deletes and m.get("content", 0) == 0:
-            continue
-        _, _, entries = read_ocf(m["manifest_path"])
-        resolve_first_row_ids(m, entries)  # v3 lazy-id interop (no-op on own manifests)
-        for e in entries:
-            if e["status"] == STATUS_DELETED:
-                continue
-            d = e["data_file"]
-            eq = d.get("equality_ids")
-            f = DataFile(
-                file_path=d["file_path"],
-                file_size_in_bytes=d["file_size_in_bytes"],
-                record_count=d["record_count"],
-                partition={k: v for k, v in d["partition"].items() if v is not None},
-                content=d.get("content", 0),
-                equality_ids=tuple(eq) if eq else None,
-                sequence_number=(
-                    e["sequence_number"]
-                    if e.get("sequence_number") is not None
-                    else m["sequence_number"]
-                ),
-                referenced_data_file=d.get("referenced_data_file"),
-                content_offset=d.get("content_offset"),
-                content_size_in_bytes=d.get("content_size_in_bytes"),
-                raw_bounds=(
-                    (d.get("lower_bounds"), d.get("upper_bounds"))
-                    if d.get("content", 0) == 0
-                    else None
-                ),
-                spec_id=m.get("partition_spec_id"),
-                first_row_id=d.get("first_row_id"),
-            )
-            (deletes if f.content in (1, 2) else data).append(f)
+    for f in _live_manifest_files(manifests):
+        (deletes if f.content in (1, 2) else data).append(f)
     return data, deletes
 
 
@@ -4668,8 +4642,8 @@ def _added_files(
     micro-batch cadence then opens O(in-scope) manifests, not O(all).
     Carried-ness is decided BEFORE the skip so overwrite-shape
     detection is unaffected."""
-    out: list[DataFile] = []
     carried = False
+    opened = []
     _, _, manifests = read_ocf(snapshot["manifest-list"])
     for m in manifests:
         if m["added_snapshot_id"] != snapshot["snapshot-id"]:
@@ -4681,40 +4655,9 @@ def _added_files(
             carried = True
             if m["added_files_count"] == 0:
                 continue  # nothing ADDED inside — skip the read entirely
-        if manifest_excluded is not None and manifest_excluded(m):
-            continue
-        _, _, entries = read_ocf(m["manifest_path"])
-        resolve_first_row_ids(m, entries)  # v3 lazy-id interop (no-op on own manifests)
-        for e in entries:
-            if e["status"] != STATUS_ADDED:
-                continue
-            d = e["data_file"]
-            eq = d.get("equality_ids")
-            out.append(
-                DataFile(
-                    file_path=d["file_path"],
-                    file_size_in_bytes=d["file_size_in_bytes"],
-                    record_count=d["record_count"],
-                    partition={k: v for k, v in d["partition"].items() if v is not None},
-                    content=d.get("content", 0),
-                    equality_ids=tuple(eq) if eq else None,
-                    sequence_number=(
-                        e["sequence_number"]
-                        if e.get("sequence_number") is not None
-                        else m["sequence_number"]
-                    ),
-                    referenced_data_file=d.get("referenced_data_file"),
-                    content_offset=d.get("content_offset"),
-                    content_size_in_bytes=d.get("content_size_in_bytes"),
-                    raw_bounds=(
-                        (d.get("lower_bounds"), d.get("upper_bounds"))
-                        if d.get("content", 0) == 0
-                        else None
-                    ),
-                    first_row_id=d.get("first_row_id"),
-                )
-            )
-    return out, carried
+        if manifest_excluded is None or not manifest_excluded(m):
+            opened.append(m)
+    return list(_live_manifest_files(opened, added_only=True)), carried
 
 
 def plan_cherry_pick(md: dict, snapshot_id: int) -> list[DataFile]:
@@ -6921,6 +6864,10 @@ class FsCatalog:
     def namespace_exists(self, namespace: str) -> bool:
         return os.path.isdir(os.path.join(self.warehouse, namespace))
 
+    def ensure_namespace(self, namespace: str) -> None:
+        """RestCatalogClient.ensure_namespace's surface: create-if-absent."""
+        self.create_namespace(namespace)
+
     # C2 ------------------------------------------------------------------
     def table_location(self, namespace: str, name: str) -> str:
         return os.path.join(self.warehouse, namespace, name)
@@ -7004,6 +6951,13 @@ class FsCatalog:
         _write_metadata_version(location, 1, metadata)
         _swap_version_hint(location, 1)
         return FsTable(location)
+
+    def ensure_table(
+        self, namespace: str, name: str, spark_schema: StructType, **options
+    ) -> "FsTable":
+        """RestCatalogClient.ensure_table's surface (the same keyword
+        options): create_table is already load-else-create."""
+        return self.create_table(namespace, name, spark_schema, **options)
 
     def load_table(self, namespace: str, name: str) -> "FsTable":
         location = self.table_location(namespace, name)
@@ -8324,12 +8278,13 @@ class Table:
         accumulated deletes later with compaction maintenance. Empty
         inputs commit NOTHING and return None (F1 short-circuit)."""
         md = self.metadata()
-        data_files = write_partitioned_batch(df, md["location"], md)
-        if not data_files:  # F1: empty batch -> no snapshot
-            return None
-        planned = plan_equality_delete(
-            spark, md, df.select(*equality_cols), equality_cols
-        )
+        with self._credentialed_write(spark, md["location"]):
+            data_files = write_partitioned_batch(df, md["location"], md)
+            if not data_files:  # F1: empty batch -> no snapshot
+                return None
+            planned = plan_equality_delete(
+                spark, md, df.select(*equality_cols), equality_cols
+            )
         files = data_files + (planned[0] if planned else [])
         summary = {"upserted-records": str(sum(f.record_count for f in data_files))}
         summary.update(snapshot_properties or {})

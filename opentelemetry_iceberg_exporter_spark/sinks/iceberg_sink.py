@@ -1,21 +1,20 @@
-"""Iceberg catalog sink (catalog: rest/hadoop mode) — C1, C2, K3, K4.
+"""The exporter's Iceberg catalog sink (catalog_type fs/rest) — C1, C2, K3, K4.
 
 Reference parity:
-* EnsureNamespace — create-if-absent (catalog_rest.go:129-165)
-* EnsureTable — load-else-create with partition spec; per-process cache
-  (catalog_rest.go:168-240); EnsureAllTables bootstrap (writer.go:330-358,
-  exporter.go:66-80)
+* EnsureNamespace — create-if-absent, once per sink (catalog_rest.go:129-165)
+* EnsureTable — load-else-create with partition spec (catalog_rest.go:168-240);
+  EnsureAllTables bootstrap (writer.go:330-358, exporter.go:66-80)
 * AppendRecords — atomic append with snapshot properties
   `otel.exporter` / `otel.record_count` (writer.go:256-297,
   catalog_rest.go:243-303)
 * AddFiles — register existing Parquet files without copying
-  (catalog_rest.go:306-367) via the Iceberg Spark `add_files` procedure
+  (catalog_rest.go:306-367)
 
-Everything is expressed as Spark SQL / DataFrameWriterV2 against an
-Iceberg catalog. All methods raise IcebergUnavailableError when the
-Iceberg runtime jar is absent (this container), but the SQL-generation
-layer is pure and unit-tested regardless — the same statements run
-verbatim on a cluster with `iceberg-spark-runtime` on the classpath.
+One `IcebergSink` holds all of it over a catalog handle: `FsCatalog`
+(sinks/iceberg_fs.py) or `RestCatalogClient` (sinks/iceberg_rest.py),
+which share the `ensure_namespace`/`ensure_table` surface and hand back
+a `Table`. `FsIcebergSink` and `RestIcebergSink` only build that
+catalog; the REST one adds the atomic multi-table `append_all`.
 
 Scale notes (100 TB): tables are created with
   write.distribution-mode=hash      -- cluster rows by partition on write
@@ -31,13 +30,9 @@ import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType, DataType, StructType
 
 from .. import schemas as S
 from ..config import ExporterConfig
-from ..session import iceberg_available
-
-_GRANULARITY_TRANSFORM = {"hourly": "hours", "daily": "days", "monthly": "months"}
 
 TABLE_PROPERTIES = {
     "format-version": "2",
@@ -56,8 +51,6 @@ TABLE_PROPERTIES = {
     "commit.manifest.min-count-to-merge": "100",
     "commit.manifest.target-size-bytes": str(8 * 1024 * 1024),
 }
-
-
 
 
 def _ensure_declared_views(spark, config, handle) -> list[str]:
@@ -202,151 +195,23 @@ def _verify_shred_after_commit(config, signal, table, snapshot_id) -> None:
     logging.getLogger(__name__).warning(msg)
 
 
-
-
-class IcebergUnavailableError(RuntimeError):
-    pass
-
-
-def _sql_type(dt: DataType) -> str:
-    if isinstance(dt, ArrayType):
-        return f"ARRAY<{_sql_type(dt.elementType)}>"
-    return dt.simpleString().upper()
-
-
-def create_namespace_sql(catalog: str, namespace: str) -> str:
-    """C1 (catalog_rest.go:129-165)."""
-    return f"CREATE NAMESPACE IF NOT EXISTS `{catalog}`.`{namespace}`"
-
-
-def create_table_sql(
-    catalog: str, namespace: str, table: str, signal: str, config: ExporterConfig
-) -> str:
-    """C2 DDL: declared schema + hidden time partitioning + table props
-    (catalog_rest.go:168-240, writer.go:361-372).
-
-    Iceberg assigns partition-spec field IDs (1000+) itself
-    (catalog_rest.go:494-542 is dissolved by the DDL).
-    """
-    schema: StructType = S.SCHEMAS[signal]
-    cols = ",\n  ".join(
-        f"`{f.name}` {_sql_type(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
-        for f in schema.fields
-    )
-    transform = _GRANULARITY_TRANSFORM[config.partition.granularity]
-    ts_col = S.partition_column(signal)
-    props = dict(TABLE_PROPERTIES)
-    # schema version metadata kept as a table property (schema.go:370-374)
-    props[f"iceberg_exporter.{signal}_schema_version"] = S.SCHEMA_VERSION
-    props["write.parquet.compression-codec"] = config.storage.compression
-    props_sql = ",\n  ".join(f"'{k}'='{v}'" for k, v in sorted(props.items()))
-    return (
-        f"CREATE TABLE IF NOT EXISTS `{catalog}`.`{namespace}`.`{table}` (\n  {cols}\n)\n"
-        f"USING iceberg\n"
-        f"PARTITIONED BY ({transform}(`{ts_col}`))\n"
-        f"TBLPROPERTIES (\n  {props_sql}\n)"
-    )
-
-
-def add_files_sql(catalog: str, namespace: str, table: str, source_path: str) -> str:
-    """K4: register existing Parquet files without copying
-    (catalog_rest.go:306-367 -> Iceberg add_files procedure)."""
-    return (
-        f"CALL `{catalog}`.system.add_files("
-        f"table => '{namespace}.{table}', "
-        f"source_table => '`parquet`.`{source_path}`')"
-    )
-
-
 class IcebergSink:
-    """Bootstrap + append against an Iceberg catalog (K3)."""
+    """Bootstrap + append against one catalog (K3): the per-signal table
+    names, schemas and DDL properties, the namespace ensure (once per
+    sink), and every write the exporter makes. `catalog` is an FsCatalog
+    or a RestCatalogClient; both ensure a table and return its `Table`."""
 
-    def __init__(self, spark: SparkSession, config: ExporterConfig, catalog: str = "otel"):
+    def __init__(self, spark: SparkSession, config: ExporterConfig, catalog):
         self.spark = spark
         self.config = config
         self.catalog = catalog
-        self._ensured: set[str] = set()  # per-process table cache (catalog_rest.go:169-188)
+        self._namespace_ready = False
 
-    def _require_iceberg(self) -> None:
-        # config-shape refusal FIRST — it holds regardless of classpath
-        if self.config.ns_timestamps or self.config.variant_attrs:
-            # Spark SQL DDL has no ns timestamp / variant type to
-            # declare, so the jar-backed path cannot create them — the
-            # pure-Python catalogs (fs/rest) own the v3-native modes
-            raise ValueError(
-                "ns_timestamps/variant_attrs require the pure-Python "
-                "catalog sinks (catalog_type 'fs' or 'rest') — Spark DDL "
-                "cannot declare timestamptz_ns/variant columns"
-            )
-        if not iceberg_available(self.spark):
-            raise IcebergUnavailableError(
-                "Iceberg Spark runtime not on the classpath; use catalog_type='none' "
-                "(raw-Parquet sink) or submit with iceberg-spark-runtime"
-            )
-
-    def ensure_all_tables(self) -> list[str]:
-        """Startup DDL ×7 (writer.go:330-358, exporter.go:66-80). Returns
-        the executed statements."""
-        self._require_iceberg()
-        ns = self.config.catalog.namespace
-        stmts = [create_namespace_sql(self.catalog, ns)]
-        for signal in S.ALL_SIGNALS:
-            table = S.table_name(
-                signal,
-                prefix=self.config.catalog.table_prefix,
-                overrides=self.config.catalog.table_overrides,
-            )
-            if table in self._ensured:
-                continue
-            stmts.append(create_table_sql(self.catalog, ns, table, signal, self.config))
-            self._ensured.add(table)
-        for s in stmts:
-            self.spark.sql(s)
-        return stmts
-
-    def append(self, df: DataFrame, signal: str, record_count: int | None = None) -> None:
-        """K3: atomic append with snapshot properties (writer.go:256-297).
-        Iceberg gives the same atomicity (snapshot commit) as the
-        reference's table.Append transaction."""
-        self._require_iceberg()
-        table = S.table_name(
-            signal,
-            prefix=self.config.catalog.table_prefix,
-            overrides=self.config.catalog.table_overrides,
-        )
-        fq = f"`{self.catalog}`.`{self.config.catalog.namespace}`.`{table}`"
-        writer = S.conform(df, S.SCHEMAS[signal]).writeTo(fq).option(
-            "snapshot-property.otel.exporter", "opentelemetry-iceberg-exporter-spark"
-        )
-        if record_count is not None:
-            writer = writer.option("snapshot-property.otel.record_count", str(record_count))
-        writer.append()
-
-    def add_files(self, signal: str, source_path: str) -> str:
-        self._require_iceberg()
-        table = S.table_name(
-            signal,
-            prefix=self.config.catalog.table_prefix,
-            overrides=self.config.catalog.table_overrides,
-        )
-        stmt = add_files_sql(self.catalog, self.config.catalog.namespace, table, source_path)
-        self.spark.sql(stmt)
-        return stmt
-
-
-class FsIcebergSink:
-    """Same surface as IcebergSink against the pure-Python filesystem
-    catalog (sinks/iceberg_fs.py) — the jar-less executable path for
-    C1/C2/K3/K4. Same table properties, same snapshot properties
-    (writer.go:256-297), same per-process ensure cache."""
-
-    def __init__(self, spark: SparkSession, config: ExporterConfig):
-        from .iceberg_fs import FsCatalog
-
-        self.spark = spark
-        self.config = config
-        self.catalog = FsCatalog(config.catalog.warehouse)
-        self._ensured: set[str] = set()
+    def _ensure_namespace(self) -> None:
+        """C1 once per sink: every later append skips the namespace check."""
+        if not self._namespace_ready:
+            self.catalog.ensure_namespace(self.config.catalog.namespace)
+            self._namespace_ready = True
 
     def _table_props(self, signal: str) -> dict[str, str]:
         return _exporter_table_props(
@@ -370,57 +235,43 @@ class FsIcebergSink:
             overrides=self.config.catalog.table_overrides,
         )
 
+    def _load(self, signal: str):
+        """C2: the signal's table, created with the hidden time-partition
+        spec if absent (the REST client caches what it has ensured)."""
+        return self.catalog.ensure_table(
+            self.config.catalog.namespace,
+            self._table_name(signal),
+            self._signal_schema(signal),
+            partition_source=S.partition_column(signal),
+            granularity=self.config.partition.granularity,
+            properties=self._table_props(signal),
+            iceberg_types=self._signal_iceberg_types(signal),
+        )
+
     def ensure_all_tables(self) -> list[str]:
-        """C1 + C2 x7: namespace dir + create-if-absent with the hidden
-        time-partition spec, then catalog.views convergence (the views
-        analyze against the signal tables, so they ensure LAST). Returns
-        created/ensured table names."""
-        ns = self.config.catalog.namespace
-        self.catalog.create_namespace(ns)
+        """C1 + C2 x7, then catalog.views convergence (the views analyze
+        against the signal tables, so they ensure LAST). Returns the
+        ensured table names."""
+        self._ensure_namespace()
         ensured = []
         for signal in S.ALL_SIGNALS:
-            table = self._table_name(signal)
-            if table not in self._ensured:
-                self.catalog.create_table(
-                    ns,
-                    table,
-                    self._signal_schema(signal),
-                    partition_source=S.partition_column(signal),
-                    granularity=self.config.partition.granularity,
-                    properties=self._table_props(signal),
-                    iceberg_types=self._signal_iceberg_types(signal),
-                )
-                self._ensured.add(table)
-            ensured.append(table)
+            self._load(signal)
+            ensured.append(self._table_name(signal))
         _ensure_declared_views(self.spark, self.config, self.catalog)
         return ensured
 
-    def _load(self, signal: str):
-        ns = self.config.catalog.namespace
-        table = self._table_name(signal)
-        if table not in self._ensured:
-            self.catalog.create_table(
-                ns,
-                table,
-                self._signal_schema(signal),
-                partition_source=S.partition_column(signal),
-                granularity=self.config.partition.granularity,
-                properties=self._table_props(signal),
-                iceberg_types=self._signal_iceberg_types(signal),
-            )
-            self._ensured.add(table)
-        return self.catalog.load_table(ns, table)
-
     def ensure_table(self, signal: str) -> None:
-        """Create the signal's table if absent, writing nothing — what an
-        empty demuxed frame leaves behind."""
+        """Create the signal's table (and the namespace) if absent,
+        writing nothing — what an empty demuxed frame leaves behind."""
+        self._ensure_namespace()
         self._load(signal)
 
     def append(self, df: DataFrame, signal: str, record_count: int | None = None) -> int | None:
-        """K3: executors write Parquet, driver commits one snapshot with
-        the reference's snapshot properties. Returns the snapshot id, or
-        None for an empty batch (F1 short-circuit — no empty snapshots).
-        With catalog.wap_branch set, the commit stages on that branch
+        """K3: executors write Parquet, the driver commits one snapshot
+        with the reference's snapshot properties (catalog_rest.go:243-303
+        AppendRecords). Returns the snapshot id, or None for an empty
+        batch (F1 short-circuit — no empty snapshots). With
+        catalog.wap_branch set, the commit stages on that branch
         (write-audit-publish) and main is untouched until
         publish_staged(). With catalog.upsert_keys[signal] set, the
         batch commits as a single-snapshot equality UPSERT instead —
@@ -429,9 +280,10 @@ class FsIcebergSink:
         props = {"otel.exporter": "opentelemetry-iceberg-exporter-spark"}
         if record_count is not None:
             props["otel.record_count"] = str(record_count)
-        table = self._load(signal)
+        self._ensure_namespace()
         conformed = S.conform(df, self._signal_schema(signal))
         keys = self.config.catalog.upsert_keys.get(signal)
+        table = self._load(signal)
         if keys:
             sid = table.upsert_equality(self.spark, conformed, keys, props)
             _verify_shred_after_commit(self.config, signal, table, sid)
@@ -459,7 +311,9 @@ class FsIcebergSink:
         return table.fast_forward(branch)
 
     def add_files(self, signal: str, source_path: str) -> int:
-        """K4: register raw-sink Hive files without copying."""
+        """K4: register raw-sink Hive files without copying
+        (catalog_rest.go:306-367 AppendDataFiles)."""
+        self._ensure_namespace()
         return self._load(signal).add_files_hive(
             source_path, timezone_name=self.config.partition.timezone
         )
@@ -468,119 +322,37 @@ class FsIcebergSink:
         return self._load(signal).read(self.spark, snapshot_id)
 
 
-class RestIcebergSink:
-    """Same surface as FsIcebergSink against a REST catalog server via
-    the pure-Python client (sinks/iceberg_rest.py) — the reference's
-    production catalog mode (catalog_rest.go), jar-free. Executors write
-    Parquet to the warehouse; the REST server arbitrates commits."""
+class FsIcebergSink(IcebergSink):
+    """IcebergSink over the pure-Python filesystem catalog
+    (sinks/iceberg_fs.py): the warehouse directory is the catalog."""
+
+    def __init__(self, spark: SparkSession, config: ExporterConfig):
+        from .iceberg_fs import FsCatalog
+
+        super().__init__(spark, config, FsCatalog(config.catalog.warehouse))
+
+
+class RestIcebergSink(IcebergSink):
+    """IcebergSink over a REST catalog server via the pure-Python client
+    (sinks/iceberg_rest.py) — the reference's production catalog mode
+    (catalog_rest.go), jar-free. Executors write Parquet to the
+    warehouse; the REST server arbitrates commits."""
 
     def __init__(self, spark: SparkSession, config: ExporterConfig):
         from .iceberg_rest import RestCatalogClient
 
-        self.spark = spark
-        self.config = config
-        self.client = RestCatalogClient(
-            config.catalog.uri,
-            warehouse=config.catalog.warehouse,
-            token=config.catalog.token,
-            credential=config.catalog.credential,
-            oauth2_server_uri=config.catalog.oauth2_server_uri,
-            scope=config.catalog.scope,
+        super().__init__(
+            spark,
+            config,
+            RestCatalogClient(
+                config.catalog.uri,
+                warehouse=config.catalog.warehouse,
+                token=config.catalog.token,
+                credential=config.catalog.credential,
+                oauth2_server_uri=config.catalog.oauth2_server_uri,
+                scope=config.catalog.scope,
+            ),
         )
-        self._namespace_ready = False
-
-    def _ensure_namespace(self) -> None:
-        """C1 once per sink: every later append skips the namespace GET."""
-        if not self._namespace_ready:
-            self.client.ensure_namespace(self.config.catalog.namespace)
-            self._namespace_ready = True
-
-    def _table_props(self, signal: str) -> dict[str, str]:
-        return _exporter_table_props(
-            self.config, signal, self._signal_schema(signal)
-        )
-
-    def _signal_schema(self, signal: str):
-        return S.schema_for(
-            signal, self.config.ns_timestamps, self.config.variant_attrs
-        )
-
-    def _signal_iceberg_types(self, signal: str) -> dict[str, str] | None:
-        if not self.config.ns_timestamps:
-            return None
-        return S.ns_iceberg_types(S.SCHEMAS[signal])
-
-    def _table_name(self, signal: str) -> str:
-        return S.table_name(
-            signal,
-            prefix=self.config.catalog.table_prefix,
-            overrides=self.config.catalog.table_overrides,
-        )
-
-    def ensure_all_tables(self) -> list[str]:
-        """C1 + C2 x7 over REST (ensure ladder with client-side cache —
-        catalog_rest.go:129-240), then catalog.views convergence."""
-        ns = self.config.catalog.namespace
-        self._ensure_namespace()
-        ensured = []
-        for signal in S.ALL_SIGNALS:
-            table = self._table_name(signal)
-            self.client.ensure_table(
-                ns,
-                table,
-                self._signal_schema(signal),
-                partition_source=S.partition_column(signal),
-                granularity=self.config.partition.granularity,
-                properties=self._table_props(signal),
-                iceberg_types=self._signal_iceberg_types(signal),
-            )
-            ensured.append(table)
-        _ensure_declared_views(self.spark, self.config, self.client)
-        return ensured
-
-    def _load(self, signal: str):
-        ns = self.config.catalog.namespace
-        return self.client.ensure_table(
-            ns,
-            self._table_name(signal),
-            self._signal_schema(signal),
-            partition_source=S.partition_column(signal),
-            granularity=self.config.partition.granularity,
-            properties=self._table_props(signal),
-            iceberg_types=self._signal_iceberg_types(signal),
-        )
-
-    def ensure_table(self, signal: str) -> None:
-        """Create the signal's table (and the namespace) if absent,
-        writing nothing — what an empty demuxed frame leaves behind."""
-        self._ensure_namespace()
-        self._load(signal)
-
-    def append(self, df: DataFrame, signal: str, record_count: int | None = None) -> int | None:
-        """K3 over REST (catalog_rest.go:243-303 AppendRecords); with
-        catalog.wap_branch set the commit stages on that branch (WAP);
-        with catalog.upsert_keys[signal] set the batch commits as a
-        single-snapshot equality upsert (CDC semantics)."""
-        props = {"otel.exporter": "opentelemetry-iceberg-exporter-spark"}
-        if record_count is not None:
-            props["otel.record_count"] = str(record_count)
-        self._ensure_namespace()
-        conformed = S.conform(df, self._signal_schema(signal))
-        keys = self.config.catalog.upsert_keys.get(signal)
-        table = self._load(signal)
-        if keys:
-            sid = table.upsert_equality(self.spark, conformed, keys, props)
-            _verify_shred_after_commit(self.config, signal, table, sid)
-            return sid
-        branch = self.config.catalog.wap_branch
-        if branch:
-            sid = table.append_dataframe_to_branch(branch, conformed, props)
-        else:
-            sid = table.append_dataframe(
-                conformed, props, fanout=self.config.catalog.write_fanout
-            )
-        _verify_shred_after_commit(self.config, signal, table, sid)
-        return sid
 
     def append_all(self, dfs: dict[str, DataFrame]) -> dict[str, int]:
         """Atomic MULTI-SIGNAL append: every signal's data files are
@@ -607,31 +379,11 @@ class RestIcebergSink:
             table = self._load(signal)
             md = table.metadata()
             conformed = S.conform(df, self._signal_schema(signal))
-            files = write_partitioned_batch(
-                conformed, md["location"], md, self.config.catalog.write_fanout
-            )
+            with table._credentialed_write(self.spark, md["location"]):
+                files = write_partitioned_batch(
+                    conformed, md["location"], md, self.config.catalog.write_fanout
+                )
             parts.append((table, files, props))
             signal_of[(table.namespace, table.name)] = signal
-        sids = commit_append_transaction(self.client, parts)
+        sids = commit_append_transaction(self.catalog, parts)
         return {signal_of[k]: sid for k, sid in sids.items()}
-
-    def publish_staged(self, signal: str) -> int | None:
-        """WAP publish over REST: fast-forward main to the staged branch
-        head for one signal's table."""
-        branch = self.config.catalog.wap_branch
-        if not branch:
-            return None
-        table = self._load(signal)
-        if branch not in table.metadata().get("refs", {}):
-            return None
-        return table.fast_forward(branch)
-
-    def add_files(self, signal: str, source_path: str) -> int:
-        """K4 over REST (catalog_rest.go:306-367 AppendDataFiles)."""
-        self._ensure_namespace()
-        return self._load(signal).add_files_hive(
-            source_path, timezone_name=self.config.partition.timezone
-        )
-
-    def read(self, signal: str, snapshot_id: int | None = None) -> DataFrame:
-        return self._load(signal).read(self.spark, snapshot_id)

@@ -118,8 +118,8 @@ def flatten_signal_cached(
 
 def default_sink(config: ExporterConfig) -> SinkFn:
     """K1 dispatch: catalog_type routes each conformed batch to the
-    raw-Parquet Hive sink (none), the jar-backed Iceberg catalog (rest),
-    or the pure-Python filesystem Iceberg catalog (fs)."""
+    raw-Parquet Hive sink (none), or through a CatalogSink to the
+    pure-Python REST (rest) or filesystem (fs) Iceberg catalog."""
     if config.catalog.catalog_type in ("fs", "rest"):
         return CatalogSink(config)
 
@@ -135,7 +135,8 @@ class CatalogSink:
     (its table and namespace caches with it). Safe to call from several
     threads at once, which is what lets the metric demux sink its frames
     concurrently. `ensure` creates a signal's table without writing: the
-    empty-frame path of that demux."""
+    empty-frame path of that demux. `append_all` is catalog.atomic_batch's
+    one-transaction commit of a batch's frames (REST only)."""
 
     def __init__(self, config: ExporterConfig):
         self.config = config
@@ -158,6 +159,9 @@ class CatalogSink:
 
     def ensure(self, spark: SparkSession, signal: str) -> None:
         self._catalog_sink(spark).ensure_table(signal)
+
+    def append_all(self, spark: SparkSession, frames: dict[str, DataFrame]) -> None:
+        self._catalog_sink(spark).append_all(frames)
 
 
 def make_batch_processor(
@@ -190,16 +194,12 @@ def make_batch_processor(
         and config.catalog.atomic_batch
     )
     sink = sink or default_sink(config)
-    atomic_holder: dict[str, object] = {}
 
-    def atomic_commit(flattened: dict[str, DataFrame], batch_id: int) -> None:
-        from ..sinks.iceberg_sink import RestIcebergSink
-
+    def atomic_commit(
+        spark: SparkSession, flattened: dict[str, DataFrame], batch_id: int
+    ) -> None:
         try:
-            if "sink" not in atomic_holder:
-                some_df = next(iter(flattened.values()))
-                atomic_holder["sink"] = RestIcebergSink(some_df.sparkSession, config)
-            atomic_holder["sink"].append_all(flattened)
+            sink.append_all(spark, flattened)
         except Exception as exc:  # noqa: BLE001 — classified below
             if classify_error(exc) == PERMANENT:
                 log.error("permanent error on batch %s (atomic): %s", batch_id, exc)
@@ -231,7 +231,7 @@ def make_batch_processor(
         )
         try:
             if atomic:
-                atomic_commit(flattened, batch_id)
+                atomic_commit(batch_df.sparkSession, flattened, batch_id)
                 return
             if not isinstance(sink, CatalogSink):
                 for signal, df in flattened.items():
@@ -279,11 +279,9 @@ def make_batch_processor(
 
 
 def kafka_available(spark: SparkSession) -> bool:
-    """True when the spark-sql-kafka connector is on the classpath.
-
-    Mirrors sinks.iceberg_sink.iceberg_available: the engine degrades to
-    the file source with a clear error instead of an opaque
-    ClassNotFound at stream start."""
+    """True when the spark-sql-kafka connector is on the classpath: the
+    engine degrades to the file source with a clear error instead of an
+    opaque ClassNotFound at stream start."""
     try:
         spark._jvm.java.lang.Class.forName(  # noqa: SLF001
             "org.apache.spark.sql.kafka010.KafkaSourceProvider"
@@ -419,12 +417,10 @@ def export_batch(
         and config.catalog.catalog_type == "rest"
         and config.catalog.atomic_batch
     )
-    sink = None if atomic else (sink or default_sink(config))
+    sink = sink or default_sink(config)
     counts: dict[str, int] = {}
     try:
         if atomic:
-            from ..sinks.iceberg_sink import RestIcebergSink
-
             frames: dict[str, DataFrame] = {}
             for signal, df in flattened.items():
                 df = df.persist()
@@ -435,7 +431,7 @@ def export_batch(
                     df.unpersist()
             if frames:
                 # every signal of the batch advances in ONE transaction
-                RestIcebergSink(spark, config).append_all(frames)
+                sink.append_all(spark, frames)
             for df in frames.values():
                 df.unpersist()
         else:

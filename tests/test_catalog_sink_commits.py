@@ -226,3 +226,55 @@ class TestAddFilesPartitionTimezone:
         )
         with pytest.raises(ValueError, match="day=15"):
             table.add_files_hive(str(tmp_path / "raw"), timezone_name="Asia/Tokyo")
+
+
+class TestTransportsEnsureIdenticalTables:
+    """Both transports run the one sink's ensure: the seven tables come
+    out with the same schema, partition spec, format version and
+    properties, whichever catalog holds them."""
+
+    @staticmethod
+    def _shape(md: dict) -> dict:
+        schema = next(
+            s for s in md["schemas"] if s["schema-id"] == md["current-schema-id"]
+        )
+        spec = next(
+            s for s in md["partition-specs"] if s["spec-id"] == md["default-spec-id"]
+        )
+        return {
+            "schema": schema["fields"],
+            "spec": spec["fields"],
+            "format-version": md["format-version"],
+            "properties": md["properties"],
+        }
+
+    @pytest.mark.parametrize(
+        "mode",
+        [{}, {"ns_timestamps": True}, {"variant_attrs": True}],
+        ids=["default", "ns_timestamps", "variant_attrs"],
+    )
+    def test_fs_and_rest(self, spark, tmp_path, rest_catalog, mode):
+        uri, warehouse = rest_catalog
+        fs_sink = FsIcebergSink(
+            spark,
+            ExporterConfig(
+                storage=StorageConfig(provider="filesystem", bucket=str(tmp_path)),
+                catalog=CatalogConfig(catalog_type="fs", warehouse=str(tmp_path / "wh")),
+                **mode,
+            ),
+        )
+        rest_sink = RestIcebergSink(
+            spark,
+            ExporterConfig(
+                storage=StorageConfig(bucket=warehouse),
+                catalog=CatalogConfig(catalog_type="rest", uri=uri, warehouse=warehouse),
+                **mode,
+            ),
+        )
+        names = fs_sink.ensure_all_tables()
+        assert rest_sink.ensure_all_tables() == names
+        assert len(names) == 7
+        for signal in S.ALL_SIGNALS:
+            fs_md = fs_sink._load(signal).metadata()
+            rest_md = rest_sink._load(signal).metadata()
+            assert self._shape(fs_md) == self._shape(rest_md), signal

@@ -23,10 +23,7 @@ from opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs import (
     DataFile,
     FsCatalog,
 )
-from opentelemetry_iceberg_exporter_spark.sinks.iceberg_sink import (
-    TABLE_PROPERTIES,
-    create_table_sql,
-)
+from opentelemetry_iceberg_exporter_spark.sinks.iceberg_sink import TABLE_PROPERTIES
 
 N_COMMITS = 120
 MIN_COUNT = int(TABLE_PROPERTIES["commit.manifest.min-count-to-merge"])
@@ -94,19 +91,6 @@ class TestExporterDdlDefaults:
         assert TABLE_PROPERTIES["commit.manifest-merge.enabled"] == "true"
         assert int(TABLE_PROPERTIES["commit.manifest.min-count-to-merge"]) >= 2
         assert int(TABLE_PROPERTIES["commit.manifest.target-size-bytes"]) > 0
-
-    def test_sql_ddl_carries_manifest_properties(self, spark):
-        """The jar-backed SQL DDL path (IcebergSink) emits the same
-        properties, so tables created by EITHER sink carry the policy."""
-        from opentelemetry_iceberg_exporter_spark.config import (
-            ExporterConfig,
-            StorageConfig,
-        )
-
-        config = ExporterConfig(storage=StorageConfig(bucket="/tmp/x"))
-        sql = create_table_sql("otel", "ns", "otel_traces", "traces", config)
-        assert "'commit.manifest-merge.enabled'='true'" in sql
-        assert "'commit.manifest.min-count-to-merge'='100'" in sql
 
     def test_fs_sink_table_props_include_merging(self, spark, tmp_path):
         from opentelemetry_iceberg_exporter_spark.config import (

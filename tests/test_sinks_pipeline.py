@@ -26,7 +26,6 @@ from opentelemetry_iceberg_exporter_spark.sinks import (
     PERMANENT,
     TRANSIENT,
     classify_error,
-    create_table_sql,
     is_cross_partition_error,
     read_raw_table,
 )
@@ -266,23 +265,3 @@ class TestErrorClassifier:
             "Cannot add file: more than one value for partition field ts_hour"
         )
         assert not is_cross_partition_error("some other failure")
-
-
-class TestIcebergDDL:
-    def test_create_table_sql_traces(self, tmp_path):
-        cfg = _config(tmp_path)
-        sql = create_table_sql("cat", "otel", "otel_traces", S.SIGNAL_TRACES, cfg)
-        assert "CREATE TABLE IF NOT EXISTS `cat`.`otel`.`otel_traces`" in sql
-        assert "PARTITIONED BY (hours(`start_time_unix_nano`))" in sql
-        assert "`duration` BIGINT NOT NULL" in sql
-        assert "`events_name` ARRAY<STRING>" in sql
-        assert "'write.distribution-mode'='hash'" in sql
-        assert "iceberg_exporter.traces_schema_version'='1.0.0'" in sql
-
-    def test_create_table_sql_summary_dot_columns(self, tmp_path):
-        cfg = _config(tmp_path, granularity="daily")
-        sql = create_table_sql(
-            "cat", "otel", "otel_metrics_summary", S.SIGNAL_METRICS_SUMMARY, cfg
-        )
-        assert "`quantile_values.quantile` ARRAY<DOUBLE>" in sql
-        assert "PARTITIONED BY (days(`time_unix_nano`))" in sql

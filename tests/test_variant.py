@@ -467,15 +467,6 @@ class TestVariantAttrsExporter:
         assert any(r["host"] == "h1" for r in rows)
         assert all(r["meta_null"] for r in rows)  # '{}' -> NULL survives
 
-    def test_jar_sink_refuses_variant_attrs(self, spark, tmp_path):
-        from opentelemetry_iceberg_exporter_spark.sinks.iceberg_sink import (
-            IcebergSink,
-        )
-
-        cfg = self._cfg(tmp_path, variant_attrs=True)
-        with pytest.raises(Exception, match="variant"):
-            IcebergSink(spark, cfg)._require_iceberg()
-
 
 class TestVariantRest:
     def test_rest_variant_roundtrip(self, spark, tmp_path):

@@ -9,6 +9,7 @@ independent state the client can only reach over the wire."""
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -483,3 +484,128 @@ class TestMultiVendTargetPrecedence:
         # conf applied at scan-build time, before any action on df
         assert hconf.get("fs.s3a.bucket.probebkt.access.key") == "AK-probe"
         assert df.count() == 20 and stats.files_read == stats.files_total
+
+
+SHARED_KEY = "fs.s3a.bucket.shared-bkt.access.key"
+
+
+class TestSinkWritesUseTheirTablesVend:
+    """Every table vends its own key for one shared bucket, so the keys
+    share one Hadoop conf slot: each exporter write job must run under
+    its own table's key, on every sink write path."""
+
+    @staticmethod
+    def _vend_per_table(state, namespace, signals):
+        from opentelemetry_iceberg_exporter_spark import schemas as S
+
+        for sig in signals:
+            name = S.table_name(sig)
+            state.storage_credentials[(namespace, name)] = [
+                {
+                    "prefix": "s3://shared-bkt/wh",
+                    "config": {
+                        "s3.access-key-id": "AK-" + name,
+                        "s3.secret-access-key": "SK-" + name,
+                    },
+                }
+            ]
+
+    @staticmethod
+    def _spy(monkeypatch, hconf, owner, attr, seen, table_of):
+        original = getattr(owner, attr)
+
+        def spy(*args, **kwargs):
+            start = hconf.get(SHARED_KEY)
+            out = original(*args, **kwargs)
+            seen.append((table_of(*args), start, hconf.get(SHARED_KEY)))
+            return out
+
+        monkeypatch.setattr(owner, attr, spy)
+
+    @staticmethod
+    def _table_of_location(df, location, *rest):
+        return location.rstrip("/").rsplit("/", 1)[-1]
+
+    @pytest.fixture()
+    def rest_config(self, tmp_path, spark):
+        from opentelemetry_iceberg_exporter_spark.config import (
+            CatalogConfig,
+            ExporterConfig,
+            StorageConfig,
+        )
+
+        warehouse = str(tmp_path / "rwh")
+        os.makedirs(warehouse)
+        server, state, uri = make_server(warehouse)
+        hconf = spark.sparkContext._jsc.hadoopConfiguration()
+
+        def config(**catalog):
+            return ExporterConfig(
+                storage=StorageConfig(bucket=warehouse),
+                catalog=CatalogConfig(
+                    catalog_type="rest", uri=uri, warehouse=warehouse, **catalog
+                ),
+            )
+
+        hconf.set(SHARED_KEY, "AK-stale")  # an earlier write's key
+        yield config, state, hconf
+        server.shutdown()
+        for suffix in ("access.key", "secret.key"):
+            hconf.unset("fs.s3a.bucket.shared-bkt." + suffix)
+
+    def test_atomic_batch_writes(self, spark, rest_config, monkeypatch):
+        from opentelemetry_iceberg_exporter_spark import schemas as S
+        from opentelemetry_iceberg_exporter_spark.sinks import iceberg_fs
+        from opentelemetry_iceberg_exporter_spark.streaming import (
+            make_batch_processor,
+        )
+
+        from test_catalog_sink_commits import METRIC_TABLES
+        from test_demux_fanout import _batch, _gauge_sum_histogram
+
+        make_config, state, hconf = rest_config
+        config = make_config(atomic_batch=True)
+        self._vend_per_table(state, config.catalog.namespace, METRIC_TABLES)
+        seen = []
+        self._spy(
+            monkeypatch, hconf, iceberg_fs, "write_partitioned_batch", seen,
+            self._table_of_location,
+        )
+        make_batch_processor("metrics", config)(_batch(spark, _gauge_sum_histogram()), 0)
+        assert sorted(t for t, _, _ in seen) == sorted(
+            S.table_name(sig) for sig in METRIC_TABLES
+        )
+        assert all(start == end == "AK-" + t for t, start, end in seen), seen
+
+    def test_upsert_keys_writes(self, spark, rest_config, monkeypatch):
+        """The upsert's data files and its equality-delete file are both
+        written under the table's key."""
+        from opentelemetry_iceberg_exporter_spark import schemas as S
+        from opentelemetry_iceberg_exporter_spark.sinks import iceberg_fs
+        from opentelemetry_iceberg_exporter_spark.streaming import (
+            make_batch_processor,
+        )
+
+        from test_otlp_flatten import _span, _traces_payload
+
+        make_config, state, hconf = rest_config
+        config = make_config(upsert_keys={S.SIGNAL_TRACES: ["trace_id", "span_id"]})
+        self._vend_per_table(
+            state, config.catalog.namespace, (S.SIGNAL_TRACES, S.SIGNAL_LOGS)
+        )
+        seen = []
+        self._spy(
+            monkeypatch, hconf, iceberg_fs, "write_partitioned_batch", seen,
+            self._table_of_location,
+        )
+        self._spy(
+            monkeypatch, hconf, iceberg_fs, "plan_equality_delete", seen,
+            lambda spark_, md, *rest: md["location"].rstrip("/").rsplit("/", 1)[-1],
+        )
+        batch = spark.createDataFrame(
+            [(json.dumps(_traces_payload([_span()])),)], "value string"
+        )
+        make_batch_processor("traces", config)(batch, 0)
+        traces = S.table_name(S.SIGNAL_TRACES)
+        key = "AK-" + traces
+        assert seen == [(traces, key, key), (traces, key, key)]
