@@ -54,23 +54,30 @@ def _add_catalog_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--rest-token", default="", help="bearer token for --rest-uri")
 
 
-def _load_cli_table(args):
-    """Resolve the table handle for a catalog subcommand (FsTable or
-    RestTable — the surfaces match)."""
+def _cli_catalog(args):
+    """The catalog a subcommand's --rest-uri / --warehouse names."""
     if args.rest_uri:
-        from .sinks.iceberg_rest import RestCatalogClient, RestTable
+        from .sinks.iceberg_rest import RestCatalogClient
 
-        client = RestCatalogClient(
+        return RestCatalogClient(
             args.rest_uri, warehouse=args.warehouse or "", token=args.rest_token
         )
-        table = RestTable(client, args.namespace, args.table)
-        table.metadata()  # fail fast on a missing table
-        return table
     if not args.warehouse:
         raise SystemExit("--warehouse is required without --rest-uri")
     from .sinks.iceberg_fs import FsCatalog
 
-    return FsCatalog(args.warehouse).load_table(args.namespace, args.table)
+    return FsCatalog(args.warehouse)
+
+
+def _load_cli_table(args):
+    """Resolve the table handle for a catalog subcommand (FsTable or
+    RestTable — the surfaces match)."""
+    catalog = _cli_catalog(args)
+    if args.rest_uri:
+        table = catalog.table(args.namespace, args.table)
+        table.metadata()  # fail fast on a missing table
+        return table
+    return catalog.load_table(args.namespace, args.table)
 
 
 def _add_export_args(p: argparse.ArgumentParser) -> None:
@@ -778,12 +785,11 @@ def main(argv: list[str] | None = None) -> int:
 
     psql = sub.add_parser(
         "sql",
-        help="run SQL over the warehouse: every catalog table is "
-        "registered as a <namespace>_<table> temp view — fs transport "
-        "over the jar-less iceberg_fs format (pushed-filter pruning, "
-        "merge-on-read deletes), or --rest-uri over the REST catalog "
-        "(same naming, local scan planning); result printed as JSON "
-        "lines or written as parquet",
+        help="run SQL over the warehouse: every catalog table (fs, or "
+        "--rest-uri for the REST catalog) is registered as a "
+        "<namespace>_<table> temp view over its current snapshot "
+        "(local scan planning, merge-on-read deletes applied); result "
+        "printed as JSON lines or written as parquet",
     )
     psql.add_argument("--warehouse", default=None, help="fs warehouse root (required without --rest-uri)")
     psql.add_argument("--rest-uri", default=None, help="Iceberg REST catalog URI (switches transport)")
@@ -1257,18 +1263,7 @@ def main(argv: list[str] | None = None) -> int:
             create_substr_index_table,
         )
 
-        if args.rest_uri:
-            from .sinks.iceberg_rest import RestCatalogClient
-
-            catalog = RestCatalogClient(
-                args.rest_uri, warehouse=args.warehouse or "", token=args.rest_token
-            )
-        else:
-            if not args.warehouse:
-                raise SystemExit("--warehouse is required without --rest-uri")
-            from .sinks.iceberg_fs import FsCatalog
-
-            catalog = FsCatalog(args.warehouse)
+        catalog = _cli_catalog(args)
         table = create_substr_index_table(catalog, args.namespace, args.table)
         dd = IncrementalSubstrDeduper(
             table, id_col=args.id_col, text_col=args.text_col,
@@ -1324,18 +1319,7 @@ def main(argv: list[str] | None = None) -> int:
             create_index_table,
         )
 
-        if args.rest_uri:
-            from .sinks.iceberg_rest import RestCatalogClient
-
-            catalog = RestCatalogClient(
-                args.rest_uri, warehouse=args.warehouse or "", token=args.rest_token
-            )
-        else:
-            if not args.warehouse:
-                raise SystemExit("--warehouse is required without --rest-uri")
-            from .sinks.iceberg_fs import FsCatalog
-
-            catalog = FsCatalog(args.warehouse)
+        catalog = _cli_catalog(args)
         table = create_index_table(catalog, args.namespace, args.table)
         dd = IncrementalDeduper(table, id_col=args.id_col, text_col=args.text_col)
         batch = spark.read.parquet(args.input)
@@ -1610,18 +1594,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd in ("ann-build", "ann-ingest", "ann-search"):
         from .operators.ann_index import AnnIndex
 
-        if args.rest_uri:
-            from .sinks.iceberg_rest import RestCatalogClient
-
-            catalog = RestCatalogClient(
-                args.rest_uri, warehouse=args.warehouse or "", token=args.rest_token
-            )
-        else:
-            if not args.warehouse:
-                raise SystemExit("--warehouse is required without --rest-uri")
-            from .sinks.iceberg_fs import FsCatalog
-
-            catalog = FsCatalog(args.warehouse)
+        catalog = _cli_catalog(args)
         data = spark.read.parquet(args.input)
         if args.cmd == "ann-build":
             idx = AnnIndex.build(
@@ -2101,31 +2074,10 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "sql":
-        from .sinks.iceberg_views import register_catalog_views
+        from .sinks.iceberg_views import register_warehouse
 
-        if args.rest_uri:
-            from .sinks.iceberg_rest import (
-                RestCatalogClient,
-                register_rest_table_views,
-            )
-
-            client = RestCatalogClient(
-                args.rest_uri, warehouse=args.warehouse or "", token=args.rest_token
-            )
-            views = register_rest_table_views(spark, client, args.namespace)
-            ns_list = [args.namespace] if args.namespace else client.list_namespaces()
-            catalog_views, unresolved = register_catalog_views(spark, client, ns_list)
-        else:
-            if not args.warehouse:
-                raise SystemExit("--warehouse is required without --rest-uri")
-            from .sinks.iceberg_fs import FsCatalog
-            from .sources.iceberg_source import register_table_views
-
-            views = register_table_views(spark, args.warehouse, args.namespace)
-            cat = FsCatalog(args.warehouse)
-            ns_list = [args.namespace] if args.namespace else cat.list_namespaces()
-            catalog_views, unresolved = register_catalog_views(spark, cat, ns_list)
-        views.update(catalog_views)
+        catalog = _cli_catalog(args)
+        views, unresolved = register_warehouse(spark, catalog, args.namespace)
         if unresolved:
             print(
                 json.dumps(

@@ -38,9 +38,6 @@ def build_session(
         # Arrow for pandas UDF / toPandas interchange (the only Python hot
         # path we allow; everything else stays JVM-side).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the iceberg_fs Python data source prunes files from Spark's
-        # own pushed predicates (hidden-partition/monotone rewrite)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Timestamps: engine semantics are UTC throughout (reference uses
         # UTC epoch-derived partitioning, partition.go:74-98).
         .config("spark.sql.session.timeZone", "UTC")

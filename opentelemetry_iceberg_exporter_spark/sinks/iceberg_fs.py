@@ -6959,6 +6959,11 @@ class FsCatalog:
         options): create_table is already load-else-create."""
         return self.create_table(namespace, name, spark_schema, **options)
 
+    def table(self, namespace: str, name: str) -> "FsTable":
+        """A handle that reads nothing until used (RestCatalogClient's
+        surface)."""
+        return FsTable(self.table_location(namespace, name))
+
     def load_table(self, namespace: str, name: str) -> "FsTable":
         location = self.table_location(namespace, name)
         if not self.table_exists(namespace, name):
@@ -7046,19 +7051,12 @@ class FsCatalog:
         )
 
     def register_warehouse_views(self, spark: SparkSession) -> dict[str, str]:
-        """Register every table (lazy — the Python data source defers
-        planning to execution) AND every catalog view as a `<ns>_<name>`
+        """Register every table AND every catalog view as a `<ns>_<name>`
         temp view; the transport-neutral hook view convergence and the
         sql CLI share."""
-        from ..sources.iceberg_source import register_table_views
-        from .iceberg_views import register_catalog_views
+        from .iceberg_views import register_warehouse
 
-        out = register_table_views(spark, self.warehouse)
-        registered, _ = register_catalog_views(
-            spark, self, self.list_namespaces()
-        )
-        out.update(registered)
-        return out
+        return register_warehouse(spark, self)[0]
 
     def view_exists(self, namespace: str, name: str) -> bool:
         from .iceberg_views import view_exists_at
@@ -8177,25 +8175,26 @@ class Table:
         planned_snapshot = resolve_dml_branch(md, branch, mode)
         if planned_snapshot == -1:
             return None, 0
-        # predicate-derived pruning: files whose manifest bounds /
-        # partition values provably exclude every match never reach the
-        # Spark scan — a ts-bounded purge on a 100 TB table opens only
-        # the matching partitions (mirrors the reference's time-pruned
-        # recovery scan, internal/recovery/scanner.go:197-226)
-        live, excluded, deletes = plan_dml_files(
-            md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
-        )
         if mode == "merge-on-read":
             require_position_delete_files_allowed(md)
-        if mode in ("merge-on-read", "deletion-vectors"):
-            plan_fn = (
-                plan_deletion_vectors
-                if mode == "deletion-vectors"
-                else plan_position_delete
+        with self._credentialed_write(spark, md["location"]):
+            # predicate-derived pruning: files whose manifest bounds /
+            # partition values provably exclude every match never reach
+            # the Spark scan — a ts-bounded purge on a 100 TB table opens
+            # only the matching partitions (mirrors the reference's
+            # time-pruned recovery scan, internal/recovery/scanner.go:197-226)
+            live, excluded, deletes = plan_dml_files(
+                md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
             )
-            planned = plan_fn(spark, md, live, deletes, predicate)
-            if planned is None:
-                return None, 0
+            if mode == "copy-on-write":
+                planned = plan_delete(spark, md, live, predicate, delete_files=deletes)
+            elif mode == "deletion-vectors":
+                planned = plan_deletion_vectors(spark, md, live, deletes, predicate)
+            else:
+                planned = plan_position_delete(spark, md, live, deletes, predicate)
+        if planned is None:
+            return None, 0
+        if mode in ("merge-on-read", "deletion-vectors"):
             new_deletes, n_deleted, superseded, targets = planned
             extra = {"deleted-records": str(n_deleted)}
             if mode == "deletion-vectors":
@@ -8210,9 +8209,6 @@ class Table:
                 required_live_paths=targets or None,
             )
             return sid, n_deleted
-        planned = plan_delete(spark, md, live, predicate, delete_files=deletes)
-        if planned is None:
-            return None, 0
         replacement, n_deleted, n_rewritten = planned
         sid = self._commit_with_retry(
             # delete rows for SURVIVING files must stay live; entries for
@@ -8248,7 +8244,8 @@ class Table:
         md = self.metadata()
         if md["current-snapshot-id"] == -1:
             return None, 0
-        planned = plan_equality_delete(spark, md, keys_df, equality_cols)
+        with self._credentialed_write(spark, md["location"]):
+            planned = plan_equality_delete(spark, md, keys_df, equality_cols)
         if planned is None:
             return None, 0
         new_deletes, n_keys = planned
@@ -8326,27 +8323,33 @@ class Table:
         planned_snapshot = resolve_dml_branch(md, branch, mode)
         if planned_snapshot == -1:
             return None, 0
-        # predicate-derived pruning, same as delete_where: provably
-        # match-free files never reach the Spark scan
-        live, excluded, deletes = plan_dml_files(
-            md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
-        )
         if mode == "merge-on-read":
             require_position_delete_files_allowed(md)
-        if mode in ("merge-on-read", "deletion-vectors"):
-            planned = plan_update_mor(
-                spark,
-                md,
-                live,
-                deletes,
-                predicate,
-                set_exprs,
-                delete_plan_fn=(
-                    plan_deletion_vectors if mode == "deletion-vectors" else None
-                ),
+        with self._credentialed_write(spark, md["location"]):
+            # predicate-derived pruning, same as delete_where: provably
+            # match-free files never reach the Spark scan
+            live, excluded, deletes = plan_dml_files(
+                md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
             )
-            if planned is None:
-                return None, 0
+            if mode == "copy-on-write":
+                planned = plan_update(
+                    spark, md, live, predicate, set_exprs, delete_files=deletes
+                )
+            else:
+                planned = plan_update_mor(
+                    spark,
+                    md,
+                    live,
+                    deletes,
+                    predicate,
+                    set_exprs,
+                    delete_plan_fn=(
+                        plan_deletion_vectors if mode == "deletion-vectors" else None
+                    ),
+                )
+        if planned is None:
+            return None, 0
+        if mode in ("merge-on-read", "deletion-vectors"):
             new_files, n_updated, superseded, targets = planned
             sid = self._commit_with_retry(
                 new_files,
@@ -8358,11 +8361,6 @@ class Table:
                 required_live_paths=targets or None,
             )
             return sid, n_updated
-        planned = plan_update(
-            spark, md, live, predicate, set_exprs, delete_files=deletes
-        )
-        if planned is None:
-            return None, 0
         replacement, n_updated, n_rewritten = planned
         sid = self._commit_with_retry(
             # pending deletes stay live for survivors; pruned-away files
@@ -8407,10 +8405,15 @@ class Table:
             if planned_snapshot != -1
             else ([], [])
         )
+        with self._credentialed_write(spark, md["location"]):
+            if mode == "merge-on-read":
+                planned = plan_merge_mor(spark, md, live, deletes, source, key_cols)
+            else:
+                planned = plan_merge(
+                    spark, md, live, source, key_cols, delete_files=deletes
+                )
         if mode == "merge-on-read":
-            new_files, n_updated, n_inserted, superseded, targets = plan_merge_mor(
-                spark, md, live, deletes, source, key_cols
-            )
+            new_files, n_updated, n_inserted, superseded, targets = planned
             sid = self._commit_with_retry(
                 new_files,
                 operation="overwrite",
@@ -8423,9 +8426,7 @@ class Table:
                 required_live_paths=targets or None,
             )
             return sid, n_updated, n_inserted
-        replacement, n_updated, n_inserted = plan_merge(
-            spark, md, live, source, key_cols, delete_files=deletes
-        )
+        replacement, n_updated, n_inserted = planned
         sid = self._commit_with_retry(
             replacement + deletes,
             operation="overwrite",
@@ -8474,15 +8475,16 @@ class Table:
         if planned_snapshot == -1:
             return None
         live, deletes = self._live_files(md, planned_snapshot)
-        planned = plan_rewrite(
-            spark,
-            md,
-            live,
-            target_bytes=target_bytes,
-            min_files=min_files,
-            zorder_by=zorder_by,
-            delete_files=deletes,
-        )
+        with self._credentialed_write(spark, md["location"]):
+            planned = plan_rewrite(
+                spark,
+                md,
+                live,
+                target_bytes=target_bytes,
+                min_files=min_files,
+                zorder_by=zorder_by,
+                delete_files=deletes,
+            )
         if planned is None:
             return None
         replacement, n_compacted, n_rewritten = planned
@@ -8561,7 +8563,8 @@ class Table:
         eq = [f for f in deletes if f.content == 2]
         if not pos:
             return None
-        replacement, n_rewritten = plan_delete_rewrite(spark, md, live, deletes)
+        with self._credentialed_write(spark, md["location"]):
+            replacement, n_rewritten = plan_delete_rewrite(spark, md, live, deletes)
         # equality-delete files stay live for the SURVIVING files (which
         # keep their original sequence numbers); the rewrite materialized
         # them for the files it touched
@@ -8593,7 +8596,8 @@ class Table:
         if planned_snapshot == -1:
             return None
         live, deletes = self._live_files(md, planned_snapshot)
-        planned = plan_equality_rewrite(spark, md, live, deletes)
+        with self._credentialed_write(spark, md["location"]):
+            planned = plan_equality_rewrite(spark, md, live, deletes)
         if planned is None:
             return None
         replacement, n_rewritten = planned

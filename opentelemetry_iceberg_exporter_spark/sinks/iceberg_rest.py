@@ -416,6 +416,11 @@ class RestCatalogClient:
         'storage-credentials' vends (RestTable captures those)."""
         return self._request("GET", self._table_path(namespace, name))
 
+    def table(self, namespace: str, name: str) -> "RestTable":
+        """A handle that sends nothing until used (its first metadata()
+        is the LoadTable GET)."""
+        return RestTable(self, namespace, name)
+
     _NOT_IMPLEMENTED_STATUSES = frozenset({404, 405, 406, 501})
 
     def load_credentials(self, namespace: str, name: str):
@@ -527,12 +532,9 @@ class RestCatalogClient:
         FsCatalog.register_warehouse_views): every table AND every
         catalog view as a `<ns>_<name>` temp view (views resolved to a
         fixpoint so views-over-views register too)."""
-        from .iceberg_views import register_catalog_views
+        from .iceberg_views import register_warehouse
 
-        out = register_rest_table_views(spark, self)
-        registered, _ = register_catalog_views(spark, self, self.list_namespaces())
-        out.update(registered)
-        return out
+        return register_warehouse(spark, self)[0]
 
     def create_view(
         self,
@@ -1286,60 +1288,6 @@ class RestTable(Table):
             tasks = [(df, refs) for df, refs in tasks if df.file_path in kept_paths]
         df = scan_planned_tasks(spark, md, tasks)
         return df.filter(where) if where is not None else df
-
-
-def register_rest_table_views(
-    spark: SparkSession,
-    client: RestCatalogClient,
-    namespace: str | None = None,
-    broadcast_threshold: int | None = None,
-) -> dict[str, str]:
-    """Make every REST-catalog table addressable as a `<ns>_<table>`
-    temp view (the fs sql-CLI convention — see
-    iceberg_source.register_table_views) so plain spark.sql and catalog
-    VIEW SQL analyze and execute over this transport too, mirroring the
-    fs registrar's statistics-driven planning: tables whose live
-    on-disk bytes (O(1) from the snapshot summary's total-files-size)
-    fit under the shared BROADCAST_BYTE_THRESHOLD register with a
-    broadcast hint, so star joins written in plain SQL broadcast their
-    dimensions.
-
-    Cost per table: ONE metadata GET (reused for the size estimate and
-    the scan), plus the local manifest walk that materializes the file
-    list — this registrar builds EAGER scans (unlike the fs one, whose
-    Python data source defers planning to execution), so registering a
-    huge warehouse to query one table pays for the untouched tables
-    too; pass `namespace` to scope it. Returns {view_name: location}."""
-    from ..sources.iceberg_source import BROADCAST_BYTE_THRESHOLD
-    from .iceberg_fs import plan_scan_metadata, scan_with_deletes
-
-    if broadcast_threshold is None:
-        broadcast_threshold = BROADCAST_BYTE_THRESHOLD
-    views: dict[str, str] = {}
-    namespaces = [namespace] if namespace else client.list_namespaces()
-    for ns in namespaces:
-        for name in client.list_tables(ns):
-            t = RestTable(client, ns, name)
-            md = t.metadata()
-            sid = md["current-snapshot-id"]
-            snap = (
-                next((s for s in md["snapshots"] if s["snapshot-id"] == sid), None)
-                if sid not in (-1, None)
-                else None
-            )
-            data, deletes, _ = plan_scan_metadata(md)
-            summary = (snap or {}).get("summary", {})
-            if "total-files-size" in summary:
-                n_bytes = int(summary["total-files-size"])
-            else:
-                n_bytes = sum(f.file_size_in_bytes for f in data)
-            df = scan_with_deletes(spark, md, data, deletes)
-            if n_bytes <= broadcast_threshold:
-                df = df.hint("broadcast")
-            view = f"{ns}_{name}"
-            df.createOrReplaceTempView(view)
-            views[view] = md["location"]
-    return views
 
 
 class RestView:

@@ -22,7 +22,7 @@ Spec shapes (view spec "View Metadata"):
 
 Dialect: `"spark"`, with table references written as the warehouse-wide
 `<namespace>_<table>` temp-view names this package's `sql` CLI /
-`register_table_views` registers — execution (`read`) registers the
+`register_warehouse` registers — execution (`read`) registers the
 warehouse and runs the SQL, so a view is one `spark.sql` away on either
 transport.
 
@@ -215,12 +215,13 @@ class FsView:
         registers once for all declared views)."""
         from .iceberg_fs import (
             CommitConflictError,
+            FsCatalog,
             _write_metadata_version,
             iceberg_schema,
         )
 
         if register_tables:
-            _register_warehouse(spark, self.warehouse)
+            register_warehouse(spark, FsCatalog(self.warehouse))
         schema = iceberg_schema(infer_view_schema(spark, sql))
         last: Exception | None = None
         for _ in range(max_retries + 1):
@@ -242,7 +243,9 @@ class FsView:
         version_id — the data underneath is whatever the referenced
         tables currently hold; pair with table time travel for full
         as-of reads)."""
-        _register_warehouse(spark, self.warehouse)
+        from .iceberg_fs import FsCatalog
+
+        register_warehouse(spark, FsCatalog(self.warehouse))
         return execute_view(spark, self.metadata(), version_id)
 
 
@@ -251,17 +254,23 @@ def _namespace_of(view: FsView) -> str:
     return rel.split(os.sep)[0]
 
 
-def _register_warehouse(spark: SparkSession, warehouse: str) -> None:
-    """Make every catalog table AND every existing catalog view
-    addressable as `<ns>_<name>` before a view's SQL analyzes/executes
-    — the whole warehouse, not just the default namespace, so
-    cross-namespace references and views-over-views resolve."""
-    from ..sources.iceberg_source import register_table_views
-    from .iceberg_fs import FsCatalog
+def register_warehouse(
+    spark: SparkSession, catalog, namespace: str | None = None
+) -> tuple[dict[str, str], list[tuple[str, str]]]:
+    """Make every catalog table AND every existing catalog view of
+    `catalog` (an FsCatalog or a RestCatalogClient; one namespace or
+    all) addressable as `<ns>_<name>` before SQL analyzes/executes —
+    the whole warehouse by default, so cross-namespace references and
+    views-over-views resolve. Tables register first (views execute
+    over them). Returns register_catalog_views' pair with the table
+    views merged into the first."""
+    from ..sources.iceberg_source import register_catalog_tables
 
-    register_table_views(spark, warehouse)
-    cat = FsCatalog(warehouse)
-    register_catalog_views(spark, cat, cat.list_namespaces())
+    views = register_catalog_tables(spark, catalog, namespace)
+    namespaces = [namespace] if namespace else catalog.list_namespaces()
+    registered, unresolved = register_catalog_views(spark, catalog, namespaces)
+    views.update(registered)
+    return views, unresolved
 
 
 def register_catalog_views(
@@ -403,7 +412,7 @@ def create_fs_view(
         )
     catalog.create_namespace(namespace)
     if register_tables:
-        _register_warehouse(spark, catalog.warehouse)
+        register_warehouse(spark, catalog)
     schema = iceberg_schema(infer_view_schema(spark, sql))
     md = new_view_metadata(location, schema, sql, namespace, properties)
     os.makedirs(os.path.join(location, "metadata"), exist_ok=True)

@@ -1,568 +1,73 @@
-"""`spark.read.format("iceberg_fs")` / `spark.readStream.format("iceberg_fs")`
-— the fs catalog as a FIRST-CLASS Spark data source via the Python Data
-Source API (Spark 4), no jars.
+"""Catalog tables as Spark temp views: every table of a warehouse, on
+either catalog transport, registered as ``<namespace>_<table>`` over
+`Table`'s library scan (`plan_scan_metadata` → `scan_with_deletes`), so
+plain ``spark.sql`` — the `sql` CLI, catalog VIEW SQL, the exporter's
+dashboards — queries the whole warehouse with merge-on-read deletes,
+field-id column resolution and name mapping applied.
 
-This turns the pure-Python catalog from "a library you call" into "a
-format Spark plans": batch reads get manifest-level file pruning driven
-by Spark's own pushed filters (EqualTo -> hidden-partition transform
-rewrite, range filters -> monotone-transform rewrite), merge-on-read
-position deletes are applied per file inside the scan, and the
-streaming reader exposes the exporter's commits as a REAL Structured
-Streaming source — offsets are (snapshot, files-consumed) cursors that
-SPARK checkpoints, so exactly-once end-to-end comes from the engine's
-own commit protocol instead of the hand-rolled tailer loop
-(`streaming/iceberg_tail.py` remains the no-streaming-runtime
-alternative).
-
-Division of labor at 100 TB: the DRIVER plans O(metadata) (ancestry
-walk + manifest reads); EXECUTORS each read one Parquet file via Arrow
-and stream RecordBatches straight into Spark's vectorized path.
-
-Usage::
-
-    spark.dataSource.register(IcebergFsDataSource)
-    df = spark.read.format("iceberg_fs").load(table_location)
-    stream = (spark.readStream.format("iceberg_fs")
-              .option("starting", "latest").load(table_location))
+A view is planned when it is registered, so it is pinned to the
+snapshot that was current then. Callers re-register before they read:
+the sql CLI per invocation, view convergence and catalog-view reads per
+call, a dashboard per round.
 """
 
 from __future__ import annotations
 
-import json
-import os
-from dataclasses import dataclass, field
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-)
-from pyspark.sql.types import StructType
-
-from ..sinks.iceberg_fs import (
-    FsTable,
-    _ancestry_window,
-    current_schema,
-    plan_scan_metadata,
-    spark_read_schema,
-)
-from ..streaming.iceberg_tail import _added_data_files_ordered
-
-_ARROW_TYPES = {
-    "long": "int64",
-    "int": "int32",
-    "double": "float64",
-    "float": "float32",
-    "boolean": "bool_",
-    "string": "string",
-    "binary": "binary",
-    "date": "date32",
-}
-
-
-def _arrow_field(name: str, iceberg_type, required: bool):
-    import pyarrow as pa
-
-    if isinstance(iceberg_type, str):
-        if iceberg_type in _ARROW_TYPES:
-            t = getattr(pa, _ARROW_TYPES[iceberg_type])()
-        elif iceberg_type == "timestamptz":
-            t = pa.timestamp("us", tz="UTC")
-        elif iceberg_type == "timestamp":
-            t = pa.timestamp("us")
-        elif iceberg_type.startswith("decimal("):
-            p, s = iceberg_type[8:-1].split(",")
-            t = pa.decimal128(int(p), int(s))
-        else:
-            raise ValueError(f"no arrow mapping for Iceberg type {iceberg_type!r}")
-        return pa.field(name, t, nullable=not required)
-    raise ValueError(
-        f"iceberg_fs data source supports primitive columns only, got {iceberg_type!r}"
-    )
-
-
-@dataclass
-class _FilePartition(InputPartition):
-    """One Parquet data file; `deleted_positions` are the merge-on-read
-    position deletes scoped to exactly this file (a sorted int64 numpy
-    array — pickles to executors as a compact buffer, never a
-    per-position Python object; `()` when the file has none);
-    `equality_deletes` are the APPLICABLE equality-delete files for this
-    file (seq strictly above the data file's — applicability resolved
-    driver-side), each as (delete_path, (key column name, ...))."""
-
-    file_path: str
-    schema_fields: tuple  # ((name, iceberg_type_json, required, field_id), ...)
-    # int64 numpy array (or () when none) — compare=False because the
-    # dataclass-generated __eq__ would raise on a multi-element array's
-    # ambiguous truth value (same pattern as DataFile.first_row_id)
-    deleted_positions: object = field(default=(), compare=False)
-    name_mapping: tuple = field(default=())  # ((file column name, field id), ...)
-    # ((delete_path, ((current key name, key field id), ...)), ...) —
-    # ids let the executor resolve delete-file columns written under a
-    # PRE-RENAME schema (and refuse a dropped-then-recreated column
-    # whose reused name would otherwise silently match wrong keys)
-    equality_deletes: tuple = field(default=())
-
-
-def _partition_schema_fields(md: dict) -> tuple:
-    return tuple(
-        (f["name"], json.dumps(f["type"]), f["required"], f["id"])
-        for f in current_schema(md)["fields"]
-    )
-
-
-def _partition_name_mapping(md: dict) -> tuple:
-    """The table's schema.name-mapping.default as pickleable pairs —
-    lets executors resolve columns of id-less (add_files-registered)
-    files after a rename, per the Iceberg name-mapping spec."""
-    from ..sinks.iceberg_fs import parse_name_mapping
-
-    mapping = parse_name_mapping(md)
-    return tuple(sorted(mapping.items())) if mapping else ()
-
-
-def _read_file_partition(part: _FilePartition):
-    """EXECUTOR-side: one file -> aligned Arrow batches. Columns resolve
-    by parquet field id when present (rename-safe), by name otherwise;
-    columns missing from the file (pre-evolution) surface as nulls.
-    A None file_path is the readers' explicit no-op partition (empty
-    table / fully pruned scan): zero batches."""
-    if part.file_path is None:
-        return
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(part.file_path)
-    if len(part.deleted_positions):
-        import numpy as np
-
-        keep = np.ones(table.num_rows, dtype=bool)
-        # positions arrive as an int64 numpy array (never a Python
-        # list — a 10^8-position deletion vector stays 800 MB of
-        # contiguous ints, not a multi-GB object list)
-        keep[np.asarray(part.deleted_positions, dtype=np.int64)] = False
-        table = table.filter(pa.array(keep))
-
-    # map file columns: footer field-id first, then the table's name
-    # mapping (id-less add_files-registered files), then current name
-    by_id: dict[int, str] = {}
-    for f in table.schema:
-        if f.metadata and b"PARQUET:field_id" in f.metadata:
-            by_id[int(f.metadata[b"PARQUET:field_id"])] = f.name
-    if not by_id and part.name_mapping:
-        mapped = dict(part.name_mapping)
-        by_id = {
-            mapped[n]: n for n in table.schema.names if n in mapped
-        }
-    cols = []
-    fields = []
-    for name, type_json, required, fid in part.schema_fields:
-        target = _arrow_field(name, json.loads(type_json), required)
-        src = by_id.get(fid, name if name in table.schema.names else None)
-        if src is None:
-            cols.append(pa.nulls(table.num_rows, type=target.type))
-        else:
-            cols.append(table[src].cast(target.type))
-        fields.append(target)
-    aligned = pa.table(cols, schema=pa.schema(fields))
-    for del_path, key_cols in part.equality_deletes:
-        if aligned.num_rows == 0:
-            break
-        aligned = _subtract_equality_delete(aligned, del_path, key_cols)
-    yield from aligned.to_batches(max_chunksize=1 << 16)
-
-
-def _nullsafe_fill(col):
-    """(filled, is_null) companion encoding of one key column: joining
-    on the PAIR gives Spark's eqNullSafe semantics (None == None
-    matches) with Arrow's standard hash join, and the boolean tag keeps
-    a genuine fill-value row distinct from a null row — no sentinel
-    collision by construction."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    t = col.type
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        zero = ""
-    elif pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        zero = b""
-    elif pa.types.is_fixed_size_binary(t):
-        zero = b"\x00" * t.byte_width
-    elif pa.types.is_boolean(t):
-        zero = False
-    elif pa.types.is_date(t):
-        import datetime
-
-        zero = pa.scalar(datetime.date(1970, 1, 1), type=t)
-    elif pa.types.is_time(t):
-        import datetime
-
-        zero = pa.scalar(datetime.time(0, 0), type=t)
-    elif pa.types.is_decimal(t):
-        from decimal import Decimal
-
-        zero = pa.scalar(Decimal(0), type=t)
-    else:
-        # integer / timestamp primitives (floats are refused as
-        # equality keys at plan time): epoch-0 at the column's type.
-        # The value itself is arbitrary — the is_null companion keeps
-        # filled rows distinct from genuine zeros — but it MUST be the
-        # same deterministic constant on both join sides so null keys
-        # match null keys.
-        zero = pa.scalar(0).cast(t)
-    return pc.fill_null(col, zero), pc.is_null(col)
-
-
-import functools
-
-
-@functools.lru_cache(maxsize=8)
-def _read_equality_delete_keys(del_path: str, key_cols: tuple):
-    """Resolve + read one equality-delete file's key columns, cached
-    PER WORKER PROCESS: a scan with many data files under one
-    un-compacted delete file would otherwise re-open and re-decode the
-    same delete parquet once per data-file partition (Spark reuses
-    Python workers across partitions, so the LRU pays off immediately).
-    Safe to cache because Iceberg data/delete files are immutable —
-    a path's bytes never change — and Arrow tables are immutable.
-    Returns (resolved column names, key-column table)."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(del_path)
-    dschema = pf.schema_arrow
-    d_by_id = {
-        int(f.metadata[b"PARQUET:field_id"]): f.name
-        for f in dschema
-        if f.metadata and b"PARQUET:field_id" in f.metadata
-    }
-    read_names = []
-    for name, fid in key_cols:
-        src = d_by_id.get(fid)
-        if src is None:
-            if d_by_id:
-                # id-carrying file without this id: the column was
-                # dropped-and-recreated after the delete was written —
-                # matching by name would delete the wrong rows
-                raise ValueError(
-                    f"equality-delete file {del_path} carries field ids "
-                    f"but not id {fid} ({name!r}): the key column was "
-                    "recreated after this delete; compact deletes away "
-                    "(rewrite_equality_deletes) before reading"
-                )
-            src = name  # id-less delete file: name resolution
-        read_names.append(src)
-    return read_names, pf.read(columns=read_names)
-
-
-def _subtract_equality_delete(aligned, del_path: str, key_cols: tuple):
-    """Anti-filter one data file's aligned rows by one equality-delete
-    file, fully vectorized (Arrow hash join — no per-row Python, so a
-    large un-compacted delete backlog stays columnar): delete-file
-    columns resolve by parquet FIELD ID with current-name fallback
-    (a delete written before a rename stores the old name; a reused
-    name with a different id must NOT match), both sides' keys get the
-    (filled, is_null) null-safe companion encoding, and one left-anti
-    join on the encoded pair per key keeps exactly the rows Spark's
-    eqNullSafe anti-join would keep."""
-    import numpy as np
-    import pyarrow as pa
-
-    read_names, dt = _read_equality_delete_keys(del_path, key_cols)
-    if dt.num_rows == 0:
-        return aligned
-
-    join_keys = []
-    left_cols = {"__ridx": pa.array(np.arange(aligned.num_rows, dtype=np.int64))}
-    right_cols = {}
-    for i, (name, _fid) in enumerate(key_cols):
-        lv, ln = _nullsafe_fill(aligned[name])
-        rv, rn = _nullsafe_fill(dt[read_names[i]].cast(aligned[name].type))
-        left_cols[f"__k{i}"], left_cols[f"__n{i}"] = lv, ln
-        right_cols[f"__k{i}"], right_cols[f"__n{i}"] = rv, rn
-        join_keys += [f"__k{i}", f"__n{i}"]
-    kept = (
-        pa.table(left_cols)
-        .join(pa.table(right_cols), keys=join_keys, join_type="left anti")
-        .column("__ridx")
-    )
-    if len(kept) == aligned.num_rows:
-        return aligned
-    # joins don't preserve order — restore the file's row order
-    return aligned.take(pa.array(np.sort(kept.to_numpy())))
-
-
-def _positions_by_file(delete_files) -> dict:
-    """Driver-side: group deleted row positions per data file, from
-    position-delete Parquet tuples AND deletion-vector blobs (one
-    seek+decode per vector via its manifest-recorded span) — the data
-    source's per-file row masks are physical-format-agnostic.
-
-    Positions stay numpy int64 ARRAYS end to end — the roaring decode
-    already yields a sorted uint64 array, and the parquet delete
-    tuples group by dictionary-encoding `file_path` and slicing the
-    `pos` column per code. No per-position Python object is ever
-    built: a 10^8-position deletion vector costs ~800 MB of contiguous
-    int64 on the driver, not a multi-GB Python list (r11 verdict ask
-    #1). Values returned are sorted and de-duplicated per file."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    chunks: dict[str, list] = {}
-    for d in delete_files:
-        if getattr(d, "is_deletion_vector", False):
-            from ..sinks.puffin import read_deletion_vector_span
-
-            pos = read_deletion_vector_span(
-                d.file_path, d.content_offset, d.content_size_in_bytes
-            )
-            chunks.setdefault(d.referenced_data_file, []).append(
-                np.asarray(pos, dtype=np.int64)
-            )
-            continue
-        t = pq.read_table(d.file_path, columns=["file_path", "pos"])
-        if t.num_rows == 0:
-            continue
-        fp = t["file_path"].combine_chunks().dictionary_encode()
-        codes = np.asarray(fp.indices)
-        pos = np.asarray(t["pos"].combine_chunks(), dtype=np.int64)
-        for code, name in enumerate(fp.dictionary.to_pylist()):
-            chunks.setdefault(name, []).append(pos[codes == code])
-    return {
-        k: np.unique(np.concatenate(v)) if len(v) > 1 else np.unique(v[0])
-        for k, v in chunks.items()
-    }
-
-
-class _BatchReader(DataSourceReader):
-    def __init__(self, options):
-        self.table = FsTable(options["path"])
-        self.snapshot_id = (
-            int(options["snapshot-id"]) if options.get("snapshot-id") else None
-        )
-        self._predicate = None
-        self._range = None
-
-    def pushFilters(self, filters):
-        """File pruning from Spark's own predicates: the first usable
-        EqualTo becomes the hidden-partition rewrite, comparison pairs
-        become the monotone-range rewrite. Every filter is returned as
-        unsupported — pruning selects FILES; Spark still applies the
-        row-level filter (strict bounds stay correct that way)."""
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            if not attr or len(attr) != 1:
-                continue
-            col = attr[0]
-            if isinstance(f, EqualTo) and self._predicate is None:
-                self._predicate = (col, f.value)
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                lo[col] = f.value
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                hi[col] = f.value
-        for col in set(lo) | set(hi):
-            self._range = (col, lo.get(col), hi.get(col))
-            break
-        return filters  # Spark re-applies everything row-level
-
-    def partitions(self):
-        md = self.table.metadata()
-        data, deletes, _ = plan_scan_metadata(
-            md,
-            self.snapshot_id,
-            source_predicate=self._predicate,
-            source_range=self._range,
-        )
-        pos = _positions_by_file([d for d in deletes if d.content == 1])
-        eq_files = [d for d in deletes if d.content == 2]
-        eq_named: list[tuple[int, str, tuple]] = []
-        if eq_files:
-            from ..sinks.iceberg_fs import _equality_fields
-
-            for d in eq_files:
-                if not d.equality_ids:
-                    raise ValueError(
-                        f"equality-delete file {d.file_path} missing "
-                        "equality_ids"
-                    )
-                # name/type resolution raises on float keys (NaN
-                # equality undefined) — same rule as FsTable.read.
-                # (name, id) pairs ship to executors so delete-file
-                # columns resolve by FIELD ID (rename-safe)
-                names = tuple(
-                    (f_["name"], f_["id"])
-                    for f_ in _equality_fields(md, d.equality_ids)
-                )
-                eq_named.append((d.sequence_number, d.file_path, names))
-        fields = _partition_schema_fields(md)
-        mapping = _partition_name_mapping(md)
-        if not data:
-            # Spark calls read(None) when a Python source returns ZERO
-            # partitions — an empty table (no snapshot yet) or a fully
-            # pruned scan must surface one explicit no-op partition
-            return [_FilePartition(None, fields, (), mapping)]
-        return [
-            _FilePartition(
-                f.file_path,
-                fields,
-                pos.get(f.file_path, ()),
-                mapping,
-                # the spec's strict-seq rule: a delete applies only to
-                # data committed BEFORE it
-                tuple(
-                    (dp, names)
-                    for dseq, dp, names in eq_named
-                    if f.sequence_number < dseq
-                ),
-            )
-            for f in data
-        ]
-
-    def read(self, partition):
-        yield from _read_file_partition(partition)
-
-
-class _StreamReader(DataSourceStreamReader):
-    """Offsets are ``{"snapshot_id": id, "file_offset": k}`` — the same
-    cursor the standalone tailer uses, except SPARK persists it in the
-    query checkpoint (exactly-once across restarts for free)."""
-
-    def __init__(self, options):
-        self.table = FsTable(options["path"])
-        self.starting = options.get("starting", "earliest")
-
-    def initialOffset(self) -> dict:
-        if self.starting == "latest":
-            md = self.table.metadata()
-            sid = md.get("current-snapshot-id", -1)
-            if sid != -1:
-                by_id = {s["snapshot-id"]: s for s in md["snapshots"]}
-                n = len(_added_data_files_ordered(by_id[sid]))
-                return {"snapshot_id": sid, "file_offset": n}
-        return {"snapshot_id": -1, "file_offset": 0}
-
-    def latestOffset(self) -> dict:
-        md = self.table.metadata()
-        sid = md.get("current-snapshot-id", -1)
-        if sid == -1:
-            return {"snapshot_id": -1, "file_offset": 0}
-        by_id = {s["snapshot-id"]: s for s in md["snapshots"]}
-        snap = by_id[sid]
-        n = (
-            len(_added_data_files_ordered(snap))
-            if snap["summary"].get("operation") == "append"
-            else 0
-        )
-        return {"snapshot_id": sid, "file_offset": n}
-
-    def partitions(self, start: dict, end: dict):
-        md = self.table.metadata()
-        fields = _partition_schema_fields(md)
-        start_id, start_off = start["snapshot_id"], start["file_offset"]
-        end_id, end_off = end["snapshot_id"], end["file_offset"]
-        if end_id == -1:
-            # empty-table sentinel window: same zero-partition hazard as
-            # the batch reader — hand back one no-op partition
-            return [_FilePartition(None, fields, (), _partition_name_mapping(md))]
-        by_id = {s["snapshot-id"]: s for s in md["snapshots"]}
-        window, _ = _ancestry_window(
-            md, None if start_id == -1 else start_id, end_id
-        )
-        if start_id != -1 and start_id in by_id:
-            snap = by_id[start_id]
-            if start_off < len(_added_data_files_ordered(snap)):
-                window = [snap] + window  # partially consumed snapshot
-        files = []
-        for snap in window:
-            op = snap["summary"].get("operation")
-            if op == "replace":
-                continue  # compaction: no logical change
-            if op != "append":
-                raise ValueError(
-                    f"stream window contains a {op!r} snapshot; the "
-                    "iceberg_fs stream is append-only — consume deletes "
-                    "via changelog_scan / ChangelogTailer"
-                )
-            ordered = _added_data_files_ordered(snap)
-            lo = start_off if snap["snapshot-id"] == start_id else 0
-            hi = end_off if snap["snapshot-id"] == end_id else len(ordered)
-            files.extend(ordered[lo:hi])
-        mapping = _partition_name_mapping(md)
-        if not files:
-            # a non-empty offset window can still carry zero data files
-            # (replace-only window); zero partitions would make Spark
-            # call read(None) — hand it one no-op partition instead
-            return [_FilePartition(None, fields, (), mapping)]
-        return [
-            _FilePartition(f.file_path, fields, (), mapping) for f in files
-        ]
-
-    def read(self, partition):
-        yield from _read_file_partition(partition)
-
-    def commit(self, end: dict) -> None:
-        pass  # Spark's checkpoint owns the cursor
-
-
-class IcebergFsDataSource(DataSource):
-    """`format("iceberg_fs")`: batch + streaming reads of a pure-Python
-    fs-catalog table. Options: `path` (table location), `snapshot-id`
-    (batch time travel), `starting` = earliest|latest (stream seed)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "iceberg_fs"
-
-    def schema(self) -> StructType:
-        if "path" not in self.options:
-            raise ValueError("iceberg_fs requires .load(<table location>)")
-        if not os.path.isfile(
-            os.path.join(self.options["path"], "metadata", "version-hint.text")
-        ):
-            raise FileNotFoundError(
-                f"no Iceberg table at {self.options['path']!r}"
-            )
-        return spark_read_schema(FsTable(self.options["path"]).metadata())
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return _BatchReader(self.options)
-
-    def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        return _StreamReader(self.options)
-
-    def writer(self, schema: StructType, overwrite: bool):
-        from .iceberg_writer import IcebergFsArrowWriter
-
-        return IcebergFsArrowWriter(self.options, overwrite)
-
-    def streamWriter(self, schema: StructType, overwrite: bool):
-        from .iceberg_writer import IcebergFsStreamWriter
-
-        return IcebergFsStreamWriter(self.options, overwrite)
-
-
-def register_iceberg_source(spark) -> None:
-    """Register the Python data source. SIDE EFFECT (documented): if
-    `spark.sql.python.filterPushdown.enabled` is unset, it is enabled —
-    _BatchReader implements pushFilters() and Spark 4.1 REFUSES to plan
-    a pushdown-capable Python source with the flag off (it defaults
-    off). A value the USER set either way is respected: an explicit
-    `false` means this source plans without pushdown rather than this
-    call silently re-tuning other Python sources in the session."""
-    spark.dataSource.register(IcebergFsDataSource)
-    if spark.conf.get("spark.sql.python.filterPushdown.enabled", None) is None:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-
-
 BROADCAST_BYTE_THRESHOLD = 64 * 1024 * 1024
+
+
+def register_catalog_tables(
+    spark,
+    catalog,
+    namespace: str | None = None,
+    broadcast_threshold: int = BROADCAST_BYTE_THRESHOLD,
+) -> dict[str, str]:
+    """Register every table of `catalog` (an FsCatalog or a
+    RestCatalogClient; one namespace or all) as a temp view named
+    ``<namespace>_<table>``. Returns {view_name: table_location}.
+
+    Per table: one metadata load, the table's vended storage
+    credentials applied, one local plan over that metadata — REST
+    registration never asks the server to plan — and a broadcast hint
+    when the table's on-disk bytes fit under `broadcast_threshold`, so
+    star joins written in plain SQL broadcast their dimensions. The
+    size is the snapshot summary's running `total-files-size` (delete
+    files count too — a conservative bias), else the planned files'
+    sizes. The threshold is bytes like Spark's own
+    autoBroadcastJoinThreshold, and conservative: decompressed rows
+    outgrow their Parquet bytes. It decides both ways: a table over it
+    that Spark's own size statistics would still broadcast gets a MERGE
+    hint instead."""
+    from ..sinks.iceberg_fs import scan_with_deletes
+
+    spark_threshold = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    views: dict[str, str] = {}
+    namespaces = [namespace] if namespace else catalog.list_namespaces()
+    for ns in namespaces:
+        for name in catalog.list_tables(ns):
+            t = catalog.table(ns, name)
+            md = t.metadata()
+            t.apply_storage_credentials(spark, md["location"])
+            data, deletes, _ = t.plan_scan(md=md)
+            sid = md.get("current-snapshot-id", -1)
+            summary = next(
+                (s["summary"] for s in md["snapshots"] if s["snapshot-id"] == sid), {}
+            )
+            if "total-files-size" in summary:
+                n_bytes = int(summary["total-files-size"])
+            else:
+                n_bytes = sum(f.file_size_in_bytes for f in data)
+            df = scan_with_deletes(spark, md, data, deletes)
+            if n_bytes <= broadcast_threshold:
+                df = df.hint("broadcast")
+            elif n_bytes <= spark_threshold:
+                df = df.hint("merge")
+            view = f"{ns}_{name}"
+            df.createOrReplaceTempView(view)
+            views[view] = md["location"]
+    return views
 
 
 def register_table_views(
@@ -571,62 +76,10 @@ def register_table_views(
     namespace: str | None = None,
     broadcast_threshold: int = BROADCAST_BYTE_THRESHOLD,
 ) -> dict[str, str]:
-    """Register every fs-catalog table as a temp view named
-    ``<namespace>_<table>`` over the jar-less iceberg_fs format, so the
-    whole warehouse is queryable with plain ``spark.sql`` (the `sql`
-    CLI drives this). Returns {view_name: table_location}. Reads get
-    the full data source behavior: pushed-filter hidden-partition file
-    pruning, merge-on-read deletes, field-id column resolution.
+    """register_catalog_tables over the filesystem catalog at
+    `warehouse`."""
+    from ..sinks.iceberg_fs import FsCatalog
 
-    Catalog-statistics-driven planning: each table's live ON-DISK size
-    comes from the MANIFEST file sizes (pure metadata — no scan), and
-    tables under ``broadcast_threshold`` BYTES register with a
-    broadcast hint, so star joins written in plain SQL get dimension
-    broadcasts without the Python Data Source needing Spark-side
-    statistics plumbing (the v2 relation reports no sizeInBytes, which
-    would otherwise default every join to sort-merge). The threshold is
-    byte-based like Spark's own autoBroadcastJoinThreshold — row counts
-    are a poor broadcastability proxy for wide rows — and deliberately
-    conservative (decompressed in-memory size exceeds parquet bytes)."""
-    from ..sinks.iceberg_fs import FsCatalog, FsTable
-
-    register_iceberg_source(spark)
-    catalog = FsCatalog(warehouse)
-    views: dict[str, str] = {}
-    namespaces = [namespace] if namespace else catalog.list_namespaces()
-    for ns in namespaces:
-        for name in catalog.list_tables(ns):
-            location = catalog.table_location(ns, name)
-            t = FsTable(location)
-            snap = t.current_snapshot()
-            summary = (snap or {}).get("summary", {})
-            if "total-files-size" in summary:
-                # O(1) from the running summary totals (slightly over
-                # data-only bytes since delete files count too — a
-                # conservative bias for a broadcast decision)
-                n_bytes = int(summary["total-files-size"])
-            else:
-                data, _ = t.plan_files()
-                n_bytes = sum(f.file_size_in_bytes for f in data)
-            md = t.metadata()
-            if any(
-                f["type"] == "variant" or not isinstance(f["type"], str)
-                for f in current_schema(md)["fields"]
-            ):
-                # VARIANT (and other non-primitive) columns: pyarrow
-                # cannot open the file at all, so the Python data
-                # source is out — register the LIBRARY scan instead.
-                # Same rows (merge-on-read deletes applied, Spark's own
-                # parquet reader handles variant); trade-off: the plan
-                # is pinned to the snapshot current at REGISTRATION
-                # (the sql CLI and view convergence re-register per
-                # invocation, so in practice reads stay fresh).
-                df = t.read(spark)
-            else:
-                df = spark.read.format("iceberg_fs").load(location)
-            if n_bytes <= broadcast_threshold:
-                df = df.hint("broadcast")
-            view = f"{ns}_{name}"
-            df.createOrReplaceTempView(view)
-            views[view] = location
-    return views
+    return register_catalog_tables(
+        spark, FsCatalog(warehouse), namespace, broadcast_threshold
+    )

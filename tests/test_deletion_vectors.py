@@ -559,18 +559,18 @@ class TestDvMetadataTables:
 
 
 class TestDvDataSource:
-    def test_iceberg_fs_source_masks_dv_rows(self, spark, fs_table):
-        """The jar-less Spark data source applies deletion vectors as
-        per-file row masks INSIDE the scan — zero shuffle, no anti-join."""
+    def test_iceberg_fs_source_masks_dv_rows(self, spark, tmp_path, fs_table):
+        """A registered table view applies deletion vectors and
+        position deletes (mixed forms) through the library scan."""
         from opentelemetry_iceberg_exporter_spark.sources.iceberg_source import (
-            register_iceberg_source,
+            register_table_views,
         )
 
         t = fs_table
         t.delete_where(spark, "id >= 30", mode="deletion-vectors")
         t.delete_where(spark, "id < 2", mode="merge-on-read")  # mixed forms
-        register_iceberg_source(spark)
-        got = spark.read.format("iceberg_fs").load(t.location)
+        register_table_views(spark, str(tmp_path / "wh"))
+        got = spark.table("otel_events")
         assert got.count() == 28
         assert got.agg(F.min("id")).first()[0] == 2
         assert got.agg(F.max("id")).first()[0] == 29

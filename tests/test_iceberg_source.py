@@ -1,9 +1,12 @@
-"""The fs catalog as a first-class Spark format (Python Data Source
-API): batch reads with pushed-filter file pruning and merge-on-read
-deletes, plus a REAL Structured Streaming source whose offsets live in
-Spark's own checkpoint (exactly-once across restarts)."""
+"""Reads of fs-catalog tables through `Table`'s library scan — the
+temp views register_table_views registers (the sql surface) and
+`Table.read` for time travel and pruned reads: merge-on-read position,
+equality and mixed deletes, field-id resolution after a rename, and
+schema evolution."""
 
 from __future__ import annotations
+
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import Row
@@ -13,8 +16,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs import FsCatalog
 from opentelemetry_iceberg_exporter_spark.sinks.transforms import bucket_value
 from opentelemetry_iceberg_exporter_spark.sources.iceberg_source import (
-    IcebergFsDataSource,
-    _BatchReader,
+    register_table_views,
 )
 
 SCHEMA = StructType(
@@ -25,10 +27,15 @@ SCHEMA = StructType(
 )
 
 
-@pytest.fixture(scope="module")
-def registered(spark):
-    spark.dataSource.register(IcebergFsDataSource)
-    return spark
+@pytest.fixture()
+def view(spark, tmp_path):
+    """Register the test warehouse's tables; return `t`'s view."""
+
+    def of(t):
+        register_table_views(spark, str(tmp_path / "wh"))
+        return spark.table("ns_" + t.location.rstrip("/").rsplit("/", 1)[-1])
+
+    return of
 
 
 def _make(spark, tmp_path, n=100, partition_by=None):
@@ -40,176 +47,135 @@ def _make(spark, tmp_path, n=100, partition_by=None):
     return t
 
 
-class TestRegisterConfScope:
-    def test_pushdown_flag_set_only_when_unset(self, spark):
-        """register_iceberg_source enables the Python-source pushdown
-        flag only when the session left it UNSET — an explicit user
-        value (either way) is never overridden (a session-wide re-tune
-        would silently change planning for other Python sources)."""
-        from opentelemetry_iceberg_exporter_spark.sources.iceberg_source import (
-            register_iceberg_source,
-        )
-
-        key = "spark.sql.python.filterPushdown.enabled"
-        before = spark.conf.get(key, None)
-        try:
-            spark.conf.unset(key)
-            register_iceberg_source(spark)
-            assert spark.conf.get(key) == "true"  # unset -> enabled
-            spark.conf.set(key, "false")
-            register_iceberg_source(spark)
-            assert spark.conf.get(key) == "false"  # explicit value kept
-        finally:
-            spark.conf.unset(key)
-            if before is not None:
-                spark.conf.set(key, before)
-
-
 class TestBatchFormat:
-    def test_roundtrip(self, registered, tmp_path):
-        t = _make(registered, tmp_path)
-        df = registered.read.format("iceberg_fs").load(t.location)
+    def test_roundtrip(self, spark, tmp_path, view):
+        t = _make(spark, tmp_path)
+        df = view(t)
         assert df.count() == 100
         assert sorted(r.id for r in df.collect()) == list(range(100))
         assert df.schema["id"].dataType == LongType()
 
-    def test_time_travel_option(self, registered, tmp_path):
-        t = _make(registered, tmp_path, n=10)
+    def test_time_travel_option(self, spark, tmp_path, view):
+        t = _make(spark, tmp_path, n=10)
         s1 = t.current_snapshot()["snapshot-id"]
         t.append_dataframe(
-            registered.createDataFrame([Row(id=i, v=f"v{i}") for i in range(10, 20)])
+            spark.createDataFrame([Row(id=i, v=f"v{i}") for i in range(10, 20)])
         )
-        old = (
-            registered.read.format("iceberg_fs")
-            .option("snapshot-id", str(s1))
-            .load(t.location)
-        )
+        old = t.read(spark, snapshot_id=s1)
         assert old.count() == 10
-        assert registered.read.format("iceberg_fs").load(t.location).count() == 20
+        assert view(t).count() == 20
 
-    def test_pushed_equality_prunes_bucket_files(self, registered, tmp_path):
-        t = _make(registered, tmp_path, partition_by=[("id", "bucket[4]")])
-        # engine-level: correct rows through the format with the filter
-        got = (
-            registered.read.format("iceberg_fs")
-            .load(t.location)
-            .filter(F.col("id") == 42)
-            .collect()
-        )
+    def test_pushed_equality_prunes_bucket_files(self, spark, tmp_path, view):
+        t = _make(spark, tmp_path, partition_by=[("id", "bucket[4]")])
+        # engine-level: correct rows through the view with the filter
+        got = view(t).filter(F.col("id") == 42).collect()
         assert [r.v for r in got] == ["v42"]
-        # reader-level: the pushed EqualTo selects only the bucket's files
-        from pyspark.sql.datasource import EqualTo
-
-        reader = _BatchReader({"path": t.location})
-        n_all = len(reader.partitions())
-        reader2 = _BatchReader({"path": t.location})
-        reader2.pushFilters([EqualTo(("id",), 42)])
-        pruned = reader2.partitions()
-        assert 0 < len(pruned) < n_all
+        # a read with the predicate scans only the bucket's files
+        pruned = t.read(spark, where="id = 42")
+        assert [r.v for r in pruned.collect()] == ["v42"]
+        all_files, _ = t.plan_files()
         want_bucket = bucket_value(42, 4, "long")
         files, _ = t.plan_files(source_predicate=("id", 42))
-        assert {p.file_path for p in pruned} == {f.file_path for f in files}
+        assert 0 < len(files) < len(all_files)
         assert {f.partition["id_bucket"] for f in files} == {want_bucket}
+        assert {urlparse(p).path for p in pruned.inputFiles()} == {
+            f.file_path for f in files
+        }
 
-    def test_position_deletes_applied(self, registered, tmp_path):
-        t = _make(registered, tmp_path, n=50)
-        t.delete_where(registered, "id < 10", mode="merge-on-read")
-        df = registered.read.format("iceberg_fs").load(t.location)
+    def test_position_deletes_applied(self, spark, tmp_path, view):
+        t = _make(spark, tmp_path, n=50)
+        t.delete_where(spark, "id < 10", mode="merge-on-read")
+        df = view(t)
         assert sorted(r.id for r in df.collect()) == list(range(10, 50))
 
-    def test_equality_deletes_applied(self, registered, tmp_path):
-        """Equality deletes apply inside the scan (r10 — the source
-        previously refused them): key-matched rows vanish, and the
-        strict-seq rule protects rows appended AFTER the delete."""
-        t = _make(registered, tmp_path, n=20)
-        keys = registered.createDataFrame([Row(id=3), Row(id=7)])
-        t.delete_where_equality(registered, keys, ["id"])
+    def test_equality_deletes_applied(self, spark, tmp_path, view):
+        """Equality deletes apply inside the scan: key-matched rows
+        vanish, and the strict-seq rule protects rows appended AFTER the
+        delete."""
+        t = _make(spark, tmp_path, n=20)
+        keys = spark.createDataFrame([Row(id=3), Row(id=7)])
+        t.delete_where_equality(spark, keys, ["id"])
         # re-appending id=3 AFTER the delete must survive (its file's
         # seq is above the delete's)
-        t.append_dataframe(registered.createDataFrame([Row(id=3, v="reborn")]))
+        t.append_dataframe(spark.createDataFrame([Row(id=3, v="reborn")]))
         got = sorted(
             (r.id, r.v)
-            for r in registered.read.format("iceberg_fs").load(t.location).collect()
+            for r in view(t).collect()
         )
         want = sorted(
             [(i, f"v{i}") for i in range(20) if i not in (3, 7)]
             + [(3, "reborn")]
         )
         assert got == want
-        # parity with the library read path
-        lib = sorted((r.id, r.v) for r in t.read(registered).collect())
+        # the same rows through Table.read
+        lib = sorted((r.id, r.v) for r in t.read(spark).collect())
         assert got == lib
 
     def test_equality_deletes_compose_with_position_deletes(
-        self, registered, tmp_path
+        self, spark, tmp_path, view
     ):
-        t = _make(registered, tmp_path, n=30)
-        t.delete_where(registered, "id < 5", mode="merge-on-read")  # positions
-        keys = registered.createDataFrame([Row(id=10), Row(id=4), Row(id=29)])
-        t.delete_where_equality(registered, keys, ["id"])
+        t = _make(spark, tmp_path, n=30)
+        t.delete_where(spark, "id < 5", mode="merge-on-read")  # positions
+        keys = spark.createDataFrame([Row(id=10), Row(id=4), Row(id=29)])
+        t.delete_where_equality(spark, keys, ["id"])
         got = sorted(
             r.id
-            for r in registered.read.format("iceberg_fs").load(t.location).collect()
+            for r in view(t).collect()
         )
         assert got == [i for i in range(5, 30) if i not in (10, 29)]
 
     def test_many_row_delete_file_vectorized_null_safe(
-        self, registered, tmp_path
+        self, spark, tmp_path, view
     ):
         """A LARGE delete file (the un-compacted-backlog case the r10
-        advisory flagged) with NULL keys: the Arrow-join subtraction
-        must match Spark's eqNullSafe semantics — a NULL delete key
-        deletes exactly the NULL-keyed data rows — at full parity with
-        the library read path, with zero per-row Python."""
+        advisory flagged) with NULL keys: the subtraction must match
+        Spark's eqNullSafe semantics — a NULL delete key deletes exactly
+        the NULL-keyed data rows."""
         cat = FsCatalog(str(tmp_path / "wh"))
         t = cat.create_table("ns", "big_del", SCHEMA)
         rows = [
             Row(id=i, v=(None if i % 10 == 0 else f"g{i % 7}"))
             for i in range(2000)
         ]
-        t.append_dataframe(registered.createDataFrame(rows, SCHEMA))
-        keys = registered.createDataFrame(
+        t.append_dataframe(spark.createDataFrame(rows, SCHEMA))
+        keys = spark.createDataFrame(
             [Row(v=None), Row(v="g3")],
             StructType([StructField("v", StringType(), True)]),
         )
-        t.delete_where_equality(registered, keys, ["v"])
+        t.delete_where_equality(spark, keys, ["v"])
         got = sorted(
             r.id
-            for r in registered.read.format("iceberg_fs")
-            .load(t.location)
-            .collect()
+            for r in view(t).collect()
         )
         want = sorted(
             i for i in range(2000) if i % 10 != 0 and i % 7 != 3
         )
         assert got == want
-        lib = sorted(r.id for r in t.read(registered).collect())
+        lib = sorted(r.id for r in t.read(spark).collect())
         assert got == lib
 
     def test_delete_columns_resolve_by_field_id_after_rename(
-        self, registered, tmp_path
+        self, spark, tmp_path, view
     ):
         """A delete file written BEFORE a column rename stores the OLD
-        name; the executor must resolve its key column by parquet field
-        id, not the current name (r10 advisory)."""
-        t = _make(registered, tmp_path, n=10)
-        keys = registered.createDataFrame([Row(id=2), Row(id=8)])
-        t.delete_where_equality(registered, keys, ["id"])
+        name; the scan must resolve its key column by parquet field id,
+        not the current name (r10 advisory)."""
+        t = _make(spark, tmp_path, n=10)
+        keys = spark.createDataFrame([Row(id=2), Row(id=8)])
+        t.delete_where_equality(spark, keys, ["id"])
         t.rename_column("id", "ident")
-        df = registered.read.format("iceberg_fs").load(t.location)
+        df = view(t)
         assert df.columns == ["ident", "v"]
         got = sorted(r.ident for r in df.collect())
         assert got == [i for i in range(10) if i not in (2, 8)]
-        lib = sorted(r.ident for r in t.read(registered).collect())
+        lib = sorted(r.ident for r in t.read(spark).collect())
         assert got == lib
 
     def test_date_and_decimal_keyed_equality_deletes(
-        self, registered, tmp_path
+        self, spark, tmp_path, view
     ):
-        """Non-string/int equality keys exercise the null-safe fill's
-        type branches (date needs a date scalar, decimal a Decimal —
-        pa.scalar(0).cast crashes on both); parity with the library
-        read pins semantics."""
+        """Date- and decimal-keyed equality deletes, NULL keys included
+        (null-safe: a NULL key deletes the NULL-keyed rows)."""
         import datetime
         from decimal import Decimal
 
@@ -232,25 +198,23 @@ class TestBatchFormat:
             )
             for i in range(100)
         ]
-        t.append_dataframe(registered.createDataFrame(rows, schema))
+        t.append_dataframe(spark.createDataFrame(rows, schema))
         # date-keyed delete incl. a NULL key (null-safe: kills the
         # date-null rows)
-        keys = registered.createDataFrame(
+        keys = spark.createDataFrame(
             [Row(d=datetime.date(2024, 1, 3)), Row(d=None)],
             StructType([StructField("d", DateType(), True)]),
         )
-        t.delete_where_equality(registered, keys, ["d"])
+        t.delete_where_equality(spark, keys, ["d"])
         # decimal-keyed delete
-        mkeys = registered.createDataFrame(
+        mkeys = spark.createDataFrame(
             [Row(m=Decimal("1.20"))],
             StructType([StructField("m", DecimalType(10, 2), True)]),
         )
-        t.delete_where_equality(registered, mkeys, ["m"])
+        t.delete_where_equality(spark, mkeys, ["m"])
         got = sorted(
             r.id
-            for r in registered.read.format("iceberg_fs")
-            .load(t.location)
-            .collect()
+            for r in view(t).collect()
         )
         want = sorted(
             i
@@ -260,198 +224,12 @@ class TestBatchFormat:
             and i != 12  # m = 1.20 deleted
         )
         assert got == want
-        lib = sorted(r.id for r in t.read(registered).collect())
+        lib = sorted(r.id for r in t.read(spark).collect())
         assert got == lib
 
-    def test_schema_evolution_nulls(self, registered, tmp_path):
-        t = _make(registered, tmp_path, n=5)
+    def test_schema_evolution_nulls(self, spark, tmp_path, view):
+        t = _make(spark, tmp_path, n=5)
         t.add_columns([StructField("extra", StringType(), True)])
-        df = registered.read.format("iceberg_fs").load(t.location)
+        df = view(t)
         assert df.columns == ["id", "v", "extra"]
         assert all(r.extra is None for r in df.collect())
-
-
-class TestStreamFormat:
-    def _run_available_now(self, spark, loc, out, ck):
-        q = (
-            spark.readStream.format("iceberg_fs")
-            .load(loc)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def test_stream_exactly_once_across_restarts(self, registered, tmp_path):
-        t = _make(registered, tmp_path, n=30)
-        out = str(tmp_path / "out")
-        ck = str(tmp_path / "ck")
-        self._run_available_now(registered, t.location, out, ck)
-        got = registered.read.parquet(out)
-        assert sorted(r.id for r in got.collect()) == list(range(30))
-        # restart with the SAME checkpoint: nothing re-delivered
-        self._run_available_now(registered, t.location, out, ck)
-        assert registered.read.parquet(out).count() == 30
-        # new commits: only the delta arrives
-        t.append_dataframe(
-            registered.createDataFrame([Row(id=i, v=f"v{i}") for i in range(30, 36)])
-        )
-        self._run_available_now(registered, t.location, out, ck)
-        assert sorted(r.id for r in registered.read.parquet(out).collect()) == list(
-            range(36)
-        )
-
-    def test_starting_latest_skips_history(self, registered, tmp_path):
-        t = _make(registered, tmp_path, n=25)
-        out = str(tmp_path / "out2")
-        ck = str(tmp_path / "ck2")
-        q = (
-            registered.readStream.format("iceberg_fs")
-            .option("starting", "latest")
-            .load(t.location)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        import glob
-
-        assert registered.read.schema(SCHEMA).parquet(out).count() == 0
-        t.append_dataframe(registered.createDataFrame([Row(id=99, v="new")]))
-        q = (
-            registered.readStream.format("iceberg_fs")
-            .option("starting", "latest")
-            .load(t.location)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert [r.id for r in registered.read.parquet(out).collect()] == [99]
-
-    def test_compaction_invisible_to_stream(self, registered, tmp_path):
-        t = _make(registered, tmp_path, n=12)
-        out = str(tmp_path / "out3")
-        ck = str(tmp_path / "ck3")
-        self._run_available_now(registered, t.location, out, ck)
-        assert registered.read.parquet(out).count() == 12
-        t.rewrite_data_files(registered, target_bytes=1 << 30, min_files=1)
-        t.append_dataframe(registered.createDataFrame([Row(id=100, v="x")]))
-        self._run_available_now(registered, t.location, out, ck)
-        got = sorted(r.id for r in registered.read.parquet(out).collect())
-        assert got == list(range(12)) + [100]  # nothing replayed
-
-
-class TestPositionMaskBuild:
-    """The driver-side position/DV mask build (_positions_by_file) must
-    stay numpy end to end (r11 verdict ask #1): a 10^8-position
-    deletion vector is ~800 MB of contiguous int64, never a multi-GB
-    Python object list."""
-
-    def _dv_delete_stub(self, tmp_path, positions, data_file="data/a.parquet"):
-        from opentelemetry_iceberg_exporter_spark.sinks.puffin import (
-            write_deletion_vector_file,
-        )
-        from opentelemetry_iceberg_exporter_spark.sinks.roaring import serialize_64
-
-        path, spans = write_deletion_vector_file(
-            str(tmp_path), {data_file: (serialize_64(positions), len(positions))}, 1
-        )
-        off, length, _card = spans[data_file]
-
-        class D:
-            is_deletion_vector = True
-            file_path = path
-            content_offset = off
-            content_size_in_bytes = length
-            referenced_data_file = data_file
-
-        return D()
-
-    def test_multi_million_position_dv_stays_numpy(self, tmp_path):
-        import numpy as np
-
-        from opentelemetry_iceberg_exporter_spark.sources.iceberg_source import (
-            _positions_by_file,
-        )
-
-        rng = np.random.default_rng(7)
-        pos = np.unique(rng.integers(0, 50_000_000, size=3_000_000))
-        out = _positions_by_file([self._dv_delete_stub(tmp_path, pos)])
-        got = out["data/a.parquet"]
-        assert isinstance(got, np.ndarray) and got.dtype == np.int64
-        assert got.shape == pos.shape
-        assert bool((got == pos).all())
-
-    def test_parquet_tuples_group_vectorized_and_merge_with_dv(self, tmp_path):
-        """Parquet position-delete tuples group per file by dictionary
-        encoding (no per-row Python loop) and merge + de-duplicate with
-        a DV referencing the same data file."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from opentelemetry_iceberg_exporter_spark.sources.iceberg_source import (
-            _positions_by_file,
-        )
-
-        del_path = str(tmp_path / "pd.parquet")
-        pq.write_table(
-            pa.table(
-                {
-                    "file_path": ["data/a.parquet", "data/b.parquet"] * 3,
-                    "pos": pa.array([5, 1, 3, 2, 5, 1], type=pa.int64()),
-                }
-            ),
-            del_path,
-        )
-
-        class P:
-            is_deletion_vector = False
-            file_path = del_path
-
-        dv = self._dv_delete_stub(tmp_path, np.array([3, 9], dtype=np.int64))
-        out = _positions_by_file([P(), dv])
-        a, b = out["data/a.parquet"], out["data/b.parquet"]
-        assert isinstance(a, np.ndarray) and isinstance(b, np.ndarray)
-        assert a.tolist() == [3, 5, 9]  # sorted, de-duplicated, DV merged
-        assert b.tolist() == [1, 2]
-
-
-class TestEqualityDeleteKeyCache:
-    def test_delete_file_read_once_per_worker(self, tmp_path, monkeypatch):
-        """A scan with many data files under one un-compacted equality
-        delete must not re-decode the delete parquet per data-file
-        partition: the key read is LRU-cached per worker process
-        (sound because Iceberg files are immutable)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from opentelemetry_iceberg_exporter_spark.sources import iceberg_source
-
-        del_path = str(tmp_path / "eq.parquet")
-        pq.write_table(pa.table({"id": pa.array([1, 2], type=pa.int64())}), del_path)
-        iceberg_source._read_equality_delete_keys.cache_clear()
-        opens = []
-        real = pq.ParquetFile
-
-        def counting(path, *a, **k):
-            opens.append(path)
-            return real(path, *a, **k)
-
-        monkeypatch.setattr(pq, "ParquetFile", counting)
-        key_cols = (("id", 1),)
-        aligned = pa.table({"id": pa.array([1, 2, 3], type=pa.int64())})
-        for _ in range(5):  # five "data files" against the same delete
-            out = iceberg_source._subtract_equality_delete(
-                aligned, del_path, key_cols
-            )
-        assert out["id"].to_pylist() == [3]
-        assert len(opens) == 1, f"delete file opened {len(opens)} times"
-        iceberg_source._read_equality_delete_keys.cache_clear()

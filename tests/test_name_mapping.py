@@ -173,15 +173,17 @@ class TestMappedReads:
         assert out.filter("value is null").count() == 0
 
     def test_datasource_reads_mapped_files(self, spark, tmp_path, fs_table):
+        """A registered table view resolves id-less files through the
+        name mapping after a rename."""
         from opentelemetry_iceberg_exporter_spark.sources.iceberg_source import (
-            IcebergFsDataSource,
+            register_table_views,
         )
 
-        spark.dataSource.register(IcebergFsDataSource)
         t = fs_table
         t.add_files_hive(_write_raw(spark, tmp_path, "raw", _df(spark, 10, base=1000)))
         t.rename_column("v", "value")
-        out = spark.read.format("iceberg_fs").load(t.location)
+        register_table_views(spark, str(tmp_path / "wh"))
+        out = spark.table("otel_ev")
         assert out.count() == 110
         assert out.filter("value is null").count() == 0
         assert out.filter("value = 10050").count() == 1

@@ -1,10 +1,12 @@
-"""The SQL entry point: register_table_views over the jar-less
-iceberg_fs format + the `sql` CLI (joins across catalog tables,
-pruned reads, parquet output)."""
+"""The SQL entry point: catalog tables registered as temp views over
+the library scan (register_table_views on fs, register_warehouse_views
+on REST) + the `sql` CLI (joins across catalog tables, pruned reads,
+parquet output)."""
 
 from __future__ import annotations
 
 import json
+import os
 
 import duckdb
 import pytest
@@ -92,10 +94,8 @@ class TestRegisterViews:
         assert cat.list_tables("missing") == []
 
     def test_small_tables_register_with_broadcast_hint(self, spark, warehouse):
-        """Manifest row counts drive a broadcast hint, so SQL star joins
-        broadcast the dimension side without explicit hints (the Python
-        Data Source reports no sizeInBytes, which would otherwise make
-        every join sort-merge)."""
+        """The tables' on-disk bytes drive a broadcast hint, so SQL star
+        joins broadcast the dimension side without explicit hints."""
         wh, _ = warehouse
         register_table_views(spark, wh)
         plan = (
@@ -129,6 +129,44 @@ class TestRegisterViews:
         cat.load_table("otel", "events").delete_where(spark, "id < 5")
         register_table_views(spark, wh)
         assert spark.sql("SELECT COUNT(*) AS n FROM otel_events").collect()[0]["n"] == 5
+
+
+class TestRestRegistration:
+    def test_one_load_per_table_and_no_server_plan(self, spark, tmp_path):
+        """REST registration plans locally: N tables cost N LoadTable
+        GETs plus the listing calls, and no /plan request, although the
+        stub advertises PlanTableScan."""
+        from opentelemetry_iceberg_exporter_spark.sinks.iceberg_rest import (
+            RestCatalogClient,
+        )
+
+        from rest_stub import make_server
+
+        wh = str(tmp_path / "rwh")
+        os.makedirs(wh)
+        server, state, uri = make_server(wh)
+        try:
+            client = RestCatalogClient(uri, warehouse=wh)
+            schema = StructType([StructField("id", LongType(), False)])
+            for ns, name in (("otel", "a"), ("otel", "b"), ("ref", "c")):
+                client.ensure_namespace(ns)
+                client.ensure_table(ns, name, schema).append_dataframe(spark.range(3))
+            assert state.advertise_plan
+            state.requests.clear()
+            views = client.register_warehouse_views(spark)
+            requests = list(state.requests)
+        finally:
+            server.shutdown()
+        assert set(views) == {"otel_a", "otel_b", "ref_c"}
+        tables = [("otel", "a"), ("otel", "b"), ("ref", "c")]
+        listings = {client._ns_path()} | {
+            route(ns) for ns in ("otel", "ref")
+            for route in (client._table_path, client._view_path)
+        }
+        assert all(method == "GET" for method, _ in requests), requests
+        loads = sorted(path for _, path in requests if path.split("?")[0] not in listings)
+        assert loads == sorted(client._table_path(ns, name) for ns, name in tables)
+        assert not any("/plan" in path for _, path in requests)
 
 
 class TestSqlCli:

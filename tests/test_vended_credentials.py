@@ -609,3 +609,90 @@ class TestSinkWritesUseTheirTablesVend:
         traces = S.table_name(S.SIGNAL_TRACES)
         key = "AK-" + traces
         assert seen == [(traces, key, key), (traces, key, key)]
+
+    @pytest.fixture()
+    def dml_tables(self, spark, rest_config):
+        """Tables `a` and `b`, each vending its own key for the shared
+        bucket and holding two files; the Hadoop conf then holds a stale
+        key, as after another table's job."""
+        make_config, state, hconf = rest_config
+        client = RestCatalogClient(make_config().catalog.uri, warehouse=state.warehouse)
+        client.ensure_namespace("dml")
+        tables = {}
+        for name in ("a", "b"):
+            state.storage_credentials[("dml", name)] = [
+                {
+                    "prefix": "s3://shared-bkt/wh",
+                    "config": {
+                        "s3.access-key-id": "AK-" + name,
+                        "s3.secret-access-key": "SK-" + name,
+                    },
+                }
+            ]
+            t = client.ensure_table("dml", name, SCHEMA)
+            for lo in (0, 10):
+                t.append_dataframe(
+                    spark.range(lo, lo + 10).selectExpr("id", "cast(id as string) v")
+                )
+            tables[name] = t
+        hconf.set(SHARED_KEY, "AK-stale")
+        return client, tables, hconf
+
+    def _spy_plan(self, monkeypatch, hconf, attr):
+        from opentelemetry_iceberg_exporter_spark.sinks import iceberg_fs
+
+        seen = []
+        self._spy(
+            monkeypatch, hconf, iceberg_fs, attr, seen,
+            lambda spark_, md, *rest, **kw: md["location"].rstrip("/").rsplit("/", 1)[-1],
+        )
+        return seen
+
+    @pytest.mark.parametrize(
+        "mode, planner",
+        [
+            ("copy-on-write", "plan_delete"),
+            ("merge-on-read", "plan_position_delete"),
+            ("deletion-vectors", "plan_deletion_vectors"),
+        ],
+    )
+    def test_delete_where_writes(self, spark, dml_tables, monkeypatch, mode, planner):
+        _, tables, hconf = dml_tables
+        if mode == "deletion-vectors":
+            tables["a"].upgrade_format_version(3)
+        seen = self._spy_plan(monkeypatch, hconf, planner)
+        assert tables["a"].delete_where(spark, "id < 3", mode=mode)[1] == 3
+        assert seen == [("a", "AK-a", "AK-a")]
+
+    def test_delete_where_equality_writes(self, spark, dml_tables, monkeypatch):
+        _, tables, hconf = dml_tables
+        seen = self._spy_plan(monkeypatch, hconf, "plan_equality_delete")
+        keys = spark.range(2).selectExpr("id")
+        assert tables["a"].delete_where_equality(spark, keys, ["id"])[1] == 2
+        assert seen == [("a", "AK-a", "AK-a")]
+
+    def test_update_where_writes(self, spark, dml_tables, monkeypatch):
+        _, tables, hconf = dml_tables
+        seen = self._spy_plan(monkeypatch, hconf, "plan_update")
+        assert tables["a"].update_where(spark, "id = 4", {"v": "'x'"})[1] == 1
+        assert seen == [("a", "AK-a", "AK-a")]
+
+    def test_merge_rows_writes(self, spark, dml_tables, monkeypatch):
+        _, tables, hconf = dml_tables
+        seen = self._spy_plan(monkeypatch, hconf, "plan_merge")
+        source = spark.range(18, 22).selectExpr("id", "'m' v")
+        assert tables["a"].merge_rows(spark, source, ["id"])[1:] == (2, 2)
+        assert seen == [("a", "AK-a", "AK-a")]
+
+    def test_rewrite_data_files_writes(self, spark, dml_tables, monkeypatch):
+        _, tables, hconf = dml_tables
+        seen = self._spy_plan(monkeypatch, hconf, "plan_rewrite")
+        assert tables["a"].rewrite_data_files(spark) is not None
+        assert seen == [("a", "AK-a", "AK-a")]
+
+    def test_view_registration(self, spark, dml_tables, monkeypatch):
+        """Each table's view is planned under that table's key."""
+        client, _, hconf = dml_tables
+        seen = self._spy_plan(monkeypatch, hconf, "scan_with_deletes")
+        assert set(client.register_warehouse_views(spark)) == {"dml_a", "dml_b"}
+        assert seen == [("a", "AK-a", "AK-a"), ("b", "AK-b", "AK-b")]
