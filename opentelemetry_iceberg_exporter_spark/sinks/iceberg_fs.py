@@ -49,7 +49,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2675,9 +2675,10 @@ def read_position_deletes(spark: SparkSession, delete_files: list[DataFile]) -> 
     DELETION VECTORS expanded from their Puffin roaring-bitmap blobs ON
     EXECUTORS (one mapInPandas over the metadata-sized span list, so a
     100 TB table's vectors decode in parallel and never transit the
-    driver). Every downstream consumer — scan subtraction, CoW/MoR
-    planning, changelog pre-images, delete folding — works off this one
-    abstraction, which is what makes DVs a drop-in physical format."""
+    driver). Changelog delete rows and delete folding read deletes
+    through this one abstraction, which is what makes DVs a drop-in
+    physical format there; scans subtract vectors with the cheaper mask
+    (_subtract_position_deletes)."""
     # defensive: callers may hold a mixed delete list — only content=1
     # files have the (file_path, pos) layout
     delete_files = [f for f in delete_files if f.content == 1]
@@ -2728,55 +2729,24 @@ def read_position_deletes(spark: SparkSession, delete_files: list[DataFile]) -> 
     return out
 
 
-def apply_position_deletes(
-    spark: SparkSession, df: DataFrame, delete_files: list[DataFile]
+def _subtract_position_deletes(
+    spark: SparkSession, tagged: DataFrame, pos_files: list[DataFile]
 ) -> DataFrame:
-    """Subtract position-deleted rows from a Parquet-backed scan: tag each
-    row with (normalized _metadata.file_path, _metadata.row_index) and
-    anti-join the delete rows. Delete rows name exact file paths, so no
-    sequence-number filter is needed: a row can only match a delete
-    written at-or-after its file's commit (paths are never reused), and
-    deletes referencing rewritten (dropped) files match nothing.
-
-    The join side is chosen from metadata alone: manifests record each
-    delete file's row count, so small delete sets broadcast (one map-side
-    anti-join, no shuffle of the table) and only genuinely large ones
-    shuffle — decided before any job runs.
+    """Subtract content=1 deletes from a scan tagged with `__file` and
+    `__dpos` (live_row_scan is its one caller). Delete rows name exact
+    file paths, so no sequence-number filter is needed: a row can only
+    match a delete written at-or-after its file's commit (paths are
+    never reused), and deletes naming rewritten files match nothing.
 
     DELETION VECTORS skip the join entirely: their compact serialized
     bitmaps (KBs per million deleted rows) broadcast to the executors
     and a vectorized pandas filter masks each scan batch against its
-    file's decoded position set — zero shuffle at ANY delete volume,
-    where a billion-tuple parquet delete set would force a full-table
-    shuffle anti-join. Mixed physical forms compose: the mask applies
-    first, the surviving parquet tuples anti-join as before."""
-    delete_files = [f for f in delete_files if f.content == 1]
-    if not delete_files:
-        return df
-    out_cols = df.columns
-    tagged = df.select(
-        "*",
-        _norm_meta_path().alias("__dfile"),
-        F.col("_metadata.row_index").alias("__dpos"),
-    )
-    tagged = _subtract_position_deletes(
-        spark, tagged, delete_files, "__dfile", "__dpos"
-    )
-    return tagged.select(*out_cols)
-
-
-def _subtract_position_deletes(
-    spark: SparkSession,
-    tagged: DataFrame,
-    pos_files: list[DataFile],
-    file_col: str,
-    pos_col: str,
-) -> DataFrame:
-    """Subtract content=1 deletes from a (file, pos)-tagged scan — the
-    one implementation both read paths share. Deletion vectors become
-    the executor mask (broadcast compact bitmaps, vectorized filter);
-    parquet tuples keep the metadata-decided broadcast/shuffle
-    anti-join."""
+    file's decoded position set — zero shuffle at ANY delete volume.
+    Parquet tuples anti-join, the side chosen from metadata alone:
+    manifests record each delete file's row count, so small delete sets
+    broadcast (one map-side anti-join, no shuffle of the table) and only
+    genuinely large ones shuffle — decided before any job runs. Mixed
+    physical forms compose: the mask applies first."""
     dv = [f for f in pos_files if f.is_deletion_vector]
     plain = [f for f in pos_files if not f.is_deletion_vector]
     if dv:
@@ -2825,15 +2795,15 @@ def _subtract_position_deletes(
                 out[sel] = deleted[idx] != pos_u
             return pd.Series(out)
 
-        tagged = tagged.filter(__dv_keep(F.col(file_col), F.col(pos_col)))
+        tagged = tagged.filter(__dv_keep(F.col("__file"), F.col("__dpos")))
     if plain:
         dels = read_position_deletes(spark, plain)
         if sum(f.record_count for f in plain) <= BROADCAST_DELETE_ROWS:
             dels = F.broadcast(dels)
         tagged = tagged.join(
             dels,
-            (tagged[file_col] == dels["file_path"])
-            & (tagged[pos_col] == dels["pos"]),
+            (tagged["__file"] == dels["file_path"])
+            & (tagged["__dpos"] == dels["pos"]),
             "left_anti",
         )
     return tagged
@@ -3032,86 +3002,16 @@ def plan_equality_delete(
     ], n_keys
 
 
-def _tagged_live_scan(
-    spark: SparkSession,
-    schema: StructType,
-    paths: list[str],
-    delete_files: list[DataFile],
-    md: dict | None = None,
-    data_files: list[DataFile] | None = None,
-    lineage: bool = False,
-) -> DataFrame:
-    """Scan `paths` under `schema` with position AND equality deletes
-    applied, keeping a `__file` column (the scheme-less absolute path, as
-    manifests record it) for file-granular DML planning. The tag comes
-    from the scan's _metadata column — BEFORE the anti-join, because
-    input_file_name() is scan-stage-bound and unreliable on a join
-    output. Equality deletes need the per-file data sequence numbers, so
-    callers with content=2 files in `delete_files` must also pass `md`
-    and the live `data_files` (sequence numbers from the manifest walk)."""
-    pos = [f for f in delete_files if f.content == 1] if delete_files else []
-    eq = [f for f in delete_files if f.content == 2] if delete_files else []
-    if lineage:
-        # also surface the files' MATERIALIZED lineage columns (written
-        # by earlier v3 CoW rewrites; null where never materialized) and
-        # keep __dpos so carry_lineage can derive the rest
-        schema = StructType(list(schema.fields) + lineage_read_fields())
-    tagged = table_file_scan(
-        spark, md, schema, paths, tag_cols=(("__file", "path"), ("__dpos", "pos"))
-    )
-    if pos:
-        tagged = _subtract_position_deletes(spark, tagged, pos, "__file", "__dpos")
-    if eq:
-        if md is None or data_files is None:
-            raise ValueError(
-                "equality-delete files present: the scan needs table "
-                "metadata and the live data files (for sequence numbers)"
-            )
-        seq_by_path = {f.file_path: f.sequence_number for f in data_files}
-        tagged = apply_equality_deletes(spark, tagged, eq, md, seq_by_path)
-    return tagged if lineage else tagged.drop("__dpos")
-
-
-def scan_with_deletes(
-    spark: SparkSession,
-    md: dict,
-    data_files: list[DataFile],
-    delete_files: list[DataFile],
-) -> DataFrame:
-    """Snapshot scan under the current schema with position AND equality
-    deletes applied (the merge-on-read read path)."""
-    schema = read_schema_for(spark, md)
-    if not data_files:
-        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
-    needs_tagged = any(f.content == 2 for f in delete_files) or (
-        any(f.content == 1 for f in delete_files)
-        and parse_name_mapping(md) is not None
-        and schema_requires_id_read(md)
-    )
-    if needs_tagged:
-        # the tagged path computes (__file, __dpos) INSIDE each scan
-        # branch — required both for equality deletes and whenever a
-        # name-mapped scan unions branches (where _metadata is no
-        # longer resolvable on the result)
-        tagged = _tagged_live_scan(
-            spark,
-            schema,
-            [f.file_path for f in data_files],
-            delete_files,
-            md,
-            data_files,
-        )
-        return tagged.select(*[f_.name for f_ in schema.fields])
-    df = table_file_scan(spark, md, schema, [f.file_path for f in data_files])
-    return apply_position_deletes(spark, df, delete_files)
-
-
 # v3 row-lineage metadata columns (Iceberg spec reserved field ids
 # 2147483540 / 2147483539): _row_id identifies a row STABLY across CoW
 # rewrites; _last_updated_sequence_number is the data sequence number of
 # the commit that last modified it.
 ROW_ID_COL = "_row_id"
 LAST_UPDATED_COL = "_last_updated_sequence_number"
+
+# the live-row scan's tags: a row's data file (the scheme-less absolute
+# path manifests record) and its position in that file
+ROW_TAGS = ("__file", "__dpos")
 
 
 def lineage_read_fields() -> list[StructField]:
@@ -3121,42 +3021,101 @@ def lineage_read_fields() -> list[StructField]:
     ]
 
 
-def carry_lineage(
+def live_row_scan(
     spark: SparkSession,
-    tagged: DataFrame,
-    data_files: list[DataFile],
+    md: dict,
+    files: list[DataFile],
+    delete_files: list[DataFile] = (),
+    *,
+    paths: list[str] | None = None,
+    where: str | None = None,
+    lineage: bool = False,
     updated=None,
-    file_col: str = "__file",
-    pos_col: str = "__dpos",
 ) -> DataFrame:
-    """Resolve the v3 lineage columns on a lineage scan (read with
-    lineage_read_fields + __file/__dpos tags): a row's MATERIALIZED
+    """The one live-row scan under every read, row-level DML plan,
+    rewrite and changelog pre-image: the data `files` (or only `paths`
+    among them) under the current read schema, each row tagged with
+    `__file` and `__dpos` (ROW_TAGS). The tags come from `_metadata`
+    INSIDE each scan branch: input_file_name() is scan-stage-bound and
+    unreliable on a join output, and `_metadata` no longer resolves
+    after a name-mapped union.
+
+    Filter, then subtract: the bare `where` predicate filters the scan
+    first, so it pushes into the Parquet reader; then every delete form
+    in `delete_files` subtracts — deletion vectors as the executor mask
+    and parquet (file_path, pos) tuples as an anti-join
+    (_subtract_position_deletes), equality deletes by the spec's strict
+    sequence rule with data sequence numbers from `files`
+    (apply_equality_deletes). Rows already deleted therefore never
+    count as matches and are never recorded twice.
+
+    `lineage` adds the v3 row-lineage columns: a row's MATERIALIZED
     values win (written by an earlier CoW rewrite); otherwise the spec's
-    inheritance applies — _row_id = file first_row_id + row position,
-    _last_updated = file data sequence number. `updated` (boolean
-    Column over the pre-update row values) marks rows modified by this
-    commit: their materialized _last_updated is left NULL so reads
-    INHERIT the committing file's actual data sequence number — a
-    merge-on-read commit can retry onto a later sequence number than
-    planned, so baking a planned literal in would lie under contention;
-    _row_id is preserved either way. Tags are kept; callers drop
-    __file/__dpos before writing."""
-    rows = [
-        (f.file_path, f.first_row_id, int(f.sequence_number))
-        for f in data_files
-        if f.content == 0
-    ]
-    lmap = spark.createDataFrame(rows, "__lpath string, __lfirst long, __lseq long")
-    df = tagged.join(F.broadcast(lmap), F.col(file_col) == F.col("__lpath"), "left")
-    row_id = F.coalesce(F.col(ROW_ID_COL), F.col("__lfirst") + F.col(pos_col))
+    inheritance applies — _row_id = the file's first_row_id + row
+    position, _last_updated = the file's data sequence number, from a
+    metadata-sized broadcast map of `files`. `updated` (a boolean
+    Column over the pre-update row values) marks rows this commit
+    modifies: their _last_updated is left NULL so reads INHERIT the
+    committing file's actual data sequence number — a row-delta commit
+    can retry onto a later sequence number than planned, so baking a
+    planned literal in would lie under contention; _row_id is preserved
+    either way."""
+    schema = read_schema_for(spark, md)
+    if lineage:
+        schema = StructType(list(schema.fields) + lineage_read_fields())
+    if paths is None:
+        paths = [f.file_path for f in files]
+    if not paths:
+        tags = [StructField("__file", StringType()), StructField("__dpos", LongType())]
+        return spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), StructType(list(schema.fields) + tags)
+        )
+    rows = table_file_scan(
+        spark, md, schema, paths, tag_cols=(("__file", "path"), ("__dpos", "pos"))
+    )
+    if where is not None:
+        rows = rows.filter(F.expr(where))
+    pos = [f for f in delete_files if f.content == 1]
+    eq = [f for f in delete_files if f.content == 2]
+    if pos:
+        rows = _subtract_position_deletes(spark, rows, pos)
+    if eq:
+        seq_by_path = {f.file_path: f.sequence_number for f in files}
+        rows = apply_equality_deletes(spark, rows, eq, md, seq_by_path)
+    if not lineage:
+        return rows
+    lmap = spark.createDataFrame(
+        [
+            (f.file_path, f.first_row_id, int(f.sequence_number))
+            for f in files
+            if f.content == 0
+        ],
+        "__lpath string, __lfirst long, __lseq long",
+    )
+    rows = rows.join(F.broadcast(lmap), F.col("__file") == F.col("__lpath"), "left")
     last_up = F.coalesce(F.col(LAST_UPDATED_COL), F.col("__lseq"))
     if updated is not None:
         last_up = F.when(updated, F.lit(None).cast("long")).otherwise(last_up)
-    return (
-        df.withColumn(ROW_ID_COL, row_id)
-        .withColumn(LAST_UPDATED_COL, last_up)
-        .drop("__lpath", "__lfirst", "__lseq")
-    )
+    return rows.withColumns(
+        {
+            ROW_ID_COL: F.coalesce(
+                F.col(ROW_ID_COL), F.col("__lfirst") + F.col("__dpos")
+            ),
+            LAST_UPDATED_COL: last_up,
+        }
+    ).drop("__lpath", "__lfirst", "__lseq")
+
+
+def scan_with_deletes(
+    spark: SparkSession,
+    md: dict,
+    data_files: list[DataFile],
+    delete_files: list[DataFile],
+) -> DataFrame:
+    """Snapshot scan under the current schema with every delete form
+    applied (the merge-on-read read path): live_row_scan without its
+    tags."""
+    return live_row_scan(spark, md, data_files, delete_files).drop(*ROW_TAGS)
 
 
 def scan_with_lineage(
@@ -3173,22 +3132,9 @@ def scan_with_lineage(
             "row lineage requires a format-version 3 table — call "
             "upgrade_format_version(3) first"
         )
-    schema = read_schema_for(spark, md)
-    out = StructType(list(schema.fields) + lineage_read_fields())
-    if not data_files:
-        return spark.createDataFrame(spark.sparkContext.emptyRDD(), out)
-    tagged = _tagged_live_scan(
-        spark,
-        schema,
-        [f.file_path for f in data_files],
-        delete_files,
-        md,
-        data_files,
-        lineage=True,
-    )
-    return carry_lineage(spark, tagged, data_files).select(
-        *[f_.name for f_ in out.fields]
-    )
+    return live_row_scan(
+        spark, md, data_files, delete_files, lineage=True
+    ).drop(*ROW_TAGS)
 
 
 # transforms that PRESERVE ORDER of their source values, so a source-
@@ -3935,7 +3881,7 @@ def live_files(
     return data, deletes
 
 
-def resolve_dml_branch(md: dict, branch: str, mode: str) -> int:
+def resolve_dml_branch(md: dict, branch: str) -> int:
     """Branch-scoped DML target: the snapshot id the plan runs against.
     The merge-on-read forms (position deletes, deletion vectors) commit
     like branch appends — same fold-on-write and liveness validation,
@@ -4024,93 +3970,87 @@ def plan_format_upgrade(md: dict, target: int) -> bool:
     return True
 
 
-def _position_delete_matches(
+class RowLevelPlan(NamedTuple):
+    """A planned row-level change whose data and delete files are
+    already written; the Table commits it. Copy-on-write: `files` is the
+    rewritten live set (survivors + rewritten + inserted). Merge-on-read:
+    `files` are the delete and data files the row delta adds,
+    `superseded` the prior deletion vectors it folds (the commit marks
+    them DELETED) and `targets` the data files its deletes reference
+    (the commit validates they are still live). `summary` goes into the
+    snapshot summary; `counts` follow the snapshot id in the Table
+    method's result."""
+
+    files: list[DataFile]
+    summary: dict[str, str]
+    counts: tuple[int, ...]
+    superseded: list[DataFile] = []
+    targets: set[str] = set()
+
+
+def write_delete_matches(
     spark: SparkSession,
     md: dict,
-    data_files: list[DataFile],
+    matched: DataFrame,
     delete_files: list[DataFile],
-    predicate: str,
-) -> DataFrame:
-    """(file_path, pos) of live rows matching `predicate`: the shared
-    front half of merge-on-read DELETE planning (parquet position-delete
-    AND deletion-vector outputs). Rows already equality- or
-    position-deleted are excluded so they are neither double-counted
-    nor re-recorded."""
-    schema = read_schema_for(spark, md)
-    tagged = table_file_scan(
-        spark,
-        md,
-        schema,
-        [f.file_path for f in data_files],
-        tag_cols=(("__file", "path"), ("__dpos", "pos")),
-    )
-    eq = [f for f in delete_files if f.content == 2]
-    if eq:
-        # rows already equality-deleted are invisible: don't recount or
-        # re-record them as position deletes
-        tagged = apply_equality_deletes(
-            spark, tagged, eq, md, {f.file_path: f.sequence_number for f in data_files}
-        )
-    matches = tagged.filter(F.expr(predicate)).select(
+    deletion_vectors: bool,
+) -> tuple[list[DataFile], int, list[DataFile], set[str]] | None:
+    """The one delete writer under every merge-on-read plan: the
+    `(__file, __dpos)` tags of `matched` (live_row_scan rows that match)
+    become delete files, and no data file is read beyond that scan or
+    rewritten. Returns (new delete DataFiles, rows newly deleted,
+    superseded prior vectors, referenced data-file paths) or None when
+    nothing matched.
+
+    Parquet tuples (`deletion_vectors=False`): one hash-agg job yields
+    the count and the referenced file set (metadata-scale: one row per
+    touched file), then the tuples are written globally sorted by
+    (file_path, pos) — the spec's required delete-file ordering — via
+    ONE repartitionByRange of just the tuples, with the spec's reserved
+    field ids. Parquet deletes stack by design: nothing is superseded.
+
+    DELETION VECTORS (Iceberg v3): each referenced data file gets a
+    64-bit roaring bitmap of its deleted positions, serialized ON THE
+    EXECUTORS (one applyInPandas per file group — only the compact
+    vectors reach the driver) and co-located in ONE Puffin file whose
+    per-blob spans land in the manifest entries (fields 143-145).
+    FOLD-ON-WRITE (the spec's one-DV-per-file invariant): a data file's
+    prior live vectors are unioned into its new one and returned as
+    superseded, so a spec-conforming reader, which treats a file's DV as
+    its COMPLETE delete set, never resurrects earlier deletes. The
+    decode+union is driver-side but metadata-scale: only files receiving
+    NEW deletes are touched."""
+    matches = matched.select(
         F.col("__file").alias("file_path"), F.col("__dpos").alias("pos")
     )
-    pos_files = [f for f in delete_files if f.content == 1]
-    if pos_files:
-        dels = read_position_deletes(spark, pos_files)
-        if sum(f.record_count for f in pos_files) <= BROADCAST_DELETE_ROWS:
-            dels = F.broadcast(dels)
-        matches = matches.join(dels, ["file_path", "pos"], "left_anti")
-    return matches
+    if not deletion_vectors:
+        per_file = matches.groupBy("file_path").count().collect()
+        n_deleted = sum(r["count"] for r in per_file)
+        if n_deleted == 0:
+            return None
+        out_dir = os.path.join(md["location"], "data", f"deletes-{uuid.uuid4().hex}")
+        n_parts = max(1, min(64, -(-n_deleted // 5_000_000)))
+        (
+            matches.repartitionByRange(n_parts, "file_path", "pos")
+            .sortWithinPartitions("file_path", "pos")
+            .select(*_pos_delete_write_cols())
+            .write.parquet(out_dir)
+        )
+        new_deletes = [
+            DataFile(
+                file_path=f.file_path,
+                file_size_in_bytes=f.file_size_in_bytes,
+                record_count=f.record_count,
+                partition={},
+                content=1,
+            )
+            for f in _scan_written_files(out_dir, [])
+        ]
+        return new_deletes, n_deleted, [], {r["file_path"] for r in per_file}
 
+    import numpy as np
 
-def plan_deletion_vectors(
-    spark: SparkSession,
-    md: dict,
-    data_files: list[DataFile],
-    delete_files: list[DataFile],
-    predicate: str,
-) -> tuple[list[DataFile], int, list[DataFile], set[str]] | None:
-    """Merge-on-read DELETE planning with DELETION-VECTOR output
-    (Iceberg v3 "Deletion Vectors" as a v2 engine extension): instead of
-    a globally-sorted parquet of (file_path, pos) tuples, each
-    referenced data file gets a 64-bit roaring bitmap of its deleted
-    positions, serialized ON THE EXECUTORS (one applyInPandas per file
-    group — only the compact vectors reach the driver, never the
-    positions) and co-located in ONE Puffin file whose per-blob spans
-    land in the manifest entries (fields 143-145). Read-side cost: a
-    DV is a seek+read of exactly its blob, and subtraction stays the
-    same anti-join via read_position_deletes' distributed expansion.
-
-    FOLD-ON-WRITE (the v3 spec's one-DV-per-file writer invariant):
-    when a data file already has a live deletion vector, the new
-    vector is the UNION of the prior bitmap(s) and the new matches,
-    and the superseded entries are returned so the commit can mark
-    them DELETED in the same snapshot — a spec-conforming external
-    reader (which treats a file's DV as its COMPLETE delete set, not
-    one layer of a stack) therefore never resurrects previously
-    deleted rows. Decode+union is driver-side but metadata-scale:
-    only files receiving NEW deletes are touched, and a roaring
-    bitmap is KBs per million positions. Returns (new delete
-    DataFiles, rows NEWLY deleted, superseded prior DV DataFiles,
-    referenced data-file paths — the commit validates they are still
-    live) or None."""
-    if not data_files:
-        return None
-    matches = _position_delete_matches(spark, md, data_files, delete_files, predicate)
-    return deletion_vectors_from_matches(spark, md, matches, delete_files)
-
-
-def deletion_vectors_from_matches(
-    spark: SparkSession,
-    md: dict,
-    matches: DataFrame,
-    delete_files: list[DataFile],
-) -> tuple[list[DataFile], int, list[DataFile], set[str]] | None:
-    """The back half of DV planning, shared by predicate deletes,
-    MoR updates, and MoR MERGE on v3 tables: turn a (file_path, pos)
-    matches DataFrame into per-file roaring vectors in one Puffin file,
-    folding prior live vectors (one-DV-per-file). Returns the same
-    4-tuple as plan_deletion_vectors."""
+    from .puffin import read_deletion_vector_span, write_deletion_vector_file
     from .roaring import deserialize_64, serialize_64
 
     def to_vec(key, pdf):
@@ -4134,10 +4074,6 @@ def deletion_vectors_from_matches(
     if not vecs:
         return None
     n_deleted = sum(r["card"] for r in vecs)
-    from .puffin import read_deletion_vector_span, write_deletion_vector_file
-
-    # fold-on-write: union each prior live vector into the new one so
-    # exactly ONE DV per data file stays live after the commit
     new_paths = {r["file_path"] for r in vecs}
     prior_by_file: dict[str, list[DataFile]] = {}
     for f in delete_files:
@@ -4149,8 +4085,6 @@ def deletion_vectors_from_matches(
         vec, card = bytes(r["vec"]), r["card"]
         priors = prior_by_file.get(r["file_path"])
         if priors:
-            import numpy as np
-
             merged = deserialize_64(vec)
             for pf in priors:
                 merged = np.union1d(
@@ -4184,55 +4118,57 @@ def deletion_vectors_from_matches(
     return new_deletes, n_deleted, superseded, set(dvs)
 
 
+def _plan_mor_delete(
+    spark: SparkSession,
+    md: dict,
+    data_files: list[DataFile],
+    delete_files: list[DataFile],
+    predicate: str,
+    deletion_vectors: bool,
+) -> RowLevelPlan | None:
+    """Merge-on-read DELETE: the live rows matching the bare predicate
+    (filtered in the Parquet scan, already-deleted rows subtracted)
+    written by write_delete_matches."""
+    if not data_files:
+        return None
+    matched = live_row_scan(spark, md, data_files, delete_files, where=predicate)
+    written = write_delete_matches(spark, md, matched, delete_files, deletion_vectors)
+    if written is None:
+        return None
+    new_deletes, n_deleted, superseded, targets = written
+    summary = {"deleted-records": str(n_deleted)}
+    if deletion_vectors:
+        summary["added-dvs"] = str(len(new_deletes))
+    return RowLevelPlan(new_deletes, summary, (n_deleted,), superseded, targets)
+
+
 def plan_position_delete(
     spark: SparkSession,
     md: dict,
     data_files: list[DataFile],
     delete_files: list[DataFile],
     predicate: str,
-) -> tuple[list[DataFile], int, list[DataFile], set[str]] | None:
-    """Merge-on-read DELETE planning: TWO Spark jobs regardless of table
-    size — (1) count the live rows matching the bare predicate (filter
-    pushes into the Parquet scan; rows already position-deleted are
-    anti-joined out so they are neither double-counted nor re-recorded),
-    (2) write the (file_path, pos) matches as position-delete Parquet,
-    globally sorted by (file_path, pos) via ONE repartitionByRange of
-    just the delete tuples — the spec's required delete-file ordering.
-    No data file is read beyond the predicate scan and none is
-    rewritten. Returns (new delete DataFiles, rows deleted, superseded
-    prior files — always [] here, parquet deletes stack by design,
-    referenced data-file paths — the commit validates they are still
-    live) or None."""
-    if not data_files:
-        return None
-    matches = _position_delete_matches(spark, md, data_files, delete_files, predicate)
-    # one hash-agg job yields BOTH the total and the referenced file set
-    # (metadata-scale: one row per touched file) — the commit validates
-    # those files are still live (validateDataFilesExist)
-    per_file = matches.groupBy("file_path").count().collect()
-    n_deleted = sum(r["count"] for r in per_file)
-    targets = {r["file_path"] for r in per_file}
-    if n_deleted == 0:
-        return None
-    out_dir = os.path.join(md["location"], "data", f"deletes-{uuid.uuid4().hex}")
-    n_parts = max(1, min(64, -(-n_deleted // 5_000_000)))
-    (
-        matches.repartitionByRange(n_parts, "file_path", "pos")
-        .sortWithinPartitions("file_path", "pos")
-        .select(*_pos_delete_write_cols())
-        .write.parquet(out_dir)
-    )
-    new_deletes = [
-        DataFile(
-            file_path=f.file_path,
-            file_size_in_bytes=f.file_size_in_bytes,
-            record_count=f.record_count,
-            partition={},
-            content=1,
-        )
-        for f in _scan_written_files(out_dir, [])
-    ]
-    return new_deletes, n_deleted, [], targets
+) -> RowLevelPlan | None:
+    """Merge-on-read DELETE planning with parquet position-delete
+    output: two Spark jobs regardless of table size (the count over the
+    predicate scan, then the sorted tuple write). No data file is read
+    beyond the predicate scan and none is rewritten."""
+    return _plan_mor_delete(spark, md, data_files, delete_files, predicate, False)
+
+
+def plan_deletion_vectors(
+    spark: SparkSession,
+    md: dict,
+    data_files: list[DataFile],
+    delete_files: list[DataFile],
+    predicate: str,
+) -> RowLevelPlan | None:
+    """Merge-on-read DELETE planning with DELETION-VECTOR output (Iceberg
+    v3 "Deletion Vectors", also allowed on v2 as an engine extension):
+    one roaring bitmap per referenced data file in a single Puffin file,
+    folded with the file's prior vector. A reader seeks exactly one blob
+    per file."""
+    return _plan_mor_delete(spark, md, data_files, delete_files, predicate, True)
 
 
 def hive_data_files(
@@ -4794,7 +4730,6 @@ def _equality_pre_images(
     spark: SparkSession,
     md: dict,
     s: dict,
-    schema,
     keys: DataFrame,
     key_fields: list[dict],
     with_lineage: bool,
@@ -4823,35 +4758,19 @@ def _equality_pre_images(
     parent_data, parent_deletes = plan_scan_metadata(
         md, parent, column_range=column_range or None
     )[:2]
-    if not parent_data:
-        out = StructType(
-            list(schema.fields) + (lineage_read_fields() if with_lineage else [])
-        )
-        return spark.createDataFrame(spark.sparkContext.emptyRDD(), out)
-    tagged = _tagged_live_scan(
-        spark,
-        schema,
-        [f_.file_path for f_ in parent_data],
-        parent_deletes,
-        md,
-        parent_data,
-        lineage=with_lineage,
+    tagged = live_row_scan(
+        spark, md, parent_data, parent_deletes, lineage=with_lineage
     )
-    if with_lineage:
-        tagged = carry_lineage(spark, tagged, parent_data)
     cond = None
     for n in names:
         c = tagged[n].eqNullSafe(keys[n])
         cond = c if cond is None else (cond & c)
     pre = tagged.join(F.broadcast(keys), cond, "left_semi")
-    out_cols = [f_.name for f_ in schema.fields] + (
-        [ROW_ID_COL, LAST_UPDATED_COL] if with_lineage else []
-    )
-    return pre.select(*out_cols)
+    return pre.drop(*ROW_TAGS)
 
 
 def _cow_changelog_via_lineage(
-    spark: SparkSession, md: dict, s: dict, schema, cols, tag
+    spark: SparkSession, md: dict, s: dict, tag
 ) -> list[DataFrame]:
     """Row-level changes of a COPY-ON-WRITE overwrite snapshot,
     recovered through v3 row lineage: only the files the rewrite
@@ -4881,22 +4800,6 @@ def _cow_changelog_via_lineage(
             f"{sid}: {len(lineage_blind)} touched file(s) predate row "
             "lineage (no first_row_id) — rewrite them (compaction) first"
         )
-    out_cols = cols + [ROW_ID_COL, LAST_UPDATED_COL]
-
-    def _lineage_rows(files: list[DataFile], deletes: list[DataFile]) -> DataFrame:
-        if not files:
-            empty = StructType(list(schema.fields) + lineage_read_fields())
-            return spark.createDataFrame(spark.sparkContext.emptyRDD(), empty)
-        tagged = _tagged_live_scan(
-            spark,
-            schema,
-            [f.file_path for f in files],
-            deletes,
-            md,
-            files,
-            lineage=True,
-        )
-        return carry_lineage(spark, tagged, files).select(*out_cols)
 
     # pre-images: the removed files' LIVE rows at the parent (deletes
     # restricted to files the rewrite touched apply; survivors' deletes
@@ -4909,8 +4812,8 @@ def _cow_changelog_via_lineage(
         or (f.is_deletion_vector and f.referenced_data_file in removed_set)
         or (f.content == 1 and not f.is_deletion_vector)
     ]
-    old_rows = _lineage_rows(removed, rel_deletes)
-    new_rows = _lineage_rows(added, [])
+    old_rows = live_row_scan(spark, md, removed, rel_deletes, lineage=True)
+    new_rows = live_row_scan(spark, md, added, lineage=True)
     seq = s["sequence-number"]
     old_ids = old_rows.select(ROW_ID_COL)
     new_ids = new_rows.select(ROW_ID_COL)
@@ -4922,12 +4825,10 @@ def _cow_changelog_via_lineage(
     updated_old = old_rows.join(
         updated_new.select(ROW_ID_COL), ROW_ID_COL, "left_semi"
     )
-    out: list[DataFrame] = []
-    dels = vanished.unionByName(updated_old)
-    ins = fresh.unionByName(updated_new)
-    out.append(tag(dels.select(*dels.columns), "delete", s))
-    out.append(tag(ins.select(*ins.columns), "insert", s))
-    return out
+    return [
+        tag(vanished.unionByName(updated_old), "delete", s),
+        tag(fresh.unionByName(updated_new), "insert", s),
+    ]
 
 
 def read_changelog(
@@ -5077,9 +4978,7 @@ def read_changelog(
                     f"snapshot {sid} — on a format-version 3 table, "
                     "with_lineage=True recovers it via _row_id diffing"
                 )
-            cow_parts = _cow_changelog_via_lineage(
-                spark, md, s, schema, cols, tag
-            )
+            cow_parts = _cow_changelog_via_lineage(spark, md, s, tag)
             if row_scope is not None:
                 cow_parts = [p.where(row_scope) for p in cow_parts]
             parts.extend(cow_parts)
@@ -5135,35 +5034,21 @@ def read_changelog(
                     .distinct()
                     .collect()
                 }
-            scan_schema = (
-                StructType(list(schema.fields) + lineage_read_fields())
+            # identity of the deleted rows (lineage only): first_row_id
+            # of their PARENT files, one data-manifest walk
+            parent_files = (
+                [f for f in live_files(md, parent)[0] if f.file_path in ref_paths]
                 if with_lineage
-                else schema
+                else []
             )
-            tagged = table_file_scan(
-                spark,
-                md,
-                scan_schema,
-                sorted(ref_paths),
-                tag_cols=(("__dfile", "path"), ("__dpos", "pos")),
+            rows = live_row_scan(
+                spark, md, parent_files, paths=sorted(ref_paths), lineage=with_lineage
             )
-            hit = tagged.join(
+            hit = rows.join(
                 dels,
-                (tagged["__dfile"] == dels["file_path"])
-                & (tagged["__dpos"] == dels["pos"]),
+                (rows["__file"] == dels["file_path"]) & (rows["__dpos"] == dels["pos"]),
                 "left_semi",
             )
-            if with_lineage:
-                # identity of the deleted rows: first_row_id of their
-                # PARENT files (one data-manifest walk, lineage only)
-                parent_files = [
-                    f
-                    for f in live_files(md, parent)[0]
-                    if f.file_path in ref_paths
-                ]
-                hit = carry_lineage(
-                    spark, hit, parent_files, file_col="__dfile"
-                )
             if row_scope is not None:
                 hit = hit.where(row_scope)
             parts.append(tag(hit, "delete", s))
@@ -5179,7 +5064,7 @@ def read_changelog(
             keys = spark.read.schema(key_schema).parquet(f.file_path)
             if full_pre_images:
                 pre = _equality_pre_images(
-                    spark, md, s, schema, keys, key_fields, with_lineage
+                    spark, md, s, keys, key_fields, with_lineage
                 )
                 if row_scope is not None:
                     pre = pre.where(row_scope)
@@ -5205,17 +5090,7 @@ def read_changelog(
                 widened = widened.where(key_scope)
             parts.append(tag(widened, "delete_key", s))
         if data and op in ("append", "overwrite"):
-            if with_lineage:
-                ins = table_file_scan(
-                    spark,
-                    md,
-                    StructType(list(schema.fields) + lineage_read_fields()),
-                    [f.file_path for f in data],
-                    tag_cols=(("__file", "path"), ("__dpos", "pos")),
-                )
-                ins = carry_lineage(spark, ins, data).drop("__file", "__dpos")
-            else:
-                ins = table_file_scan(spark, md, schema, [f.file_path for f in data])
+            ins = live_row_scan(spark, md, data, lineage=with_lineage)
             if row_scope is not None:
                 ins = ins.where(row_scope)
             parts.append(tag(ins, "insert", s))
@@ -5506,24 +5381,12 @@ def plan_rewrite(
         else:
             by_part.setdefault(tuple(sorted(f.partition.items())), []).append(f)
 
+    delete_files = delete_files or []
     survivors: list[DataFile] = []
-    rewritten: list[DataFile] = []
-    n_compacted = 0
-    if migrate:
-        mig_df = _tagged_live_scan(
-            spark,
-            read_schema_for(spark, md),
-            [f.file_path for f in migrate],
-            delete_files or [],
-            md,
-            live,
-            lineage=table_format_version(md) >= 3,
-        )
-        if table_format_version(md) >= 3:
-            mig_df = carry_lineage(spark, mig_df, live)
-        mig_df = mig_df.drop("__file", "__dpos")
-        rewritten.extend(write_partitioned_batch(mig_df, md["location"], md))
-        n_compacted += len(migrate)
+    _, rewritten = _rewrite_files(
+        spark, md, live, delete_files, {f.file_path for f in migrate}
+    )
+    n_compacted = len(migrate)
     for part_key, files in sorted(by_part.items()):
         small = [f for f in files if f.file_size_in_bytes < target_bytes]
         if len(small) < min_files:
@@ -5534,21 +5397,16 @@ def plan_rewrite(
         # pending deletes (position AND equality) on the compacted files
         # are MATERIALIZED by the rewrite (the new files simply omit
         # those rows); survivors keep their original sequence numbers,
-        # so still-live delete files keep applying to exactly them
-        part_df = _tagged_live_scan(
+        # so still-live delete files keep applying to exactly them; on
+        # v3 the rewrite materializes lineage, preserving row identity
+        part_df = live_row_scan(
             spark,
-            read_schema_for(spark, md),
-            [f.file_path for f in small],
-            delete_files or [],
             md,
             live,
+            delete_files,
+            paths=[f.file_path for f in small],
             lineage=table_format_version(md) >= 3,
-        )
-        if table_format_version(md) >= 3:
-            # compaction preserves row identity (v3 spec: rewrites
-            # materialize lineage for carried rows)
-            part_df = carry_lineage(spark, part_df, live)
-        part_df = part_df.drop("__file", "__dpos")
+        ).drop(*ROW_TAGS)
         part_df = with_field_ids(part_df, md).coalesce(1)
         if zorder_by:
             from ..operators.layout import sort_by_zorder
@@ -5652,20 +5510,80 @@ def plan_partition_overwrite(
     return replaced, survivors, deletes
 
 
+def _rewrite_files(
+    spark: SparkSession,
+    md: dict,
+    live: list[DataFile],
+    delete_files: list[DataFile],
+    hit: set[str],
+    transform=None,
+    updated=None,
+) -> tuple[list[DataFile], list[DataFile]]:
+    """The one copy-on-write rewrite under DELETE, UPDATE, MERGE, the
+    delete folds and spec migration: exactly the `hit` files are read
+    with every delete applied (live_row_scan), passed through
+    `transform` (a DataFrame -> DataFrame over the table's columns),
+    and written in ONE hidden-partitioned job; every other live file
+    survives by reference. On v3 tables carried rows keep their row
+    identity (the rewrite materializes _row_id/_last_updated; `updated`
+    marks the rows this commit modifies, see live_row_scan). Returns
+    (survivors, rewritten files)."""
+    survivors = [f for f in live if f.file_path not in hit]
+    if not hit:
+        return survivors, []
+    rows = live_row_scan(
+        spark,
+        md,
+        live,
+        delete_files,
+        paths=sorted(hit),
+        lineage=table_format_version(md) >= 3,
+        updated=updated,
+    ).drop(*ROW_TAGS)
+    if transform is not None:
+        rows = transform(rows)
+    return survivors, write_partitioned_batch(rows, md["location"], md)
+
+
+def _rows_per_file(matched: DataFrame) -> dict[str, int]:
+    """{data file: matched rows} of tagged rows — one aggregation job;
+    only paths and counts reach the driver."""
+    return {r["__file"]: r["count"] for r in matched.groupBy("__file").count().collect()}
+
+
+def _set_columns(rows: DataFrame, set_exprs: dict[str, str], matched=None) -> DataFrame:
+    """UPDATE's SET: each target column becomes its expression, cast to
+    the column's type — only on `matched` rows when given (CASE WHEN, so
+    other rows pass through byte-identical values)."""
+    types = {f_.name: f_.dataType for f_ in rows.schema.fields}
+    return rows.withColumns(
+        {
+            n: F.expr(e).cast(types[n])
+            if matched is None
+            else F.when(matched, F.expr(e).cast(types[n])).otherwise(F.col(n))
+            for n, e in set_exprs.items()
+        }
+    )
+
+
+def _sql_matched(predicate: str):
+    """True where `predicate` holds; rows where it evaluates NULL do not
+    match (SQL DML semantics)."""
+    return F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
+
+
 def plan_delete(
     spark: SparkSession,
     md: dict,
     live: list[DataFile],
     predicate: str,
     delete_files: list[DataFile] | None = None,
-) -> tuple[list[DataFile], int, int] | None:
-    """Transport-neutral copy-on-write DELETE planning in TWO Spark jobs
-    total, regardless of file count: (1) one scan tagged with
-    input_file_name counts matches per file — only paths and counts
-    reach the driver; (2) one partitioned rewrite of the kept rows from
-    exactly the files that contained matches (untouched files survive
-    by reference). Returns (replacement file set, n_deleted,
-    n_rewritten) or None when nothing matched.
+) -> RowLevelPlan | None:
+    """Copy-on-write DELETE planning in TWO Spark jobs total, regardless
+    of file count: (1) the live-row scan filtered by the bare predicate
+    counts matches per file; (2) _rewrite_files rewrites exactly the
+    files that contained matches without them. Returns a RowLevelPlan,
+    or None when nothing matched.
 
     SQL DELETE semantics: rows where the predicate evaluates NULL are
     NOT matched — they are kept. The match scan filters on the BARE
@@ -5676,28 +5594,25 @@ def plan_delete(
     if not live:
         return None
     delete_files = delete_files or []
-    schema = read_schema_for(spark, md)
-    tagged = _tagged_live_scan(
-        spark, schema, [f.file_path for f in live], delete_files, md, live
+    hits = _rows_per_file(
+        live_row_scan(spark, md, live, delete_files, where=predicate)
     )
-    stats = tagged.filter(F.expr(predicate)).groupBy("__file").count().collect()
-    if not stats:
+    if not hits:
         return None
-    hit_paths = {r["__file"] for r in stats}
-    n_deleted = sum(r["count"] for r in stats)
-    survivors = [f for f in live if f.file_path not in hit_paths]
-    lineage = table_format_version(md) >= 3
-    keep = _tagged_live_scan(
-        spark, schema, sorted(hit_paths), delete_files, md, live, lineage=lineage
+    n_deleted = sum(hits.values())
+    survivors, rewritten = _rewrite_files(
+        spark,
+        md,
+        live,
+        delete_files,
+        set(hits),
+        lambda rows: rows.filter(~_sql_matched(predicate)),
     )
-    if lineage:
-        # v3: carried rows keep their identity across the rewrite
-        keep = carry_lineage(spark, keep, live)
-    keep = keep.filter(
-        ~F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
-    ).drop("__file", "__dpos")
-    rewritten = write_partitioned_batch(keep, md["location"], md)
-    return survivors + rewritten, n_deleted, len(rewritten)
+    return RowLevelPlan(
+        survivors + rewritten,
+        {"deleted-records": str(n_deleted), "rewritten-data-files": str(len(rewritten))},
+        (n_deleted,),
+    )
 
 
 def plan_merge(
@@ -5707,56 +5622,42 @@ def plan_merge(
     source: DataFrame,
     key_cols: list[str],
     delete_files: list[DataFile] | None = None,
-) -> tuple[list[DataFile], int, int]:
-    """Transport-neutral copy-on-write MERGE (keyed upsert) planning:
-    rows in `source` replace same-key rows; unmatched source rows are
-    inserted. Returns (replacement file set, n_updated, n_inserted) and
-    WRITES the rewritten + inserted Parquet files; the caller owns the
-    overwrite COMMIT.
-
-    Distributed shape: ONE scan of the live files tagged with
-    input_file_name, semi-joined against the (broadcastable) distinct
-    source keys, resolves which files contain matches — only file PATHS
-    reach the driver, and only those files are rewritten (anti-join
-    dropping the matched keys). The source lands as fresh
-    hidden-partitioned files via the normal append writer. Cost tracks
-    files-containing-matches + source size, never the table."""
+) -> RowLevelPlan:
+    """Copy-on-write MERGE (keyed upsert) planning: rows in `source`
+    replace same-key rows; unmatched source rows are inserted. The live
+    rows semi-joined against the (broadcast) distinct source keys give
+    the files containing matches (paths only to the driver); exactly
+    those are rewritten without the matched keys, and the source lands
+    as fresh hidden-partitioned files. Matched rows are replaced by
+    inserts with FRESH row ids — CoW MERGE is delete+insert per spec.
+    Cost tracks files-containing-matches + source size, never the
+    table."""
     delete_files = delete_files or []
-    schema = read_schema_for(spark, md)
     keys = source.select(*key_cols).distinct()
-    n_updated = 0
     n_inserted = source.count()
-    hit_paths: set[str] = set()
+    hits: dict[str, int] = {}
     if live:
-        tbl = _tagged_live_scan(
-            spark, schema, [f.file_path for f in live], delete_files, md, live
-        )
-        matched = tbl.join(F.broadcast(keys), key_cols, "semi")
-        stats = matched.groupBy("__file").count().collect()  # paths only
-        hit_paths = {r["__file"] for r in stats}
-        n_updated = sum(r["count"] for r in stats)
-        tbl_keys = tbl.select(*key_cols).distinct()
-        n_inserted -= source.join(tbl_keys, key_cols, "left_semi").count()
-
-    survivors = [f for f in live if f.file_path not in hit_paths]
-    rewritten: list[DataFile] = []
-    if hit_paths:
-        # ONE partitioned rewrite job for every file containing matches
-        lineage = table_format_version(md) >= 3
-        keep = _tagged_live_scan(
-            spark, schema, sorted(hit_paths), delete_files, md, live, lineage=lineage
-        )
-        if lineage:
-            # carried (unmatched) rows keep their identity; matched rows
-            # are replaced by the source inserts, which get FRESH ids —
-            # CoW MERGE is delete+insert per spec
-            keep = carry_lineage(spark, keep, live)
-        keep = keep.drop("__file", "__dpos").join(F.broadcast(keys), key_cols, "anti")
-        rewritten = write_partitioned_batch(keep, md["location"], md)
-    inserted_files = write_partitioned_batch(
-        source.select(*[f_.name for f_ in schema.fields]), md["location"], md
+        rows = live_row_scan(spark, md, live, delete_files)
+        hits = _rows_per_file(rows.join(F.broadcast(keys), key_cols, "semi"))
+        table_keys = rows.select(*key_cols).distinct()
+        n_inserted -= source.join(table_keys, key_cols, "left_semi").count()
+    n_updated = sum(hits.values())
+    survivors, rewritten = _rewrite_files(
+        spark,
+        md,
+        live,
+        delete_files,
+        set(hits),
+        lambda rows: rows.join(F.broadcast(keys), key_cols, "anti"),
     )
-    return survivors + rewritten + inserted_files, n_updated, n_inserted
+    inserted = write_partitioned_batch(
+        source.select(*read_schema_for(spark, md).fieldNames()), md["location"], md
+    )
+    return RowLevelPlan(
+        survivors + rewritten + inserted,
+        {"merged-records": str(n_updated), "inserted-records": str(n_inserted)},
+        (n_updated, n_inserted),
+    )
 
 
 def plan_update(
@@ -5766,56 +5667,39 @@ def plan_update(
     predicate: str,
     set_exprs: dict[str, str],
     delete_files: list[DataFile] | None = None,
-) -> tuple[list[DataFile], int, int] | None:
-    """Transport-neutral copy-on-write UPDATE planning (SQL `UPDATE SET
-    ... WHERE ...`), same two-job shape as plan_delete: (1) one tagged
-    scan counts matches per file — only paths/counts reach the driver;
-    (2) exactly the files containing matches are rewritten with the SET
-    expressions applied to matching rows (CASE WHEN, so non-matching
-    rows in the same file pass through byte-identical values). Untouched
-    files survive by reference. Rows where the predicate evaluates NULL
-    are NOT updated, per SQL semantics. SET may target the partition
-    source column — rewritten rows then land in their new partitions
-    (the partitioned writer re-derives the transform). Returns
-    (replacement file set, n_updated, n_rewritten) or None."""
+) -> RowLevelPlan | None:
+    """Copy-on-write UPDATE planning (SQL `UPDATE SET ... WHERE ...`),
+    plan_delete's two-job shape: the predicate scan counts matches per
+    file, then exactly those files are rewritten with the SET
+    expressions applied to matching rows. Rows where the predicate
+    evaluates NULL are NOT updated. SET may target the partition source
+    column — rewritten rows then land in their new partitions. Updated
+    rows keep _row_id and leave _last_updated to the commit's sequence
+    number. Returns a RowLevelPlan or None."""
     if not live:
         return None
-    unknown = set(set_exprs) - {f_.name for f_ in spark_read_schema(md).fields}
-    if unknown:
-        raise ValueError(f"SET targets unknown column(s): {sorted(unknown)}")
     delete_files = delete_files or []
-    schema = read_schema_for(spark, md)
-    tagged = _tagged_live_scan(
-        spark, schema, [f.file_path for f in live], delete_files, md, live
+    hits = _rows_per_file(
+        live_row_scan(spark, md, live, delete_files, where=predicate)
     )
-    stats = tagged.filter(F.expr(predicate)).groupBy("__file").count().collect()
-    if not stats:
+    if not hits:
         return None
-    hit_paths = {r["__file"] for r in stats}
-    n_updated = sum(r["count"] for r in stats)
-    survivors = [f for f in live if f.file_path not in hit_paths]
-    matched = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
-    cols = [
-        F.when(matched, F.expr(set_exprs[f_.name]).cast(f_.dataType))
-        .otherwise(F.col(f_.name))
-        .alias(f_.name)
-        if f_.name in set_exprs
-        else F.col(f_.name)
-        for f_ in schema.fields
-    ]
-    lineage = table_format_version(md) >= 3
-    keep = _tagged_live_scan(
-        spark, schema, sorted(hit_paths), delete_files, md, live, lineage=lineage
+    n_updated = sum(hits.values())
+    matched = _sql_matched(predicate)
+    survivors, rewritten = _rewrite_files(
+        spark,
+        md,
+        live,
+        delete_files,
+        set(hits),
+        lambda rows: _set_columns(rows, set_exprs, matched),
+        updated=matched,
     )
-    if lineage:
-        # updated rows keep _row_id, get the commit's sequence number as
-        # _last_updated (evaluated over PRE-update values); carried rows
-        # keep both
-        keep = carry_lineage(spark, keep, live, updated=matched)
-        cols = cols + [F.col(ROW_ID_COL), F.col(LAST_UPDATED_COL)]
-    keep = keep.drop("__file", "__dpos").select(*cols)
-    rewritten = write_partitioned_batch(keep, md["location"], md)
-    return survivors + rewritten, n_updated, len(rewritten)
+    return RowLevelPlan(
+        survivors + rewritten,
+        {"updated-records": str(n_updated), "rewritten-data-files": str(len(rewritten))},
+        (n_updated,),
+    )
 
 
 def plan_update_mor(
@@ -5825,59 +5709,42 @@ def plan_update_mor(
     delete_files: list[DataFile],
     predicate: str,
     set_exprs: dict[str, str],
-    delete_plan_fn=None,
-) -> tuple[list[DataFile], int, list[DataFile], set[str]] | None:
+    deletion_vectors: bool = False,
+) -> RowLevelPlan | None:
     """Merge-on-read UPDATE planning (Iceberg row-delta): the matching
-    rows' (file_path, pos) tuples become a position-delete file AND
-    their updated copies append as fresh hidden-partitioned data files —
-    NO existing data file is rewritten, cost tracks the matches. The
-    caller commits both file groups in ONE `overwrite` snapshot, so
-    readers atomically stop seeing the old versions and start seeing the
-    new. `delete_plan_fn` picks the physical delete form
-    (plan_position_delete parquet tuples by default;
-    plan_deletion_vectors for v3 DVs). Returns (new files: deletes +
-    data, n_updated, superseded prior DV files the commit must mark
-    DELETED — DV mode's fold-on-write, referenced data-file paths for
-    the commit's liveness validation) or None."""
+    rows' positions become delete files (write_delete_matches — parquet
+    tuples, or deletion vectors when `deletion_vectors`) AND their
+    updated copies append as fresh hidden-partitioned data files; NO
+    existing data file is rewritten, cost tracks the matches. The copies
+    keep their source rows' _row_id. The commit adds both file groups in
+    ONE `overwrite` snapshot, so readers atomically stop seeing the old
+    versions and start seeing the new. Returns a RowLevelPlan or None."""
     if not data_files:
         return None
-    unknown = set(set_exprs) - {f_.name for f_ in spark_read_schema(md).fields}
-    if unknown:
-        raise ValueError(f"SET targets unknown column(s): {sorted(unknown)}")
-    planned = (delete_plan_fn or plan_position_delete)(
-        spark, md, data_files, delete_files, predicate
-    )
-    if planned is None:
+    matched = live_row_scan(spark, md, data_files, delete_files, where=predicate)
+    written = write_delete_matches(spark, md, matched, delete_files, deletion_vectors)
+    if written is None:
         return None
-    new_deletes, n_updated, superseded, delete_targets = planned
-    schema = read_schema_for(spark, md)
-    lineage = table_format_version(md) >= 3
-    # every row in the matched scan matches: apply SET unconditionally
-    matched = _tagged_live_scan(
+    new_deletes, n_updated, superseded, targets = written
+    copies = live_row_scan(
         spark,
-        schema,
-        [f.file_path for f in data_files],
-        delete_files,
         md,
         data_files,
-        lineage=lineage,
+        delete_files,
+        where=predicate,
+        lineage=table_format_version(md) >= 3,
+        updated=F.lit(True),
+    ).drop(*ROW_TAGS)
+    new_data = write_partitioned_batch(
+        _set_columns(copies, set_exprs), md["location"], md
     )
-    if lineage:
-        # MoR UPDATE preserves _row_id too: the updated copies carry
-        # their source rows' ids, _last_updated = this commit's seq
-        matched = carry_lineage(spark, matched, data_files, updated=F.lit(True))
-    matched = matched.filter(F.expr(predicate)).drop("__file", "__dpos")
-    out_cols = [
-        F.expr(set_exprs[f_.name]).cast(f_.dataType).alias(f_.name)
-        if f_.name in set_exprs
-        else F.col(f_.name)
-        for f_ in schema.fields
-    ]
-    if lineage:
-        out_cols = out_cols + [F.col(ROW_ID_COL), F.col(LAST_UPDATED_COL)]
-    updated = matched.select(*out_cols)
-    new_data = write_partitioned_batch(updated, md["location"], md)
-    return new_deletes + new_data, n_updated, superseded, delete_targets
+    return RowLevelPlan(
+        new_deletes + new_data,
+        {"updated-records": str(n_updated)},
+        (n_updated,),
+        superseded,
+        targets,
+    )
 
 
 def plan_merge_mor(
@@ -5887,80 +5754,41 @@ def plan_merge_mor(
     delete_files: list[DataFile],
     source: DataFrame,
     key_cols: list[str],
-) -> tuple[list[DataFile], int, int]:
+) -> RowLevelPlan:
     """Merge-on-read MERGE planning (row-delta upsert): live rows whose
-    keys appear in the source get position-deleted, and the ENTIRE
-    source appends as fresh data files — old row versions are shadowed,
-    unmatched source rows insert, no data file is rewritten. On
-    format-version 3 tables the delete half is written as deletion
-    vectors (v3 forbids parquet position-delete files); on v2 it stays
-    spec-ordered position-delete parquet. Returns (new files: deletes +
-    data, n_updated, n_inserted, superseded prior DV files the commit
-    must mark DELETED — [] on v2, referenced data-file paths for the
-    commit's liveness validation)."""
-    schema = read_schema_for(spark, md)
+    keys appear in the source get deleted by position
+    (write_delete_matches) and the ENTIRE source appends as fresh data
+    files — old row versions are shadowed, unmatched source rows
+    insert, no data file is rewritten. Rows already deleted (by any
+    delete form) are not live, so they neither count as merged nor get
+    deleted again. On format-version 3 tables the delete half is
+    written as deletion vectors (v3 forbids parquet position-delete
+    files); on v2 it stays spec-ordered position-delete parquet."""
     keys = source.select(*key_cols).distinct()
     n_inserted = source.count()
-    new_deletes: list[DataFile] = []
-    superseded: list[DataFile] = []
-    n_updated = 0
-    delete_targets: set[str] = set()
+    written = None
     if data_files:
-        tagged = _tagged_live_scan(
-            spark, schema, [f.file_path for f in data_files], delete_files, md, data_files
-        )
-        # __file is already normalized; row position must be re-derived
-        # (dropped by _tagged_live_scan) — tag again for the delete tuples
-        tuples = table_file_scan(
+        rows = live_row_scan(spark, md, data_files, delete_files)
+        written = write_delete_matches(
             spark,
             md,
-            schema,
-            [f.file_path for f in data_files],
-            tag_cols=(("file_path", "path"), ("pos", "pos")),
-        ).select(*key_cols, "file_path", "pos")
-        pos_files = [f for f in delete_files if f.content == 1]
-        if pos_files:
-            dels = read_position_deletes(spark, pos_files)
-            if sum(f.record_count for f in pos_files) <= BROADCAST_DELETE_ROWS:
-                dels = F.broadcast(dels)
-            tuples = tuples.join(dels, ["file_path", "pos"], "left_anti")
-        matches = tuples.join(F.broadcast(keys), key_cols, "semi").select(
-            "file_path", "pos"
+            rows.join(F.broadcast(keys), key_cols, "semi"),
+            delete_files,
+            deletion_vectors=table_format_version(md) >= 3,
         )
-        per_file = matches.groupBy("file_path").count().collect()
-        n_updated = sum(r["count"] for r in per_file)
-        delete_targets = {r["file_path"] for r in per_file}
-        if n_updated and table_format_version(md) >= 3:
-            # v3: the delete half must be deletion vectors
-            planned = deletion_vectors_from_matches(spark, md, matches, delete_files)
-            if planned is not None:
-                new_deletes, _, superseded, dv_targets = planned
-                delete_targets |= dv_targets
-        elif n_updated:
-            out_dir = os.path.join(md["location"], "data", f"deletes-{uuid.uuid4().hex}")
-            n_parts = max(1, min(64, -(-n_updated // 5_000_000)))
-            (
-                matches.repartitionByRange(n_parts, "file_path", "pos")
-                .sortWithinPartitions("file_path", "pos")
-                .select(*_pos_delete_write_cols())
-                .write.parquet(out_dir)
-            )
-            new_deletes = [
-                DataFile(
-                    file_path=f.file_path,
-                    file_size_in_bytes=f.file_size_in_bytes,
-                    record_count=f.record_count,
-                    partition={},
-                    content=1,
-                )
-                for f in _scan_written_files(out_dir, [])
-            ]
-        tbl_keys = tagged.select(*key_cols).distinct()
-        n_inserted -= source.join(tbl_keys, key_cols, "left_semi").count()
+        table_keys = rows.select(*key_cols).distinct()
+        n_inserted -= source.join(table_keys, key_cols, "left_semi").count()
+    new_deletes, n_updated, superseded, targets = written or ([], 0, [], set())
     new_data = write_partitioned_batch(
-        source.select(*[f_.name for f_ in schema.fields]), md["location"], md
+        source.select(*read_schema_for(spark, md).fieldNames()), md["location"], md
     )
-    return new_deletes + new_data, n_updated, n_inserted, superseded, delete_targets
+    return RowLevelPlan(
+        new_deletes + new_data,
+        {"merged-records": str(n_updated), "inserted-records": str(n_inserted)},
+        (n_updated, n_inserted),
+        superseded,
+        targets,
+    )
 
 
 def plan_delete_rewrite(
@@ -5969,26 +5797,14 @@ def plan_delete_rewrite(
     live: list[DataFile],
     deletes: list[DataFile],
 ) -> tuple[list[DataFile], int]:
-    """Transport-neutral planning for rewrite_position_deletes: rewrite
-    exactly the data files referenced by live delete rows (deletes
+    """Planning for rewrite_position_deletes: rewrite exactly the data
+    files referenced by live delete rows (_rewrite_files, deletes
     applied), keep the rest by reference. Returns (replacement data-file
-    set — NO delete files — and n_rewritten); the caller owns the
-    replace commit."""
+    set — NO delete files — and n_rewritten)."""
     dels = read_position_deletes(spark, deletes)
     hit = {r["file_path"] for r in dels.select("file_path").distinct().collect()}
     hit &= {f.file_path for f in live}  # stale refs to rewritten files: skip
-    survivors = [f for f in live if f.file_path not in hit]
-    rewritten: list[DataFile] = []
-    if hit:
-        schema = read_schema_for(spark, md)
-        lineage = table_format_version(md) >= 3
-        keep = _tagged_live_scan(
-            spark, schema, sorted(hit), deletes, md, live, lineage=lineage
-        )
-        if lineage:
-            keep = carry_lineage(spark, keep, live)
-        keep = keep.drop("__file", "__dpos")
-        rewritten = write_partitioned_batch(keep, md["location"], md)
+    survivors, rewritten = _rewrite_files(spark, md, live, deletes, hit)
     return survivors + rewritten, len(rewritten)
 
 
@@ -5998,10 +5814,10 @@ def plan_equality_rewrite(
     live: list[DataFile],
     deletes: list[DataFile],
 ) -> tuple[list[DataFile], int] | None:
-    """Transport-neutral planning for rewrite_equality_deletes: find the
-    data files that contain rows matched by live equality deletes (one
-    scan — the eq-delete semi-join tags hit files, only paths reach the
-    driver), rewrite exactly those files with ALL deletes applied, and
+    """Planning for rewrite_equality_deletes: find the data files that
+    contain rows matched by live equality deletes (per-file row counts
+    with and without them — only paths reach the driver), rewrite
+    exactly those files with ALL deletes applied (_rewrite_files), and
     keep the rest by reference. Returns (replacement data-file set — no
     equality files, position-delete files retained for survivors — and
     n_rewritten), or None when no equality delete matches anything."""
@@ -6009,42 +5825,29 @@ def plan_equality_rewrite(
     pos = [f for f in deletes if f.content == 1]
     if not eq or not live:
         return None
-    schema = read_schema_for(spark, md)
-    seq_by_path = {f.file_path: f.sequence_number for f in live}
-    tagged = table_file_scan(
-        spark, md, schema, [f.file_path for f in live], tag_cols=(("__file", "path"),)
-    )
-    # rows the equality deletes REMOVE = tagged minus survivors; a hit
+    # rows the equality deletes REMOVE = all rows minus survivors; a hit
     # file is any file with at least one removed row. Rows already
     # position-deleted still count as hits — harmless (the rewrite
     # applies both kinds anyway).
-    kept = apply_equality_deletes(spark, tagged, eq, md, seq_by_path)
     removed_files = (
-        tagged.groupBy("__file")
+        live_row_scan(spark, md, live)
+        .groupBy("__file")
         .count()
         .join(
-            kept.groupBy("__file").agg(F.count(F.lit(1)).alias("kept_")),
+            live_row_scan(spark, md, live, eq)
+            .groupBy("__file")
+            .agg(F.count(F.lit(1)).alias("kept_")),
             "__file",
             "left",
         )
-        .filter(
-            F.coalesce(F.col("kept_"), F.lit(0)) < F.col("count")
-        )
+        .filter(F.coalesce(F.col("kept_"), F.lit(0)) < F.col("count"))
         .select("__file")
         .collect()
     )
     hit = {r["__file"] for r in removed_files}
     if not hit:
         return None
-    survivors = [f for f in live if f.file_path not in hit]
-    lineage = table_format_version(md) >= 3
-    keep = _tagged_live_scan(
-        spark, schema, sorted(hit), deletes, md, live, lineage=lineage
-    )
-    if lineage:
-        keep = carry_lineage(spark, keep, live)
-    keep = keep.drop("__file", "__dpos")
-    rewritten = write_partitioned_batch(keep, md["location"], md)
+    survivors, rewritten = _rewrite_files(spark, md, live, deletes, hit)
     # position deletes stay live for SURVIVING files; entries naming the
     # rewritten files are stale and match nothing
     return survivors + rewritten + pos, len(rewritten)
@@ -7528,13 +7331,8 @@ class Table:
             "replaced-records": str(sum(f.record_count for f in replaced)),
             **(snapshot_properties or {}),
         }
-        return self._commit_with_retry(
-            new_files + survivors + deletes,
-            operation="overwrite",
-            carry_forward=False,
-            extra_summary=summary,
-            expected_base_snapshot=planned_snapshot,
-            md=md,
+        return self._commit_replace(
+            md, planned_snapshot, new_files + survivors + deletes, summary
         )
 
     # -- K4: register existing Parquet files without copying ---------------
@@ -8166,66 +7964,17 @@ class Table:
         only ADDS a delete file, so it retries cleanly over concurrent
         appends; rows landing after planning are not covered (snapshot
         isolation, same as Iceberg's default)."""
-        if mode not in ("copy-on-write", "merge-on-read", "deletion-vectors"):
-            raise ValueError(
-                "mode must be copy-on-write|merge-on-read|deletion-vectors, "
-                f"got {mode!r}"
-            )
-        md = self.metadata()
-        planned_snapshot = resolve_dml_branch(md, branch, mode)
-        if planned_snapshot == -1:
-            return None, 0
-        if mode == "merge-on-read":
-            require_position_delete_files_allowed(md)
-        with self._credentialed_write(spark, md["location"]):
-            # predicate-derived pruning: files whose manifest bounds /
-            # partition values provably exclude every match never reach
-            # the Spark scan — a ts-bounded purge on a 100 TB table opens
-            # only the matching partitions (mirrors the reference's
-            # time-pruned recovery scan, internal/recovery/scanner.go:197-226)
-            live, excluded, deletes = plan_dml_files(
-                md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
-            )
+
+        def plan(md: dict, live: list[DataFile], deletes: list[DataFile]):
             if mode == "copy-on-write":
-                planned = plan_delete(spark, md, live, predicate, delete_files=deletes)
-            elif mode == "deletion-vectors":
-                planned = plan_deletion_vectors(spark, md, live, deletes, predicate)
-            else:
-                planned = plan_position_delete(spark, md, live, deletes, predicate)
-        if planned is None:
-            return None, 0
-        if mode in ("merge-on-read", "deletion-vectors"):
-            new_deletes, n_deleted, superseded, targets = planned
-            extra = {"deleted-records": str(n_deleted)}
+                return plan_delete(spark, md, live, predicate, delete_files=deletes)
             if mode == "deletion-vectors":
-                extra["added-dvs"] = str(len(new_deletes))
-            sid = self._commit_with_retry(
-                new_deletes,
-                operation="delete",
-                carry_forward=True,
-                extra_summary=extra,
-                branch=branch,
-                removed_files=superseded or None,
-                required_live_paths=targets or None,
-            )
-            return sid, n_deleted
-        replacement, n_deleted, n_rewritten = planned
-        sid = self._commit_with_retry(
-            # delete rows for SURVIVING files must stay live; entries for
-            # rewritten files are stale and match nothing; pruned-away
-            # files contain no matches so they survive by reference
-            replacement + excluded + deletes,
-            operation="overwrite",
-            carry_forward=False,
-            extra_summary={
-                "deleted-records": str(n_deleted),
-                "rewritten-data-files": str(n_rewritten),
-            },
-            expected_base_snapshot=planned_snapshot,
-            branch=branch,
-            md=md,
+                return plan_deletion_vectors(spark, md, live, deletes, predicate)
+            return plan_position_delete(spark, md, live, deletes, predicate)
+
+        return self._row_level_dml(
+            spark, plan, mode, branch=branch, predicate=predicate, operation="delete"
         )
-        return sid, n_deleted
 
     def delete_where_equality(
         self, spark: SparkSession, keys_df: DataFrame, equality_cols: list[str]
@@ -8314,69 +8063,28 @@ class Table:
         Returns (new snapshot id or None if nothing matched, rows
         updated). mode="deletion-vectors" is merge-on-read with the
         delete half written as v3 deletion vectors."""
-        if mode not in ("copy-on-write", "merge-on-read", "deletion-vectors"):
-            raise ValueError(
-                "mode must be copy-on-write|merge-on-read|deletion-vectors, "
-                f"got {mode!r}"
-            )
-        md = self.metadata()
-        planned_snapshot = resolve_dml_branch(md, branch, mode)
-        if planned_snapshot == -1:
-            return None, 0
-        if mode == "merge-on-read":
-            require_position_delete_files_allowed(md)
-        with self._credentialed_write(spark, md["location"]):
-            # predicate-derived pruning, same as delete_where: provably
-            # match-free files never reach the Spark scan
-            live, excluded, deletes = plan_dml_files(
-                md, planned_snapshot, predicate, spark_session_timezone(spark), spark=spark
-            )
+
+        def plan(md: dict, live: list[DataFile], deletes: list[DataFile]):
+            unknown = set(set_exprs) - set(spark_read_schema(md).fieldNames())
+            if unknown:
+                raise ValueError(f"SET targets unknown column(s): {sorted(unknown)}")
             if mode == "copy-on-write":
-                planned = plan_update(
+                return plan_update(
                     spark, md, live, predicate, set_exprs, delete_files=deletes
                 )
-            else:
-                planned = plan_update_mor(
-                    spark,
-                    md,
-                    live,
-                    deletes,
-                    predicate,
-                    set_exprs,
-                    delete_plan_fn=(
-                        plan_deletion_vectors if mode == "deletion-vectors" else None
-                    ),
-                )
-        if planned is None:
-            return None, 0
-        if mode in ("merge-on-read", "deletion-vectors"):
-            new_files, n_updated, superseded, targets = planned
-            sid = self._commit_with_retry(
-                new_files,
-                operation="overwrite",
-                carry_forward=True,
-                extra_summary={"updated-records": str(n_updated)},
-                branch=branch,
-                removed_files=superseded or None,
-                required_live_paths=targets or None,
+            return plan_update_mor(
+                spark,
+                md,
+                live,
+                deletes,
+                predicate,
+                set_exprs,
+                deletion_vectors=mode == "deletion-vectors",
             )
-            return sid, n_updated
-        replacement, n_updated, n_rewritten = planned
-        sid = self._commit_with_retry(
-            # pending deletes stay live for survivors; pruned-away files
-            # contain no matches and survive untouched by reference
-            replacement + excluded + deletes,
-            operation="overwrite",
-            carry_forward=False,
-            extra_summary={
-                "updated-records": str(n_updated),
-                "rewritten-data-files": str(n_rewritten),
-            },
-            expected_base_snapshot=planned_snapshot,
-            branch=branch,
-            md=md,
+
+        return self._row_level_dml(
+            spark, plan, mode, branch=branch, predicate=predicate
         )
-        return sid, n_updated
 
     def merge_rows(
         self,
@@ -8396,49 +8104,131 @@ class Table:
 
         Returns (snapshot_id, n_updated, n_inserted). Copy-on-write
         raises ReplaceConflictError if the table advances mid-merge."""
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"mode must be copy-on-write|merge-on-read, got {mode!r}")
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        live, deletes = (
-            self._live_files(md, planned_snapshot)
-            if planned_snapshot != -1
-            else ([], [])
+
+        def plan(md: dict, live: list[DataFile], deletes: list[DataFile]):
+            if mode == "copy-on-write":
+                return plan_merge(spark, md, live, source, key_cols, delete_files=deletes)
+            return plan_merge_mor(spark, md, live, deletes, source, key_cols)
+
+        return self._row_level_dml(
+            spark, plan, mode, modes=("copy-on-write", "merge-on-read")
         )
+
+    def _row_level_dml(
+        self,
+        spark: SparkSession,
+        plan,
+        mode: str,
+        *,
+        branch: str = "main",
+        predicate: str | None = None,
+        operation: str = "overwrite",
+        modes: tuple[str, ...] = ("copy-on-write", "merge-on-read", "deletion-vectors"),
+    ) -> tuple:
+        """The scaffold delete_where, update_where and merge_rows share:
+        check `mode`, resolve `branch` to the snapshot the plan runs
+        against, list its live files — pruned by `predicate` when the
+        DML has one (plan_dml_files: files that provably hold no match
+        never reach the Spark scan; a ts-bounded purge on a 100 TB table
+        opens only the matching partitions), all of them for MERGE —
+        and run `plan(md, live, deletes)` -> RowLevelPlan | None under
+        the table's vended storage credentials. The plan commits in one
+        of two shapes:
+
+        * copy-on-write: a REPLACE of the branch's live set (the plan's
+          files + pruned-away files, which survive by reference + every
+          delete file: those for survivors stay live, those naming
+          rewritten files match nothing), pinned to the planning base —
+          a replace cannot merge, so a concurrent commit to the branch
+          raises ReplaceConflictError;
+        * merge-on-read: a row delta carried onto the branch head as
+          `operation`; it only ADDS files, so it retries cleanly over
+          concurrent appends (snapshot isolation: rows landing after
+          planning are not covered), folding superseded deletion
+          vectors and validating that the referenced data files are
+          still live.
+
+        Returns (snapshot id, *plan counts), or (None, 0) when nothing
+        matched."""
+        if mode not in modes:
+            raise ValueError(f"mode must be {'|'.join(modes)}, got {mode!r}")
+        md = self.metadata()
+        base = resolve_dml_branch(md, branch)
+        if base == -1 and predicate is not None:
+            return None, 0
+        if mode == "merge-on-read" and predicate is not None:
+            # predicate DML writes parquet tuples (MERGE writes DVs on v3)
+            require_position_delete_files_allowed(md)
+        excluded: list[DataFile] = []
         with self._credentialed_write(spark, md["location"]):
-            if mode == "merge-on-read":
-                planned = plan_merge_mor(spark, md, live, deletes, source, key_cols)
+            if base == -1:
+                live, deletes = [], []
+            elif predicate is None:
+                live, deletes = self._live_files(md, base)
             else:
-                planned = plan_merge(
-                    spark, md, live, source, key_cols, delete_files=deletes
+                live, excluded, deletes = plan_dml_files(
+                    md, base, predicate, spark_session_timezone(spark), spark=spark
                 )
-        if mode == "merge-on-read":
-            new_files, n_updated, n_inserted, superseded, targets = planned
-            sid = self._commit_with_retry(
-                new_files,
-                operation="overwrite",
-                carry_forward=True,
-                extra_summary={
-                    "merged-records": str(n_updated),
-                    "inserted-records": str(n_inserted),
-                },
-                removed_files=superseded or None,
-                required_live_paths=targets or None,
+            planned = plan(md, live, deletes)
+        if planned is None:
+            return None, 0
+        if mode == "copy-on-write":
+            sid = self._commit_replace(
+                md, base, planned.files + excluded + deletes, planned.summary, branch=branch
             )
-            return sid, n_updated, n_inserted
-        replacement, n_updated, n_inserted = planned
-        sid = self._commit_with_retry(
-            replacement + deletes,
-            operation="overwrite",
+        else:
+            sid = self._commit_with_retry(
+                planned.files,
+                operation=operation,
+                carry_forward=True,
+                extra_summary=planned.summary,
+                branch=branch,
+                removed_files=planned.superseded or None,
+                required_live_paths=planned.targets or None,
+            )
+        return (sid, *planned.counts)
+
+    def _commit_replace(
+        self,
+        md: dict,
+        base: int,
+        files: list[DataFile],
+        summary: dict[str, str],
+        operation: str = "overwrite",
+        branch: str = "main",
+    ) -> int:
+        """The copy-on-write commit shape: `files` become the complete
+        live set of `branch`, built on the planning metadata `md` and
+        pinned to the head `base` the plan read (ReplaceConflictError if
+        the branch moved)."""
+        return self._commit_with_retry(
+            files,
+            operation=operation,
             carry_forward=False,
-            extra_summary={
-                "merged-records": str(n_updated),
-                "inserted-records": str(n_inserted),
-            },
-            expected_base_snapshot=planned_snapshot,
+            extra_summary=summary,
+            expected_base_snapshot=base,
+            branch=branch,
             md=md,
         )
-        return sid, n_updated, n_inserted
+
+    def _rewrite(self, spark: SparkSession, plan) -> int | None:
+        """The scaffold of the rewrite_* maintenance methods: plan
+        against main's head under the table's storage credentials, then
+        commit the copy-on-write shape as a `replace` snapshot (a
+        logical no-op that change streams skip). `plan(md, live,
+        deletes)` returns (the complete new live file set, snapshot
+        summary) or None when there is nothing to rewrite."""
+        md = self.metadata()
+        base = md["current-snapshot-id"]
+        if base == -1:
+            return None
+        live, deletes = self._live_files(md, base)
+        with self._credentialed_write(spark, md["location"]):
+            planned = plan(md, live, deletes)
+        if planned is None:
+            return None
+        files, summary = planned
+        return self._commit_replace(md, base, files, summary, operation="replace")
 
     # -- table maintenance -------------------------------------------------
     def rewrite_data_files(
@@ -8470,12 +8260,8 @@ class Table:
         The replace is pinned to the planning base: a concurrent append
         advancing `main` mid-rewrite raises ReplaceConflictError
         instead of silently dropping the appended files."""
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes = self._live_files(md, planned_snapshot)
-        with self._credentialed_write(spark, md["location"]):
+
+        def plan(md: dict, live: list[DataFile], deletes: list[DataFile]):
             planned = plan_rewrite(
                 spark,
                 md,
@@ -8485,28 +8271,22 @@ class Table:
                 zorder_by=zorder_by,
                 delete_files=deletes,
             )
-        if planned is None:
-            return None
-        replacement, n_compacted, n_rewritten = planned
-        extra = {
-            "compacted-files": str(n_compacted),
-            "added-data-files": str(n_rewritten),
-        }
-        if zorder_by:
-            # informational: Z-ordering is an action-side strategy, not a
-            # spec sort order — record what the layout was clustered by
-            extra["zorder-by"] = ",".join(zorder_by)
-        return self._commit_with_retry(
+            if planned is None:
+                return None
+            replacement, n_compacted, n_rewritten = planned
+            summary = {
+                "compacted-files": str(n_compacted),
+                "added-data-files": str(n_rewritten),
+            }
+            if zorder_by:
+                # informational: Z-ordering is an action-side strategy,
+                # not a spec sort order — record the clustering columns
+                summary["zorder-by"] = ",".join(zorder_by)
             # pending deletes stay live for the SURVIVING files (compacted
-            # files had theirs materialized by the rewrite; their
-            # now-stale delete rows match nothing)
-            replacement + deletes,
-            operation="replace",
-            carry_forward=False,
-            extra_summary=extra,
-            expected_base_snapshot=planned_snapshot,
-            md=md,
-        )
+            # files had theirs materialized; their stale rows match nothing)
+            return replacement + deletes, summary
+
+        return self._rewrite(spark, plan)
 
     def rewrite_manifests(
         self,
@@ -8554,31 +8334,22 @@ class Table:
         referenced paths come from the delete files themselves (one
         distinct over delete tuples — O(affected files) to the driver).
         Returns the new snapshot id, or None when there are no deletes."""
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes = self._live_files(md, planned_snapshot)
-        pos = [f for f in deletes if f.content == 1]
-        eq = [f for f in deletes if f.content == 2]
-        if not pos:
-            return None
-        with self._credentialed_write(spark, md["location"]):
+
+        def plan(md: dict, live: list[DataFile], deletes: list[DataFile]):
+            pos = [f for f in deletes if f.content == 1]
+            if not pos:
+                return None
             replacement, n_rewritten = plan_delete_rewrite(spark, md, live, deletes)
-        # equality-delete files stay live for the SURVIVING files (which
-        # keep their original sequence numbers); the rewrite materialized
-        # them for the files it touched
-        return self._commit_with_retry(
-            replacement + eq,
-            operation="replace",
-            carry_forward=False,
-            extra_summary={
+            # equality-delete files stay live for the SURVIVING files
+            # (which keep their original sequence numbers); the rewrite
+            # materialized them for the files it touched
+            eq = [f for f in deletes if f.content == 2]
+            return replacement + eq, {
                 "removed-delete-files": str(len(pos)),
                 "rewritten-data-files": str(n_rewritten),
-            },
-            expected_base_snapshot=planned_snapshot,
-            md=md,
-        )
+            }
+
+        return self._rewrite(spark, plan)
 
     def rewrite_equality_deletes(self, spark: SparkSession) -> int | None:
         """Maintenance: fold all pending EQUALITY deletes into the data
@@ -8591,28 +8362,19 @@ class Table:
         when no equality delete matches anything (a fully stale delete
         file costs nothing at read time beyond one metadata row, so it
         is left for expire_snapshots)."""
-        md = self.metadata()
-        planned_snapshot = md["current-snapshot-id"]
-        if planned_snapshot == -1:
-            return None
-        live, deletes = self._live_files(md, planned_snapshot)
-        with self._credentialed_write(spark, md["location"]):
+
+        def plan(md: dict, live: list[DataFile], deletes: list[DataFile]):
             planned = plan_equality_rewrite(spark, md, live, deletes)
-        if planned is None:
-            return None
-        replacement, n_rewritten = planned
-        n_eq = sum(1 for f in deletes if f.content == 2)
-        return self._commit_with_retry(
-            replacement,
-            operation="replace",
-            carry_forward=False,
-            extra_summary={
+            if planned is None:
+                return None
+            replacement, n_rewritten = planned
+            n_eq = sum(1 for f in deletes if f.content == 2)
+            return replacement, {
                 "removed-delete-files": str(n_eq),
                 "rewritten-data-files": str(n_rewritten),
-            },
-            expected_base_snapshot=planned_snapshot,
-            md=md,
-        )
+            }
+
+        return self._rewrite(spark, plan)
 
     def remove_orphan_files(
         self,

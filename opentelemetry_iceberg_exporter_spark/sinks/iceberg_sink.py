@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -206,12 +207,18 @@ class IcebergSink:
         self.config = config
         self.catalog = catalog
         self._namespace_ready = False
+        self._namespace_lock = threading.Lock()
 
     def _ensure_namespace(self) -> None:
-        """C1 once per sink: every later append skips the namespace check."""
-        if not self._namespace_ready:
-            self.catalog.ensure_namespace(self.config.catalog.namespace)
-            self._namespace_ready = True
+        """C1 once per sink: every later append skips the namespace check.
+        A metrics batch's frames append on concurrent threads, so the
+        first check and the ensure happen under a lock."""
+        if self._namespace_ready:
+            return
+        with self._namespace_lock:
+            if not self._namespace_ready:
+                self.catalog.ensure_namespace(self.config.catalog.namespace)
+                self._namespace_ready = True
 
     def _table_props(self, signal: str) -> dict[str, str]:
         return _exporter_table_props(

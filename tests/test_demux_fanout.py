@@ -294,6 +294,36 @@ def test_concurrent_writes_keep_their_own_vended_keys(spark, tmp_path, monkeypat
     assert seen == {name: ("AK-" + name, "AK-" + name) for name in written}
 
 
+def test_namespace_ensured_once_per_sink(spark, tmp_path, monkeypatch):
+    """The metric frames append on concurrent threads, and each append
+    ensures the namespace first: the sink still asks the catalog once."""
+    from opentelemetry_iceberg_exporter_spark.sinks.iceberg_rest import (
+        RestCatalogClient,
+    )
+
+    warehouse = str(tmp_path / "rwh")
+    os.makedirs(warehouse)
+    server, _, uri = make_server(warehouse)
+    calls = []
+    original = RestCatalogClient.ensure_namespace
+
+    def spy(self, namespace):
+        calls.append(namespace)
+        time.sleep(0.2)  # the other frames' threads reach the check meanwhile
+        return original(self, namespace)
+
+    monkeypatch.setattr(RestCatalogClient, "ensure_namespace", spy)
+    try:
+        config = ExporterConfig(
+            storage=StorageConfig(bucket=warehouse),
+            catalog=CatalogConfig(catalog_type="rest", uri=uri, warehouse=warehouse),
+        )
+        make_batch_processor("metrics", config)(_batch(spark, _gauge_sum_histogram()), 0)
+    finally:
+        server.shutdown()
+    assert calls == [config.catalog.namespace]
+
+
 def test_pool_threads_inherit_the_job_group(spark):
     sc = spark.sparkContext
     group = "demux-fanout-test"

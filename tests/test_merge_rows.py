@@ -75,6 +75,29 @@ class TestFsMerge:
         # pre-merge state still time-travels
         assert t.read(spark, snapshot_id=pre).filter("val = 'new'").count() == 0
 
+    @pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+    def test_equality_deleted_row_is_not_merged(self, spark, tmp_path, mode):
+        """A row an equality delete already removed is not live: MERGE
+        neither counts it as merged nor deletes it again, and its key
+        inserts like any unmatched source row."""
+        df = _base_df(spark, n=11).filter("id >= 1")
+        cat = FsCatalog(str(tmp_path / "wh"))
+        t = cat.create_table("otel", "eqm", df.schema, partition_source="ts")
+        t.append_dataframe(df)
+        t.delete_where_equality(spark, spark.range(3, 4), ["id"])
+        source = (
+            _base_df(spark, n=12)
+            .filter("id IN (3, 11)")
+            .withColumn("val", F.lit("new"))
+        )
+        sid, n_updated, n_inserted = t.merge_rows(spark, source, ["id"], mode=mode)
+        assert (n_updated, n_inserted) == (0, 2)
+        assert t.current_snapshot()["summary"]["merged-records"] == "0"
+        assert not [f for f in t.plan_scan()[1] if f.content == 1]
+        out = t.read(spark)
+        assert out.count() == 11
+        assert sorted(r.id for r in out.filter("val = 'new'").collect()) == [3, 11]
+
     def test_insert_only_into_empty_table(self, spark, tmp_path):
         df = _base_df(spark)
         cat = FsCatalog(str(tmp_path / "wh"))

@@ -309,22 +309,26 @@ class TestDmlPlanContracts:
         assert js and all(j == "BroadcastHashJoin" for j in js), js
 
     def test_delete_match_scan_pushes_predicate(self, spark, dml_table):
-        from pyspark.sql import functions as F
-
+        """The DML planners' match scan (live_row_scan with `where`)
+        filters before it subtracts: the bare predicate still reaches
+        the Parquet scan with an equality delete and a deletion vector
+        to subtract, and neither subtraction shuffles the table."""
         from opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs import (
-            spark_read_schema,
+            live_row_scan,
         )
 
         t, _ = dml_table
+        t.delete_where_equality(spark, spark.range(5), ["id"])
+        t.delete_where(spark, "id = 7", mode="deletion-vectors")
         md = t.metadata()
-        # the bare predicate, exactly as plan_delete's match scan uses it
-        scan = (
-            spark.read.schema(spark_read_schema(md))
-            .parquet(*[f.file_path for f in t.plan_files()[0]])
-            .filter(F.expr("id > 150"))
-        )
+        data, deletes, _ = t.plan_scan(md=md)
+        assert {f.content for f in deletes} == {1, 2}
+        assert any(f.is_deletion_vector for f in deletes)
+        scan = live_row_scan(spark, md, data, deletes, where="id > 150")
         pf = " ".join(pushed_filters(scan))
         assert "GreaterThan(id" in pf, pf
+        assert "SortMergeJoin" not in join_strategies(scan)
+        assert scan.count() == 49
 
 
 class TestLineagePlanContracts:

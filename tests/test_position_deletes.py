@@ -15,6 +15,7 @@ shape.
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -29,7 +30,7 @@ from opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs import (
     POS_DELETE_FILE_PATH_ID,
     POS_DELETE_POS_ID,
     FsCatalog,
-    apply_position_deletes,
+    live_row_scan,
 )
 
 from rest_stub import make_server
@@ -411,5 +412,5 @@ class TestApplyPositionDeletesUnit:
 
         d = tempfile.mkdtemp()
         other.write.parquet(d + "/o")
-        scan = spark.read.parquet(d + "/o")
-        assert apply_position_deletes(spark, scan, dels).count() == 30
+        paths = glob.glob(d + "/o/*.parquet")
+        assert live_row_scan(spark, t.metadata(), [], dels, paths=paths).count() == 30
