@@ -1530,6 +1530,134 @@ def snapshot_summary_totals(
     return {k: str(totals[k]) for k in _TOTAL_KEYS}
 
 
+def write_manifest(
+    meta_dir: str,
+    md: dict,
+    avro_schema: dict,
+    entries: list[dict],
+    *,
+    content: int,
+    spec_id: int,
+    partition_spec: str,
+    snapshot_id: int,
+    commit_seq: int,
+    first_row_id: int | None = None,
+) -> dict:
+    """The one manifest-FILE writer of the snapshot tree: a commit's
+    fresh files (write_snapshot_tree), a deletion-vector fold's rewrite
+    of a carried delete manifest (_supersede_carried_entries), and
+    merged manifests (_write_merged_manifest) all land here. `entries`
+    arrive with their status set — ADDED, EXISTING (explicit snapshot
+    id and sequence numbers) or DELETED (a removal marker) — and every
+    manifest-list figure derives from them: the per-status file and row
+    counts, the min sequence number (the commit's own for an empty
+    manifest) and the field-507 partition summary, which is written only
+    for default-spec manifests (old-spec records stay null; readers walk
+    their entries). `partition_spec` is the OCF metadata JSON of the
+    manifest's spec and `first_row_id` the v3 manifest-list field 520 —
+    the id-space base of its ADDED data files (entries are ALSO stamped
+    explicitly; external readers may use either form). Returns the
+    manifest-list record."""
+    path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m{content}.avro")
+    length = write_ocf(
+        path,
+        avro_schema,
+        entries,
+        extra_metadata={
+            "schema": json.dumps(current_schema(md)),
+            "partition-spec": partition_spec,
+            "partition-spec-id": str(spec_id),
+            "format-version": str(table_format_version(md)),
+            "content": "data" if content == 0 else "deletes",
+        },
+    )
+    files = dict.fromkeys((STATUS_EXISTING, STATUS_ADDED, STATUS_DELETED), 0)
+    rows = dict(files)
+    for e in entries:
+        files[e["status"]] += 1
+        rows[e["status"]] += e["data_file"]["record_count"]
+    return {
+        "manifest_path": path,
+        "manifest_length": length,
+        "partition_spec_id": spec_id,
+        "content": content,
+        "sequence_number": commit_seq,
+        "min_sequence_number": min(
+            (e["sequence_number"] for e in entries), default=commit_seq
+        ),
+        "added_snapshot_id": snapshot_id,
+        "added_files_count": files[STATUS_ADDED],
+        "existing_files_count": files[STATUS_EXISTING],
+        "deleted_files_count": files[STATUS_DELETED],
+        "added_rows_count": rows[STATUS_ADDED],
+        "existing_rows_count": rows[STATUS_EXISTING],
+        "deleted_rows_count": rows[STATUS_DELETED],
+        "partitions": (
+            _partition_field_summaries(
+                [e["data_file"]["partition"] for e in entries],
+                default_spec_fields(md),
+                md,
+            )
+            if spec_id == md["default-spec-id"]
+            else None
+        ),
+        "first_row_id": first_row_id,
+    }
+
+
+def write_snapshot(
+    meta_dir: str,
+    md: dict,
+    manifests: list[dict],
+    *,
+    snapshot_id: int,
+    parent: int,
+    seq: int,
+    summary: dict[str, str],
+    lineage: tuple[int, int] | None = None,
+) -> dict:
+    """The one manifest-LIST writer of the snapshot tree, shared by
+    write_snapshot_tree and build_rewrite_manifests_snapshot: write
+    `manifests` (write_manifest records and carried ones, in list order)
+    as the snapshot's manifest list, then return the snapshot dict that
+    references it, stamped with the commit time. Carried records from
+    pre-summary writers lack field 507 and default to null (readers fall
+    back to the per-entry walk for them); on v3, records from
+    pre-lineage writers likewise lack field 520 — carried values are
+    PRESERVED (a manifest's id-space base never changes). `lineage` =
+    (first-row-id, added-rows) adds the v3 snapshot fields: the commit
+    advances next-row-id by the rows this snapshot may assign."""
+    v3_lineage = table_format_version(md) >= 3
+    for m in manifests:
+        m.setdefault("partitions", None)
+        if v3_lineage:
+            m.setdefault("first_row_id", None)
+    list_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro")
+    write_ocf(
+        list_path,
+        manifest_list_schema(v3_lineage),
+        manifests,
+        extra_metadata={
+            "snapshot-id": str(snapshot_id),
+            "parent-snapshot-id": str(parent),
+            "sequence-number": str(seq),
+            "format-version": str(table_format_version(md)),
+        },
+    )
+    snapshot = {
+        "snapshot-id": snapshot_id,
+        "parent-snapshot-id": parent if parent != -1 else None,
+        "sequence-number": seq,
+        "timestamp-ms": int(time.time() * 1000),
+        "manifest-list": list_path,
+        "summary": summary,
+        "schema-id": md["current-schema-id"],
+    }
+    if lineage is not None:
+        snapshot["first-row-id"], snapshot["added-rows"] = lineage
+    return snapshot
+
+
 def _supersede_carried_entries(
     meta_dir: str,
     prior_manifests: list[dict],
@@ -1609,65 +1737,29 @@ def _supersede_carried_entries(
             untouched.append(m)
             continue
         entries = []
-        n_removed = removed_rows = 0
-        live_rows = 0
-        min_seq: int | None = None
         for e in rows:
             if e["status"] == STATUS_DELETED:
                 continue
             e = _inherit_entry(e, m)
             d = e["data_file"]
-            if (d["file_path"], d.get("content_offset")) in removed_keys:
-                e["status"] = STATUS_DELETED
-                n_removed += 1
-                removed_rows += d["record_count"]
-            else:
-                e["status"] = STATUS_EXISTING
-                live_rows += d["record_count"]
-            entries.append(e)
-            min_seq = (
-                e["sequence_number"]
-                if min_seq is None
-                else min(min_seq, e["sequence_number"])
+            e["status"] = (
+                STATUS_DELETED
+                if (d["file_path"], d.get("content_offset")) in removed_keys
+                else STATUS_EXISTING
             )
-        path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m1.avro")
-        length = write_ocf(
-            path,
-            schema_,
-            entries,
-            extra_metadata={
-                "schema": json.dumps(current_schema(md)),
-                "partition-spec": meta_.get("partition-spec", "[]"),
-                "partition-spec-id": str(m["partition_spec_id"]),
-                "format-version": str(table_format_version(md)),
-                "content": "deletes",
-            },
-        )
+            entries.append(e)
         rewritten.append(
-            {
-                "manifest_path": path,
-                "manifest_length": length,
-                "partition_spec_id": m["partition_spec_id"],
-                "content": 1,
-                "sequence_number": commit_seq,
-                "min_sequence_number": min_seq if min_seq is not None else commit_seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": len(entries) - n_removed,
-                "deleted_files_count": n_removed,
-                "added_rows_count": 0,
-                "existing_rows_count": live_rows,
-                "deleted_rows_count": removed_rows,
-                "partitions": (
-                    _partition_field_summaries(
-                        [e["data_file"]["partition"] for e in entries],
-                        default_spec_fields(md),
-                        md,
-                    )
-                    if m["partition_spec_id"] == md["default-spec-id"]
-                    else None
-                ),
-            }
+            write_manifest(
+                meta_dir,
+                md,
+                schema_,
+                entries,
+                content=1,
+                spec_id=m["partition_spec_id"],
+                partition_spec=meta_.get("partition-spec", "[]"),
+                snapshot_id=snapshot_id,
+                commit_seq=commit_seq,
+            )
         )
     if found != removed_keys:
         missing = sorted(removed_keys - found)
@@ -1697,10 +1789,12 @@ def write_snapshot_tree(
     removed_files: list[DataFile] | None = None,
     required_live_paths: set[str] | None = None,
 ) -> dict:
-    """Write one manifest (the new files) + one manifest list (new manifest
-    plus, for appends, the parent snapshot's carried-forward manifests)
-    under {location}/metadata and return the snapshot dict that references
-    them. Pure metadata: O(len(files)) regardless of table size.
+    """Write one manifest per content type for the new files
+    (write_manifest) + one manifest list (write_snapshot: the new
+    manifests plus, for appends, the parent snapshot's carried-forward
+    manifests) under {location}/metadata and return the snapshot dict
+    that references them. Pure metadata: O(len(files)) regardless of
+    table size.
     parent_override builds the snapshot on a different parent than
     `main`'s head (branch commits). removed_files (carry-forward only)
     are prior delete entries this commit SUPERSEDES — fold-on-write's
@@ -1712,11 +1806,8 @@ def write_snapshot_tree(
     seq = md["last-sequence-number"] + 1
     snapshot_id = int.from_bytes(os.urandom(8), "big") >> 1
     parent = md["current-snapshot-id"] if parent_override is None else parent_override
-    now_ms = int(time.time() * 1000)
     meta_dir = os.path.join(location, "metadata")
-    spec_fields = next(
-        s for s in md["partition-specs"] if s["spec-id"] == md["default-spec-id"]
-    )["fields"]
+    spec_fields = default_spec_fields(md)
 
     data_group = [f for f in files if f.content == 0]
     delete_group = [f for f in files if f.content in (1, 2)]
@@ -1749,9 +1840,6 @@ def write_snapshot_tree(
 
     manifests = []
     for content_id, group in groups:
-        manifest_path = os.path.join(
-            meta_dir, f"{uuid.uuid4().hex}-m{content_id}.avro"
-        )
         with_dv = any(f.is_deletion_vector for f in group)
         with_lineage = v3_lineage and content_id == 0
         entries = []
@@ -1768,9 +1856,6 @@ def write_snapshot_tree(
                 lb_avro, ub_avro = f.raw_bounds
             else:
                 lb_avro = ub_avro = None
-            # files re-committed by replace/overwrite keep their original
-            # data sequence number (equality deletes apply to seq < theirs)
-            entry_seq = f.sequence_number if f.sequence_number else seq
             data_file = {
                 "content": f.content,
                 "file_path": f.file_path,
@@ -1797,56 +1882,32 @@ def write_snapshot_tree(
                 {
                     "status": STATUS_ADDED,
                     "snapshot_id": snapshot_id,
-                    "sequence_number": entry_seq,
+                    # files re-committed by replace/overwrite keep their
+                    # original data sequence number (equality deletes
+                    # apply to seq < theirs)
+                    "sequence_number": f.sequence_number or seq,
                     "file_sequence_number": seq,
                     "data_file": data_file,
                 }
             )
-        manifest_len = write_ocf(
-            manifest_path,
-            manifest_avro_schema(
-                spec_fields,
-                current_schema(md),
-                with_dv=with_dv,
-                with_lineage=with_lineage,
-            ),
-            entries,
-            extra_metadata={
-                "schema": json.dumps(current_schema(md)),
-                "partition-spec": json.dumps(spec_fields),
-                "partition-spec-id": str(md["default-spec-id"]),
-                "format-version": str(table_format_version(md)),
-                "content": "data" if content_id == 0 else "deletes",
-            },
-        )
         manifests.append(
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": md["default-spec-id"],
-                "content": content_id,
-                "sequence_number": seq,
-                "min_sequence_number": min(
-                    (f.sequence_number or seq for f in group), default=seq
+            write_manifest(
+                meta_dir,
+                md,
+                manifest_avro_schema(
+                    spec_fields,
+                    current_schema(md),
+                    with_dv=with_dv,
+                    with_lineage=with_lineage,
                 ),
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(group),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(f.record_count for f in group),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": _partition_field_summaries(
-                    [e["data_file"]["partition"] for e in entries], spec_fields, md
-                ),
-                # v3 manifest-list field 520: the id-space base for this
-                # manifest's ADDED data files (entries are ALSO stamped
-                # explicitly — external readers may use either form);
-                # null for delete manifests
-                "first_row_id": (
-                    first_row_base if with_lineage else None
-                ),
-            }
+                entries,
+                content=content_id,
+                spec_id=md["default-spec-id"],
+                partition_spec=json.dumps(spec_fields),
+                snapshot_id=snapshot_id,
+                commit_seq=seq,
+                first_row_id=first_row_base if with_lineage else None,
+            )
         )
     if carry_forward and parent != -1:
         cur = next(s for s in md["snapshots"] if s["snapshot-id"] == parent)
@@ -1880,27 +1941,6 @@ def write_snapshot_tree(
             meta_dir, prior_manifests, md, snapshot_id, seq
         )
 
-    # carried records from pre-summary writers lack field 507: default
-    # to null (readers fall back to the per-entry walk for them); on v3,
-    # records from pre-lineage writers likewise lack field 520 — carried
-    # values are PRESERVED (a manifest's id-space base never changes)
-    for m in manifests:
-        m.setdefault("partitions", None)
-        if v3_lineage:
-            m.setdefault("first_row_id", None)
-    list_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro")
-    write_ocf(
-        list_path,
-        manifest_list_schema(v3_lineage),
-        manifests,
-        extra_metadata={
-            "snapshot-id": str(snapshot_id),
-            "parent-snapshot-id": str(parent),
-            "sequence-number": str(seq),
-            "format-version": str(table_format_version(md)),
-        },
-    )
-
     summary = {
         "operation": operation,
         "added-data-files": str(len(data_group)),
@@ -1925,21 +1965,16 @@ def write_snapshot_tree(
         )
     )
     summary.update(extra_summary)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "parent-snapshot-id": parent if parent != -1 else None,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "summary": summary,
-        "schema-id": md["current-schema-id"],
-    }
-    if v3_lineage:
-        # v3 snapshot fields: the commit advances next-row-id to
-        # first-row-id + added-rows (rows this snapshot may assign)
-        snapshot["first-row-id"] = first_row_base
-        snapshot["added-rows"] = assigned_rows
-    return snapshot
+    return write_snapshot(
+        meta_dir,
+        md,
+        manifests,
+        snapshot_id=snapshot_id,
+        parent=parent,
+        seq=seq,
+        summary=summary,
+        lineage=(first_row_base, assigned_rows) if v3_lineage else None,
+    )
 
 
 def _inherit_entry(e: dict, m: dict) -> dict:
@@ -1986,7 +2021,6 @@ def _write_merged_manifest(
         return _has_field(schema_, "referenced_data_file")
 
     entries: list[dict] = []
-    min_seq: int | None = None
     avro_schema: dict | None = None
     src_meta: dict[str, str] | None = None
     need_dv = need_lineage = False
@@ -2018,11 +2052,6 @@ def _write_merged_manifest(
             e = _inherit_entry(e, m)
             e["status"] = STATUS_EXISTING
             entries.append(e)
-            min_seq = (
-                e["sequence_number"]
-                if min_seq is None
-                else min(min_seq, e["sequence_number"])
-            )
     if not entries:
         return None
     # splice missing optional field groups into the picked schema (the
@@ -2056,45 +2085,17 @@ def _write_merged_manifest(
     if need_lineage:
         for e in entries:
             e["data_file"].setdefault("first_row_id", None)
-    content_id = bin_[0]["content"]
-    path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m{content_id}.avro")
-    length = write_ocf(
-        path,
+    return write_manifest(
+        meta_dir,
+        md,
         avro_schema,
         entries,
-        extra_metadata={
-            "schema": json.dumps(current_schema(md)),
-            "partition-spec": src_meta.get("partition-spec", "[]"),
-            "partition-spec-id": str(bin_[0]["partition_spec_id"]),
-            "format-version": str(table_format_version(md)),
-            "content": "data" if content_id == 0 else "deletes",
-        },
+        content=bin_[0]["content"],
+        spec_id=bin_[0]["partition_spec_id"],
+        partition_spec=src_meta.get("partition-spec", "[]"),
+        snapshot_id=snapshot_id,
+        commit_seq=commit_seq,
     )
-    spec_id = bin_[0]["partition_spec_id"]
-    return {
-        "manifest_path": path,
-        "manifest_length": length,
-        "partition_spec_id": spec_id,
-        "content": content_id,
-        "sequence_number": commit_seq,
-        "min_sequence_number": min_seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": 0,
-        "existing_files_count": len(entries),
-        "deleted_files_count": 0,
-        "added_rows_count": 0,
-        "existing_rows_count": sum(e["data_file"]["record_count"] for e in entries),
-        "deleted_rows_count": 0,
-        "partitions": (
-            _partition_field_summaries(
-                [e["data_file"]["partition"] for e in entries],
-                default_spec_fields(md),
-                md,
-            )
-            if spec_id == md["default-spec-id"]
-            else None  # old-spec manifests: no summary, per-entry walk
-        ),
-    }
 
 
 def merge_small_manifests(
@@ -2238,23 +2239,6 @@ def build_rewrite_manifests_snapshot(
     )
     if merged is None:
         return None
-    v3_lineage = table_format_version(md) >= 3
-    for m in merged:  # pass-through records from pre-summary writers
-        m.setdefault("partitions", None)
-        if v3_lineage:
-            m.setdefault("first_row_id", None)
-    list_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro")
-    write_ocf(
-        list_path,
-        manifest_list_schema(v3_lineage),
-        merged,
-        extra_metadata={
-            "snapshot-id": str(snapshot_id),
-            "parent-snapshot-id": str(sid),
-            "sequence-number": str(seq),
-            "format-version": str(table_format_version(md)),
-        },
-    )
     summary = {
         "operation": "replace",
         "operation-detail": "rewrite_manifests",
@@ -2266,15 +2250,15 @@ def build_rewrite_manifests_snapshot(
     summary.update(
         {k: str(v) for k, v in parent_summary_totals(md, sid).items()}
     )
-    return {
-        "snapshot-id": snapshot_id,
-        "parent-snapshot-id": sid,
-        "sequence-number": seq,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "summary": summary,
-        "schema-id": md["current-schema-id"],
-    }
+    return write_snapshot(
+        meta_dir,
+        md,
+        merged,
+        snapshot_id=snapshot_id,
+        parent=sid,
+        seq=seq,
+        summary=summary,
+    )
 
 
 def partition_fields_for(
@@ -3241,6 +3225,50 @@ def build_manifest_excluder(md: dict, summary_checks: list[tuple[str, Any, Any]]
     return _excluded
 
 
+def source_range_scope(
+    md: dict,
+    source_range: tuple[str, Any, Any] | list[tuple[str, Any, Any]] | None,
+    columns=None,
+):
+    """The scope of a source-range incremental read, shared by scoped
+    changelogs, incremental file plans and streaming tails.
+    `source_range` is (column, lo, hi) or a list of them (conjuncts; a
+    None bound is open). Returns (range_parts, manifest_excluder,
+    row_filter):
+
+    * range_parts — partition_range_parts: the ranges rewritten through
+      monotone partition transforms, for file skips
+      (partition_out_of_range);
+    * manifest_excluder — build_manifest_excluder over those parts (the
+      field-507 summary skip), None when no range maps to a partition;
+    * row_filter — the exact range conjunction over the ranges whose
+      column is in `columns` (the read schema's names), None when none
+      applies or no `columns` are given (metadata-only callers)."""
+    ranges = (
+        [source_range] if isinstance(source_range, tuple)
+        else list(source_range or [])
+    )
+    range_parts = partition_range_parts(md, ranges)
+    excluder = (
+        build_manifest_excluder(
+            md, [(n, lo, hi) for n, (lo, hi) in range_parts.items()]
+        )
+        if range_parts
+        else None
+    )
+    row_filter = None
+    for col, lo, hi in ranges if columns is not None else ():
+        if col not in columns:
+            continue
+        for bound in (
+            (F.col(col) >= F.lit(lo)) if lo is not None else None,
+            (F.col(col) <= F.lit(hi)) if hi is not None else None,
+        ):
+            if bound is not None:
+                row_filter = bound if row_filter is None else (row_filter & bound)
+    return range_parts, excluder, row_filter
+
+
 def plan_scan_metadata(
     md: dict,
     snapshot_id: int | None = None,
@@ -3815,6 +3843,19 @@ def partition_out_of_range(
     )
 
 
+
+def data_files_in_range(
+    files: list[DataFile], range_parts: dict[str, tuple[Any, Any]]
+) -> list[DataFile]:
+    """The data files (content 0) of `files` not provably outside
+    `range_parts` (partition_out_of_range) — the file-level half of a
+    source_range_scope over _added_files' output."""
+    return [
+        f
+        for f in files
+        if f.content == 0 and not partition_out_of_range(f.partition, range_parts)
+    ]
+
 def _manifest_entry_file(m: dict, e: dict) -> DataFile:
     """One manifest entry of manifest-list record `m` as a DataFile: its
     data sequence number (a null entry seq inherits the manifest's, the
@@ -4278,14 +4319,13 @@ def data_files_for_paths(paths: list[str], spec: list[dict], location: str) -> l
 def all_data_file_paths(md: dict) -> list[str]:
     """Every data-file path referenced by ANY snapshot (the Iceberg
     `all_files` metadata table; time-travel-aware dedup like
-    catalog_rest.go:370-467)."""
+    catalog_rest.go:370-467). Manifests are carried forward across
+    snapshots, so snapshot_file_tree's memo opens each distinct manifest
+    ONCE: reads cost snapshots + distinct manifests, not their product."""
     paths: set[str] = set()
+    memo: dict[str, frozenset[str]] = {}
     for snapshot in md["snapshots"]:
-        _, _, manifests = read_ocf(snapshot["manifest-list"])
-        for m in manifests:
-            _, _, entries = read_ocf(m["manifest_path"])
-            for e in entries:
-                paths.add(e["data_file"]["file_path"])
+        paths |= snapshot_file_tree(snapshot, memo)[0]
     return sorted(paths)
 
 
@@ -4511,18 +4551,7 @@ def incremental_data_files(
     mirroring Iceberg's incremental-scan contract — silently skipping
     one would hide its logical effects from the change stream."""
     window, end_snapshot_id = _ancestry_window(md, from_snapshot_id, to_snapshot_id)
-    source_ranges = (
-        [source_range] if isinstance(source_range, tuple)
-        else list(source_range or [])
-    )
-    range_parts = partition_range_parts(md, source_ranges)
-    excluder = (
-        build_manifest_excluder(
-            md, [(n, lo, hi) for n, (lo, hi) in range_parts.items()]
-        )
-        if range_parts
-        else None
-    )
+    range_parts, excluder, _ = source_range_scope(md, source_range)
     files: list[DataFile] = []
     for s in window:
         op = s["summary"].get("operation")
@@ -4534,32 +4563,8 @@ def incremental_data_files(
                 f"({s['snapshot-id']}); incremental append scans cannot "
                 "represent its effects"
             )
-        _, _, manifests = read_ocf(s["manifest-list"])
-        for m in manifests:
-            if m["added_snapshot_id"] != s["snapshot-id"]:
-                continue  # carried-forward manifest from an ancestor
-            if m["added_files_count"] == 0:
-                continue  # commit-time-merged manifest: EXISTING entries only
-            if excluder is not None and excluder(m):
-                continue  # field-507 summary proves nothing in scope
-            _, _, entries = read_ocf(m["manifest_path"])
-            for e in entries:
-                if e["status"] != STATUS_ADDED:
-                    continue
-                df_ = e["data_file"]
-                part = {
-                    k: v for k, v in df_["partition"].items() if v is not None
-                }
-                if range_parts and partition_out_of_range(part, range_parts):
-                    continue
-                files.append(
-                    DataFile(
-                        file_path=df_["file_path"],
-                        file_size_in_bytes=df_["file_size_in_bytes"],
-                        record_count=df_["record_count"],
-                        partition=part,
-                    )
-                )
+        added, _ = _added_files(s, manifest_excluded=excluder)
+        files += data_files_in_range(added, range_parts)
     return files, end_snapshot_id
 
 
@@ -4568,9 +4573,13 @@ def _added_files(
 ) -> tuple[list[DataFile], bool]:
     """(files ADDED by one snapshot — its own manifests only — with
     content/equality_ids/sequence numbers, whether the snapshot CARRIES
-    ancestor manifests). Carry-forward distinguishes append-style
-    commits (appends, merge-on-read row deltas) from replace-style
-    overwrites, whose manifest holds the complete live set.
+    ancestor manifests). The one walk over what a snapshot added:
+    changelogs, incremental file plans (data files in range), the
+    streaming tail, cherry-pick and the shred-path check all filter its
+    output. Carry-forward distinguishes append-style commits (appends,
+    merge-on-read row deltas) from replace-style overwrites, whose
+    manifest holds the complete live set. A manifest with nothing ADDED
+    (commit-time merges, fold rewrites) is never opened.
 
     `manifest_excluded` (a build_manifest_excluder callable) skips a
     DATA manifest UNOPENED when its field-507 partition summaries prove
@@ -4586,11 +4595,12 @@ def _added_files(
             carried = True
             continue
         if m["existing_files_count"] > 0:
-            # a commit-time-merged manifest: EXISTING ancestor entries
-            # rewritten under this snapshot's id — still carried data
+            # a commit-time-merged or fold-rewritten manifest: EXISTING
+            # ancestor entries rewritten under this snapshot's id —
+            # still carried data
             carried = True
-            if m["added_files_count"] == 0:
-                continue  # nothing ADDED inside — skip the read entirely
+        if m["added_files_count"] == 0:
+            continue  # nothing ADDED inside — skip the read entirely
         if manifest_excluded is None or not manifest_excluded(m):
             opened.append(m)
     return list(_live_manifest_files(opened, added_only=True)), carried
@@ -4910,33 +4920,7 @@ def read_changelog(
     # main ancestry only: WAP-staged commits are invisible until published
     window, _ = _ancestry_window(md, from_snapshot_id, to_snapshot_id)
 
-    source_ranges = (
-        [source_range] if isinstance(source_range, tuple)
-        else list(source_range or [])
-    )
-    range_parts = partition_range_parts(md, source_ranges)
-    excluder = (
-        build_manifest_excluder(
-            md, [(n, lo, hi) for n, (lo, hi) in range_parts.items()]
-        )
-        if range_parts
-        else None
-    )
-
-    def _scope_cond(names) -> "F.Column | None":
-        cond = None
-        for rcol, rlo, rhi in source_ranges:
-            if rcol not in names:
-                continue
-            for bound in (
-                (F.col(rcol) >= F.lit(rlo)) if rlo is not None else None,
-                (F.col(rcol) <= F.lit(rhi)) if rhi is not None else None,
-            ):
-                if bound is not None:
-                    cond = bound if cond is None else (cond & bound)
-        return cond
-
-    row_scope = _scope_cond(set(cols))
+    range_parts, excluder, row_scope = source_range_scope(md, source_range, cols)
 
     parts: list[DataFrame] = []
 
@@ -4957,11 +4941,7 @@ def read_changelog(
         if op == "replace":
             continue
         added, carried = _added_files(s, manifest_excluded=excluder)
-        data = [f for f in added if f.content == 0]
-        if range_parts:
-            data = [
-                f for f in data if not partition_out_of_range(f.partition, range_parts)
-            ]
+        data = data_files_in_range(added, range_parts)
         pos = [f for f in added if f.content == 1]
         eq = [f for f in added if f.content == 2]
         if op not in ("append", "delete", "overwrite"):
@@ -5085,7 +5065,7 @@ def read_changelog(
                 )
             # a scope column that IS a key column filters exactly; any
             # other scope column is null here — conservatively keep
-            key_scope = _scope_cond(key_names)
+            key_scope = source_range_scope(md, source_range, key_names)[2]
             if key_scope is not None:
                 widened = widened.where(key_scope)
             parts.append(tag(widened, "delete_key", s))
@@ -6327,9 +6307,14 @@ def metadata_table(spark: SparkSession, md: dict, name: str) -> "DataFrame":
             else [s for s in md["snapshots"] if s["snapshot-id"] == sid]
         )
         seen: set[tuple[str, str | None]] = set()
+        opened: set[str] = set()
         for s in snapshots:
             _, _, manifests = read_ocf(s["manifest-list"])
             for m in manifests:
+                # a carried manifest's rows are all in `seen` already
+                if m["manifest_path"] in opened:
+                    continue
+                opened.add(m["manifest_path"])
                 _, _, es = read_ocf(m["manifest_path"])
                 for e in es:
                     if name == "files" and e["status"] == STATUS_DELETED:

@@ -15,7 +15,9 @@ into micro-batches with a durable cursor:
   cursor advances file-by-file through the snapshot.
 * Batch planning is pure metadata (ancestry walk + manifest reads of
   the NEW snapshots only, O(new files)); the Spark job reads exactly
-  the batch's Parquet files under the table's CURRENT schema.
+  the batch's Parquet files under the table's CURRENT schema, through
+  the same library scan as `Table.read_changes` (initial defaults,
+  name mapping, vended storage credentials).
 * Delivery is at-least-once with commit-after-process: `poll()` plans
   and reads, the caller processes, `commit()` persists the cursor
   atomically (tmp + rename). A crash between the two re-delivers the
@@ -28,9 +30,9 @@ into micro-batches with a durable cursor:
   consumers that must observe row deletes subscribe to
   `FsTable.changelog_scan` instead.
 
-Works against any table object exposing ``metadata()`` — both
-`FsTable` and `RestTable` qualify (the tail never writes, so catalog
-transport is irrelevant).
+Works against any catalog table exposing ``metadata()`` and
+``apply_storage_credentials()`` — both `FsTable` and `RestTable`
+qualify (the tail never writes, so catalog transport is irrelevant).
 """
 
 from __future__ import annotations
@@ -43,56 +45,16 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sinks.iceberg_fs import (
-    STATUS_ADDED,
     DataFile,
+    _added_files,
     _ancestry_window,
-    build_manifest_excluder,
-    partition_out_of_range,
-    partition_range_parts,
+    data_files_in_range,
     read_changelog,
-    read_ocf,
+    read_ocf,  # noqa: F401 — kept importable from this module
     read_schema_for,
+    source_range_scope,
+    table_file_scan,
 )
-
-
-def _added_data_files_ordered(
-    snapshot: dict, manifest_excluded=None, range_parts=None
-) -> list[DataFile]:
-    """The data files one append snapshot added, in a deterministic
-    order (manifest order is already stable, but sort by path so the
-    cursor survives any future manifest regrouping). With a scope
-    (`manifest_excluded` from build_manifest_excluder + `range_parts`),
-    out-of-scope manifests are skipped UNOPENED via their field-507
-    partition summaries and out-of-scope files are dropped by their
-    partition transform values — a time-scoped tail over the exporter's
-    micro-batch history opens O(in-scope) manifests per snapshot."""
-    files: list[DataFile] = []
-    _, _, manifests = read_ocf(snapshot["manifest-list"])
-    for m in manifests:
-        if m["added_snapshot_id"] != snapshot["snapshot-id"]:
-            continue  # carried-forward ancestor manifest
-        if manifest_excluded is not None and manifest_excluded(m):
-            continue
-        _, _, entries = read_ocf(m["manifest_path"])
-        for e in entries:
-            if e["status"] != STATUS_ADDED:
-                continue
-            df_ = e["data_file"]
-            if df_.get("content", 0) != 0:
-                continue
-            part = {k: v for k, v in df_["partition"].items() if v is not None}
-            if range_parts and partition_out_of_range(part, range_parts):
-                continue
-            files.append(
-                DataFile(
-                    file_path=df_["file_path"],
-                    file_size_in_bytes=df_["file_size_in_bytes"],
-                    record_count=df_["record_count"],
-                    partition=part,
-                )
-            )
-    files.sort(key=lambda f: f.file_path)
-    return files
 
 
 @dataclass(frozen=True)
@@ -130,21 +92,20 @@ class IcebergTailer:
         self.max_files_per_batch = max_files_per_batch
         self.source_range = source_range
 
-    def _scope(self, md: dict):
-        """(manifest_excluded, range_parts) for the configured scope —
-        rebuilt per plan (spec evolution can change the mapping)."""
-        if self.source_range is None:
-            return None, None
-        ranges = (
-            [self.source_range]
-            if isinstance(self.source_range, tuple)
-            else list(self.source_range)
+    @staticmethod
+    def _planned_files(snapshot: dict, scope) -> list[DataFile]:
+        """The data files one append snapshot added, in `scope` (this
+        plan's source_range_scope), sorted by path: the cursor counts
+        files in this order, so it survives any future manifest
+        regrouping. Out-of-scope manifests are skipped UNOPENED via their
+        field-507 partition summaries and out-of-scope files dropped by
+        their partition values — a time-scoped tail over the exporter's
+        micro-batch history opens O(in-scope) manifests per snapshot."""
+        range_parts, excluder, _ = scope
+        added, _ = _added_files(snapshot, manifest_excluded=excluder)
+        return sorted(
+            data_files_in_range(added, range_parts), key=lambda f: f.file_path
         )
-        range_parts = partition_range_parts(md, ranges)
-        if not range_parts:
-            return None, None
-        checks = [(n, lo, hi) for n, (lo, hi) in range_parts.items()]
-        return build_manifest_excluder(md, checks), range_parts
 
     # -- durable cursor ----------------------------------------------------
     def position(self) -> tuple[int | None, int]:
@@ -178,16 +139,15 @@ class IcebergTailer:
         """Next micro-batch from the durable cursor, or None when caught
         up. Pure metadata."""
         md = self.table.metadata()
-        excluder, range_parts = self._scope(md)
+        # rebuilt per plan: spec evolution can change the mapping
+        scope = source_range_scope(md, self.source_range)
         ck_snapshot, ck_offset = self.position()
         by_id = {s["snapshot-id"]: s for s in md["snapshots"]}
 
         pending: list[dict] = []
         if ck_snapshot is not None and ck_snapshot in by_id:
             snap = by_id[ck_snapshot]
-            if ck_offset > 0 and ck_offset < len(
-                _added_data_files_ordered(snap, excluder, range_parts)
-            ):
+            if ck_offset > 0 and ck_offset < len(self._planned_files(snap, scope)):
                 pending.append(snap)  # partially consumed snapshot first
             window, _ = _ancestry_window(md, ck_snapshot, None)
         elif ck_snapshot is not None:
@@ -219,7 +179,7 @@ class IcebergTailer:
                     f"({snap['snapshot-id']}); append tails cannot represent "
                     "its effects — use changelog_scan for row-level deletes"
                 )
-            files = _added_data_files_ordered(snap, excluder, range_parts)
+            files = self._planned_files(snap, scope)
             start = ck_offset if snap["snapshot-id"] == ck_snapshot else 0
             take = len(files) - start
             if self.max_files_per_batch is not None:
@@ -239,22 +199,18 @@ class IcebergTailer:
 
     # -- consumption -------------------------------------------------------
     def read_batch(self, spark: SparkSession, batch: TailBatch) -> DataFrame:
-        schema = read_schema_for(spark, self.table.metadata())
-        df = spark.read.schema(schema).parquet(*[f.file_path for f in batch.files])
-        if self.source_range is not None:
-            from pyspark.sql import functions as F
-
-            ranges = (
-                [self.source_range]
-                if isinstance(self.source_range, tuple)
-                else list(self.source_range)
-            )
-            for col, lo, hi in ranges:
-                if lo is not None:
-                    df = df.where(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    df = df.where(F.col(col) <= F.lit(hi))
-        return df
+        """The batch's rows under the table's current schema, read through
+        the library scan (initial defaults, name-mapped id-less files)
+        with the table's vended storage credentials applied; a scoped
+        tail filters rows to the range exactly."""
+        md = self.table.metadata()
+        self.table.apply_storage_credentials(spark, md["location"])
+        schema = read_schema_for(spark, md)
+        df = table_file_scan(spark, md, schema, [f.file_path for f in batch.files])
+        _, _, row_filter = source_range_scope(
+            md, self.source_range, schema.fieldNames()
+        )
+        return df if row_filter is None else df.where(row_filter)
 
     def commit(self, batch: TailBatch) -> None:
         self._store(batch.end_snapshot_id, batch.end_file_offset)

@@ -178,6 +178,22 @@ class TestScopedTail:
         tail.commit(batch)
         assert tail.poll(spark) is None  # caught up within scope
 
+    def test_tail_plan_opens_only_in_scope_manifests(
+        self, spark, table, tmp_path, monkeypatch
+    ):
+        """Tail planning walks iceberg_fs._added_files, so its manifest
+        reads are counted there: a day-scoped first plan opens exactly
+        the in-scope day's manifest, not one per commit."""
+        from opentelemetry_iceberg_exporter_spark.sinks import iceberg_fs as mod
+
+        reads = _manifest_reads(monkeypatch, mod)
+        tail = IcebergTailer(
+            table, str(tmp_path / "ck.json"), source_range=DAY1
+        )
+        batch = tail.plan_batch()
+        assert batch is not None and len(batch.files) == 1
+        assert len(reads) == 1
+
     def test_scoped_tail_equals_filtered_full_tail(self, spark, table, tmp_path):
         full = IcebergTailer(table, str(tmp_path / "a.json"))
         scoped = IcebergTailer(

@@ -307,6 +307,29 @@ class TestTailing:
         assert all(r.extra is None for r in df.collect())
         tailer.commit(batch)
 
+    def test_v3_column_default_fills_pre_evolution_rows(self, spark, tmp_path):
+        """The tail reads through the library scan: on a v3 table, a
+        column added with a default surfaces that default on rows written
+        before it — the same rows Table.read and read_changes return."""
+        cat = FsCatalog(str(tmp_path / "wh3"))
+        t = cat.create_table(
+            "ns", "tail_v3", SCHEMA, properties={"format-version": "3"}
+        )
+        _append(spark, t, 1, 3)
+        t.add_columns(
+            [StructField("tier", StringType(), True)], defaults={"tier": "gold"}
+        )
+        expected = [(1, "gold"), (2, "gold")]
+        assert sorted((r.id, r.tier) for r in t.read(spark).collect()) == expected
+        assert (
+            sorted((r.id, r.tier) for r in t.read_changes(spark).collect())
+            == expected
+        )
+        tailer = IcebergTailer(t, str(tmp_path / "ck3.json"))
+        df, batch = tailer.poll(spark)
+        assert sorted((r.id, r.tier) for r in df.collect()) == expected
+        tailer.commit(batch)
+
 
 class TestV3ModesTail:
     """The round-8 v3 modes composed with the streaming tail (round-8

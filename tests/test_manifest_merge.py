@@ -852,3 +852,37 @@ class TestCommitRetryBudget:
             mod.write_snapshot_tree = real
         assert sid is not None
         assert t.read(spark).count() == 5  # 2 seed + f2 + f3 + f1
+
+
+class TestAllFilesReads:
+    def test_all_files_opens_each_manifest_once(self, spark, tmp_path, monkeypatch):
+        """Unmerged appends carry every earlier manifest forward, so
+        snapshot k lists k manifests. The registered-file set (all_files,
+        the reconciler's and remove_orphan_files' input) and the
+        all_files metadata table must read each manifest list and each
+        DISTINCT manifest once — not every (snapshot, manifest) link."""
+        import opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs as mod
+
+        t = _mk_table(spark, tmp_path, {"commit.manifest-merge.enabled": "false"})
+        _stream_appends(t, 20)
+        md = t.metadata()
+        n_snapshots = len(md["snapshots"])
+        distinct = {m["manifest_path"] for m in _manifests(t)}
+        assert n_snapshots == 20 and len(distinct) == 20
+        reads: list[str] = []
+        real = mod.read_ocf
+
+        def counting(path, *a, **k):
+            reads.append(path)
+            return real(path, *a, **k)
+
+        monkeypatch.setattr(mod, "read_ocf", counting)
+        paths = t.all_files()
+        assert sorted(os.path.basename(p) for p in paths) == sorted(
+            f"b{b}.parquet" for b in range(20)
+        )
+        assert len(reads) <= n_snapshots + len(distinct)
+        reads.clear()
+        rows = t.metadata_table(spark, "all_files").collect()
+        assert sorted(r["file_path"] for r in rows) == sorted(paths)
+        assert len(reads) <= n_snapshots + len(distinct)
