@@ -491,20 +491,23 @@ def run_v3_modes_bench(spark, sf_dir: str) -> dict:
     """
     from pyspark.sql import functions as F
 
-    from opentelemetry_iceberg_exporter_spark.otlp.traces import (
-        flatten_traces,
-        ns_trace_types,
-        parse_traces_json,
-    )
     from opentelemetry_iceberg_exporter_spark.schemas import (
-        SIGNAL_TRACES,
-        to_variant_attrs,
+        TRACES_SCHEMA,
+        ns_iceberg_types,
     )
     from opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs import (
         FsCatalog,
         plan_dml_files,
     )
     from opentelemetry_iceberg_exporter_spark.sources.tables import load_table
+    from opentelemetry_iceberg_exporter_spark.streaming.pipeline import flatten_signal
+
+    def flatten_ns(raw, variant_attrs=False):
+        return flatten_signal(
+            raw, "traces", ns_timestamps=True, variant_attrs=variant_attrs
+        )["traces"]
+
+    ns_trace_types = ns_iceberg_types(TRACES_SCHEMA)
 
     tmp = tempfile.mkdtemp(prefix="bench_v3_")
     try:
@@ -516,13 +519,7 @@ def run_v3_modes_bench(spark, sf_dir: str) -> dict:
 
         # ---- timed: the composed ns+variant exporter sink
         t0 = time.perf_counter()
-        flat = to_variant_attrs(
-            flatten_traces(
-                parse_traces_json(spark.read.text(payload_dir)),
-                ns_timestamps=True,
-            ),
-            SIGNAL_TRACES,
-        )
+        flat = flatten_ns(spark.read.text(payload_dir), variant_attrs=True)
         t = cat.create_table(
             "bench",
             "tr_v3",
@@ -533,7 +530,7 @@ def run_v3_modes_bench(spark, sf_dir: str) -> dict:
                 "format-version": "3",
                 "write.parquet.bloom-filter-enabled.column.span_id": "true",
             },
-            iceberg_types=ns_trace_types(),
+            iceberg_types=ns_trace_types,
         )
         t.append_dataframe(flat)
         sink_sec = time.perf_counter() - t0
@@ -575,10 +572,7 @@ def run_v3_modes_bench(spark, sf_dir: str) -> dict:
         # central variant_attrs claim ("typed shredded access beats
         # per-query JSON string parsing") is a round-over-round number,
         # not prose. Row counts must agree between the twins.
-        flat_json = flatten_traces(
-            parse_traces_json(spark.read.text(payload_dir)),
-            ns_timestamps=True,
-        )
+        flat_json = flatten_ns(spark.read.text(payload_dir))
         tj = cat.create_table(
             "bench",
             "tr_json",
@@ -586,7 +580,7 @@ def run_v3_modes_bench(spark, sf_dir: str) -> dict:
             partition_source="start_time_unix_nano",
             granularity="daily",
             properties={"format-version": "3"},
-            iceberg_types=ns_trace_types(),
+            iceberg_types=ns_trace_types,
         )
         tj.append_dataframe(flat_json)
         t0 = time.perf_counter()
@@ -617,10 +611,8 @@ def run_v3_modes_bench(spark, sf_dir: str) -> dict:
         # r9/r10 same-host-A/B lesson).
         wide_dir = os.path.join(tmp, "payloads_wide")
         _synth_trace_payloads(spark, sf_dir, wide_dir, extra_attrs=10)
-        parsed_w = parse_traces_json(spark.read.text(wide_dir))
-        flat_w = to_variant_attrs(
-            flatten_traces(parsed_w, ns_timestamps=True), SIGNAL_TRACES
-        )
+        raw_w = spark.read.text(wide_dir)
+        flat_w = flatten_ns(raw_w, variant_attrs=True)
         tw = cat.create_table(
             "bench",
             "tr_v3_wide",
@@ -628,10 +620,10 @@ def run_v3_modes_bench(spark, sf_dir: str) -> dict:
             partition_source="start_time_unix_nano",
             granularity="daily",
             properties={"format-version": "3"},
-            iceberg_types=ns_trace_types(),
+            iceberg_types=ns_trace_types,
         )
         tw.append_dataframe(flat_w)
-        flat_wj = flatten_traces(parsed_w, ns_timestamps=True)
+        flat_wj = flatten_ns(raw_w)
         twj = cat.create_table(
             "bench",
             "tr_json_wide",
@@ -639,7 +631,7 @@ def run_v3_modes_bench(spark, sf_dir: str) -> dict:
             partition_source="start_time_unix_nano",
             granularity="daily",
             properties={"format-version": "3"},
-            iceberg_types=ns_trace_types(),
+            iceberg_types=ns_trace_types,
         )
         twj.append_dataframe(flat_wj)
         vq = tw.read(spark).where(

@@ -293,12 +293,6 @@ class ExporterConfig:
     retry: RetryConfig = field(default_factory=RetryConfig)
     source: SourceConfig = field(default_factory=SourceConfig)
     verbosity: str = "normal"
-    # AnyValue nesting bound for attribute/body parsing+encoding. The
-    # reference recurses unboundedly (traces.go:252-291); Spark schemas
-    # cannot, so this trades plan-compile cost (each level roughly
-    # doubles the from_json schema + encoder tree) for deep-kvlist
-    # fidelity. 2 covers the whole reference test corpus.
-    attr_depth: int = 2
     # Iceberg-v3-native NANOSECOND timestamps: every OTLP time column
     # stays full-precision epoch-nanos (LongType; catalog tables declare
     # timestamptz_ns at format-version 3) instead of the reference's
@@ -322,11 +316,6 @@ class ExporterConfig:
             self.source.validate()
         if self.verbosity not in VALID_VERBOSITY:
             raise ValueError(f"invalid verbosity {self.verbosity!r}")
-        if not 0 <= self.attr_depth <= 8:
-            raise ValueError(
-                f"attr_depth must be in [0, 8], got {self.attr_depth} "
-                "(each level doubles plan-compile cost)"
-            )
         if self.catalog.shred_paths and not self.variant_attrs:
             raise ValueError(
                 "catalog.shred_paths declares typed VARIANT paths — it "

@@ -2,13 +2,13 @@
 
 The reference converts OTLP pdata object trees to Arrow RecordBatches
 with hand-rolled row loops (internal/arrow/{traces,logs,metrics}.go).
-Here the same projections are declarative Catalyst plans over OTLP/JSON
-input (the public OpenTelemetry file-exporter format): explode the
-3-level nesting, then one `select` per output table.
+So does `flatten.otlp_to_arrow`: one Python pass over decoded requests
+(OTLP/JSON lines, or protobuf payloads decoded by `protobuf.py`) builds
+each output table as a `pa.Table` of its declared schema. The streaming
+pipeline runs it on the driver per micro-batch and as a `mapInArrow`
+body over replayed files.
 """
 
-from .traces import flatten_traces
-from .logs import flatten_logs
-from .metrics import flatten_metrics
+from .flatten import otlp_to_arrow
 
-__all__ = ["flatten_traces", "flatten_logs", "flatten_metrics"]
+__all__ = ["otlp_to_arrow"]

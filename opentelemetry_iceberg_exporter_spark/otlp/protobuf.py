@@ -1,39 +1,29 @@
 """OTLP protobuf ingestion without external dependencies.
 
 The reference consumes protobuf pdata from the collector
-(exporter.go:101-200); real collectors export protobuf, not JSON. The
-Spark-native path would be `from_protobuf` + the OTLP descriptor set,
-but this container ships neither the spark-protobuf jar nor the Python
-protobuf package — so this module implements the small, stable protobuf
-WIRE FORMAT (varints, fixed32/64, length-delimited — public spec) plus
-the public OTLP message descriptors (opentelemetry-proto), and decodes
-serialized Export*ServiceRequest payloads into OTLP/JSON lines that feed
-the existing parse_*_json -> flatten_* Catalyst plans.
+(exporter.go:101-200); real collectors export protobuf, not JSON. This
+container ships neither the spark-protobuf jar nor the Python protobuf
+package, so this module implements the small, stable protobuf WIRE
+FORMAT (varints, fixed32/64, length-delimited — public spec) plus the
+public OTLP message descriptors (opentelemetry-proto), and decodes a
+serialized Export*ServiceRequest into the dict `json.loads` makes of the
+same request's OTLP/JSON line.
 
-Execution shape: the decode is the genuinely non-relational step, so it
-runs as an Arrow-batched mapInPandas kernel (one Python call per batch,
-not per row); everything downstream is the same single Catalyst plan the
-JSON path uses. When a spark-protobuf jar is available, swapping this
-kernel for `from_protobuf(col, "ExportTraceServiceRequest", descPath)`
-is a one-function change — the descriptors below mirror that .proto.
+Execution shape: `flatten.decode_payloads` calls `decode_message` on
+each binary payload inside the flatten's own pass, so the protobuf and
+JSON paths share one flatten (exporter.go:101-200 feeds pdata from
+either wire format into the same conversion).
 
 Descriptor table format: {field_number: (json_name, kind, repeated)}
 with kinds matching OTLP/JSON encoding conventions (IDs hex, 64-bit ints
-as strings, bytes base64) so the decoded dict is exactly what
-otlp/model.py's from_json schemas expect.
+as strings, bytes base64) so the decoded dict has the OTLP/JSON field
+names and encodings.
 """
 
 from __future__ import annotations
 
 import base64
-import json
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql.types import StringType, StructField, StructType
 
 # ---------------------------------------------------------------------------
 # wire-format primitives
@@ -158,7 +148,7 @@ def decode_message(buf: bytes, desc: dict) -> dict:
 
 # ---------------------------------------------------------------------------
 # OTLP descriptors (public opentelemetry-proto field numbers), with
-# OTLP/JSON names/encodings matching otlp/model.py exactly.
+# OTLP/JSON names and encodings.
 
 ANYVALUE: dict = {}  # patched below (self-referential oneof)
 KEYVALUE = {1: ("key", "string", False), 2: ("value", ANYVALUE, False)}
@@ -361,34 +351,8 @@ RESOURCE_METRICS = {
 }
 METRICS_REQUEST = {1: ("resourceMetrics", RESOURCE_METRICS, True)}
 
-_REQUEST_DESC = {
+REQUEST_DESCRIPTORS = {
     "traces": TRACES_REQUEST,
     "logs": LOGS_REQUEST,
     "metrics": METRICS_REQUEST,
 }
-
-_JSON_SCHEMA = StructType([StructField("value", StringType(), False)])
-
-
-def protobuf_to_json_lines(
-    df: DataFrame, signal_kind: str, binary_col: str = "value"
-) -> DataFrame:
-    """DataFrame[binary payloads of Export*ServiceRequest] ->
-    DataFrame[value: OTLP/JSON string], Arrow-batched.
-
-    The output feeds the existing parse_{traces,logs,metrics}_json ->
-    flatten_* plans unchanged, so the protobuf and JSON ingestion paths
-    share one flatten implementation and one golden oracle (o01/o02/
-    o03's), mirroring exporter.go:101-200 which feeds pdata from either
-    wire format into the same conversion."""
-    desc = _REQUEST_DESC[signal_kind]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vals = [
-                json.dumps(decode_message(bytes(b), desc), separators=(",", ":"))
-                for b in pdf[binary_col]
-            ]
-            yield pd.DataFrame({"value": vals})
-
-    return df.mapInPandas(batches, _JSON_SCHEMA)

@@ -158,15 +158,15 @@ SELECT * FROM (VALUES
 def o14_ns_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..otlp.traces import flatten_traces, ns_trace_types, parse_traces_json
+    from ..schemas import TRACES_SCHEMA, ns_iceberg_types
+    from ..streaming.pipeline import flatten_signal
 
     fixtures = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
-    flat = flatten_traces(
-        parse_traces_json(
-            spark.read.text(os.path.join(fixtures, "otlp_traces.jsonl"))
-        ),
+    flat = flatten_signal(
+        spark.read.text(os.path.join(fixtures, "otlp_traces.jsonl")),
+        "traces",
         ns_timestamps=True,
-    ).select("span_id", "start_time_unix_nano", "end_time_unix_nano", "duration")
+    )["traces"].select("span_id", "start_time_unix_nano", "end_time_unix_nano", "duration")
     cat = FsCatalog(tempfile.mkdtemp(prefix="o14_ns_"))
     t = cat.create_table(
         "q",
@@ -175,7 +175,7 @@ def o14_ns_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_source="start_time_unix_nano",
         granularity="hourly",
         properties={"format-version": "3"},
-        iceberg_types=ns_trace_types(),
+        iceberg_types=ns_iceberg_types(TRACES_SCHEMA),
     )
     t.append_dataframe(flat)
     return t.read(spark).where(
@@ -219,18 +219,14 @@ FROM j
 def o15_variant_attrs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..otlp.traces import flatten_traces, parse_traces_json
-    from ..schemas import SIGNAL_TRACES, to_variant_attrs
+    from ..streaming.pipeline import flatten_signal
 
     fixtures = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
-    flat = to_variant_attrs(
-        flatten_traces(
-            parse_traces_json(
-                spark.read.text(os.path.join(fixtures, "otlp_traces.jsonl"))
-            )
-        ),
-        SIGNAL_TRACES,
-    ).select("span_id", "span_attributes", "resource_attributes")
+    flat = flatten_signal(
+        spark.read.text(os.path.join(fixtures, "otlp_traces.jsonl")),
+        "traces",
+        variant_attrs=True,
+    )["traces"].select("span_id", "span_attributes", "resource_attributes")
     cat = FsCatalog(tempfile.mkdtemp(prefix="o15_va_"))
     t = cat.create_table(
         "q", "tr", flat.schema, properties={"format-version": "3"}

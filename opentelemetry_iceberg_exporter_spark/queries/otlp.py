@@ -16,11 +16,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..otlp.logs import flatten_logs, parse_logs_json
-from ..otlp.metrics import flatten_metrics, parse_metrics_json
-from ..otlp.traces import flatten_traces, parse_traces_json
 from ..recovery.reconciler import find_orphans, registered_files
 from ..recovery.scanner import apply_time_filter, parse_partitions
+from ..streaming.pipeline import flatten_signal
 from . import register
 
 _FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
@@ -54,7 +52,7 @@ SELECT * FROM (VALUES
     "strings, ns->us truncation, ns-exact duration, null rules.",
 )
 def o01_flatten_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
-    flat = flatten_traces(parse_traces_json(_fixture_df(spark, "otlp_traces.jsonl")))
+    flat = flatten_signal(_fixture_df(spark, "otlp_traces.jsonl"), "traces")["traces"]
     return flat.select(
         "trace_id",
         "span_id",
@@ -90,7 +88,7 @@ SELECT * FROM (VALUES
     "IDs and zero observed-time -> NULL, event_name placeholder.",
 )
 def o02_flatten_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    flat = flatten_logs(parse_logs_json(_fixture_df(spark, "otlp_logs.jsonl")))
+    flat = flatten_signal(_fixture_df(spark, "otlp_logs.jsonl"), "logs")["logs"]
     return flat.select(
         "time_unix_nano",
         "severity_number",
@@ -117,9 +115,7 @@ SELECT * FROM (VALUES
     "metric type.",
 )
 def o03_metrics_demux_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dfs = flatten_metrics(
-        parse_metrics_json(_fixture_df(spark, "otlp_metrics.jsonl"))
-    )
+    dfs = flatten_signal(_fixture_df(spark, "otlp_metrics.jsonl"), "metrics")
     parts = [
         df.agg(F.count(F.lit(1)).alias("n_rows")).select(
             F.lit(sig).alias("signal"), "n_rows"
@@ -256,9 +252,7 @@ SELECT * FROM (VALUES
     "pandas-based harness cannot order list cells).",
 )
 def o07_flatten_histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dfs = flatten_metrics(
-        parse_metrics_json(_fixture_df(spark, "otlp_metrics.jsonl"))
-    )
+    dfs = flatten_signal(_fixture_df(spark, "otlp_metrics.jsonl"), "metrics")
     null = lambda t: F.lit(None).cast(t)  # noqa: E731
     hist = dfs["metrics_histogram"].select(
         F.lit("histogram").alias("signal"),

@@ -305,13 +305,13 @@ SELECT * FROM (VALUES
 """,
     doc="The reference's core workflow end-to-end as a STREAM: OTLP/JSON "
     "batches arrive on a file stream, flatten to the 33-col traces "
-    "table inside the micro-batch (same Catalyst projection as o01), "
+    "table inside the micro-batch (the same Arrow flatten as o01), "
     "land in the sink — checked against the identical hand-computed "
     "oracle as the batch path (exporter.go:101-126 consume->convert->"
     "write, re-expressed as readStream -> flatten -> writeStream).",
 )
 def st05_stream_otlp_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..otlp.traces import flatten_traces, parse_traces_json
+    from ..streaming.pipeline import flatten_signal
     from .otlp import _FIXTURES
 
     raw = (
@@ -319,7 +319,7 @@ def st05_stream_otlp_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "otlp_traces.jsonl")
         .load(_FIXTURES)
     )
-    flat = flatten_traces(parse_traces_json(raw)).select(
+    flat = flatten_signal(raw, "traces")["traces"].select(
         "trace_id",
         "span_id",
         "parent_span_id",

@@ -50,7 +50,6 @@ from ..sinks.iceberg_fs import (
     _ancestry_window,
     data_files_in_range,
     read_changelog,
-    read_ocf,  # noqa: F401 — kept importable from this module
     read_schema_for,
     source_range_scope,
     table_file_scan,

@@ -5,13 +5,15 @@ Reference lifecycle (SURVEY §3 entry point 1):
     -> consume{Traces,Logs,Metrics}                       exporter.go:101-200
     -> flatten -> write (catalog | fileio)                writer.go:161-297
 
-Spark-native shape: `readStream` over OTLP/JSON lines ->
-`foreachBatch(flatten + demux + sink append)` with checkpointing.
+Spark-native shape: `readStream` over OTLP payloads ->
+`foreachBatch(collect + Arrow flatten on the driver + demux + sink
+append)` with checkpointing; the flatten is the reference's in-process
+append loop (otlp/flatten.py), the Parquet writes run on the executors.
 The exporterhelper queue/retry/timeout envelope (X3) maps onto
 Structured Streaming semantics directly:
 * queue + at-least-once retry  -> micro-batch replay from the checkpoint
 * persistent (file-backed) queue -> replayable source + checkpoint dir
-* 10 consumers                  -> executor parallelism
+* 10 consumers                  -> executor parallelism (writes)
 * exactly-once upgrade          -> Iceberg atomic commits + checkpoint
   (the reference is at-least-once; Spark+Iceberg is exactly-once per
   micro-batch — SURVEY §7 risk 5)
@@ -30,15 +32,21 @@ from __future__ import annotations
 import logging
 import threading
 from collections.abc import Callable
+from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas as S
 from ..config import ExporterConfig, SourceConfig
-from ..otlp.logs import flatten_logs, parse_logs_json
-from ..otlp.metrics import flatten_metrics, metric_point_counts, parse_metrics_json
-from ..otlp.traces import flatten_traces, parse_traces_json
+from ..otlp.flatten import (
+    SIGNALS,
+    arrow_batches,
+    decode_payloads,
+    frame_schema,
+    otlp_to_arrow,
+)
 from ..sinks import PERMANENT, classify_error, write_raw_parquet
 from ..threads import map_concurrently
 
@@ -47,73 +55,70 @@ log = logging.getLogger(__name__)
 SinkFn = Callable[[DataFrame, str], None]
 
 
+def _attrs(df: DataFrame, signal: str, variant_attrs: bool) -> DataFrame:
+    """The v3 `variant_attrs` form: attribute JSON parsed to VARIANT in
+    Spark (parse_json), the flatten itself always emits JSON text."""
+    return S.to_variant_attrs(df, signal) if variant_attrs else df
+
+
 def flatten_signal(
     df: DataFrame,
     signal_kind: str,
-    depth: int | None = None,
     ns_timestamps: bool = False,
     variant_attrs: bool = False,
 ) -> dict[str, DataFrame]:
-    """Parse+flatten a DataFrame of OTLP/JSON lines (column `value`) into
-    {signal: conformed DataFrame}. signal_kind in {traces, logs, metrics}.
-    `ns_timestamps=True` keeps every OTLP time column at full epoch-nanos
-    precision (v3 `timestamptz_ns` tables) instead of the reference's
-    lossy ns->us truncation.
+    """OTLP payloads (column `value`: OTLP/JSON lines as strings, or
+    serialized Export*ServiceRequests as binary) -> {signal: DataFrame}
+    of the declared names and types. signal_kind in {traces, logs,
+    metrics}. `ns_timestamps=True` keeps every OTLP time column at full
+    epoch-nanos precision (v3 `timestamptz_ns` tables) instead of the
+    reference's lossy ns->us truncation.
 
-    For metrics the 5 projections share one un-cached exploded plan; use
-    flatten_signal_cached inside foreachBatch to persist the shared
-    explode for the batch's lifetime (and unpersist it afterwards)."""
-    dfs, _ = flatten_signal_cached(
-        df,
-        signal_kind,
-        cache=False,
-        depth=depth,
-        ns_timestamps=ns_timestamps,
-        variant_attrs=variant_attrs,
-    )
-    return dfs
+    Each output table is one `mapInArrow` over the source running the
+    Arrow flatten per Arrow batch on the executors, so the plan is
+    source -> MapInArrow and no payload reaches the driver; it works on
+    streaming sources too."""
+    if signal_kind not in SIGNALS:
+        raise ValueError(f"unknown signal kind {signal_kind!r}")
+    source = df.select("value")
+    return {
+        sig: _attrs(
+            source.mapInArrow(
+                partial(
+                    arrow_batches,
+                    signal_kind=signal_kind,
+                    signal=sig,
+                    ns_timestamps=ns_timestamps,
+                ),
+                frame_schema(sig, ns_timestamps),
+            ),
+            sig,
+            variant_attrs,
+        )
+        for sig in SIGNALS[signal_kind]
+    }
 
 
 def flatten_signal_cached(
-    df: DataFrame,
-    signal_kind: str,
-    cache: bool = True,
-    depth: int | None = None,
-    ns_timestamps: bool = False,
-    variant_attrs: bool = False,
-) -> tuple[dict[str, DataFrame], DataFrame | None]:
-    """Like flatten_signal, but returns the persisted shared intermediate
-    (or None) so the caller can unpersist it when done — the fix for the
-    per-micro-batch CacheManager leak: an inner .cache() with no handle
-    accumulates one InMemoryRelation per batch on a long-running
-    metrics stream."""
-    from ..otlp.model import ATTR_DEPTH
+    batch_df: DataFrame, signal_kind: str, ns_timestamps: bool = False
+) -> dict[str, pa.Table]:
+    """The foreachBatch flatten: collect the micro-batch's `value` column
+    in one job and flatten it on the driver. Returns {signal: pa.Table}
+    for every table the kind feeds, the empty ones included, or {} for
+    an empty micro-batch. The whole micro-batch is in driver memory
+    here, so sources bound it (max_per_trigger / maxOffsetsPerTrigger)."""
+    values = [row[0] for row in batch_df.select("value").collect()]
+    if not values:
+        return {}
+    return otlp_to_arrow(decode_payloads(values, signal_kind), signal_kind, ns_timestamps)
 
-    depth = ATTR_DEPTH if depth is None else depth
-    ns, va = ns_timestamps, variant_attrs
 
-    def _finish(sig: str, flat: DataFrame) -> DataFrame:
-        if va:
-            flat = S.to_variant_attrs(flat, sig)
-        return S.conform(flat, S.schema_for(sig, ns, va))
-
-    if signal_kind == "traces":
-        flat = flatten_traces(parse_traces_json(df, depth=depth), depth, ns)
-        return {S.SIGNAL_TRACES: _finish(S.SIGNAL_TRACES, flat)}, None
-    if signal_kind == "logs":
-        flat = flatten_logs(parse_logs_json(df, depth=depth), depth, ns)
-        return {S.SIGNAL_LOGS: _finish(S.SIGNAL_LOGS, flat)}, None
-    if signal_kind == "metrics":
-        from ..otlp.metrics import _explode_to_metric, flatten_metrics_from_metric
-
-        metric = _explode_to_metric(parse_metrics_json(df, depth=depth))
-        handle: DataFrame | None = None
-        if cache:
-            metric = metric.persist()
-            handle = metric
-        dfs = flatten_metrics_from_metric(metric, depth, ns)
-        return {sig: _finish(sig, d) for sig, d in dfs.items()}, handle
-    raise ValueError(f"unknown signal kind {signal_kind!r}")
+def _frame(
+    spark: SparkSession, table: pa.Table, signal: str, config: ExporterConfig
+) -> DataFrame:
+    """A driver-flattened table as a local DataFrame of its declared schema."""
+    df = spark.createDataFrame(table, frame_schema(signal, config.ns_timestamps))
+    return _attrs(df, signal, config.variant_attrs)
 
 
 def default_sink(config: ExporterConfig) -> SinkFn:
@@ -170,24 +175,26 @@ def make_batch_processor(
     sink: SinkFn | None = None,
     dead_letter: SinkFn | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch body: flatten, demux, empty-skip (F1), append,
-    classify errors (X2). With catalog.atomic_batch (REST), the demuxed
-    signals commit in ONE multi-table CommitTransaction instead of
-    per-signal appends.
+    """The foreachBatch body: flatten on the driver, demux, empty-skip
+    (F1), append, classify errors (X2). With catalog.atomic_batch
+    (REST), the demuxed signals commit in ONE multi-table
+    CommitTransaction instead of per-signal appends.
 
-    A custom `sink` gets every demuxed frame, the empty ones too, one
-    after another; a transient error stops the batch at that frame. The
-    catalog sinks (default_sink for fs/rest, a CatalogSink) go further.
-    One aggregate over the persisted metric explode counts each type's
-    rows; a type with no rows runs no Spark job and only has its table
-    ensured. The other frames are written and committed concurrently,
-    on at most defaultParallelism threads (threads.map_concurrently).
-    Either way each frame keeps its own error handling, and `dead_letter`
-    runs on the calling thread, in frame order: a permanent error is
-    logged and the frame dead-lettered; a transient one re-raises (for
-    catalog sinks, once every frame has finished), so frames that
-    committed stay committed and the replayed batch appends them again
-    (at-least-once per table; atomic_batch is the all-or-nothing form)."""
+    The micro-batch's payloads are collected in one job and flattened
+    in-process (flatten_signal_cached); each frame the sink gets is a
+    local DataFrame over its Arrow table. A custom `sink` gets every
+    demuxed frame, the empty ones too, one after another; a transient
+    error stops the batch at that frame. The catalog sinks (default_sink
+    for fs/rest, a CatalogSink) go further: a frame with no rows runs no
+    Spark job and only has its table ensured, and the other frames are
+    written and committed concurrently, on at most defaultParallelism
+    threads (threads.map_concurrently). Either way each frame keeps its
+    own error handling, and `dead_letter` runs on the calling thread, in
+    frame order: a permanent error is logged and the frame
+    dead-lettered; a transient one re-raises (for catalog sinks, once
+    every frame has finished), so frames that committed stay committed
+    and the replayed batch appends them again (at-least-once per table;
+    atomic_batch is the all-or-nothing form)."""
     atomic = (
         sink is None
         and config.catalog.catalog_type == "rest"
@@ -196,15 +203,16 @@ def make_batch_processor(
     sink = sink or default_sink(config)
 
     def atomic_commit(
-        spark: SparkSession, flattened: dict[str, DataFrame], batch_id: int
+        spark: SparkSession, tables: dict[str, pa.Table], batch_id: int
     ) -> None:
+        frames = {sig: _frame(spark, t, sig, config) for sig, t in tables.items()}
         try:
-            sink.append_all(spark, flattened)
+            sink.append_all(spark, frames)
         except Exception as exc:  # noqa: BLE001 — classified below
             if classify_error(exc) == PERMANENT:
                 log.error("permanent error on batch %s (atomic): %s", batch_id, exc)
                 if dead_letter is not None:
-                    for signal, df in flattened.items():
+                    for signal, df in frames.items():
                         dead_letter(df, signal)
                 return  # swallowed: collector semantics (X2)
             raise  # transient: streaming engine retries the WHOLE batch
@@ -217,63 +225,50 @@ def make_batch_processor(
             dead_letter(df, signal)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # F1 empty-batch short-circuit
+        tables = flatten_signal_cached(batch_df, signal_kind, config.ns_timestamps)
+        if not tables:  # F1 empty-batch short-circuit
             return
-        # 5-way metric demux persists the exploded source once (§4) and
-        # releases it in the finally block — the handle-less inner cache
-        # of r1 leaked one InMemoryRelation per micro-batch.
-        flattened, cached = flatten_signal_cached(
-            batch_df,
-            signal_kind,
-            depth=config.attr_depth,
-            ns_timestamps=config.ns_timestamps,
-            variant_attrs=config.variant_attrs,
-        )
-        try:
-            if atomic:
-                atomic_commit(batch_df.sparkSession, flattened, batch_id)
-                return
-            if not isinstance(sink, CatalogSink):
-                for signal, df in flattened.items():
-                    try:
-                        sink(df, signal)
-                    except Exception as exc:  # noqa: BLE001 — classified below
-                        if classify_error(exc) != PERMANENT:
-                            raise  # transient: streaming engine retries the batch
-                        dead(batch_id, signal, df, exc)
-                return
-            spark = batch_df.sparkSession
-            empty: set[str] = set()
-            if cached is not None:
-                rows = metric_point_counts(cached)
-                empty = {sig for sig in flattened if not rows[sig]}
-
-            def sink_frame(item: tuple[str, DataFrame]) -> Exception | None:
-                signal, df = item
+        spark = batch_df.sparkSession
+        if atomic:
+            atomic_commit(spark, tables, batch_id)
+            return
+        if not isinstance(sink, CatalogSink):
+            for signal, table in tables.items():
+                df = _frame(spark, table, signal, config)
                 try:
-                    if signal in empty:
-                        sink.ensure(spark, signal)  # F1: its table, no write job
-                    else:
-                        sink(df, signal)
+                    sink(df, signal)
                 except Exception as exc:  # noqa: BLE001 — classified below
-                    return exc
-                return None
-
-            frames = list(flattened.items())
-            failures = map_concurrently(spark, sink_frame, frames)
-            transient = None
-            for (signal, df), exc in zip(frames, failures):
-                if exc is None:
-                    continue
-                if classify_error(exc) == PERMANENT:
+                    if classify_error(exc) != PERMANENT:
+                        raise  # transient: streaming engine retries the batch
                     dead(batch_id, signal, df, exc)
-                elif transient is None:
-                    transient = exc
-            if transient is not None:
-                raise transient  # the streaming engine retries the batch
-        finally:
-            if cached is not None:
-                cached.unpersist()
+            return
+        made: dict[str, DataFrame] = {}
+
+        def sink_frame(item: tuple[str, pa.Table]) -> Exception | None:
+            signal, table = item
+            try:
+                if not table.num_rows:
+                    sink.ensure(spark, signal)  # F1: its table, no write job
+                else:
+                    made[signal] = _frame(spark, table, signal, config)
+                    sink(made[signal], signal)
+            except Exception as exc:  # noqa: BLE001 — classified below
+                return exc
+            return None
+
+        items = list(tables.items())
+        failures = map_concurrently(spark, sink_frame, items)
+        transient = None
+        for (signal, table), exc in zip(items, failures):
+            if exc is None:
+                continue
+            if classify_error(exc) == PERMANENT:
+                df = made[signal] if signal in made else _frame(spark, table, signal, config)
+                dead(batch_id, signal, df, exc)
+            elif transient is None:
+                transient = exc
+        if transient is not None:
+            raise transient  # the streaming engine retries the batch
 
     return process
 
@@ -300,9 +295,13 @@ def open_source_stream(
     The reference sits behind the collector's persistent queue
     (factory.go:90-100); both replayable Spark sources give the same
     at-least-once replay from the checkpoint. Payloads are OTLP/JSON
-    text or serialized protobuf Export*ServiceRequest (one request per
-    Kafka record / per file), decoded by otlp/protobuf.py into the same
-    flatten plan (exporter.go:101-200 consumes both through one path)."""
+    text (a string `value`) or serialized protobuf Export*ServiceRequests
+    (a binary `value`, one request per Kafka record / per file), which
+    the flatten decodes with otlp/protobuf.py in its own pass
+    (exporter.go:101-200 consumes both through one path). The
+    foreachBatch body flattens each micro-batch on the driver, so bound
+    it: `max_per_trigger` (files) or the Kafka `maxOffsetsPerTrigger`
+    option."""
     source.validate()
     if source.kind == "kafka":
         if not kafka_available(spark):
@@ -316,13 +315,9 @@ def open_source_stream(
             reader = reader.option(k, v)
         raw = reader.load()  # value: binary
         if source.wire_format == "protobuf":
-            from ..otlp.protobuf import protobuf_to_json_lines
-
-            return protobuf_to_json_lines(raw.select("value"), signal_kind)
+            return raw.select("value")
         return raw.select(F.col("value").cast("string").alias("value"))
     if source.wire_format == "protobuf":
-        from ..otlp.protobuf import protobuf_to_json_lines
-
         # Streaming binaryFile sources require the schema spelled out
         # (batch mode infers this same fixed schema).
         reader = spark.readStream.format("binaryFile").schema(
@@ -332,8 +327,7 @@ def open_source_stream(
             reader = reader.option("maxFilesPerTrigger", str(source.max_per_trigger))
         for k, v in source.options.items():
             reader = reader.option(k, v)
-        raw = reader.load(source.path).select(F.col("content").alias("value"))
-        return protobuf_to_json_lines(raw, signal_kind)
+        return reader.load(source.path).select(F.col("content").alias("value"))
     reader = spark.readStream.format("text")
     if source.max_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(source.max_per_trigger))
@@ -395,23 +389,16 @@ def export_batch(
     wire_format: str = "json",
 ) -> dict[str, int]:
     """Batch-mode replay of the same pipeline (reference replay path);
-    returns per-signal appended row counts."""
+    returns per-signal appended row counts. The flatten runs on the
+    executors (flatten_signal's mapInArrow), so a replay of any size
+    never lands on the driver."""
     if wire_format == "protobuf":
-        from ..otlp.protobuf import protobuf_to_json_lines
-
-        binary = spark.read.format("binaryFile").load(input_path).select(
+        raw = spark.read.format("binaryFile").load(input_path).select(
             F.col("content").alias("value")
         )
-        raw = protobuf_to_json_lines(binary, signal_kind)
     else:
         raw = spark.read.text(input_path)
-    flattened, cached = flatten_signal_cached(
-        raw,
-        signal_kind,
-        depth=config.attr_depth,
-        ns_timestamps=config.ns_timestamps,
-        variant_attrs=config.variant_attrs,
-    )
+    flattened = flatten_signal(raw, signal_kind, config.ns_timestamps, config.variant_attrs)
     atomic = (
         sink is None
         and config.catalog.catalog_type == "rest"
@@ -419,30 +406,26 @@ def export_batch(
     )
     sink = sink or default_sink(config)
     counts: dict[str, int] = {}
-    try:
-        if atomic:
-            frames: dict[str, DataFrame] = {}
-            for signal, df in flattened.items():
-                df = df.persist()
-                counts[signal] = df.count()
-                if counts[signal]:  # F1
-                    frames[signal] = df
-                else:
-                    df.unpersist()
-            if frames:
-                # every signal of the batch advances in ONE transaction
-                sink.append_all(spark, frames)
-            for df in frames.values():
+    if atomic:
+        frames: dict[str, DataFrame] = {}
+        for signal, df in flattened.items():
+            df = df.persist()
+            counts[signal] = df.count()
+            if counts[signal]:  # F1
+                frames[signal] = df
+            else:
                 df.unpersist()
-        else:
-            for signal, df in flattened.items():
-                df = df.persist()
-                n = df.count()
-                counts[signal] = n
-                if n:  # F1
-                    sink(df, signal)
-                df.unpersist()
-    finally:
-        if cached is not None:
-            cached.unpersist()
+        if frames:
+            # every signal of the batch advances in ONE transaction
+            sink.append_all(spark, frames)
+        for df in frames.values():
+            df.unpersist()
+    else:
+        for signal, df in flattened.items():
+            df = df.persist()
+            n = df.count()
+            counts[signal] = n
+            if n:  # F1
+                sink(df, signal)
+            df.unpersist()
     return counts

@@ -12,13 +12,13 @@ Reference parity (internal/arrow/logs.go):
 
 from __future__ import annotations
 
-from ..plancache import column_cache
+from opentelemetry_iceberg_exporter_spark.plancache import column_cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .anyvalue import attributes_to_json_sql, log_body_to_string_sql
-from .model import ATTR_DEPTH, LOGS_REQUEST, at_depth
+from .model import ATTR_DEPTH, LOGS_REQUEST
 from .traces import (
     empty_to_null,
     hex_id_or_null,
@@ -27,11 +27,9 @@ from .traces import (
 )
 
 
-def parse_logs_json(
-    df: DataFrame, json_col: str = "value", depth: int = ATTR_DEPTH
-) -> DataFrame:
+def parse_logs_json(df: DataFrame, json_col: str = "value") -> DataFrame:
     return df.select(
-        F.from_json(F.col(json_col), at_depth(LOGS_REQUEST, depth)).alias("req")
+        F.from_json(F.col(json_col), LOGS_REQUEST).alias("req")
     ).select("req.resourceLogs")
 
 

@@ -22,24 +22,22 @@ Reference parity (internal/arrow/metrics.go):
 
 from __future__ import annotations
 
-from ..plancache import column_cache
+from opentelemetry_iceberg_exporter_spark.plancache import column_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import schemas as S
+from opentelemetry_iceberg_exporter_spark import schemas as S
 from .anyvalue import attributes_to_json_sql
-from .model import ATTR_DEPTH, METRICS_REQUEST, at_depth
+from .model import ATTR_DEPTH, METRICS_REQUEST
 from .traces import empty_to_null, hex_id_or_null, ns_str_to_ts, service_name_col
 
 TEMPORALITY = ["UNSPECIFIED", "DELTA", "CUMULATIVE"]  # metrics.go:776-787
 
 
-def parse_metrics_json(
-    df: DataFrame, json_col: str = "value", depth: int = ATTR_DEPTH
-) -> DataFrame:
+def parse_metrics_json(df: DataFrame, json_col: str = "value") -> DataFrame:
     return df.select(
-        F.from_json(F.col(json_col), at_depth(METRICS_REQUEST, depth)).alias("req")
+        F.from_json(F.col(json_col), METRICS_REQUEST).alias("req")
     ).select("req.resourceMetrics")
 
 
@@ -191,45 +189,6 @@ def flatten_metrics(
     and unpersist it when the batch is done.
     """
     return flatten_metrics_from_metric(_explode_to_metric(df), depth, ns_timestamps)
-
-
-# metric-level field holding each demuxed signal's data points
-_POINT_FIELDS = {
-    S.SIGNAL_METRICS_GAUGE: "gauge",
-    S.SIGNAL_METRICS_SUM: "sum",
-    S.SIGNAL_METRICS_HISTOGRAM: "histogram",
-    S.SIGNAL_METRICS_EXP_HISTOGRAM: "exponentialHistogram",
-    S.SIGNAL_METRICS_SUMMARY: "summary",
-}
-
-
-def metric_point_counts(metric: DataFrame) -> dict[str, int]:
-    """Rows each of flatten_metrics_from_metric's 5 frames holds, from
-    ONE job over the metric-level DF: a frame's rows are the data points
-    of the metrics carrying its type (explode drops null and empty point
-    lists, so they count 0). Run over the persisted explode, the job
-    also fills the cache the frame writes then read.
-
-    The sums ride an Observation on a no-op write: one single-stage job,
-    where a global aggregate would add an exchange and two more jobs."""
-    from pyspark.sql import Observation
-
-    m = F.col("metric")
-    seen = Observation()
-    metric.observe(
-        seen,
-        *[
-            F.sum(
-                F.when(
-                    m[field]["dataPoints"].isNotNull(),
-                    F.size(m[field]["dataPoints"]),
-                ).otherwise(F.lit(0))
-            ).alias(sig)
-            for sig, field in _POINT_FIELDS.items()
-        ],
-    ).write.format("noop").mode("overwrite").save()
-    got = seen.get
-    return {sig: int(got[sig] or 0) for sig in _POINT_FIELDS}
 
 
 def flatten_metrics_from_metric(

@@ -383,38 +383,3 @@ METRICS_REQUEST = StructType(
         )
     ]
 )
-
-
-# --- configurable attribute depth ------------------------------------------
-
-
-def at_depth(schema: StructType, depth: int) -> StructType:
-    """Rebuild a request schema with every AnyValue-bearing subtree
-    (attribute lists, log bodies) bounded at `depth` instead of the
-    default ATTR_DEPTH. Structural replacement: any field whose type
-    equals the depth-ATTR_DEPTH attributes/AnyValue shape is swapped for
-    the depth-`depth` equivalent; everything else passes through. Lets
-    deep-kvlist corpora trade plan-compile cost for faithful rendering
-    (vs the reference's unbounded recursion, traces.go:252-291) without
-    rebuilding the schema literals."""
-    if depth == ATTR_DEPTH:
-        return schema
-    if depth < 0:
-        raise ValueError(f"attribute depth must be >= 0, got {depth}")
-    default_attrs = ATTRIBUTES
-    default_anyvalue = anyvalue_type()
-
-    def rewrite(dt):
-        if dt == default_attrs:
-            return ArrayType(keyvalue_type(depth))
-        if dt == default_anyvalue:
-            return anyvalue_type(depth)
-        if isinstance(dt, StructType):
-            return StructType(
-                [StructField(f.name, rewrite(f.dataType), f.nullable) for f in dt.fields]
-            )
-        if isinstance(dt, ArrayType):
-            return ArrayType(rewrite(dt.elementType), dt.containsNull)
-        return dt
-
-    return rewrite(schema)

@@ -21,13 +21,13 @@ transforms. No Python executes per row.
 
 from __future__ import annotations
 
-from ..plancache import column_cache
+from opentelemetry_iceberg_exporter_spark.plancache import column_cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .anyvalue import attributes_to_json_sql
-from .model import ATTR_DEPTH, TRACES_REQUEST, at_depth
+from .model import ATTR_DEPTH, TRACES_REQUEST
 
 SPAN_KINDS = ["UNSPECIFIED", "INTERNAL", "SERVER", "CLIENT", "PRODUCER", "CONSUMER"]
 
@@ -85,14 +85,11 @@ def service_name_col(res_attrs: Column) -> Column:
     return empty_to_null(v)
 
 
-def parse_traces_json(
-    df: DataFrame, json_col: str = "value", depth: int = ATTR_DEPTH
-) -> DataFrame:
-    """Parse OTLP/JSON request lines with the declared schema; `depth`
-    bounds AnyValue nesting (config.attr_depth — plan-compile cost vs
-    deep-kvlist fidelity trade, see model.py)."""
+def parse_traces_json(df: DataFrame, json_col: str = "value") -> DataFrame:
+    """Parse OTLP/JSON request lines with the declared schema (AnyValue
+    nesting bounded at ATTR_DEPTH, see model.py)."""
     return df.select(
-        F.from_json(F.col(json_col), at_depth(TRACES_REQUEST, depth)).alias("req")
+        F.from_json(F.col(json_col), TRACES_REQUEST).alias("req")
     ).select("req.resourceSpans")
 
 
@@ -217,15 +214,3 @@ def _trace_columns(depth: int, ns_timestamps: bool) -> tuple:
             "scope_dropped_attributes_count"
         ),
     )
-
-
-def ns_trace_types() -> dict[str, str]:
-    """create_table `iceberg_types` for the ns-native traces variant:
-    which LongType columns are semantically v3 nanosecond timestamps.
-    (events_time_unix_nano is an array column — manifests carry no
-    bounds for it and Iceberg has no list-of-ns type shorthand here, so
-    it stays array<long> of epoch-nanos by documented convention.)"""
-    return {
-        "start_time_unix_nano": "timestamptz_ns",
-        "end_time_unix_nano": "timestamptz_ns",
-    }

@@ -1,5 +1,5 @@
-"""The SQL-text encoder builders (anyvalue.*_sql) must be semantically
-identical to the Column builders they replace in the hot path — checked
+"""The parity oracle's SQL-text encoder builders (catalyst_otlp/anyvalue
+*_sql) must be semantically identical to its Column builders — checked
 over the full OTLP golden fixture corpus plus adversarial synthetic
 AnyValues (nested arrays/kvlists at the depth bound, bytes, integral and
 huge doubles)."""
@@ -10,13 +10,13 @@ import json
 
 from pyspark.sql import functions as F
 
-from opentelemetry_iceberg_exporter_spark.otlp.anyvalue import (
+from catalyst_otlp.anyvalue import (
     attributes_to_json,
     attributes_to_json_sql,
     log_body_to_string,
     log_body_to_string_sql,
 )
-from opentelemetry_iceberg_exporter_spark.otlp.model import LOGS_REQUEST
+from catalyst_otlp.model import LOGS_REQUEST
 
 
 def _log_records(spark, payloads: list[dict]):

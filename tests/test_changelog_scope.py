@@ -157,11 +157,10 @@ class TestScopedTail:
     def test_tail_scope_prunes_batches_and_rows(
         self, spark, table, tmp_path, monkeypatch
     ):
-        from opentelemetry_iceberg_exporter_spark.streaming import (
-            iceberg_tail as tmod,
-        )
+        from opentelemetry_iceberg_exporter_spark.sinks import iceberg_fs as mod
 
-        reads = _manifest_reads(monkeypatch, tmod)
+        # tail planning walks iceberg_fs._added_files: its reads count there
+        reads = _manifest_reads(monkeypatch, mod)
         tail = IcebergTailer(
             table, str(tmp_path / "ck.json"), source_range=DAY1
         )

@@ -132,11 +132,3 @@ class TestExporterConfig:
         cfg.verbosity = "debug"
         with pytest.raises(ValueError, match="verbosity"):
             cfg.validate()
-
-    def test_attr_depth_bounds(self):
-        cfg = ExporterConfig(storage=StorageConfig(bucket="/wh"), attr_depth=4)
-        cfg.validate()
-        for bad in (-1, 9):
-            cfg = ExporterConfig(storage=StorageConfig(bucket="/wh"), attr_depth=bad)
-            with pytest.raises(ValueError, match="attr_depth"):
-                cfg.validate()

@@ -23,22 +23,10 @@ from opentelemetry_iceberg_exporter_spark.config import (
     ExporterConfig,
     StorageConfig,
 )
-from opentelemetry_iceberg_exporter_spark.otlp.logs import flatten_logs, parse_logs_json
-from opentelemetry_iceberg_exporter_spark.otlp.metrics import (
-    _explode_to_metric,
-    flatten_metrics_from_metric,
-    metric_point_counts,
-    parse_metrics_json,
-)
-from opentelemetry_iceberg_exporter_spark.otlp.model import ATTR_DEPTH
-from opentelemetry_iceberg_exporter_spark.otlp.traces import (
-    flatten_traces,
-    parse_traces_json,
-)
 from opentelemetry_iceberg_exporter_spark.sinks import iceberg_fs
 from opentelemetry_iceberg_exporter_spark.sinks.iceberg_fs import FsCatalog
 from opentelemetry_iceberg_exporter_spark.sinks.iceberg_sink import FsIcebergSink
-from opentelemetry_iceberg_exporter_spark.streaming import make_batch_processor
+from opentelemetry_iceberg_exporter_spark.streaming import flatten_signal, make_batch_processor
 from opentelemetry_iceberg_exporter_spark.threads import map_concurrently
 
 from rest_stub import make_server
@@ -53,12 +41,9 @@ def _typed(schema) -> list:
 def _flattened(spark, ns: bool) -> dict:
     """Every signal's raw flatten output (before any conform)."""
     df = spark.createDataFrame([("{}",)], "value string")
-    out = {
-        S.SIGNAL_TRACES: flatten_traces(parse_traces_json(df), ATTR_DEPTH, ns),
-        S.SIGNAL_LOGS: flatten_logs(parse_logs_json(df), ATTR_DEPTH, ns),
-    }
-    metric = _explode_to_metric(parse_metrics_json(df))
-    out.update(flatten_metrics_from_metric(metric, ATTR_DEPTH, ns))
+    out = {}
+    for kind in ("traces", "logs", "metrics"):
+        out.update(flatten_signal(df, kind, ns_timestamps=ns))
     return out
 
 
@@ -145,15 +130,6 @@ def _tables(config) -> dict:
         for sig in METRIC_TABLES
         if catalog.table_exists(ns, S.table_name(sig))
     }
-
-
-def test_point_counts_match_frames(spark):
-    metric = _explode_to_metric(parse_metrics_json(_batch(spark, _gauge_sum_histogram())))
-    counts = metric_point_counts(metric)
-    frames = flatten_metrics_from_metric(metric)
-    assert counts == {sig: df.count() for sig, df in frames.items()}
-    assert counts[S.SIGNAL_METRICS_GAUGE] == 2
-    assert {sig for sig, n in counts.items() if not n} == EMPTY
 
 
 def test_empty_point_types_ensure_tables_without_a_write(spark, fs_config, monkeypatch):

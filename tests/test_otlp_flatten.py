@@ -15,15 +15,7 @@ from datetime import datetime
 import pytest
 
 from opentelemetry_iceberg_exporter_spark import schemas as S
-from opentelemetry_iceberg_exporter_spark.otlp.logs import flatten_logs, parse_logs_json
-from opentelemetry_iceberg_exporter_spark.otlp.metrics import (
-    flatten_metrics,
-    parse_metrics_json,
-)
-from opentelemetry_iceberg_exporter_spark.otlp.traces import (
-    flatten_traces,
-    parse_traces_json,
-)
+from opentelemetry_iceberg_exporter_spark.streaming.pipeline import flatten_signal
 
 # testTime = 2024-01-15T10:30:00Z (test_helper.go:22) in epoch ns
 T0_NS = 1_705_314_600_000_000_000
@@ -38,9 +30,9 @@ def _attr(key, **value):
     return {"key": key, "value": value}
 
 
-def _req_df(spark, payload, parse):
+def _flatten(spark, payload, signal_kind):
     df = spark.createDataFrame([(json.dumps(payload),)], "value string")
-    return parse(df)
+    return flatten_signal(df, signal_kind)
 
 
 def _span(**over):
@@ -92,17 +84,15 @@ def _traces_payload(spans, service="svc-a", scope_name="lib", scope_version="1.2
 
 
 def _assert_conformed(df, schema):
-    # conform() locks names, order, and types; declared nullability is
-    # enforced at the table boundary (see schemas.conform docstring)
+    # the flatten emits the declared names, order and types, so conform()
+    # has nothing to do (see schemas.conform docstring)
     assert [(f.name, f.dataType) for f in df.schema.fields] == [
         (f.name, f.dataType) for f in schema.fields
     ]
 
 
 def _flatten_traces_rows(spark, payload):
-    df = S.conform(
-        flatten_traces(_req_df(spark, payload, parse_traces_json)), S.TRACES_SCHEMA
-    )
+    df = _flatten(spark, payload, "traces")[S.SIGNAL_TRACES]
     _assert_conformed(df, S.TRACES_SCHEMA)
     return [r.asDict() for r in df.collect()]
 
@@ -260,9 +250,8 @@ class TestTracesFlatten:
 
     def test_depth2_attribute_value_rendered(self, spark):
         """A value nested two levels under an attribute (map-of-array-of-
-        scalars) must render — the encoder runs at the SAME depth the
-        parse schema declares (anyvalue.py attributes_to_json); in r1 it
-        encoded one level shallower and emitted 'null' here."""
+        scalars) must render; in r1 the encoder ran one level shallower
+        than the parse and emitted 'null' here."""
         sp = _span(
             attributes=[
                 _attr(
@@ -283,15 +272,11 @@ class TestTracesFlatten:
         r = _flatten_traces_rows(spark, _traces_payload([sp]))[0]
         assert r["span_attributes"] == '{"m":{"xs":[1,2]}}'
 
-    def test_depth3_attribute_value_truncates_to_null(self, spark):
-        """ATTR_DEPTH=2 bound, pinned: a value THREE levels under an
-        attribute (map-of-map-of-array) is beyond the declared from_json
-        schema — the unknown-field level parses as an all-null AnyValue
-        and renders as JSON null. The reference recurses unboundedly
-        (traces.go:252-291); this is the documented divergence
-        (otlp/model.py docstring) and the defined behavior past the
-        bound: structure above the bound is kept, the over-deep value
-        itself becomes null."""
+    def test_depth3_attribute_value_renders(self, spark):
+        """A value THREE levels under an attribute (map-of-map-of-array)
+        renders in full, as the reference's unbounded recursion does
+        (traces.go:252-291). The Catalyst flatten's from_json schema
+        stopped at depth 2 and rendered it '{"a":{"b":{"c":null}}}'."""
         sp = _span(
             attributes=[
                 _attr(
@@ -317,81 +302,32 @@ class TestTracesFlatten:
             ]
         )
         r = _flatten_traces_rows(spark, _traces_payload([sp]))[0]
-        assert r["span_attributes"] == '{"a":{"b":{"c":null}}}'
+        assert r["span_attributes"] == '{"a":{"b":{"c":[1]}}}'
 
     def test_attr_depth_configurable_renders_deep_kvlist_faithfully(self, spark):
-        """attr_depth config (ExporterConfig.attr_depth -> model.at_depth):
-        the SAME depth-4 payload truncates at the default depth 2 but
-        renders faithfully at depth 4 — matching the reference's
-        unbounded recursion (traces.go:252-291) for corpora that need it.
-        Plan-build cost is the documented trade (roughly doubles per
-        level); measured here so regressions surface."""
-        import json
-        import time as time_mod
+        """The default flatten renders kvlists nested 4 and 6 levels deep
+        in full, with no depth setting: the reference recurses without
+        bound (traces.go:252-291). The Catalyst flatten needed
+        attr_depth >= the payload's depth and truncated the rest."""
 
-        from opentelemetry_iceberg_exporter_spark.streaming.pipeline import (
-            flatten_signal,
-        )
+        def nested(depth: int) -> dict:
+            value = {"stringValue": "deep"}
+            for level in range(depth, 0, -1):
+                value = {"kvlistValue": {"values": [_attr(f"l{level}", **value)]}}
+            return value
 
-        deep = _span(
-            attributes=[
-                _attr(
-                    "l1",
-                    kvlistValue={
-                        "values": [
-                            _attr(
-                                "l2",
-                                kvlistValue={
-                                    "values": [
-                                        _attr(
-                                            "l3",
-                                            kvlistValue={
-                                                "values": [
-                                                    _attr("l4", stringValue="deep")
-                                                ]
-                                            },
-                                        )
-                                    ]
-                                },
-                            )
-                        ]
-                    },
-                )
-            ]
-        )
-        payload = json.dumps(_traces_payload([deep]))
-        raw = spark.createDataFrame([(payload,)], "value string")
-
-        shallow = flatten_signal(raw, "traces")["traces"].first()
-        assert shallow["span_attributes"] == '{"l1":{"l2":{"l3":null}}}'
-
-        t0 = time_mod.perf_counter()
-        faithful_df = flatten_signal(raw, "traces", depth=4)["traces"]
-        build_s = time_mod.perf_counter() - t0
-        faithful = faithful_df.first()
-        assert faithful["span_attributes"] == '{"l1":{"l2":{"l3":{"l4":"deep"}}}}'
-        # depth-4 plan construction stays bounded (SQL-text encoders;
-        # the r1 Column-built form took ~20s at depth 2 alone)
-        assert build_s < 30, f"depth-4 plan build took {build_s:.1f}s"
-
-    def test_attr_depth_zero_keeps_scalars_only(self, spark):
-        from opentelemetry_iceberg_exporter_spark.streaming.pipeline import (
-            flatten_signal,
-        )
-        import json
-
-        sp = _span(
-            attributes=[
-                _attr("s", stringValue="x"),
-                _attr("m", kvlistValue={"values": [_attr("k", intValue="1")]}),
-            ]
-        )
-        raw = spark.createDataFrame(
-            [(json.dumps(_traces_payload([sp])),)], "value string"
-        )
-        r = flatten_signal(raw, "traces", depth=0)["traces"].first()
-        # scalar survives; the nested branch doesn't exist at depth 0
-        assert json.loads(r["span_attributes"]) == {"s": "x", "m": None}
+        spans = [
+            _span(spanId="0102030405060704", attributes=[_attr("d", **nested(4))]),
+            _span(spanId="0102030405060706", attributes=[_attr("d", **nested(6))]),
+        ]
+        rows = _flatten_traces_rows(spark, _traces_payload(spans))
+        attrs = {r["span_id"]: r["span_attributes"] for r in rows}
+        assert attrs == {
+            "0102030405060704": '{"d":{"l1":{"l2":{"l3":{"l4":"deep"}}}}}',
+            "0102030405060706": (
+                '{"d":{"l1":{"l2":{"l3":{"l4":{"l5":{"l6":"deep"}}}}}}}'
+            ),
+        }
 
 
 def _log_record(**over):
@@ -430,7 +366,7 @@ def _logs_payload(records, service="svc-a"):
 
 
 def _flatten_logs_rows(spark, payload):
-    df = S.conform(flatten_logs(_req_df(spark, payload, parse_logs_json)), S.LOGS_SCHEMA)
+    df = _flatten(spark, payload, "logs")[S.SIGNAL_LOGS]
     _assert_conformed(df, S.LOGS_SCHEMA)
     return [r.asDict() for r in df.collect()]
 
@@ -528,8 +464,7 @@ def _metrics_payload(metrics, service="svc-a"):
 
 
 def _flatten_metric_rows(spark, payload, signal, schema):
-    dfs = flatten_metrics(_req_df(spark, payload, parse_metrics_json))
-    df = S.conform(dfs[signal], schema)
+    df = _flatten(spark, payload, "metrics")[signal]
     _assert_conformed(df, schema)
     return [r.asDict() for r in df.collect()]
 
@@ -743,9 +678,7 @@ class TestMetricsFlatten:
                 },
             ]
         )
-        dfs = flatten_metrics(
-            _req_df(spark, payload, parse_metrics_json)
-        )
+        dfs = _flatten(spark, payload, "metrics")
         counts = {sig: df.count() for sig, df in dfs.items()}
         assert counts == {
             S.SIGNAL_METRICS_GAUGE: 1,

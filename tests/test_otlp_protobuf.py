@@ -1,7 +1,7 @@
 """Protobuf ingestion path: serialized Export*ServiceRequest payloads
-must flow through protobuf_to_json_lines -> the SAME flatten plans as
-the JSON path, producing identical rows (exporter.go:101-200 parity
-beyond OTLP/JSON).
+(a binary `value` column) must flow through the SAME flatten as the JSON
+path, decoded in its own pass, producing identical rows
+(exporter.go:101-200 parity beyond OTLP/JSON).
 
 The test encodes fixtures with a minimal wire-format writer (varint /
 fixed64 / length-delimited — public protobuf spec) and compares the
@@ -17,20 +17,11 @@ import struct
 
 import pytest
 
-from opentelemetry_iceberg_exporter_spark.otlp.logs import flatten_logs, parse_logs_json
-from opentelemetry_iceberg_exporter_spark.otlp.metrics import (
-    flatten_metrics,
-    parse_metrics_json,
-)
 from opentelemetry_iceberg_exporter_spark.otlp.protobuf import (
     decode_message,
-    protobuf_to_json_lines,
     TRACES_REQUEST,
 )
-from opentelemetry_iceberg_exporter_spark.otlp.traces import (
-    flatten_traces,
-    parse_traces_json,
-)
+from opentelemetry_iceberg_exporter_spark.streaming.pipeline import flatten_signal
 
 from test_otlp_flatten import T0_NS, TRACE_ID, SPAN_ID, PARENT_ID
 
@@ -147,6 +138,73 @@ def _traces_request_pb() -> bytes:
     scope_spans = f_len(1, _scope("lib", "1.2.3")) + f_len(2, _span_pb())
     resource_spans = f_len(1, _resource("svc-a")) + f_len(2, scope_spans)
     return f_len(1, resource_spans)
+
+
+def _logs_request_pb() -> bytes:
+    body = f_len(5, f_str(1, "hello world"))
+    rec = (
+        f_fixed64(1, T0_NS)
+        + f_varint(2, 9)
+        + f_str(3, "INFO")
+        + body
+        + f_len(6, kv_str("k1", "v1"))
+        + f_len(9, bytes.fromhex(TRACE_ID))
+        + f_len(10, bytes.fromhex(SPAN_ID))
+    )
+    scope_logs = f_len(1, _scope("lib", "1.0.0")) + f_len(2, rec)
+    return f_len(1, f_len(1, _resource("svc-a")) + f_len(2, scope_logs))
+
+
+def _metrics_request_pb(metrics: bytes) -> bytes:
+    scope_metrics = f_len(1, _scope("lib", "1.0.0")) + metrics
+    return f_len(1, f_len(1, _resource("svc-a")) + f_len(2, scope_metrics))
+
+
+def _histogram_request_pb() -> bytes:
+    hist_dp = (
+        f_fixed64(3, T0_NS)
+        + f_fixed64(4, 100)
+        + f_double(5, 550.5)
+        + f_packed(6, [struct.pack("<Q", v) for v in (10, 40, 50)])
+        + f_packed(7, [struct.pack("<d", v) for v in (1.0, 10.0)])
+        + f_double(11, 0.1)
+        + f_double(12, 99.9)
+    )
+    hist = f_len(9, f_len(1, hist_dp) + f_varint(2, 1))  # DELTA
+    exp_dp = (
+        f_fixed64(3, T0_NS)
+        + f_fixed64(4, 7)
+        + f_double(5, 21.0)
+        + f_sint32(6, 2)
+        + f_fixed64(7, 1)
+        + f_len(8, f_sint32(1, 3) + f_packed(2, [_varint(1), _varint(2)]))
+        + f_len(9, f_sint32(1, -1) + f_packed(2, [_varint(4)]))
+        + f_double(14, 0.001)
+    )
+    exp = f_len(10, f_len(1, exp_dp) + f_varint(2, 2))  # CUMULATIVE
+    return _metrics_request_pb(
+        f_len(2, f_str(1, "latency") + hist) + f_len(2, f_str(1, "eh") + exp)
+    )
+
+
+def _gauge_sum_summary_request_pb() -> bytes:
+    gauge_dp = f_fixed64(3, T0_NS) + f_double(4, 0.75) + f_fixed64(2, T0_NS - 60_000_000_000)
+    gauge = f_len(5, f_len(1, gauge_dp))
+    sum_dp = f_fixed64(3, T0_NS) + f_sfixed64(6, 100)
+    sum_m = f_len(7, f_len(1, sum_dp) + f_varint(2, 2) + f_bool(3, True))
+    summ_dp = (
+        f_fixed64(3, T0_NS)
+        + f_fixed64(4, 50)
+        + f_double(5, 123.4)
+        + f_len(6, f_double(1, 0.5) + f_double(2, 1.0))
+        + f_len(6, f_double(1, 0.99) + f_double(2, 9.0))
+    )
+    summ = f_len(11, f_len(1, summ_dp))
+    return _metrics_request_pb(
+        f_len(2, f_str(1, "cpu.util") + f_str(3, "1") + gauge)
+        + f_len(2, f_str(1, "req.count") + sum_m)
+        + f_len(2, f_str(1, "rpc") + summ)
+    )
 
 
 def _traces_request_json() -> dict:
@@ -298,28 +356,14 @@ class TestProtobufPipeline:
         json_df = spark.createDataFrame(
             [(json.dumps(_traces_request_json()),)], "value string"
         )
-        via_pb = flatten_traces(
-            parse_traces_json(protobuf_to_json_lines(pb_df, "traces"))
-        ).collect()
-        via_json = flatten_traces(parse_traces_json(json_df)).collect()
+        via_pb = flatten_signal(pb_df, "traces")["traces"].collect()
+        via_json = flatten_signal(json_df, "traces")["traces"].collect()
         assert via_pb == via_json
         assert via_pb[0]["span_kind"] == "SERVER"
         assert via_pb[0]["duration"] == 2_000_000_000
 
     def test_logs_protobuf_equals_json_path(self, spark):
-        body = f_len(5, f_str(1, "hello world"))
-        rec = (
-            f_fixed64(1, T0_NS)
-            + f_varint(2, 9)
-            + f_str(3, "INFO")
-            + body
-            + f_len(6, kv_str("k1", "v1"))
-            + f_len(9, bytes.fromhex(TRACE_ID))
-            + f_len(10, bytes.fromhex(SPAN_ID))
-        )
-        scope_logs = f_len(1, _scope("lib", "1.0.0")) + f_len(2, rec)
-        req = f_len(1, f_len(1, _resource("svc-a")) + f_len(2, scope_logs))
-        pb_df = spark.createDataFrame([(req,)], "value binary")
+        pb_df = spark.createDataFrame([(_logs_request_pb(),)], "value binary")
         json_payload = {
             "resourceLogs": [
                 {
@@ -351,44 +395,14 @@ class TestProtobufPipeline:
             ]
         }
         json_df = spark.createDataFrame([(json.dumps(json_payload),)], "value string")
-        via_pb = flatten_logs(
-            parse_logs_json(protobuf_to_json_lines(pb_df, "logs"))
-        ).collect()
-        via_json = flatten_logs(parse_logs_json(json_df)).collect()
+        via_pb = flatten_signal(pb_df, "logs")["logs"].collect()
+        via_json = flatten_signal(json_df, "logs")["logs"].collect()
         assert via_pb == via_json
         assert via_pb[0]["body"] == "hello world"
 
     def test_metrics_protobuf_histogram_and_exp(self, spark):
-        hist_dp = (
-            f_fixed64(3, T0_NS)
-            + f_fixed64(4, 100)
-            + f_double(5, 550.5)
-            + f_packed(6, [struct.pack("<Q", v) for v in (10, 40, 50)])
-            + f_packed(7, [struct.pack("<d", v) for v in (1.0, 10.0)])
-            + f_double(11, 0.1)
-            + f_double(12, 99.9)
-        )
-        hist = f_len(9, f_len(1, hist_dp) + f_varint(2, 1))  # DELTA
-        exp_dp = (
-            f_fixed64(3, T0_NS)
-            + f_fixed64(4, 7)
-            + f_double(5, 21.0)
-            + f_sint32(6, 2)
-            + f_fixed64(7, 1)
-            + f_len(8, f_sint32(1, 3) + f_packed(2, [_varint(1), _varint(2)]))
-            + f_len(9, f_sint32(1, -1) + f_packed(2, [_varint(4)]))
-            + f_double(14, 0.001)
-        )
-        exp = f_len(10, f_len(1, exp_dp) + f_varint(2, 2))  # CUMULATIVE
-        metrics = f_len(2, f_str(1, "latency") + hist) + f_len(
-            2, f_str(1, "eh") + exp
-        )
-        scope_metrics = f_len(1, _scope("lib", "1.0.0")) + metrics
-        req = f_len(1, f_len(1, _resource("svc-a")) + f_len(2, scope_metrics))
-        pb_df = spark.createDataFrame([(req,)], "value binary")
-        dfs = flatten_metrics(
-            parse_metrics_json(protobuf_to_json_lines(pb_df, "metrics"))
-        )
+        pb_df = spark.createDataFrame([(_histogram_request_pb(),)], "value binary")
+        dfs = flatten_signal(pb_df, "metrics")
         h = dfs["metrics_histogram"].collect()
         assert len(h) == 1
         assert h[0]["count"] == 100
@@ -408,29 +422,8 @@ class TestProtobufPipeline:
         assert e[0]["zero_threshold"] == pytest.approx(0.001)
 
     def test_metrics_protobuf_gauge_sum_summary(self, spark):
-        gauge_dp = f_fixed64(3, T0_NS) + f_double(4, 0.75) + f_fixed64(2, T0_NS - 60_000_000_000)
-        gauge = f_len(5, f_len(1, gauge_dp))
-        sum_dp = f_fixed64(3, T0_NS) + f_sfixed64(6, 100)
-        sum_m = f_len(7, f_len(1, sum_dp) + f_varint(2, 2) + f_bool(3, True))
-        summ_dp = (
-            f_fixed64(3, T0_NS)
-            + f_fixed64(4, 50)
-            + f_double(5, 123.4)
-            + f_len(6, f_double(1, 0.5) + f_double(2, 1.0))
-            + f_len(6, f_double(1, 0.99) + f_double(2, 9.0))
-        )
-        summ = f_len(11, f_len(1, summ_dp))
-        metrics = (
-            f_len(2, f_str(1, "cpu.util") + f_str(3, "1") + gauge)
-            + f_len(2, f_str(1, "req.count") + sum_m)
-            + f_len(2, f_str(1, "rpc") + summ)
-        )
-        scope_metrics = f_len(1, _scope("lib", "1.0.0")) + metrics
-        req = f_len(1, f_len(1, _resource("svc-a")) + f_len(2, scope_metrics))
-        pb_df = spark.createDataFrame([(req,)], "value binary")
-        dfs = flatten_metrics(
-            parse_metrics_json(protobuf_to_json_lines(pb_df, "metrics"))
-        )
+        pb_df = spark.createDataFrame([(_gauge_sum_summary_request_pb(),)], "value binary")
+        dfs = flatten_signal(pb_df, "metrics")
         g = dfs["metrics_gauge"].collect()
         assert len(g) == 1 and g[0]["as_double"] == 0.75 and g[0]["as_int"] is None
         assert g[0]["metric_unit"] == "1"

@@ -249,9 +249,8 @@ class TestOtlpNsVariant:
         """The reference truncates ns->us on the primary time columns
         (traces.go:141-142); ns mode keeps the full value — the fixture
         span ends in ...789, which the us path destroys."""
-        from opentelemetry_iceberg_exporter_spark.otlp.traces import (
-            flatten_traces,
-            parse_traces_json,
+        from opentelemetry_iceberg_exporter_spark.streaming.pipeline import (
+            flatten_signal,
         )
 
         fix = os.path.join(
@@ -262,24 +261,25 @@ class TestOtlpNsVariant:
             "fixtures",
             "otlp_traces.jsonl",
         )
-        parsed = parse_traces_json(spark.read.text(fix))
-        ns = flatten_traces(parsed, ns_timestamps=True)
+        raw = spark.read.text(fix)
+        ns = flatten_signal(raw, "traces", ns_timestamps=True)["traces"]
         row = ns.where("span_id = '0102030405060708'").first()
         assert row["start_time_unix_nano"] == 1705314600123456789
         assert row["end_time_unix_nano"] == 1705314602123456789
         assert row["duration"] == 2_000_000_000  # ns-exact in both modes
         # the us path truncates the ...789 tail (reference parity)
-        us = flatten_traces(parsed).where("span_id = '0102030405060708'").first()
+        us = flatten_signal(raw, "traces")["traces"].where(
+            "span_id = '0102030405060708'"
+        ).first()
         assert us["start_time_unix_nano"].microsecond == 123456
 
     def test_ns_traces_table_end_to_end(self, spark, tmp_path):
         """v3-native OTLP traces table: flatten in ns mode, store the
         span timestamps as timestamptz_ns, hour-partitioned, read back
         at full precision, prune by ns predicate."""
-        from opentelemetry_iceberg_exporter_spark.otlp.traces import (
-            flatten_traces,
-            ns_trace_types,
-            parse_traces_json,
+        from opentelemetry_iceberg_exporter_spark import schemas as S
+        from opentelemetry_iceberg_exporter_spark.streaming.pipeline import (
+            flatten_signal,
         )
 
         fix = os.path.join(
@@ -290,9 +290,9 @@ class TestOtlpNsVariant:
             "fixtures",
             "otlp_traces.jsonl",
         )
-        flat = flatten_traces(
-            parse_traces_json(spark.read.text(fix)), ns_timestamps=True
-        ).select(
+        flat = flatten_signal(
+            spark.read.text(fix), "traces", ns_timestamps=True
+        )["traces"].select(
             "trace_id", "span_id", "start_time_unix_nano",
             "end_time_unix_nano", "duration", "service_name",
         )
@@ -304,7 +304,7 @@ class TestOtlpNsVariant:
             partition_source="start_time_unix_nano",
             granularity="hourly",
             properties={"format-version": "3"},
-            iceberg_types=ns_trace_types(),
+            iceberg_types=S.ns_iceberg_types(S.TRACES_SCHEMA),
         )
         t.append_dataframe(flat)
         got = {
@@ -324,9 +324,8 @@ class TestOtlpNsVariant:
         assert 1705314600123456789 // HOUR_NS in hours
 
     def test_logs_flatten_ns_mode(self, spark):
-        from opentelemetry_iceberg_exporter_spark.otlp.logs import (
-            flatten_logs,
-            parse_logs_json,
+        from opentelemetry_iceberg_exporter_spark.streaming.pipeline import (
+            flatten_signal,
         )
 
         fix = os.path.join(
@@ -337,7 +336,7 @@ class TestOtlpNsVariant:
             "fixtures",
             "otlp_logs.jsonl",
         )
-        ns = flatten_logs(parse_logs_json(spark.read.text(fix)), ns_timestamps=True)
+        ns = flatten_signal(spark.read.text(fix), "logs", ns_timestamps=True)["logs"]
         rows = ns.select("time_unix_nano", "observed_time_unix_nano").collect()
         assert all(isinstance(r["time_unix_nano"], int) for r in rows)
         # the zero-observed-time -> NULL rule survives ns mode
@@ -385,9 +384,7 @@ class TestNsExporterPipeline:
             "otlp_traces.jsonl",
         )
         raw = spark.read.text(fix)
-        flattened = flatten_signal(
-            raw, "traces", depth=cfg.attr_depth, ns_timestamps=True
-        )
+        flattened = flatten_signal(raw, "traces", ns_timestamps=True)
         sink = FsIcebergSink(spark, cfg)
         sink.append(flattened["traces"], "traces")
         t = sink.catalog.load_table("otel", "otel_traces")
@@ -406,9 +403,8 @@ class TestNsExporterPipeline:
         assert spec["transform"] == "hours"
 
     def test_metrics_flatten_ns_mode(self, spark):
-        from opentelemetry_iceberg_exporter_spark.otlp.metrics import (
-            flatten_metrics,
-            parse_metrics_json,
+        from opentelemetry_iceberg_exporter_spark.streaming.pipeline import (
+            flatten_signal,
         )
 
         fix = os.path.join(
@@ -419,10 +415,7 @@ class TestNsExporterPipeline:
             "fixtures",
             "otlp_metrics.jsonl",
         )
-        dfs = flatten_metrics(
-            parse_metrics_json(spark.read.text(fix)),
-            ns_timestamps=True,
-        )
+        dfs = flatten_signal(spark.read.text(fix), "metrics", ns_timestamps=True)
         gauge = dfs["metrics_gauge"].select(
             "time_unix_nano", "start_time_unix_nano"
         ).collect()
